@@ -175,14 +175,15 @@ object AnnIndex {
                           key: String = "",
                           nRows: Long = -1L,
                           span: Int = 1) {
+    private val tables = new ArtifactGen.TableOpener(dir)
     def ivf(spark: SparkSession): DataFrame =
-      spark.read.parquet(s"$dir/ivf")
+      tables.open(spark, "ivf")
     def pqCodes(spark: SparkSession): DataFrame =
-      spark.read.parquet(s"$dir/pq_codes")
+      tables.open(spark, "pq_codes")
     def ivfPqCodes(spark: SparkSession): DataFrame =
-      spark.read.parquet(s"$dir/ivfpq_codes")
+      tables.open(spark, "ivfpq_codes")
     def sq8(spark: SparkSession): DataFrame =
-      spark.read.parquet(s"$dir/sq8")
+      tables.open(spark, "sq8")
   }
 
   /** Corpus-version fingerprint from parquet FILE metadata (names,

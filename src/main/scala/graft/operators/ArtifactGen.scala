@@ -3,6 +3,9 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
 /** Generation-directory + pointer lifecycle for persisted ingest
   * artifacts ([[TextIndex]], [[AnnIndex]]) — the same
   * versioned-dir-behind-an-atomic-alias discipline as
@@ -32,6 +35,37 @@ import scala.jdk.CollectionConverters._
   * the standard alias-swap GC.
   */
 object ArtifactGen {
+
+  /** The table opener every family's `Loaded` reads through: one per
+    * `Loaded` instance, `dir` its artifact directory. The first open
+    * of a table infers its schema from a parquet footer — a one-task
+    * Spark job per `spark.read.parquet` — and every later open hands
+    * that schema back to the reader, so a warm index-served request
+    * launches no inference jobs.
+    *
+    * It memoizes ONLY the schema, never a DataFrame or a file listing:
+    * each open still lists the directory, so segments appended by
+    * `addSegment`/`addBatch`/`addVectors` and tables swapped by a
+    * purge stay visible through a `Loaded` that is already held. All
+    * of those keep each table's columns and types. The schemas are
+    * inferred, not declared, because `doc_id` takes its type from the
+    * caller's docs: a constant would be wrong for some callers or
+    * force a cast that changes the oracle hashes. */
+  final class TableOpener(dir: String) extends Serializable {
+    private val schemas =
+      new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+    def open(spark: SparkSession, table: String): DataFrame = {
+      val path = s"$dir/$table"
+      Option(schemas.get(table)) match {
+        case Some(s) => spark.read.schema(s).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          schemas.putIfAbsent(table, df.schema)
+          df
+      }
+    }
+  }
 
   /** The live generation: `_CURRENT`'s target, but only if that
     * generation finished building (`_DONE`) — a pointer at a torn or

@@ -221,7 +221,10 @@ object Dedup {
     * is over ROUNDS (a handful), never over rows.
     *
     * Returns (idCol, cluster_id) for every doc; singletons cluster to
-    * themselves. */
+    * themselves. Both endpoints of every pair must be ids in `docs`:
+    * an id found only in `pairs` gets no label, so labels never
+    * propagate through it and the clusters it would join stay apart.
+    * This is not checked at run time. */
   def dupClusters(docs: DataFrame, pairs: DataFrame,
                   idCol: String = "doc_id", maxRounds: Int = 20): DataFrame = {
     val edges = pairs.select(col("id_a").as("u"), col("id_b").as("v"))

@@ -35,12 +35,13 @@ import org.apache.spark.sql.functions._
 object DedupIndex {
 
   final case class Loaded(dir: String, key: String = "") {
+    private val tables = new ArtifactGen.TableOpener(dir)
     def fingerprints(spark: SparkSession): DataFrame =
-      spark.read.parquet(s"$dir/fingerprints")
+      tables.open(spark, "fingerprints")
     def buckets(spark: SparkSession): DataFrame =
-      spark.read.parquet(s"$dir/buckets")
+      tables.open(spark, "buckets")
     def shingleSets(spark: SparkSession): DataFrame =
-      spark.read.parquet(s"$dir/shingle_sets")
+      tables.open(spark, "shingle_sets")
   }
 
   private val memo =

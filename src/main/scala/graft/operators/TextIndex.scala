@@ -62,18 +62,19 @@ object TextIndex {
     * dirs) — it lets invalidation evict the in-JVM memo entry, not
     * just the on-disk `_DONE` marker. */
   final case class Loaded(dir: String, key: String = "") {
+    private val tables = new ArtifactGen.TableOpener(dir)
     def postings(spark: SparkSession): DataFrame =
-      spark.read.parquet(s"$dir/postings")
+      tables.open(spark, "postings")
     def termDf(spark: SparkSession): DataFrame =
-      spark.read.parquet(s"$dir/term_df")
+      tables.open(spark, "term_df")
     def shingles(spark: SparkSession): DataFrame =
-      spark.read.parquet(s"$dir/shingles")
+      tables.open(spark, "shingles")
     def shingleDf(spark: SparkSession): DataFrame =
-      spark.read.parquet(s"$dir/shingle_df")
+      tables.open(spark, "shingle_df")
     def doclen(spark: SparkSession): DataFrame =
-      spark.read.parquet(s"$dir/doclen")
+      tables.open(spark, "doclen")
     def corpus(spark: SparkSession): DataFrame =
-      spark.read.parquet(s"$dir/corpus")
+      tables.open(spark, "corpus")
   }
 
   /** Corpus-version fingerprint from parquet file metadata (same

@@ -14,6 +14,12 @@ class DedupIndexSpec extends SparkSpec {
   private lazy val standing = docs.filter(col("doc_id") % 10 =!= 0)
   private lazy val batch = docs.filter(col("doc_id") % 10 === 0)
 
+  /** Opens every table once, so the Loaded's schema memo is filled
+    * before an append that must stay visible through it. */
+  private def openAll(l: DedupIndex.Loaded): Unit = {
+    l.fingerprints(spark); l.buckets(spark); l.shingleSets(spark); ()
+  }
+
   test("artifact screening equals the in-query standing frames exactly") {
     val ix = DedupIndex.build(standing, Scratch.dir("dixspec"))
     val exactA = DedupIndex.screenExact(spark, ix, batch)
@@ -32,6 +38,7 @@ class DedupIndexSpec extends SparkSpec {
   test("addBatch: survivors enter once; re-screen knows all; re-append is a no-op") {
     val ix = DedupIndex.build(standing, Scratch.dir("dixspec2"))
     val before = ix.fingerprints(spark).count()
+    openAll(ix)
     val (n1, fps1) = DedupIndex.addBatch(spark, ix, batch)
     assert(n1 > 0 && fps1 > 0 && fps1 <= n1)
     assert(ix.fingerprints(spark).count() == before + fps1)

@@ -13,14 +13,30 @@ import graft.operators.Par
   */
 class ParSpec extends SparkSpec {
 
+  /** Interrupt `t`, which is blocked inside Par.run awaiting tasks
+    * held on a latch, and wait until Par.run has taken the interrupt
+    * (its await clears the flag when it throws). Only then may the
+    * caller release the tasks: a task finishing first would let the
+    * await return before it ever saw the interrupt. */
+  private def interruptInsidePar(t: Thread): Unit = {
+    t.interrupt()
+    val deadline = System.nanoTime() +
+      java.util.concurrent.TimeUnit.SECONDS.toNanos(30)
+    while (t.isInterrupted && System.nanoTime() < deadline) Thread.sleep(1)
+    assert(!t.isInterrupted, "Par.run never took the interrupt")
+  }
+
   test("a failing task does not rethrow until every other task finished") {
     val slowDone = new AtomicBoolean(false)
     val boom = new IllegalStateException("boom")
+    val boomThrown = new CountDownLatch(1)
     val thrown = intercept[IllegalStateException] {
       Par.run(
-        () => throw boom,
-        () => { Thread.sleep(250); slowDone.set(true) },
-        () => { Thread.sleep(150); () })
+        () => try throw boom finally boomThrown.countDown(),
+        // still in flight when the failure happens: it cannot finish
+        // before the first task has thrown
+        () => { boomThrown.await(); slowDone.set(true) },
+        () => ())
     }
     assert(thrown eq boom)
     // the rethrow happened only after the slow writer completed — the
@@ -34,10 +50,9 @@ class ParSpec extends SparkSpec {
     val bThrown = new CountDownLatch(1)
     val thrown = intercept[IllegalStateException] {
       Par.run(
-        // task 0 fails LAST chronologically but first in task order —
-        // the contract is deterministic on task order, not racy on
-        // wall-clock order
-        () => { bThrown.await(); Thread.sleep(50); throw a },
+        // task 0 cannot fail before task 1 has — the contract is
+        // deterministic on task order, not racy on wall-clock order
+        () => { bThrown.await(); throw a },
         () => { try throw b finally bThrown.countDown() })
     }
     assert(thrown eq a)
@@ -46,20 +61,23 @@ class ParSpec extends SparkSpec {
 
   test("interrupting the caller still awaits every task (flag restored)") {
     val done = (0 until 3).map(_ => new AtomicBoolean(false))
+    val started = new CountDownLatch(3)
+    val release = new CountDownLatch(1)
+    def task(i: Int): () => Unit = () => {
+      started.countDown(); release.await(); done(i).set(true)
+    }
     @volatile var caught: Throwable = null
     @volatile var flagRestored = false
     val t = new Thread(() => {
-      try Par.run(
-        () => { Thread.sleep(300); done(0).set(true) },
-        () => { Thread.sleep(350); done(1).set(true) },
-        () => { Thread.sleep(200); done(2).set(true) })
+      try Par.run(task(0), task(1), task(2))
       catch { case e: Throwable => caught = e }
       flagRestored = Thread.currentThread().isInterrupted
     })
     t.start()
-    Thread.sleep(80) // tasks are mid-sleep on the pool threads
-    t.interrupt()
-    t.join(10000)
+    started.await() // every task is in flight on the pool threads
+    interruptInsidePar(t)
+    release.countDown()
+    t.join(30000)
     assert(!t.isAlive)
     // every task ran to completion despite the caller's interrupt —
     // the round-15 advisor hole (early return with live writers)
@@ -71,17 +89,20 @@ class ParSpec extends SparkSpec {
   test("task failure wins over a concurrent caller interrupt") {
     val boom = new IllegalStateException("boom")
     val slowDone = new AtomicBoolean(false)
+    val started = new CountDownLatch(2)
+    val release = new CountDownLatch(1)
     @volatile var caught: Throwable = null
     val t = new Thread(() => {
       try Par.run(
-        () => { Thread.sleep(150); throw boom },
-        () => { Thread.sleep(300); slowDone.set(true) })
+        () => { started.countDown(); release.await(); throw boom },
+        () => { started.countDown(); release.await(); slowDone.set(true) })
       catch { case e: Throwable => caught = e }
     })
     t.start()
-    Thread.sleep(50)
-    t.interrupt()
-    t.join(10000)
+    started.await()
+    interruptInsidePar(t)
+    release.countDown()
+    t.join(30000)
     assert(!t.isAlive)
     assert(slowDone.get())
     // the task's failure is the primary error; the interrupt is

@@ -15,6 +15,13 @@ class TextIndexSpec extends SparkSpec {
     TextIndex.build(Tables.documents(spark, sf), dir)
   }
 
+  /** Opens every table once, so the Loaded's schema memo is filled
+    * before a mutation that must stay visible through it. */
+  private def openAll(l: TextIndex.Loaded): Unit = {
+    l.postings(spark); l.termDf(spark); l.shingles(spark)
+    l.shingleDf(spark); l.doclen(spark); l.corpus(spark); ()
+  }
+
   private def same(a: DataFrame, b: DataFrame): Unit = {
     assert(a.columns.toSeq == b.columns.toSeq)
     val as = a.collect().map(_.toSeq).toSeq
@@ -239,6 +246,7 @@ class TextIndexSpec extends SparkSpec {
     assert(TextIndex.liveView(spark, dix, dix.doclen(spark)).count()
       == n - nDel)
     assert(dix.doclen(spark).count() == n)
+    openAll(dix)
     TextIndex.purgeDeletes(spark, dix)
     assert(dix.doclen(spark).count() == n - nDel)
     assert(dix.postings(spark).filter(col("doc_id") < 10).count() == 0)
@@ -256,6 +264,7 @@ class TextIndexSpec extends SparkSpec {
     same(dix.shingleDf(spark).orderBy("term"),
       fresh.shingleDf(spark).orderBy("term"))
     // a second purge with no tombstones is a no-op
+    openAll(dix)
     TextIndex.purgeDeletes(spark, dix)
     assert(dix.doclen(spark).count() == n - nDel)
     // the UPDATE path: a purged id can re-ingest as a fresh segment
@@ -344,6 +353,7 @@ class TextIndexSpec extends SparkSpec {
     val half2 = docs.filter(col("doc_id") % 2 === 1)
     val inc = TextIndex.build(half1,
       java.nio.file.Files.createTempDirectory("textix-inc").toString)
+    openAll(inc)
     TextIndex.addSegment(inc, half2)
     val full = TextIndex.build(docs,
       java.nio.file.Files.createTempDirectory("textix-full").toString)
