@@ -43,7 +43,18 @@ import org.apache.spark.sql.functions._
   * is the scheduled ingest pipeline stage that re-runs per corpus
   * version; [[ensure]]'s fingerprint key models exactly that.
   */
-object AnnIndex {
+object AnnIndex extends ArtifactGen.ManagedArtifact("AnnIndex",
+    "graft_ann_index",
+    // Any change to the ROUTED-ASSIGNMENT semantics
+    // (Centroids.RouteBeam, RouteThreshold, the routing construction)
+    // REQUIRES a version bump: persisted cell assignments were made
+    // under the old semantics and the corpus fingerprint cannot see the
+    // code change, so only the version keeps old artifacts from being
+    // probed under new routing. "v7": the compressed serving arm, the
+    // within-cell id-SORTED ivf/ivfpq_codes layout its rerank
+    // point-fetch relies on, and regime-scaled codebooks ([[ksubFor]]),
+    // whose codes a 4-bit reader's LUT cannot read.
+    version = "v7", idCol = "vec_id") {
 
   val Nlist = 16
   val M = 8
@@ -164,26 +175,22 @@ object AnnIndex {
     * don't encode the probe width). */
   val AutoNprobe = 0
 
-  /** Driver-side trained structures + the persisted table locations.
-    * `key` is the [[ensure]] memo key when managed (empty for ad-hoc
-    * [[build]]s) — it lets invalidation evict the in-JVM memo entry,
-    * not just the on-disk `_DONE` marker. */
+  /** Driver-side trained structures + the persisted table locations. */
   final case class Loaded(dir: String,
                           cents: Array[Array[Double]],
                           pqCbs: Array[Array[Array[Double]]],
                           resCbs: Array[Array[Array[Double]]],
                           key: String = "",
                           nRows: Long = -1L,
-                          span: Int = 1) {
-    private val tables = new ArtifactGen.TableOpener(dir)
+                          span: Int = 1) extends ArtifactGen.Handle {
     def ivf(spark: SparkSession): DataFrame =
-      tables.open(spark, "ivf")
+      open(spark, "ivf")
     def pqCodes(spark: SparkSession): DataFrame =
-      tables.open(spark, "pq_codes")
+      open(spark, "pq_codes")
     def ivfPqCodes(spark: SparkSession): DataFrame =
-      tables.open(spark, "ivfpq_codes")
+      open(spark, "ivfpq_codes")
     def sq8(spark: SparkSession): DataFrame =
-      tables.open(spark, "sq8")
+      open(spark, "sq8")
   }
 
   /** Corpus-version fingerprint from parquet FILE metadata (names,
@@ -193,114 +200,29 @@ object AnnIndex {
   def corpusKey(sfDir: String): String =
     Fingerprint.ofTables(sfDir, "embeddings")
 
-  // one build per (corpus version, JVM); concurrent ensure() callers
-  // for the same key serialize on the map value
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, Loaded]()
+  type L = Loaded
 
-  /** The artifact for `corpus` under cache key `key` (from
-    * [[corpusKey]]): loaded from disk when a completed build exists
-    * for this corpus version, built + persisted otherwise — through
-    * the [[ArtifactGen]] generation-pointer lifecycle (rebuilds go to
-    * a fresh `gen-N`, `_CURRENT` swaps atomically, stale readers keep
-    * their generation wholly-old; the s14 alias discipline).
-    *
-    * "v3": generations replaced the flat per-key dir (a layout
-    * change, so pre-round-8 artifacts are never half-read). */
-  def ensure(corpus: DataFrame, key: String): Loaded =
-    memo.computeIfAbsent(key, { _ =>
-      val root = rootFor(key)
-      def resolve() = ArtifactGen.resolveOrBuild(root,
-        load = dir => load(corpus.sparkSession, dir).copy(key = key),
-        build = dir => build(corpus, dir).copy(key = key))
-      val first = resolve()
-      // cross-table LOCKSTEP validation (the DedupIndex/TextIndex
-      // discipline): addVectors' four appends are exception-safe but
-      // not crash-safe — a hard kill partway leaves _DONE intact with
-      // some encodings missing vectors the ivf table serves. Every
-      // per-vector table must agree on the row count.
-      if (lockstepValid(corpus.sparkSession, first)) first
-      else {
-        ArtifactGen.warnTearRebuild("AnnIndex", key, first.dir)
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(first.dir, "_DONE"))
-        resolve()
-      }
-    })
+  protected def loadKeyed(spark: SparkSession, dir: String,
+                          key: String): Loaded =
+    load(spark, dir).copy(key = key)
+
+  protected def buildKeyed(corpus: DataFrame, dir: String,
+                           key: String): Loaded =
+    build(corpus, dir).copy(key = key)
 
   /** One row per vector in EVERY encoding table — the invariant each
-    * addVectors tear point breaks (the four appends land in order:
-    * ivf, pq_codes, ivfpq_codes, sq8). */
-  private def lockstepValid(spark: SparkSession, l: Loaded): Boolean = {
-    def checks(): Boolean = {
-      // four independent reads of settled state, overlapped (the
-      // TextIndex.lockstepValid discipline) — one wall per ensure()
-      var n, pq, ivfpq, sq8 = 0L
-      Par.run(
-        () => n = l.ivf(spark).count(),
-        () => pq = l.pqCodes(spark).count(),
-        () => ivfpq = l.ivfPqCodes(spark).count(),
-        () => sq8 = l.sq8(spark).count())
-      pq == n && ivfpq == n && sq8 == n
-    }
-    // missing table = tear; other failures get one retry (transient
-    // flake passes, persistent corruption fails twice = tear) — the
-    // TextIndex discipline
-    try checks() catch {
-      case _: org.apache.spark.sql.AnalysisException => false
-      case scala.util.control.NonFatal(_) =>
-        try checks() catch {
-          case scala.util.control.NonFatal(_) => false
-        }
-    }
+    * addVectors tear point breaks (any subset of the four appends). */
+  protected def lockstep(spark: SparkSession, l: Loaded): Boolean = {
+    // four independent reads of settled state, overlapped (the
+    // TextIndex.lockstep discipline) — one wall per ensure()
+    var n, pq, ivfpq, sq8 = 0L
+    Par.run(
+      () => n = l.ivf(spark).count(),
+      () => pq = l.pqCodes(spark).count(),
+      () => ivfpq = l.ivfPqCodes(spark).count(),
+      () => sq8 = l.sq8(spark).count())
+    pq == n && ivfpq == n && sq8 == n
   }
-
-  /** Invalidate a managed artifact: remove `_DONE` AND evict the
-    * in-JVM memo entry — without the eviction, ensure() in the same
-    * JVM would keep serving the torn Loaded and the "next ensure()
-    * rebuilds" promise would only hold after a JVM restart. */
-  private[graft] def invalidate(l: Loaded): Unit = {
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(l.dir, "_DONE"))
-    if (l.key.nonEmpty) memo.remove(l.key)
-    ()
-  }
-
-  /** Spec hook: forget the memoized Loaded WITHOUT invalidating the
-    * on-disk artifact — models a fresh JVM resolving the `_CURRENT`
-    * pointer. */
-  private[graft] def evictMemo(key: String): Unit = { memo.remove(key); () }
-
-  /** The managed root for `key` — the one place the layout version
-    * lives (the [[TextIndex.rootFor]] discipline). Any change to the
-    * ROUTED-ASSIGNMENT semantics (Centroids.RouteBeam, RouteThreshold,
-    * the routing construction) REQUIRES a bump here: persisted cell
-    * assignments were made under the old semantics and the corpus
-    * fingerprint cannot see the code change, so only the version
-    * string keeps old artifacts from being probed under new routing.
-    * History: "v4" was minted when the beam first widened (4 → 8), but
-    * the beam then moved 8 → 12 within the same round WITHOUT a
-    * further bump — the round-12 advisor's finding: v4 artifacts
-    * persisted under beam 8 would be probed under beam 12, exactly
-    * the assignment/probe mismatch the version exists to exclude.
-    * "v5" supersedes v4 (RouteBeam = 12 pinned) and additionally marks
-    * the round-13 distributed trainer (same semantics below
-    * RouteThreshold, different centroid arithmetic above it). "v6"
-    * marks the nlist-scaled beam ([[graft.functions.Centroids
-    * .routeBeamFor]] — max(12, ⌈0.5·√nlist⌉), identical to v5 for
-    * nlist ≤ 576, wider above), adopted when the enforced planted
-    * routing bar measured beam 12 at 0.92 of flat at ×1000. "v7"
-    * marks the compressed serving arm ([[search]] routes cell counts
-    * ≥ RouteThreshold through ADC + exact rerank), the
-    * within-cell id-SORTED layout of ivf/ivfpq_codes that its rerank
-    * point-fetch relies on for tight row-group vec_id stats (v6
-    * artifacts have arbitrary within-cell order), and the regime-
-    * scaled codebook resolution ([[ksubFor]] — 8-bit codebooks at
-    * routing-active cell counts, whose persisted codes are
-    * incompatible with a 4-bit reader's LUT width). */
-  private[graft] def rootFor(key: String): java.nio.file.Path =
-    java.nio.file.Paths
-      .get(sys.props("java.io.tmpdir"), "graft_ann_index", "v7", key)
 
   /** (vec_id, label, v, nrm, cell): the coarse-quantizer assignment of
     * `emb` under fixed centroids — the shared encode step of [[build]]
@@ -352,6 +274,33 @@ object AnnIndex {
         .write.mode(mode)
         .option("maxRecordsPerFile", maxRecords)
         .partitionBy("cgrp").parquet(path)
+
+  /** The four per-vector encodings of `vecs` under `l`'s frozen
+    * trained structures, written into `l.dir` with `mode` — the one
+    * writer of [[build]] (overwrite) and [[addVectors]] (append).
+    * The four passes are INDEPENDENT given the trained structures and
+    * run CONCURRENTLY (Par scaladoc): each is its own scan either way,
+    * so overlapping them back-fills the scheduling/commit/tail gaps
+    * without changing total read volume. `written` runs as each table
+    * lands, with its name. */
+  private def writeEncodings(vecs: DataFrame, l: Loaded, mode: String)(
+      written: String => Unit): Unit = {
+    val dim = l.cents.head.length
+    Par.run(
+      () => { writeCellTable(assignCells(vecs, l.cents), s"${l.dir}/ivf",
+          l.span, mode, recordsPerFile(8L * dim + 20))
+        written("ivf") },
+      () => { Similarity.pqEncode(vecs, l.pqCbs)
+          .write.mode(mode).parquet(s"${l.dir}/pq_codes")
+        written("pq") },
+      () => { writeCellTable(Similarity.ivfPqEncode(vecs, l.cents, l.resCbs),
+          s"${l.dir}/ivfpq_codes", l.span, mode,
+          recordsPerFile(4L * l.resCbs.length + 8))
+        written("ivfpq") },
+      () => { Similarity.quantizedIndex(vecs)
+          .write.mode(mode).parquet(s"${l.dir}/sq8")
+        written("sq8") })
+  }
 
   /** ~256 MiB of rows for a table whose row is `rowBytes` wide — the
     * file-roll bound grouped writes pass as maxRecordsPerFile. */
@@ -439,31 +388,13 @@ object AnnIndex {
     // make the serving rerank's point-fetch join skip non-candidate
     // row groups; the sort rides the shuffle the clustering already
     // pays, so the build cost is unchanged at any scale
-    // the four encode passes are INDEPENDENT given the trained
-    // structures and run CONCURRENTLY (Par scaladoc): each is its own
-    // corpus scan either way, so overlapping them back-fills the
-    // scheduling/commit/tail gaps without changing total read volume;
     // _DONE is written last, so a tear anywhere rebuilds whole. The
     // per-phase regression-localization marks (the round-13 diagnosis
-    // tool) survive as per-task timings against a shared start.
-    val dim = cents.head.length
+    // tool) survive as per-table timings against a shared start.
+    val built = Loaded(dir, cents, pqCbs, resCbs, nRows = n, span = span)
     val tEnc = System.nanoTime()
-    def markAt(phase: String): Unit =
-      System.err.println(
-        f"[ann-build] $phase ${(System.nanoTime() - tEnc) / 1e9}%.1fs")
-    Par.run(
-      () => { writeCellTable(assignCells(corpus, cents), s"$dir/ivf",
-          span, "overwrite", recordsPerFile(8L * dim + 20))
-        markAt("encode-ivf") },
-      () => { Similarity.pqEncode(corpus, pqCbs)
-          .write.mode("overwrite").parquet(s"$dir/pq_codes")
-        markAt("encode-pq") },
-      () => { writeCellTable(Similarity.ivfPqEncode(corpus, cents, resCbs),
-          s"$dir/ivfpq_codes", span, "overwrite", recordsPerFile(4L * M + 8))
-        markAt("encode-ivfpq") },
-      () => { Similarity.quantizedIndex(corpus)
-          .write.mode("overwrite").parquet(s"$dir/sq8")
-        markAt("encode-sq8") })
+    writeEncodings(corpus, built, "overwrite")(table => System.err.println(
+      f"[ann-build] encode-$table ${(System.nanoTime() - tEnc) / 1e9}%.1fs"))
     mark("encode-all")
 
     // the span is part of the PHYSICAL layout: an appender or reader
@@ -474,9 +405,8 @@ object AnnIndex {
     // every other fact about the artifact
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_LAYOUT"),
       s"span=$span\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_DONE"),
-      Array.emptyByteArray)
-    Loaded(dir, cents, pqCbs, resCbs, nRows = n, span = span)
+    ArtifactGen.markDone(dir)
+    built
   }
 
   /** THE serving entry point — arm selection by cell count (round-14,
@@ -554,50 +484,27 @@ object AnnIndex {
     // the four appends are not transactional: a failure partway leaves
     // ivf/ ahead of pq_codes/sq8 AND blocks the retry (the dup check
     // consults ivf) — so a partial append INVALIDATES the artifact
-    // (_DONE removed) and the next ensure() rebuilds, instead of IVF
-    // probes seeing vectors the PQ/SQ8 paths silently miss forever
-    try {
-      // cluster by the partition key before the partitioned append —
-      // the build's file-count discipline applied to segments: a
-      // delta lands one file per touched cell (or cgrp, under the
-      // grouped layout — base.span is the PERSISTED span, so a
-      // segment can never interleave the two layouts), not
-      // tasks × cells. The four appends are independent and run
-      // CONCURRENTLY (Par awaits all four before any rethrow, so the
-      // invalidation below never races a still-running writer); any
-      // hard-crash subset leaves the four row counts disagreeing,
-      // which is exactly what lockstepValid flags — order never
-      // mattered for tear detection here, only count equality.
-      val dim = base.cents.head.length
-      Par.run(
-        () => writeCellTable(assignCells(delta, base.cents),
-          s"${base.dir}/ivf", base.span, "append",
-          recordsPerFile(8L * dim + 20)),
-        () => Similarity.pqEncode(delta, base.pqCbs)
-          .write.mode("append").parquet(s"${base.dir}/pq_codes"),
-        () => writeCellTable(
-          Similarity.ivfPqEncode(delta, base.cents, base.resCbs),
-          s"${base.dir}/ivfpq_codes", base.span, "append",
-          recordsPerFile(4L * base.resCbs.length + 8)),
-        () => Similarity.quantizedIndex(delta)
-          .write.mode("append").parquet(s"${base.dir}/sq8"))
-    } catch {
-      case e: Throwable =>
-        invalidate(base)
-        throw new IllegalStateException(
-          s"partial vector append into ${base.dir} — artifact " +
-            "invalidated (_DONE removed, memo evicted), next ensure() " +
-            "rebuilds", e)
+    // and the next ensure() rebuilds, instead of IVF probes seeing
+    // vectors the PQ/SQ8 paths silently miss forever
+    appending(base, "vector append") {
+      // the build's writer applied to segments: a delta lands one
+      // file per touched cell (or cgrp, under the grouped layout —
+      // base.span is the PERSISTED span, so a segment can never
+      // interleave the two layouts), not tasks × cells. Par awaits
+      // all four appends before any rethrow, so the invalidation never
+      // races a still-running writer; any hard-crash subset leaves the
+      // four row counts disagreeing, which is exactly what lockstep
+      // flags — order never mattered for tear detection here, only
+      // count equality.
+      writeEncodings(delta, base, "append")(_ => ())
     }
     // the live row count rides the handle so [[search]]'s shortlist
     // depth keeps tracking the TRUE candidate count as frozen-
     // structure adds grow n past the trained nlist² identity
     // (Similarity.rerankDepthFor scaladoc); the managed memo entry
     // is refreshed so later ensure() callers see it too
-    val grown =
-      if (base.nRows > 0) base.copy(nRows = base.nRows + nDelta) else base
-    if (grown.key.nonEmpty) memo.replace(grown.key, grown)
-    grown
+    refresh(
+      if (base.nRows > 0) base.copy(nRows = base.nRows + nDelta) else base)
   }
 
   /** Delete-by-id, the tombstone model [[TextIndex.deleteByQuery]]
@@ -610,41 +517,8 @@ object AnnIndex {
     * O(deleted); the counted-contract membership check is one pruned
     * id-column pass over the ivf table. */
   def deleteVectors(spark: SparkSession, base: Loaded,
-                    ids: DataFrame): Long = {
-    val victims = ids.select(col("vec_id"))
-      .join(liveView(spark, base,
-        base.ivf(spark).select(col("vec_id"))), Seq("vec_id"), "left_semi")
-      .distinct()
-      // pinned across its two consumers: count() and the tombstone
-      // append otherwise each re-run the ids ⋈ ivf membership join —
-      // the TextIndex.deleteByQuery discipline, which this path
-      // missed (st13 pays the double pass per micro-batch)
-      .persist()
-    try {
-      val n = victims.count()
-      if (n > 0)
-        victims.write.mode("append").parquet(s"${base.dir}/deletes")
-      n
-    } finally { victims.unpersist(blocking = false); () }
-  }
-
-  /** An index table restricted to LIVE (non-tombstoned) vectors — the
-    * query-time mask every probe must apply between a delete and its
-    * purge. Empty-safe: no deletes dir ⇒ pass-through. */
-  def liveView(spark: SparkSession, base: Loaded,
-               table: DataFrame): DataFrame =
-    if (!hasDeletes(spark, base)) table
-    else table.join(spark.read.parquet(s"${base.dir}/deletes"),
-      Seq("vec_id"), "left_anti")
-
-  /** Tombstone-table probe through the Hadoop `FileSystem` that
-    * writes it — the [[TextIndex]] discipline; a `java.nio` probe
-    * answers false off the local tmpdir and silently unmasks every
-    * tombstone. */
-  private def hasDeletes(spark: SparkSession, base: Loaded): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"${base.dir}/deletes")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+                    ids: DataFrame): Long =
+    tombstone(spark, base, ids, base.ivf(spark).select(col("vec_id")))
 
   /** Tombstone-pressure purge policy — the [[TextIndex.maybePurge]]
     * discipline for vectors (FAISS deployments likewise batch
@@ -665,7 +539,7 @@ object AnnIndex {
     // method holds a stale pre-purge handle — immutable case class —
     // and a stale count would silently shift the pressure threshold.
     val row = base.ivf(spark).select(lit(1L).as("side"))
-      .unionByName(spark.read.parquet(s"${base.dir}/deletes")
+      .unionByName(deletes(spark, base)
         .select(lit(0L).as("side")))
       .agg(count(lit(1)).as("total"),
         coalesce(sum(col("side")), lit(0L)).as("n_ivf"))
@@ -686,100 +560,42 @@ object AnnIndex {
     * [[TextIndex.purgeDeletes]]. */
   def purgeDeletes(spark: SparkSession, base: Loaded): Loaded = {
     if (!hasDeletes(spark, base)) return base
-    // the grouped layout partitions on cgrp (a column the read-back
-    // frame already carries) and keeps cells contiguous via the sort;
-    // span 1 is the unchanged per-cell rewrite
-    val (pCols, sCols) =
-      if (base.span > 1) (Seq("cgrp"), Seq("cgrp", "cell", "vec_id"))
-      else (Seq("cell"), Seq("cell", "vec_id"))
-    // grouped rewrites must keep the build's file-roll bound: one
-    // cgrp holds span cells (~n/GroupCap rows), and a purge without
-    // maxRecordsPerFile would fuse each group into one unbounded
-    // file, silently undoing the size cap until a rebuild
-    // the four rewrites are independent (separate tables, separate
+    // the cell-partitioned tables are rewritten by the build's own
+    // writer: clustered on the partition key, the v7 within-cell
+    // vec_id sort kept, and — grouped layout — the file-roll bound
+    // kept too (one cgrp holds span cells, and a purge without
+    // maxRecordsPerFile would fuse each group into one unbounded file,
+    // silently undoing the size cap until a rebuild).
+    // The four rewrites are independent (separate tables, separate
     // tmp+swap dirs) and run CONCURRENTLY (Par scaladoc); deletes/ is
     // cleared only after all four land, so an interrupted purge still
     // masks through liveView, and any crash subset leaves the four
-    // row counts disagreeing — exactly what lockstepValid flags
+    // row counts disagreeing — exactly what lockstep flags
     val dim = base.cents.head.length
     // the refreshed live row count rides the ivf rewrite itself (an
     // Observation on the frame the swap already scans) instead of a
     // separate post-swap count job — one fewer corpus pass per purge
     val obs = org.apache.spark.sql.Observation()
     Par.run(
-      () => swapIn(spark, base, "ivf",
+      () => swapIn(spark, base, "ivf")(writeCellTable(
         liveView(spark, base, base.ivf(spark))
           .observe(obs, count(lit(1)).as("n")),
-        partitionCols = pCols, sortCols = sCols,
-        maxRecords =
-          if (base.span > 1) recordsPerFile(8L * dim + 20) else 0L),
-      () => swapIn(spark, base, "pq_codes",
-        liveView(spark, base, base.pqCodes(spark))),
-      () => swapIn(spark, base, "ivfpq_codes",
+        _, base.span, "overwrite", recordsPerFile(8L * dim + 20))),
+      () => swapIn(spark, base, "pq_codes")(overwrite(
+        liveView(spark, base, base.pqCodes(spark)))),
+      () => swapIn(spark, base, "ivfpq_codes")(writeCellTable(
         liveView(spark, base, base.ivfPqCodes(spark)),
-        partitionCols = pCols, sortCols = sCols,
-        maxRecords =
-          if (base.span > 1) recordsPerFile(4L * base.resCbs.length + 8)
-          else 0L),
-      () => swapIn(spark, base, "sq8",
-        liveView(spark, base, base.sq8(spark))))
-    val fs = new org.apache.hadoop.fs.Path(base.dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"${base.dir}/deletes"), true)
+        _, base.span, "overwrite", recordsPerFile(4L * base.resCbs.length + 8))),
+      () => swapIn(spark, base, "sq8")(overwrite(
+        liveView(spark, base, base.sq8(spark)))))
+    clearDeletes(spark, base)
     // refresh the live row count riding the handle (the addVectors
     // discipline in reverse): without it, load()'s pre-purge count —
     // which included tombstoned rows — permanently over-sizes the
     // rerank shortlist (extra full-precision fetches per query) until
     // an artifact rebuild. Recall-safe either way; this is the cost
     // side. The count was observed during the ivf rewrite above.
-    val purged = base.copy(nRows = obs.get("n").asInstanceOf[Long])
-    if (purged.key.nonEmpty) memo.replace(purged.key, purged)
-    purged
-  }
-
-  /** Overwrite `base`'s `sub` table with `df` where `df` READS from
-    * it — write-tmp + swap, invalidating (marker + memo) on either
-    * failure mode, exactly [[TextIndex]]'s swapIn. */
-  private def swapIn(spark: SparkSession, base: Loaded, sub: String,
-                     df: DataFrame,
-                     partitionCols: Seq[String] = Seq.empty,
-                     sortCols: Seq[String] = Seq.empty,
-                     maxRecords: Long = 0L): Unit = {
-    val path = s"${base.dir}/$sub"
-    val tmp = path + ".swap-tmp"
-    // cluster on the partition key first — the build's file-count
-    // discipline (one file per partition value, not tasks × values) —
-    // and keep the v7 within-cell vec_id sort through a purge rewrite
-    // (the prefix on the partition cols satisfies the writer's
-    // required ordering, so no second sort is inserted). `sortCols`
-    // overrides the default partition-cols-plus-id order where the
-    // grouped layout needs `cell` between cgrp and vec_id.
-    val clustered =
-      if (partitionCols.nonEmpty) {
-        val order =
-          if (sortCols.nonEmpty) sortCols else partitionCols :+ "vec_id"
-        df.repartition(partitionCols.map(col): _*)
-          .sortWithinPartitions(order.map(col): _*)
-      } else df
-    val w0 = clustered.write.mode("overwrite")
-    val w = if (maxRecords > 0)
-      w0.option("maxRecordsPerFile", maxRecords) else w0
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(path)
-    if (!fs.delete(target, true) && fs.exists(target)) {
-      invalidate(base)
-      sys.error(s"swap failed: could not delete $path — artifact " +
-        "invalidated (_DONE removed, memo evicted), next ensure() rebuilds")
-    }
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), target)) {
-      invalidate(base)
-      sys.error(s"swap failed: could not rename $tmp over $path — " +
-        "artifact invalidated (_DONE removed, memo evicted), next " +
-        "ensure() rebuilds")
-    }
+    refresh(base.copy(nRows = obs.get("n").asInstanceOf[Long]))
   }
 
   /** Reload the driver-side structures from a completed artifact. */

@@ -2,12 +2,15 @@ package graft.operators
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** Generation-directory + pointer lifecycle for persisted ingest
-  * artifacts ([[TextIndex]], [[AnnIndex]]) — the same
+  * artifacts ([[TextIndex]], [[AnnIndex]], [[DedupIndex]]) — the same
   * versioned-dir-behind-an-atomic-alias discipline as
   * [[graft.sources.Sink.aliasSwap]] (ES's index-alias swap, s14).
   *
@@ -36,26 +39,32 @@ import org.apache.spark.sql.types.StructType
   */
 object ArtifactGen {
 
-  /** The table opener every family's `Loaded` reads through: one per
-    * `Loaded` instance, `dir` its artifact directory. The first open
-    * of a table infers its schema from a parquet footer — a one-task
-    * Spark job per `spark.read.parquet` — and every later open hands
-    * that schema back to the reader, so a warm index-served request
-    * launches no inference jobs.
+  /** What every family's `Loaded` carries: its artifact directory, its
+    * [[ManagedArtifact.ensure]] memo key (empty for ad-hoc builds into
+    * scratch dirs — the key lets invalidation evict the in-JVM memo
+    * entry, not just the on-disk `_DONE` marker), and the table opener
+    * its tables are read through.
     *
-    * It memoizes ONLY the schema, never a DataFrame or a file listing:
-    * each open still lists the directory, so segments appended by
-    * `addSegment`/`addBatch`/`addVectors` and tables swapped by a
-    * purge stay visible through a `Loaded` that is already held. All
-    * of those keep each table's columns and types. The schemas are
-    * inferred, not declared, because `doc_id` takes its type from the
-    * caller's docs: a constant would be wrong for some callers or
-    * force a cast that changes the oracle hashes. */
-  final class TableOpener(dir: String) extends Serializable {
+    * The first [[open]] of a table infers its schema from a parquet
+    * footer — a one-task Spark job per `spark.read.parquet` — and every
+    * later open hands that schema back to the reader, so a warm
+    * index-served request launches no inference jobs. Only the schema
+    * is memoized, never a DataFrame or a file listing: each open still
+    * lists the directory, so segments appended by
+    * `addSegment`/`addBatch`/`addVectors` and tables swapped by a purge
+    * stay visible through a handle that is already held. All of those
+    * keep each table's columns and types. The schemas are inferred, not
+    * declared, because `doc_id` takes its type from the caller's docs:
+    * a constant would be wrong for some callers or force a cast that
+    * changes the oracle hashes. */
+  trait Handle {
+    def dir: String
+    def key: String
+
     private val schemas =
       new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-    def open(spark: SparkSession, table: String): DataFrame = {
+    protected def open(spark: SparkSession, table: String): DataFrame = {
       val path = s"$dir/$table"
       Option(schemas.get(table)) match {
         case Some(s) => spark.read.schema(s).parquet(path)
@@ -65,6 +74,223 @@ object ArtifactGen {
           df
       }
     }
+  }
+
+  /** ES's index lifecycle (build, bulk append, alias swap, delete,
+    * merge), shared by [[TextIndex]], [[AnnIndex]] and [[DedupIndex]].
+    * A family supplies its handle type `L`, how a generation is built
+    * and loaded, and the lockstep predicate of its tables; `family`
+    * names it in logs, `version` is its LAYOUT version (bump it on any
+    * layout change so an older artifact is never half-read) and
+    * `idCol` keys its tombstones. */
+  abstract class ManagedArtifact(family: String, rootDir: String,
+                                 version: String, idCol: String) {
+    type L <: Handle
+
+    /** The completed generation in `dir`, as a handle keyed `key`. */
+    protected def loadKeyed(spark: SparkSession, dir: String, key: String): L
+
+    /** Build `data` into the fresh generation `dir` (ending with
+      * [[ArtifactGen.markDone]]), as a handle keyed `key`. */
+    protected def buildKeyed(data: DataFrame, dir: String, key: String): L
+
+    /** The cross-table invariants every whole artifact satisfies; each
+      * crash point of the family's appends breaks at least one. */
+    protected def lockstep(spark: SparkSession, l: L): Boolean
+
+    // one build per (key, JVM); concurrent ensure() callers for the
+    // same key serialize on the map value
+    private val memo = new java.util.concurrent.ConcurrentHashMap[String, L]()
+
+    /** The artifact for `data` under `key`: the completed generation
+      * `_CURRENT` names, else a FRESH generation built and published — a
+      * rebuild never rewrites a directory a stale reader still holds
+      * (wholly-old or wholly-new, the s14 alias discipline).
+      *
+      * Appends are exception-safe but not crash-safe: a hard JVM kill
+      * partway through one leaves `_DONE` over tables that disagree. So
+      * the generation must pass the lockstep check; a torn one is
+      * rebuilt from this call's `data` alone, which drops every append
+      * made since its build — logged with the generation and key, so
+      * operators know which deltas to re-ingest. */
+    def ensure(data: DataFrame, key: String): L =
+      memo.computeIfAbsent(key, { _ =>
+        val spark = data.sparkSession
+        def resolve() = resolveOrBuild(rootFor(key),
+          load = dir => loadKeyed(spark, dir, key),
+          build = dir => buildKeyed(data, dir, key))
+        val first = resolve()
+        if (lockstepValid(spark, first)) first
+        else {
+          org.slf4j.LoggerFactory.getLogger("graft.ArtifactGen").warn(
+            s"$family artifact for key '$key' failed ensure-time lockstep " +
+              s"validation (torn generation at ${first.dir}); rebuilding " +
+              "fresh from the ensure() snapshot — segments/batches " +
+              "appended to the torn generation since its build are " +
+              "DROPPED and must be re-ingested")
+          // on-disk invalidation only — inside computeIfAbsent, touching
+          // the memo would be a recursive map update
+          unmark(first.dir)
+          resolve()
+        }
+      })
+
+    /** [[lockstep]], with read failures classified: a table missing
+      * entirely (a hard crash between [[swapIn]]'s delete and rename)
+      * is the same tear, just louder. Any other read failure gets ONE
+      * retry: a transient flake passes the second attempt (and must not
+      * destroy a healthy artifact's `_DONE`), while persistent
+      * corruption — a present-but-truncated file with `_DONE` intact —
+      * fails twice and is treated as the tear it is, instead of wedging
+      * every ensure() forever. */
+    private[graft] def lockstepValid(spark: SparkSession, l: L): Boolean =
+      try lockstep(spark, l) catch {
+        case _: AnalysisException => false
+        case NonFatal(_) =>
+          try lockstep(spark, l) catch { case NonFatal(_) => false }
+      }
+
+    /** Invalidate a managed artifact: remove its `_DONE` marker (so the
+      * pointer resolves to "no live artifact") AND evict the in-JVM memo
+      * entry — without the eviction, ensure() in the same JVM would keep
+      * serving the torn handle and the "next ensure() rebuilds" promise
+      * would only hold after a JVM restart. */
+    private[graft] def invalidate(l: L): Unit = {
+      unmark(l.dir)
+      if (l.key.nonEmpty) memo.remove(l.key)
+      ()
+    }
+
+    /** Forget the memoized handle WITHOUT invalidating the on-disk
+      * artifact — models a fresh JVM resolving the `_CURRENT` pointer. */
+    private[graft] def evictMemo(key: String): Unit = { memo.remove(key); () }
+
+    /** The managed root for `key` — the ONE place the layout version is
+      * applied, so lifecycle callers (s15, specs) can never wipe or
+      * probe a stale version's directory. */
+    private[graft] def rootFor(key: String): Path =
+      Paths.get(sys.props("java.io.tmpdir"), rootDir, version, key)
+
+    private def unmark(dir: String): Unit = {
+      Files.deleteIfExists(Paths.get(dir, "_DONE")); ()
+    }
+
+    /** Hand `l`, a held handle with refreshed fields, to later ensure()
+      * callers — only while the memo holds `l`'s generation: a handle
+      * held across an invalidate-and-rebuild (a streaming ingest keeps
+      * one across micro-batches) must not replace the newer one. */
+    protected def refresh(l: L): L = {
+      if (l.key.nonEmpty)
+        memo.computeIfPresent(l.key, (_, cur) => if (cur.dir == l.dir) l else cur)
+      l
+    }
+
+    /** Run an append that touches several tables: a failure partway is a
+      * TORN artifact, so it invalidates `l` before rethrowing and the next
+      * ensure() rebuilds. `body`'s writers have all finished when it
+      * throws (Par awaits every task), so none races the invalidation. */
+    protected def appending[T](l: L, what: String)(body: => T): T =
+      try body catch {
+        case e: Throwable =>
+          invalidate(l)
+          throw new IllegalStateException(
+            s"partial $what into ${l.dir} — artifact invalidated " +
+              "(_DONE removed, memo evicted), next ensure() rebuilds", e)
+      }
+
+    /** Overwrite `l`'s `sub` table with content that READS from it:
+      * `write` writes the new table to the tmp path it is given, which
+      * then replaces the old one (delete, rename). That pair is NOT
+      * atomic and either step can fail (rename does across filesystems,
+      * on object stores, or when `write` left no tmp): a failure
+      * INVALIDATES the artifact before throwing, so `ensure` rebuilds.
+      *
+      * A JVM killed between the delete and the rename leaves the table
+      * missing under `_DONE`. A later mutation through a held handle (a
+      * purge, an append's admission read) throws without invalidating;
+      * what catches the tear is the next ensure()'s lockstep check, where
+      * the missing table is an AnalysisException, which counts as a tear
+      * (except AnnIndex's `ivf`: its load reads it before the check, so
+      * that ensure() fails loudly instead of rebuilding). */
+    private[graft] def swapIn(spark: SparkSession, l: L, sub: String)(
+        write: String => Unit): Unit = {
+      val path = s"${l.dir}/$sub"
+      val tmp = path + ".swap-tmp"
+      write(tmp)
+      val target = new HPath(path)
+      val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      var step = s"delete $path"
+      try {
+        if (!fs.delete(target, true) && fs.exists(target))
+          sys.error("delete returned false")
+        step = s"rename $tmp over $path"
+        if (!fs.rename(new HPath(tmp), target))
+          sys.error("rename returned false")
+      } catch {
+        case NonFatal(e) =>
+          invalidate(l)
+          throw new IllegalStateException(s"swap failed: could not $step " +
+            "— artifact invalidated (_DONE removed, memo evicted), next " +
+            "ensure() rebuilds", e)
+      }
+    }
+
+    /** The `write` of a [[swapIn]] that replaces a table with `df`. */
+    protected def overwrite(df: DataFrame): String => Unit =
+      df.write.mode("overwrite").parquet(_)
+
+    // tombstones, the Lucene live-docs model: deletes append ids to
+    // `deletes/`, reads mask them, a family's purge drops them physically
+    private def deletesPath(l: L): String = s"${l.dir}/deletes"
+
+    /** Does the tombstone table exist? Probed through the Hadoop
+      * `FileSystem` that WRITES it — a `java.nio` probe silently answers
+      * false the day artifacts move off the local tmpdir, masking every
+      * tombstone (the round-8 advisor finding). */
+    private[graft] def hasDeletes(spark: SparkSession, l: L): Boolean = {
+      val p = new HPath(deletesPath(l))
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    }
+
+    /** The tombstone table (only read it when [[hasDeletes]]). */
+    protected def deletes(spark: SparkSession, l: L): DataFrame =
+      spark.read.parquet(deletesPath(l))
+
+    /** A table of the artifact restricted to LIVE (non-tombstoned) rows:
+      * an anti-join against the deletes table (small until a purge is
+      * due, so it broadcasts); with no deletes the frame passes through. */
+    def liveView(spark: SparkSession, l: L, table: DataFrame): DataFrame =
+      if (!hasDeletes(spark, l)) table
+      else table.join(deletes(spark, l), Seq(idCol), "left_anti")
+
+    /** Tombstone the ids of `ids` live in `members` (an id-bearing table
+      * of the artifact) and return how many; absent ids are ignored, as
+      * in ES delete_by_query. */
+    protected def tombstone(spark: SparkSession, l: L, ids: DataFrame,
+                            members: DataFrame): Long = {
+      val victims = ids.select(col(idCol))
+        .join(liveView(spark, l, members), Seq(idCol), "left_semi")
+        .distinct()
+        // pinned: count() and the append would each re-run the join
+        .persist()
+      try {
+        val n = victims.count()
+        if (n > 0) victims.write.mode("append").parquet(deletesPath(l))
+        n
+      } finally { victims.unpersist(blocking = false); () }
+    }
+
+    /** Drop the tombstones once a purge has made them physical. */
+    protected def clearDeletes(spark: SparkSession, l: L): Unit = {
+      val p = new HPath(deletesPath(l))
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      ()
+    }
+  }
+
+  /** A build's last write: the artifact in `dir` is complete. */
+  def markDone(dir: String): Unit = {
+    Files.write(Paths.get(dir, "_DONE"), Array.emptyByteArray); ()
   }
 
   /** The live generation: `_CURRENT`'s target, but only if that
@@ -128,22 +354,6 @@ object ArtifactGen {
       s"could not claim a generation under $root after 1000 attempts")
   }
 
-  /** Operator-visible warning for the lockstep-tear rebuild path
-    * (the round-9 advisor finding): a rebuild triggered by ensure-time
-    * validation rebuilds solely from the DataFrame captured at the
-    * ensure() call, silently discarding every addSegment/addBatch/
-    * addVectors applied since the original build. That is consistent
-    * with the invalidate-rebuild model, but a silent data regression
-    * for a long-lived incrementally-maintained index — so every
-    * family logs the generation + key here, telling operators which
-    * appended deltas to re-ingest. */
-  def warnTearRebuild(family: String, key: String, dir: String): Unit =
-    org.slf4j.LoggerFactory.getLogger("graft.ArtifactGen").warn(
-      s"$family artifact for key '$key' failed ensure-time lockstep " +
-        s"validation (torn generation at $dir); rebuilding fresh from " +
-        "the ensure() snapshot — segments/batches appended to the torn " +
-        "generation since its build are DROPPED and must be re-ingested")
-
   /** Recursive delete (deepest-first), stream closed — the shared
     * lifecycle-reset helper for specs and the s15 gated replay. */
   def wipe(root: Path): Unit =
@@ -155,12 +365,9 @@ object ArtifactGen {
       paths.foreach(p => Files.deleteIfExists(p))
     }
 
-  /** The shared resolve-or-build body of every managed `ensure()`:
-    * resolve `_CURRENT` to a completed generation and `load` it, else
-    * `build` into a FRESH generation and publish it. One
-    * implementation for all three artifact families (text, vector,
-    * dedup) so a lifecycle fix is single-site — the per-family
-    * objects keep only their memo and their table readers. */
+  /** The resolve-or-build body of [[ManagedArtifact.ensure]]: resolve
+    * `_CURRENT` to a completed generation and `load` it, else `build`
+    * into a FRESH generation and publish it. */
   def resolveOrBuild[L](root: Path, load: String => L,
                         build: String => L): L =
     currentDir(root) match {

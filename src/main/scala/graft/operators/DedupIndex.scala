@@ -28,93 +28,54 @@ import org.apache.spark.sql.functions._
   *                  only likewise
   *   _DONE          written last; torn build ⇒ rebuild
   *
-  * Lifecycle: generation-pointer managed ([[ArtifactGen]]) like the
-  * other two artifacts — rebuilds land in fresh generations,
-  * invalidation evicts the in-JVM memo.
+  * Lifecycle: [[ArtifactGen.ManagedArtifact]], like the other two
+  * artifacts — rebuilds land in fresh generations, invalidation evicts
+  * the in-JVM memo. This family has no tombstones: its standing index
+  * only grows.
   */
-object DedupIndex {
+object DedupIndex extends ArtifactGen.ManagedArtifact("DedupIndex",
+    "graft_dedup_index",
+    // "v2": the build switched to representative-only buckets/shingle
+    // tables (earlier all-docs artifacts would trip the exact lockstep
+    // invariant)
+    version = "v2", idCol = "doc_id") {
 
-  final case class Loaded(dir: String, key: String = "") {
-    private val tables = new ArtifactGen.TableOpener(dir)
+  final case class Loaded(dir: String, key: String = "")
+      extends ArtifactGen.Handle {
     def fingerprints(spark: SparkSession): DataFrame =
-      tables.open(spark, "fingerprints")
+      open(spark, "fingerprints")
     def buckets(spark: SparkSession): DataFrame =
-      tables.open(spark, "buckets")
+      open(spark, "buckets")
     def shingleSets(spark: SparkSession): DataFrame =
-      tables.open(spark, "shingle_sets")
+      open(spark, "shingle_sets")
   }
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, Loaded]()
+  type L = Loaded
 
-  /** "v2": the build switched to representative-only buckets/shingle
-    * tables (layout-visible change — earlier all-docs artifacts would
-    * trip the exact lockstep invariant, so they are never half-read). */
-  private[graft] def rootFor(key: String): java.nio.file.Path =
-    java.nio.file.Paths
-      .get(sys.props("java.io.tmpdir"), "graft_dedup_index", "v2", key)
+  protected def loadKeyed(spark: SparkSession, dir: String,
+                          key: String): Loaded = Loaded(dir, key)
 
-  private[graft] def evictMemo(key: String): Unit = { memo.remove(key); () }
-
-  private[graft] def invalidate(l: Loaded): Unit = {
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(l.dir, "_DONE"))
-    if (l.key.nonEmpty) memo.remove(l.key)
-    ()
-  }
-
-  def ensure(docs: DataFrame, key: String): Loaded =
-    memo.computeIfAbsent(key, { _ =>
-      val root = rootFor(key)
-      def resolve() = ArtifactGen.resolveOrBuild(root,
-        load = dir => Loaded(dir, key),
-        build = dir => build(docs, dir).copy(key = key))
-      val first = resolve()
-      // the three tables must be in LOCKSTEP (the round-8 advisor
-      // finding): addBatch's appends are exception-safe but not
-      // crash-safe — a hard JVM kill after the fingerprints append
-      // but before buckets/shingle_sets leaves _DONE intact while the
-      // exact screen knows docs the near-dup verify side doesn't.
-      // Three metadata counts catch every such tear; a torn artifact
-      // is invalidated and rebuilt into a fresh generation.
-      if (lockstepValid(docs.sparkSession, first)) first
-      else {
-        // invalidate ON DISK only — we're inside computeIfAbsent, so
-        // touching the memo here would be a recursive map update (the
-        // key isn't mapped yet anyway)
-        ArtifactGen.warnTearRebuild("DedupIndex", key, first.dir)
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(first.dir, "_DONE"))
-        resolve()
-      }
-    })
+  protected def buildKeyed(docs: DataFrame, dir: String,
+                           key: String): Loaded =
+    build(docs, dir).copy(key = key)
 
   /** The cross-table invariants a complete artifact always satisfies
     * (build and append both store one row-set per fingerprint
     * representative): one shingle row per fingerprint, and bucket
     * rows a whole multiple of the band count, at most [[Dedup.Bands]]
     * per fingerprint (shingle-less/null-text representatives band to
-    * nothing, so ≤, not ==). A missing table is the same tear,
-    * louder; any other read failure propagates — a transient FS error
-    * must not destroy a healthy artifact's `_DONE`. */
-  private def lockstepValid(spark: SparkSession, l: Loaded): Boolean = {
-    def checks(): Boolean = {
-      // three independent reads of settled state, overlapped (the
-      // TextIndex.lockstepValid discipline) — one wall per ensure()
-      var f, s, b = 0L
-      Par.run(
-        () => f = l.fingerprints(spark).count(),
-        () => s = l.shingleSets(spark).count(),
-        () => b = l.buckets(spark).count())
-      f == s && b % Dedup.Bands == 0 && b <= f * Dedup.Bands
-    }
-    try checks() catch {
-      case _: org.apache.spark.sql.AnalysisException => false
-      case scala.util.control.NonFatal(_) =>
-        try checks() catch {
-          case scala.util.control.NonFatal(_) => false
-        }
-    }
+    * nothing, so ≤, not ==). Every crash prefix of addBatch's
+    * sequential appends ({fingerprints}, {fingerprints, buckets})
+    * breaks f == s. */
+  protected def lockstep(spark: SparkSession, l: Loaded): Boolean = {
+    // three independent reads of settled state, overlapped (the
+    // TextIndex.lockstep discipline) — one wall per ensure()
+    var f, s, b = 0L
+    Par.run(
+      () => f = l.fingerprints(spark).count(),
+      () => s = l.shingleSets(spark).count(),
+      () => b = l.buckets(spark).count())
+    f == s && b % Dedup.Bands == 0 && b <= f * Dedup.Bands
   }
 
   /** The ingest job: fingerprint, signature-band, and shingle the
@@ -162,8 +123,7 @@ object DedupIndex {
           .write.mode("overwrite").parquet(s"$dir/buckets"),
         () => sets.write.mode("overwrite").parquet(s"$dir/shingle_sets"))
     } finally { sets.unpersist(blocking = false); () }
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_DONE"),
-      Array.emptyByteArray)
+    ArtifactGen.markDone(dir)
     Loaded(dir)
   }
 
@@ -294,18 +254,12 @@ object DedupIndex {
       // {fps, shingle_sets} appended without buckets — a tear the ≤
       // bucket-count invariant cannot always flag.
       val keptSets = Dedup.withHashedShingleSet(kept).persist()
-      try {
+      try appending(ix, "batch append") {
         newFps.select(col("fingerprint"), col("keep_id"))
           .write.mode("append").parquet(s"${ix.dir}/fingerprints")
         Dedup.bandBucketsFromSets(keptSets)
           .write.mode("append").parquet(s"${ix.dir}/buckets")
         keptSets.write.mode("append").parquet(s"${ix.dir}/shingle_sets")
-      } catch {
-        case e: Throwable =>
-          invalidate(ix)
-          throw new IllegalStateException(
-            s"partial batch append into ${ix.dir} — artifact invalidated " +
-              "(_DONE removed, memo evicted), next ensure() rebuilds", e)
       } finally { keptSets.unpersist(blocking = false); () }
       (nNew, nFps)
     } finally

@@ -212,8 +212,7 @@ object Denorm {
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(d, "_DONE"))) {
         childrenPerOrder(spark, sfDir)
           .write.mode("overwrite").parquet(d)
-        java.nio.file.Files.write(java.nio.file.Paths.get(d, "_DONE"),
-          Array.emptyByteArray)
+        ArtifactGen.markDone(d)
       }
       d
     })

@@ -19,7 +19,16 @@ package graft.operators
   *    an artifact (the addSegment/addVectors torn-commit discipline);
   *  - the FIRST failure is rethrown (others are suppressed onto it);
   *  - a fresh pool per call, threads inherit the calling thread's
-  *    inheritable locals, so job descriptions/groups stay attached.
+  *    inheritable locals, so job descriptions/groups stay attached;
+  *  - an interrupt of the caller cancels the Spark jobs the tasks are
+  *    running (each task thread adds this call's job tag to the tags
+  *    it inherited, with interrupt-on-cancel, so a hung job is torn
+  *    down instead of waited on forever), still awaits every task, and
+  *    then throws InterruptedException with the interrupt flag
+  *    restored. A failure the cancellation itself caused rides on it
+  *    as suppressed; any other task failure stays primary. The cancel
+  *    reaches the jobs running when it lands: a task that starts a
+  *    further job afterwards runs it.
   *
   * Tear-detection note: callers that depend on a lockstep-validation
   * ORDER (e.g. TextIndex.addSegment's doclen-first / corpus-last
@@ -29,42 +38,57 @@ package graft.operators
 private[graft] object Par {
   def run(tasks: (() => Unit)*): Unit = {
     if (tasks.isEmpty) return
-    if (tasks.length == 1) { tasks.head(); return }
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    val tag = s"graft-par-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.length)
     try {
       val futs = tasks.map { t =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = t()
+          def call(): Unit = {
+            sc.addJobTag(tag)
+            sc.setInterruptOnCancel(true)
+            t()
+          }
         })
       }
-      var err: Throwable = null
+      val errs = scala.collection.mutable.ArrayBuffer.empty[Throwable]
       var interrupted = false
       futs.foreach { f =>
         // an interrupt of the CALLING thread must not break the
-        // await-all contract: the pool threads run on, so returning
-        // early would let a still-live writer race the caller's
-        // invalidate(). Remember the interrupt, keep awaiting every
-        // future, and restore the flag before rethrowing (the
-        // round-15 advisor finding).
+        // await-all contract: returning early would let a still-live
+        // writer race the caller's invalidate(). Cancel the tasks'
+        // jobs once, keep awaiting every future, and restore the flag
+        // before rethrowing (the round-15 advisor finding).
         var done = false
         while (!done) {
           try { f.get(); done = true } catch {
             case e: java.util.concurrent.ExecutionException =>
-              val c = if (e.getCause != null) e.getCause else e
-              if (err == null) err = c else err.addSuppressed(c)
+              errs += (if (e.getCause != null) e.getCause else e)
               done = true
             case _: InterruptedException =>
+              if (!interrupted) sc.cancelJobsWithTag(tag, s"caller of $tag interrupted")
               interrupted = true
           }
         }
       }
-      if (interrupted) {
-        Thread.currentThread().interrupt()
-        val ie = new InterruptedException(
-          "interrupted while awaiting Par tasks (all tasks completed)")
-        if (err == null) err = ie else err.addSuppressed(ie)
+      val failures =
+        if (!interrupted) errs.toSeq
+        else {
+          Thread.currentThread().interrupt()
+          val ie = new InterruptedException(
+            "interrupted while awaiting Par tasks (their Spark jobs " +
+              "cancelled, all tasks completed)")
+          // a job killed by the cancel fails with an error naming the tag
+          def byCancel(e: Throwable): Boolean =
+            Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+              .exists(c => Option(c.getMessage).exists(_.contains(tag)))
+          val (echo, own) = errs.toSeq.partition(byCancel)
+          own ++ (ie +: echo)
+        }
+      failures.headOption.foreach { e =>
+        failures.tail.foreach(e.addSuppressed)
+        throw e
       }
-      if (err != null) throw err
     } finally { pool.shutdownNow(); () }
   }
 }

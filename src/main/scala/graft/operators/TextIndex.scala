@@ -55,26 +55,26 @@ import graft.functions.Analyzers
   * in exact longs, so every statistic round-trips identically and the
   * artifact-backed queries hash-match their scan-based oracles.
   */
-object TextIndex {
+object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
+    "graft_text_index",
+    // "v5": the shingle membership postings + dictionary joined the
+    // layout ("v4" added generations and positional postings)
+    version = "v5", idCol = "doc_id") {
 
-  /** `key` is the [[ensure]] memo key when this Loaded came from the
-    * managed lifecycle (empty for ad-hoc [[build]]s into scratch
-    * dirs) — it lets invalidation evict the in-JVM memo entry, not
-    * just the on-disk `_DONE` marker. */
-  final case class Loaded(dir: String, key: String = "") {
-    private val tables = new ArtifactGen.TableOpener(dir)
+  final case class Loaded(dir: String, key: String = "")
+      extends ArtifactGen.Handle {
     def postings(spark: SparkSession): DataFrame =
-      tables.open(spark, "postings")
+      open(spark, "postings")
     def termDf(spark: SparkSession): DataFrame =
-      tables.open(spark, "term_df")
+      open(spark, "term_df")
     def shingles(spark: SparkSession): DataFrame =
-      tables.open(spark, "shingles")
+      open(spark, "shingles")
     def shingleDf(spark: SparkSession): DataFrame =
-      tables.open(spark, "shingle_df")
+      open(spark, "shingle_df")
     def doclen(spark: SparkSession): DataFrame =
-      tables.open(spark, "doclen")
+      open(spark, "doclen")
     def corpus(spark: SparkSession): DataFrame =
-      tables.open(spark, "corpus")
+      open(spark, "corpus")
   }
 
   /** Corpus-version fingerprint from parquet file metadata (same
@@ -82,42 +82,14 @@ object TextIndex {
   def corpusKey(sfDir: String): String =
     Fingerprint.ofTables(sfDir, "documents")
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, Loaded]()
+  type L = Loaded
 
-  /** The artifact for `docs` under `key`, through the
-    * [[ArtifactGen]] generation-pointer lifecycle: resolve `_CURRENT`
-    * to a completed generation, else build a FRESH generation and
-    * publish it — a rebuild after invalidation never rewrites a
-    * directory a stale reader still holds (wholly-old or wholly-new,
-    * the s14 alias discipline).
-    *
-    * "v5": the shingle membership postings + dictionary joined the
-    * layout ("v4" added generations and positional postings) — each
-    * a layout change, so earlier artifacts are never half-read. */
-  def ensure(docs: DataFrame, key: String): Loaded =
-    memo.computeIfAbsent(key, { _ =>
-      val root = rootFor(key)
-      def resolve() = ArtifactGen.resolveOrBuild(root,
-        load = dir => Loaded(dir, key),
-        build = dir => build(docs, dir).copy(key = key))
-      val first = resolve()
-      // cross-table LOCKSTEP validation (the DedupIndex discipline):
-      // addSegment's appends are exception-safe but not crash-safe — a
-      // hard JVM kill between the doclen append and the corpus swap
-      // leaves _DONE intact with stats that no longer describe the
-      // postings. Three cheap aggregate checks catch every tear point
-      // in the append order; a torn artifact rebuilds fresh.
-      if (lockstepValid(docs.sparkSession, first)) first
-      else {
-        // on-disk invalidation only — inside computeIfAbsent, touching
-        // the memo would be a recursive map update
-        ArtifactGen.warnTearRebuild("TextIndex", key, first.dir)
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(first.dir, "_DONE"))
-        resolve()
-      }
-    })
+  protected def loadKeyed(spark: SparkSession, dir: String,
+                          key: String): Loaded = Loaded(dir, key)
+
+  protected def buildKeyed(docs: DataFrame, dir: String,
+                           key: String): Loaded =
+    build(docs, dir).copy(key = key)
 
   /** Invariants every complete artifact satisfies, tombstones or not
     * (deletes never touch these tables until a purge, which swaps all
@@ -127,65 +99,69 @@ object TextIndex {
     * addSegment tear point (crash after doclen; after postings;
     * after a dictionary swap but before the corpus swap) breaks at
     * least one of the three. */
-  private def lockstepValid(spark: SparkSession, l: Loaded): Boolean = {
-    def checks(): Boolean = {
-      // the six reads are independent (all describe settled on-disk
-      // state) and OVERLAPPED (Par scaladoc): the happy path — every
-      // ensure() on a fresh JVM, s15 pays it four times in-query —
-      // costs one wall instead of six serial small jobs. A torn
-      // artifact evaluates every check instead of short-circuiting,
-      // which only the rare rebuild path pays.
-      var n, doclenCnt, dfMass, postingsCnt, shMass, shinglesCnt = 0L
-      Par.run(
-        () => n = l.corpus(spark).head().getAs[Double]("n").toLong,
-        () => doclenCnt = l.doclen(spark).count(),
-        () => dfMass = l.termDf(spark)
-          .agg(coalesce(sum(col("df")), lit(0L))).head().getLong(0),
-        () => postingsCnt = l.postings(spark).count(),
-        () => shMass = l.shingleDf(spark)
-          .agg(coalesce(sum(col("df")), lit(0L))).head().getLong(0),
-        () => shinglesCnt = l.shingles(spark).count())
-      n == doclenCnt && dfMass == postingsCnt && shMass == shinglesCnt
-    }
-    // a table missing entirely (hard crash between swapIn's delete
-    // and rename) is the same tear, just louder. Any other read
-    // failure gets ONE retry: a transient flake passes the second
-    // attempt (and must not destroy a healthy artifact's _DONE),
-    // while persistent corruption — a present-but-truncated file
-    // with _DONE intact — fails twice and is treated as the tear it
-    // is, instead of wedging every ensure() forever.
-    try checks() catch {
-      case _: org.apache.spark.sql.AnalysisException => false
-      case scala.util.control.NonFatal(_) =>
-        try checks() catch {
-          case scala.util.control.NonFatal(_) => false
-        }
-    }
+  protected def lockstep(spark: SparkSession, l: Loaded): Boolean = {
+    // the six reads are independent (all describe settled on-disk
+    // state) and OVERLAPPED (Par scaladoc): the happy path — every
+    // ensure() on a fresh JVM, s15 pays it four times in-query —
+    // costs one wall instead of six serial small jobs. A torn
+    // artifact evaluates every check instead of short-circuiting,
+    // which only the rare rebuild path pays.
+    var n, doclenCnt, dfMass, postingsCnt, shMass, shinglesCnt = 0L
+    Par.run(
+      () => n = l.corpus(spark).head().getAs[Double]("n").toLong,
+      () => doclenCnt = l.doclen(spark).count(),
+      () => dfMass = l.termDf(spark)
+        .agg(coalesce(sum(col("df")), lit(0L))).head().getLong(0),
+      () => postingsCnt = l.postings(spark).count(),
+      () => shMass = l.shingleDf(spark)
+        .agg(coalesce(sum(col("df")), lit(0L))).head().getLong(0),
+      () => shinglesCnt = l.shingles(spark).count())
+    n == doclenCnt && dfMass == postingsCnt && shMass == shinglesCnt
   }
 
-  /** Invalidate a managed artifact: remove its `_DONE` marker (so the
-    * pointer resolves to "no live artifact") AND evict the in-JVM memo
-    * entry — without the eviction, ensure() in the same JVM would keep
-    * serving the torn Loaded and the "next ensure() rebuilds" promise
-    * would only hold after a JVM restart. */
-  private[graft] def invalidate(l: Loaded): Unit = {
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(l.dir, "_DONE"))
-    if (l.key.nonEmpty) memo.remove(l.key)
-    ()
-  }
+  /** (doc_id, toks, len): the one analysis every table derives from. */
+  private def analyzed(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), Analyzers.tokenize(lower(col("text"))).as("toks"))
+      .select(col("doc_id"), col("toks"), size(col("toks")).as("len"))
 
-  /** Spec hook: forget the memoized Loaded WITHOUT invalidating the
-    * on-disk artifact — models a fresh JVM resolving the `_CURRENT`
-    * pointer. */
-  private[graft] def evictMemo(key: String): Unit = { memo.remove(key); () }
+  /** Rows clustered and sorted by term: parquet row-group min/max
+    * stats on `term` for the postings-style tables. */
+  private def termSorted(df: DataFrame): DataFrame =
+    df.repartition(col("term")).sortWithinPartitions(col("term"), col("doc_id"))
 
-  /** The managed root for `key` — the ONE place the layout version
-    * lives, so lifecycle callers (s15, specs) can never wipe or probe
-    * a stale version's directory. */
-  private[graft] def rootFor(key: String): java.nio.file.Path =
-    java.nio.file.Paths
-      .get(sys.props("java.io.tmpdir"), "graft_text_index", "v5", key)
+  /** The positional postings of analyzed docs, term-sorted. */
+  private def postingsOf(withLen: DataFrame): DataFrame =
+    termSorted(withLen.select(col("doc_id"), col("len"),
+        posexplode(col("toks")).as(Seq("pos", "term")))
+      .groupBy(col("term"), col("doc_id"), col("len"))
+      .agg(count(lit(1)).cast("int").as("tf"),
+        // collect_list order is partition-nondeterministic — sort for
+        // a canonical artifact (phrase checks only need membership,
+        // but a byte-stable index is what makes rebuilds comparable)
+        sort_array(collect_list(col("pos").cast("int"))).as("positions")))
+
+  /** Shingle membership: the shingle stream DISTINCT per doc — one row
+    * per (shingle, doc), the exact row set rare_terms' per-doc
+    * array_distinct counted; a unigram and a separator-free bigram
+    * that collide on the same string stay ONE row per doc here too. */
+  private def shinglesOf(withLen: DataFrame): DataFrame =
+    withLen.select(col("doc_id"), explode(array_distinct(
+      Analyzers.shingleTokens(col("toks")))).as("term"))
+
+  /** The (term, df) dictionary of a membership table. */
+  private def dictOf(table: DataFrame): DataFrame =
+    table.groupBy(col("term")).agg(count(lit(1)).as("df")).coalesce(1)
+
+  /** The corpus row of a (doc_id, len) table: the SAME aggregate
+    * expressions the in-query stats passes used — count → double, avg
+    * over the int len (exact long sum / count). sum_len rides along as
+    * the exact LONG the avg divided — it is what makes incremental
+    * maintenance bit-exact: merged avgdl is (sum_len₁+sum_len₂)/(n₁+n₂),
+    * the identical one-division-of-exact-longs a full rebuild computes,
+    * never an average of averages. */
+  private def corpusOf(lens: DataFrame): DataFrame =
+    lens.agg(count(lit(1)).cast("double").as("n"), avg(col("len")).as("avgdl"),
+      sum(col("len")).cast("long").as("sum_len"))
 
   /** The ingest job: tokenize ONCE, derive postings, term dictionary,
     * length norms and corpus statistics, persist all of it. */
@@ -197,10 +173,7 @@ object TextIndex {
     // exists to pay once (the addSegment path had this persist since
     // round 9; the build path re-analyzed the corpus 4× until the
     // round-13 review caught it)
-    val withLen = docs
-      .select(col("doc_id"), Analyzers.tokenize(lower(col("text"))).as("toks"))
-      .select(col("doc_id"), col("toks"), size(col("toks")).as("len"))
-      .persist()
+    val withLen = analyzed(docs).persist()
     try {
 
     // the four table chains below are INDEPENDENT given the pinned
@@ -214,52 +187,20 @@ object TextIndex {
     Par.run(
       () => withLen.select(col("doc_id"), col("len"))
         .write.mode("overwrite").parquet(s"$dir/doclen"),
-      // the SAME aggregate expressions the in-query stats passes used:
-      // count → double, avg over the int len (exact long sum / count).
-      // sum_len rides along as the exact LONG the avg divided — it is
-      // what makes incremental maintenance bit-exact: merged avgdl is
-      // (sum_len₁+sum_len₂)/(n₁+n₂), the identical one-division-of-
-      // exact-longs a full rebuild computes, never an average of
-      // averages.
-      () => withLen.agg(count(lit(1)).cast("double").as("n"),
-          avg(col("len")).as("avgdl"),
-          sum(col("len")).cast("long").as("sum_len"))
-        .write.mode("overwrite").parquet(s"$dir/corpus"),
+      () => corpusOf(withLen).write.mode("overwrite").parquet(s"$dir/corpus"),
       () => {
-        withLen.select(col("doc_id"), col("len"),
-            posexplode(col("toks")).as(Seq("pos", "term")))
-          .groupBy(col("term"), col("doc_id"), col("len"))
-          .agg(count(lit(1)).cast("int").as("tf"),
-            // collect_list order is partition-nondeterministic — sort
-            // for a canonical artifact (phrase checks only need
-            // membership, but a byte-stable index is what makes
-            // rebuilds comparable)
-            sort_array(collect_list(col("pos").cast("int"))).as("positions"))
-          .repartition(col("term"))
-          .sortWithinPartitions(col("term"), col("doc_id"))
-          .write.mode("overwrite").parquet(s"$dir/postings")
-        spark.read.parquet(s"$dir/postings")
-          .groupBy(col("term")).agg(count(lit(1)).as("df"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/term_df")
+        postingsOf(withLen).write.mode("overwrite").parquet(s"$dir/postings")
+        dictOf(spark.read.parquet(s"$dir/postings"))
+          .write.mode("overwrite").parquet(s"$dir/term_df")
       },
       () => {
-        // shingle stream DISTINCT per doc — one membership row per
-        // (shingle, doc), the exact row set rare_terms' per-doc
-        // array_distinct counted; a unigram and a separator-free
-        // bigram that collide on the same string stay ONE row per doc
-        // here too
-        withLen.select(col("doc_id"), explode(array_distinct(
-            Analyzers.shingleTokens(col("toks")))).as("term"))
-          .repartition(col("term"))
-          .sortWithinPartitions(col("term"), col("doc_id"))
+        termSorted(shinglesOf(withLen))
           .write.mode("overwrite").parquet(s"$dir/shingles")
-        spark.read.parquet(s"$dir/shingles")
-          .groupBy(col("term")).agg(count(lit(1)).as("df"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/shingle_df")
+        dictOf(spark.read.parquet(s"$dir/shingles"))
+          .write.mode("overwrite").parquet(s"$dir/shingle_df")
       })
 
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_DONE"),
-      Array.emptyByteArray)
+    ArtifactGen.markDone(dir)
     Loaded(dir)
     } finally { withLen.unpersist(blocking = false); () }
   }
@@ -295,10 +236,7 @@ object TextIndex {
     // "tokenize ONCE" discipline the build path gets from deriving
     // tables off the written files (the round-9 review finding on the
     // doubled shingle pass)
-    val withLen = delta
-      .select(col("doc_id"), Analyzers.tokenize(lower(col("text"))).as("toks"))
-      .select(col("doc_id"), col("toks"), size(col("toks")).as("len"))
-      .persist()
+    val withLen = analyzed(delta).persist()
     try {
 
     // Disjointness against the BASE. The happy path pays exactly ONE
@@ -356,9 +294,8 @@ object TextIndex {
 
     // the segment commit touches four structures; a failure partway
     // (doclen appended, postings not; or a died dictionary swap) is a
-    // TORN index — invalidate (_DONE removed) so the next ensure()
-    // rebuilds, the AnnIndex.addVectors discipline
-    try {
+    // TORN index, invalidated so the next ensure() rebuilds
+    appending(base, "segment commit") {
       // tear-detection bracket (lockstepValid scaladoc): the doclen
       // append stays FIRST and the corpus swap stays LAST — any hard
       // crash strictly between them leaves doclen grown against the
@@ -371,14 +308,7 @@ object TextIndex {
         .write.mode("append").parquet(s"$dir/doclen")
       Par.run(
         () => {
-          withLen.select(col("doc_id"), col("len"),
-              posexplode(col("toks")).as(Seq("pos", "term")))
-            .groupBy(col("term"), col("doc_id"), col("len"))
-            .agg(count(lit(1)).cast("int").as("tf"),
-              sort_array(collect_list(col("pos").cast("int"))).as("positions"))
-            .repartition(col("term"))
-            .sortWithinPartitions(col("term"), col("doc_id"))
-            .write.mode("append").parquet(s"$dir/postings")
+          postingsOf(withLen).write.mode("append").parquet(s"$dir/postings")
 
           // dictionary + stats merges: DICTIONARY-sized, rewritten via
           // write-to-tmp + atomic swap (the Sink.compact discipline)
@@ -388,10 +318,10 @@ object TextIndex {
             .select(col("doc_id"),
               explode(array_distinct(col("toks"))).as("term"))
             .groupBy(col("term")).agg(count(lit(1)).as("df"))
-          swapIn(spark, base, "term_df",
+          swapIn(spark, base, "term_df")(overwrite(
             base.termDf(spark).unionByName(deltaDf)
               .groupBy(col("term")).agg(sum(col("df")).as("df"))
-              .coalesce(1))
+              .coalesce(1)))
         },
         () => {
           // the exploded (doc_id, shingle) frame is computed ONCE and
@@ -399,21 +329,16 @@ object TextIndex {
           // delta) — shingling is the dominant per-row analysis cost
           // and was paid twice until the round-13 review (the same
           // doubled-pass shape round 9 fixed on the build path)
-          val shingleRows = withLen.select(col("doc_id"),
-              explode(array_distinct(
-                Analyzers.shingleTokens(col("toks")))).as("term"))
-            .persist()
+          val shingleRows = shinglesOf(withLen).persist()
           try {
-            shingleRows
-              .repartition(col("term"))
-              .sortWithinPartitions(col("term"), col("doc_id"))
+            termSorted(shingleRows)
               .write.mode("append").parquet(s"$dir/shingles")
             val deltaShingleDf = shingleRows
               .groupBy(col("term")).agg(count(lit(1)).as("df"))
-            swapIn(spark, base, "shingle_df",
+            swapIn(spark, base, "shingle_df")(overwrite(
               base.shingleDf(spark).unionByName(deltaShingleDf)
                 .groupBy(col("term")).agg(sum(col("df")).as("df"))
-                .coalesce(1))
+                .coalesce(1)))
           } finally { shingleRows.unpersist(blocking = false); () }
         })
       // the delta stats were computed INSIDE the admission aggregate
@@ -422,19 +347,13 @@ object TextIndex {
       // re-scanning the persisted delta: same exact-long additions and
       // the identical one-division-of-exact-longs, one fewer pass per
       // segment commit (the per-micro-batch serial floor st10 pays)
-      swapIn(spark, base, "corpus",
+      swapIn(spark, base, "corpus")(overwrite(
         base.corpus(spark)
           .select((col("n") + lit(nDelta.toDouble)).as("n"),
             (col("sum_len") + lit(deltaSumLen)).as("sum_len"))
           .select(col("n"),
             (col("sum_len").cast("double") / col("n")).as("avgdl"),
-            col("sum_len")))
-    } catch {
-      case e: Throwable =>
-        invalidate(base)
-        throw new IllegalStateException(
-          s"partial segment commit into $dir — artifact invalidated " +
-            "(_DONE removed, memo evicted), next ensure() rebuilds", e)
+            col("sum_len"))))
     }
     base
     } finally withLen.unpersist(blocking = false)
@@ -456,45 +375,8 @@ object TextIndex {
     * (liveView's anti-join ignores absent/duplicate ids) and skip
     * that pass; the counted contract is what the gate verifies. */
   def deleteByQuery(spark: SparkSession, base: Loaded,
-                    ids: DataFrame): Long = {
-    val victims = ids.select(col("doc_id"))
-      .join(liveView(spark, base, base.doclen(spark)), Seq("doc_id"),
-        "left_semi")
-      .distinct()
-      // pinned across its two consumers: count() and the tombstone
-      // append otherwise each re-run the ids ⋈ doclen membership join
-      // (two pruned corpus passes where the scaladoc prices one —
-      // round-13 review; runDeleteIngest pays this per micro-batch)
-      .persist()
-    try {
-      val n = victims.count()
-      if (n > 0)
-        victims.write.mode("append").parquet(s"${base.dir}/deletes")
-      n
-    } finally { victims.unpersist(blocking = false); () }
-  }
-
-  /** Does the tombstone table exist? Probed through the Hadoop
-    * `FileSystem` that WRITES it (the swapIn discipline) — a
-    * `java.nio` probe silently answers false the day artifacts move
-    * off the local tmpdir, masking every tombstone (the round-8
-    * advisor finding). */
-  private[graft] def hasDeletes(spark: SparkSession,
-                                base: Loaded): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"${base.dir}/deletes")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** A table of the artifact, restricted to LIVE (non-tombstoned)
-    * docs — the query-time live-docs mask. An anti-join against the
-    * deletes table, which is empty-safe (no deletes dir ⇒ the frame
-    * passes through unchanged). At scale the deletes side is small
-    * until a purge is due, so this broadcasts. */
-  def liveView(spark: SparkSession, base: Loaded,
-               table: DataFrame): DataFrame =
-    if (!hasDeletes(spark, base)) table
-    else table.join(spark.read.parquet(s"${base.dir}/deletes"),
-      Seq("doc_id"), "left_anti")
+                    ids: DataFrame): Long =
+    tombstone(spark, base, ids, base.doclen(spark))
 
   /** The merge that makes tombstones physical: rewrite postings and
     * doclen without the deleted docs (swapIn discipline — write-tmp +
@@ -526,41 +408,24 @@ object TextIndex {
     val shCols = base.shingles(spark).columns.map(col).toSeq
     Par.run(
       () => {
-        swapIn(spark, base, "postings",
-          liveView(spark, base, base.postings(spark))
-            .select(pCols: _*)
-            .repartition(col("term"))
-            .sortWithinPartitions(col("term"), col("doc_id")))
-        swapIn(spark, base, "term_df",
-          base.postings(spark)
-            .groupBy(col("term")).agg(count(lit(1)).as("df"))
-            .coalesce(1))
+        swapIn(spark, base, "postings")(overwrite(termSorted(
+          liveView(spark, base, base.postings(spark)).select(pCols: _*))))
+        swapIn(spark, base, "term_df")(overwrite(dictOf(base.postings(spark))))
       },
       () => {
-        swapIn(spark, base, "shingles",
-          liveView(spark, base, base.shingles(spark))
-            .select(shCols: _*)
-            .repartition(col("term"))
-            .sortWithinPartitions(col("term"), col("doc_id")))
-        swapIn(spark, base, "shingle_df",
-          base.shingles(spark)
-            .groupBy(col("term")).agg(count(lit(1)).as("df"))
-            .coalesce(1))
+        swapIn(spark, base, "shingles")(overwrite(termSorted(
+          liveView(spark, base, base.shingles(spark)).select(shCols: _*))))
+        swapIn(spark, base, "shingle_df")(overwrite(dictOf(base.shingles(spark))))
       },
       () => {
-        swapIn(spark, base, "doclen",
+        swapIn(spark, base, "doclen")(overwrite(
           liveView(spark, base, base.doclen(spark))
-            .select(col("doc_id"), col("len")))
-        swapIn(spark, base, "corpus",
-          base.doclen(spark).agg(count(lit(1)).cast("double").as("n"),
-            avg(col("len")).as("avgdl"),
-            sum(col("len")).cast("long").as("sum_len")))
+            .select(col("doc_id"), col("len"))))
+        swapIn(spark, base, "corpus")(overwrite(corpusOf(base.doclen(spark))))
       })
     // tombstones are now physical — clear them (a failure here leaves
     // a consistent index + stale tombstones: deletes are idempotent)
-    val fs = new org.apache.hadoop.fs.Path(base.dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"${base.dir}/deletes"), true)
+    clearDeletes(spark, base)
     base
   }
 
@@ -591,7 +456,7 @@ object TextIndex {
     // doesn't trip the threshold, the exact count cannot either —
     // the doclen semi-join runs only when the raw signal trips
     // (measured: the always-join form doubled s16's bench row)
-    val tombRaw = spark.read.parquet(s"${base.dir}/deletes").count()
+    val tombRaw = deletes(spark, base).count()
     // the indexed-doc count comes from the single-row corpus stats
     // table (n == doclen count by the lockstep invariant; deletes
     // never touch either until the purge swaps both) — a 1-file read
@@ -600,7 +465,7 @@ object TextIndex {
     if (tombRaw.toDouble <=
         maxRatio * math.max(doclenCnt - tombRaw, 1L).toDouble)
       return false
-    val tomb = spark.read.parquet(s"${base.dir}/deletes")
+    val tomb = deletes(spark, base)
       .select(col("doc_id")).distinct()
       .join(base.doclen(spark), Seq("doc_id"), "left_semi")
       .count()
@@ -619,40 +484,7 @@ object TextIndex {
     * scale, like [[graft.sources.Sink.compact]]. */
   def compactPostings(spark: SparkSession, base: Loaded): (Int, Int) = {
     val before = base.postings(spark).inputFiles.length
-    swapIn(spark, base, "postings",
-      base.postings(spark)
-        .repartition(col("term"))
-        .sortWithinPartitions(col("term"), col("doc_id")))
+    swapIn(spark, base, "postings")(overwrite(termSorted(base.postings(spark))))
     (before, base.postings(spark).inputFiles.length)
-  }
-
-  /** Overwrite `base`'s `sub` table with `df` where `df` READS from
-    * it: write to a sibling tmp dir, then swap directories. The
-    * delete+rename pair is NOT atomic (and rename can FAIL on
-    * cross-filesystem tmp or object stores), so both outcomes are
-    * handled loudly: a failed delete or rename — or a JVM that died
-    * between them, detected as a missing target on the next mutation
-    * — INVALIDATES the artifact ([[invalidate]]: `_DONE` removed AND
-    * the memo entry evicted) before throwing, so `ensure` rebuilds a
-    * fresh generation instead of serving a torn index. */
-  private def swapIn(spark: SparkSession, base: Loaded, sub: String,
-                     df: DataFrame): Unit = {
-    val path = s"${base.dir}/$sub"
-    val tmp = path + ".swap-tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(path)
-    if (!fs.delete(target, true) && fs.exists(target)) {
-      invalidate(base)
-      sys.error(s"swap failed: could not delete $path — artifact " +
-        "invalidated (_DONE removed, memo evicted), next ensure() rebuilds")
-    }
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), target)) {
-      invalidate(base)
-      sys.error(s"swap failed: could not rename $tmp over $path — " +
-        "artifact invalidated (_DONE removed, memo evicted), next " +
-        "ensure() rebuilds")
-    }
   }
 }

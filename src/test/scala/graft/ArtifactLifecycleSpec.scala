@@ -77,51 +77,6 @@ class ArtifactLifecycleSpec extends SparkSpec {
     assert(AnnIndex.ensure(corpus, key).dir == b.dir)
   }
 
-  test("text index: ensure detects out-of-lockstep tables and rebuilds a fresh generation") {
-    import spark.implicits._
-    val key = "lockstep-spec-text"
-    val root = TextIndex.rootFor(key)
-    TextIndex.evictMemo(key)
-    wipe(root)
-    val docs = Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta"))
-      .toDF("doc_id", "text")
-    val a = TextIndex.ensure(docs, key)
-    // simulate a hard kill after the doclen append but before the
-    // corpus swap: _DONE intact, stats no longer describe the tables
-    Seq((99L, 3)).toDF("doc_id", "len")
-      .write.mode("append").parquet(s"${a.dir}/doclen")
-    TextIndex.evictMemo(key)
-    val b = TextIndex.ensure(docs, key)
-    assert(b.dir != a.dir,
-      s"a torn artifact must rebuild into a fresh generation: ${b.dir}")
-    assert(b.corpus(spark).head().getDouble(0).toLong
-      == b.doclen(spark).count())
-    // an intact artifact keeps resolving without a rebuild
-    TextIndex.evictMemo(key)
-    assert(TextIndex.ensure(docs, key).dir == b.dir)
-  }
-
-  test("ann index: ensure detects out-of-lockstep encodings and rebuilds a fresh generation") {
-    val key = "lockstep-spec-ann"
-    val root = AnnIndex.rootFor(key)
-    AnnIndex.evictMemo(key)
-    wipe(root)
-    val corpus = Tables.embeddings(spark, sf)
-      .select(col("vec_id"), col("label"), col("embedding"))
-    val a = AnnIndex.ensure(corpus, key)
-    // simulate a crash after the ivf append but before the other
-    // three encodings: duplicate one ivf row file-level
-    a.ivf(spark).limit(1)
-      .write.mode("append").partitionBy("cell").parquet(s"${a.dir}/ivf")
-    AnnIndex.evictMemo(key)
-    val b = AnnIndex.ensure(corpus, key)
-    assert(b.dir != a.dir,
-      s"a torn artifact must rebuild into a fresh generation: ${b.dir}")
-    assert(b.ivf(spark).count() == b.sq8(spark).count())
-    AnnIndex.evictMemo(key)
-    assert(AnnIndex.ensure(corpus, key).dir == b.dir)
-  }
-
   test("generation claim is atomic: two racing builders get distinct dirs and a consistent _CURRENT") {
     import java.nio.file.{Files, Paths}
     import graft.operators.ArtifactGen

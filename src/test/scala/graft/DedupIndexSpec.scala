@@ -98,30 +98,4 @@ class DedupIndexSpec extends SparkSpec {
     assert(!verdict.getBoolean(2) && verdict.getLong(1) == 1L,
       s"rewording must resolve to standing doc 1: $verdict")
   }
-
-  test("ensure detects out-of-lockstep tables and rebuilds a fresh generation") {
-    import spark.implicits._
-    val key = "dix-lockstep-spec"
-    val root = DedupIndex.rootFor(key)
-    DedupIndex.evictMemo(key)
-    graft.operators.ArtifactGen.wipe(root)
-    val docs = Seq((1L, "alpha beta gamma delta epsilon zeta"),
-      (2L, "one two three four five six"))
-      .toDF("doc_id", "text")
-    val a = DedupIndex.ensure(docs, key)
-    // simulate a hard JVM kill after the fingerprints append but
-    // before buckets/shingle_sets: _DONE stays, tables out of lockstep
-    Seq(("deadbeef", 999L)).toDF("fingerprint", "keep_id")
-      .write.mode("append").parquet(s"${a.dir}/fingerprints")
-    DedupIndex.evictMemo(key)
-    val b = DedupIndex.ensure(docs, key)
-    assert(b.dir != a.dir,
-      s"a torn artifact must rebuild into a fresh generation: ${b.dir}")
-    // the rebuilt artifact is whole again: exact screen and near
-    // verify side know the same docs
-    assert(b.fingerprints(spark).count() == b.shingleSets(spark).count())
-    // an INTACT artifact keeps resolving without a rebuild
-    DedupIndex.evictMemo(key)
-    assert(DedupIndex.ensure(docs, key).dir == b.dir)
-  }
 }

@@ -1,7 +1,10 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicBoolean
-import java.util.concurrent.CountDownLatch
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import org.apache.spark.scheduler.{JobSucceeded, SparkListener,
+  SparkListenerJobEnd, SparkListenerJobStart}
 
 import graft.operators.Par
 
@@ -12,6 +15,9 @@ import graft.operators.Par
   * writer would append into an artifact the caller just invalidated).
   */
 class ParSpec extends SparkSpec {
+
+  // Par.run tags its tasks' Spark jobs through the active session
+  private val sc = spark.sparkContext
 
   /** Interrupt `t`, which is blocked inside Par.run awaiting tasks
     * held on a latch, and wait until Par.run has taken the interrupt
@@ -112,7 +118,6 @@ class ParSpec extends SparkSpec {
   }
 
   test("job descriptions/groups (inheritable locals) reach the pool threads") {
-    val sc = spark.sparkContext
     sc.setJobDescription("par-spec-desc")
     try {
       @volatile var seen: String = null
@@ -122,4 +127,61 @@ class ParSpec extends SparkSpec {
       assert(seen == "par-spec-desc")
     } finally sc.setJobDescription(null)
   }
+
+  test("interrupting the caller cancels the Spark jobs its tasks are running") {
+    val jobId = new AtomicInteger(-1)
+    val jobStarted = new CountDownLatch(1)
+    val jobEnded = new CountDownLatch(1)
+    @volatile var jobEnd: SparkListenerJobEnd = null
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties.getProperty("spark.job.description") ==
+            "par-cancel-spec") {
+          jobId.set(js.jobId); jobStarted.countDown()
+        }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (je.jobId == jobId.get) { jobEnd = je; jobEnded.countDown() }
+    }
+    @volatile var caught: Throwable = null
+    val t = new Thread(() => {
+      try Par.run(
+        () => {
+          sc.setJobDescription("par-cancel-spec")
+          // its one Spark task blocks on a latch nobody releases
+          sc.parallelize(Seq(1), 1).foreach(_ => ParSpec.blockUntilInterrupted())
+        },
+        () => ())
+      catch { case e: Throwable => caught = e }
+    })
+    sc.addSparkListener(listener)
+    try {
+      t.start()
+      // the latch awaits and the join below are hang guards only
+      assert(jobStarted.await(60, TimeUnit.SECONDS), "the job never started")
+      t.interrupt()
+      t.join(60000)
+      assert(!t.isAlive, "Par.run never returned: the job was not cancelled")
+      assert(caught.isInstanceOf[InterruptedException], caught)
+      assert(jobEnded.await(60, TimeUnit.SECONDS))
+      assert(jobEnd.jobResult != JobSucceeded)
+      assert(jobEnd.jobResult.toString.contains("cancelled"), jobEnd.jobResult)
+      // the cancelled job's failure rides on the interrupt
+      assert(caught.getSuppressed.nonEmpty, caught)
+      // interrupt-on-cancel reached the executor thread running the task
+      assert(ParSpec.taskInterrupted.await(60, TimeUnit.SECONDS))
+    } finally {
+      sc.removeSparkListener(listener)
+      ParSpec.never.countDown()
+    }
+  }
+}
+
+object ParSpec {
+  val never = new CountDownLatch(1)
+  val taskInterrupted = new CountDownLatch(1)
+
+  def blockUntilInterrupted(): Unit =
+    try never.await() catch {
+      case e: InterruptedException => taskInterrupted.countDown(); throw e
+    }
 }

@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.operators.{AnnIndex, DedupIndex, Search, TextIndex}
 
-/** The per-`Loaded` table opener (operators.ArtifactGen.TableOpener):
+/** The per-`Loaded` table opener (operators.ArtifactGen.Handle.open):
   * a table's schema is inferred on its first open only. Counts Spark
   * jobs by their call sites (the stage names), never wall time. */
 class TableOpenerSpec extends SparkSpec {
