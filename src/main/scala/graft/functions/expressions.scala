@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -626,14 +627,33 @@ object expressions {
   def dot_product(a: Column, b: Column): Column =
     GraftShim.toColumn(DotProduct(GraftShim.toExpression(a), GraftShim.toExpression(b)))
 
-  // Column-typed shift amounts: the public functions.shiftleft/right only
-  // accept a literal Int, but SimHash needs per-element shifts inside
-  // higher-order-function lambdas.
-  import org.apache.spark.sql.catalyst.expressions.{ShiftLeft, ShiftRight, ShiftRightUnsigned}
-  def shift_left(c: Column, bits: Column): Column =
-    GraftShim.toColumn(ShiftLeft(GraftShim.toExpression(c), GraftShim.toExpression(bits)))
-  def shift_right(c: Column, bits: Column): Column =
-    GraftShim.toColumn(ShiftRight(GraftShim.toExpression(c), GraftShim.toExpression(bits)))
+  /** A query constant bound by reference, the prepared-statement
+    * parameter. A double `Literal` is constant-folded and inlined into
+    * the generated Java source, so queries that differ only in such a
+    * constant compile their stages anew, one Janino compile per query.
+    * This value is never folded; its generated code reads it from the
+    * references array, so one compiled class serves every value. */
+  case class BoundDouble(value: Double) extends LeafExpression {
+    override def dataType: DataType = DoubleType
+    override def nullable: Boolean = false
+    override def foldable: Boolean = false
+    override def eval(input: InternalRow): Any = value
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val v = ctx.addReferenceObj("bound", java.lang.Double.valueOf(value),
+        "java.lang.Double")
+      ev.copy(isNull = FalseLiteral,
+        code = code"final double ${ev.value} = $v.doubleValue();")
+    }
+    override def prettyName: String = "bound_double"
+  }
+
+  def bound_double(value: Double): Column =
+    GraftShim.toColumn(BoundDouble(value))
+
+  // Column-typed shift amount: the public functions.shiftrightunsigned
+  // only accepts a literal Int, but SimHash needs per-element shifts
+  // inside higher-order-function lambdas.
+  import org.apache.spark.sql.catalyst.expressions.ShiftRightUnsigned
   def shift_right_unsigned(c: Column, bits: Column): Column =
     GraftShim.toColumn(ShiftRightUnsigned(GraftShim.toExpression(c), GraftShim.toExpression(bits)))
 

@@ -5,6 +5,10 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -43,7 +47,8 @@ object ArtifactGen {
     * [[ManagedArtifact.ensure]] memo key (empty for ad-hoc builds into
     * scratch dirs — the key lets invalidation evict the in-JVM memo
     * entry, not just the on-disk `_DONE` marker), and the table opener
-    * its tables are read through.
+    * its tables are read through ([[open]] for a Spark read, [[rows]]
+    * for a small driver-side read).
     *
     * The first [[open]] of a table infers its schema from a parquet
     * footer — a one-task Spark job per `spark.read.parquet` — and every
@@ -73,6 +78,27 @@ object ArtifactGen {
           schemas.putIfAbsent(table, df.schema)
           df
       }
+    }
+
+    /** The records of `table` that pass `filter`, read on the driver
+      * through parquet-hadoop: no Spark job and no schema inference
+      * (each file carries its own). For a request's tiny reads — a
+      * corpus row, a query's dictionary slice — where a job's fixed
+      * cost would be most of the request. Like [[open]] it lists the
+      * directory on every call, skipping the `_`/`.` files Spark's
+      * reader skips. */
+    def rows(spark: SparkSession, table: String,
+             filter: FilterCompat.Filter = FilterCompat.NOOP): Seq[Group] = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val path = new HPath(s"$dir/$table")
+      path.getFileSystem(conf).listStatus(path).toSeq.map(_.getPath)
+        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+        .flatMap { p =>
+          val reader = ParquetReader.builder(new GroupReadSupport(), p)
+            .withConf(conf).withFilter(filter).build()
+          try Iterator.continually(reader.read()).takeWhile(_ != null).toList
+          finally reader.close()
+        }
     }
   }
 
@@ -114,26 +140,38 @@ object ArtifactGen {
       * made since its build — logged with the generation and key, so
       * operators know which deltas to re-ingest. */
     def ensure(data: DataFrame, key: String): L =
-      memo.computeIfAbsent(key, { _ =>
-        val spark = data.sparkSession
-        def resolve() = resolveOrBuild(rootFor(key),
-          load = dir => loadKeyed(spark, dir, key),
-          build = dir => buildKeyed(data, dir, key))
-        val first = resolve()
-        if (lockstepValid(spark, first)) first
-        else {
-          org.slf4j.LoggerFactory.getLogger("graft.ArtifactGen").warn(
-            s"$family artifact for key '$key' failed ensure-time lockstep " +
-              s"validation (torn generation at ${first.dir}); rebuilding " +
-              "fresh from the ensure() snapshot — segments/batches " +
-              "appended to the torn generation since its build are " +
-              "DROPPED and must be re-ingested")
-          // on-disk invalidation only — inside computeIfAbsent, touching
-          // the memo would be a recursive map update
-          unmark(first.dir)
-          resolve()
+      memo.computeIfAbsent(key, _ => resolveWhole(data, key))
+
+    private def resolveWhole(data: DataFrame, key: String): L = {
+      val spark = data.sparkSession
+      val root = rootFor(key)
+      def resolve() = resolveOrBuild(root,
+        load = dir => loadKeyed(spark, dir, key),
+        build = dir => buildKeyed(data, dir, key))
+      val torn =
+        try {
+          val first = resolve()
+          if (lockstepValid(spark, first)) return first
+          first.dir
+        } catch {
+          // a table missing entirely can fail the load itself, before
+          // the lockstep check runs (AnnIndex.load counts `ivf`): the
+          // same tear. A failed build publishes nothing, so its
+          // exception finds no current generation and propagates.
+          case e: AnalysisException =>
+            currentDir(root).getOrElse(throw e).toString
         }
-      })
+      org.slf4j.LoggerFactory.getLogger("graft.ArtifactGen").warn(
+        s"$family artifact for key '$key' failed ensure-time lockstep " +
+          s"validation (torn generation at $torn); rebuilding " +
+          "fresh from the ensure() snapshot — segments/batches " +
+          "appended to the torn generation since its build are " +
+          "DROPPED and must be re-ingested")
+      // on-disk invalidation only — inside computeIfAbsent, touching
+      // the memo would be a recursive map update
+      unmark(torn)
+      resolve()
+    }
 
     /** [[lockstep]], with read failures classified: a table missing
       * entirely (a hard crash between [[swapIn]]'s delete and rename)
@@ -208,10 +246,9 @@ object ArtifactGen {
       * A JVM killed between the delete and the rename leaves the table
       * missing under `_DONE`. A later mutation through a held handle (a
       * purge, an append's admission read) throws without invalidating;
-      * what catches the tear is the next ensure()'s lockstep check, where
-      * the missing table is an AnalysisException, which counts as a tear
-      * (except AnnIndex's `ivf`: its load reads it before the check, so
-      * that ensure() fails loudly instead of rebuilding). */
+      * what catches the tear is the next ensure(), where the missing
+      * table is an AnalysisException — raised by the load or by the
+      * lockstep check — which counts as a tear. */
     private[graft] def swapIn(spark: SparkSession, l: L, sub: String)(
         write: String => Unit): Unit = {
       val path = s"${l.dir}/$sub"

@@ -1,9 +1,15 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Analyzers
+import graft.functions.expressions.bound_double
 
 /** The search/analytics surface — the Spark re-expression of the
   * reference's one relevance query (kuko6/tweets-elastic
@@ -199,7 +205,7 @@ object Search {
         sum(when(col(s"tf$i") > 0, 1).otherwise(0)).cast("double")
           .as(s"df$i"))
     val stats = pre.agg(aggs.head, aggs.tail: _*)
-    val score = bm25Sum(terms, k1, b)
+    val score = bm25Sum(scanStats(terms), k1, b)
     pre.filter(terms.indices.map(i => col(s"tf$i") > 0).reduce(_ || _))
       .crossJoin(broadcast(stats))
       .select(col("doc_id"), round(score, 6).as("score"))
@@ -380,7 +386,7 @@ object Search {
     val stats = pre.agg(aggs.head, aggs.tail: _*)
     val matched = terms.indices
       .map(i => when(col(s"tf$i") > 0, 1).otherwise(0)).reduce(_ + _)
-    val score = bm25Sum(terms, k1, b)
+    val score = bm25Sum(scanStats(terms), k1, b)
     pre.withColumn("n_matched", matched)
       .filter(col("n_matched") >= minMatch)
       .crossJoin(broadcast(stats))
@@ -412,7 +418,7 @@ object Search {
       terms.indices.map(i =>
         sum(when(col(s"tf$i") > 0, 1).otherwise(0)).cast("double").as(s"df$i"))
     val stats = pre.agg(aggs.head, aggs.tail: _*)
-    val primary = bm25Sum(terms, k1, b)
+    val primary = bm25Sum(scanStats(terms), k1, b)
     pre.filter(terms.indices.map(i => col(s"tf$i") > 0).reduce(_ || _))
       .crossJoin(broadcast(stats))
       .select(col("doc_id"), col("lt"), round(primary, 6).as("primary_score"))
@@ -434,26 +440,51 @@ object Search {
   // ---- TextIndex-backed variants -----------------------------------
   //
   // Identical semantics and bit-identical scores to the scan-based
-  // paths above (TextIndexSpec proves result equality): tf/len come
-  // from the persisted postings, df from the term dictionary, (n,
-  // avgdl) from the corpus-stats row — all computed ONCE at ingest by
-  // TextIndex.build with the very aggregate expressions the in-query
-  // stats passes used. What changes is the ACCESS PATH: a term query
-  // reads the term's postings (term-sorted parquet ⇒ row-group
-  // skipping) instead of tokenizing every document per query.
+  // paths above (TextIndexSpec and IndexedStatsSpec prove result
+  // equality): tf/len come from the persisted postings, df from the
+  // term dictionary, (n, avgdl) from the corpus-stats row — all
+  // computed ONCE at ingest by TextIndex.build with the very aggregate
+  // expressions the in-query stats passes used. What changes is the
+  // ACCESS PATH: a term query reads the term's postings (term-sorted
+  // parquet ⇒ row-group skipping) instead of tokenizing every document
+  // per query, and its statistics are read on the driver, without a
+  // Spark job, when the frame is BUILT ([[indexedStats]]), then enter
+  // the scoring projection as constants. So a frame built before an
+  // addSegment or purge and collected after it scores with the older
+  // statistics; build and collect a request together (every in-repo
+  // caller does, in one query lambda or one timed thunk).
 
-  /** 1-row (n, avgdl, df0..df(T-1)) statistics frame from the
-    * artifact. A term absent from the dictionary gets df 0, exactly
-    * like the scan-based conditional count. */
+  /** (n, avgdl, df per query term) from the artifact, read ONCE on the
+    * driver when the request's frame is built: the 1-row corpus table
+    * and the query terms' dictionary slice (a record filter pushed into
+    * the parquet reader), through [[ArtifactGen.Handle.rows]] — no Spark
+    * job. df sums on the driver per term (nothing assumes one
+    * dictionary row per term), and a term absent from the dictionary
+    * gets df 0, exactly like the scan-based conditional count. The
+    * values enter the scoring projection as bound constants
+    * (`expressions.bound_double`), not literals: a literal would be
+    * inlined into the generated code, so every request whose
+    * statistics differ would compile its stages anew. A bound constant
+    * is evaluated per row in generated code exactly like the scan
+    * paths' column references, so scores stay bit-identical. Nothing
+    * is memoized on the handle — an append stays visible to the next
+    * request through a held handle. */
   private def indexedStats(spark: SparkSession, ix: TextIndex.Loaded,
-                           terms: Seq[String]): DataFrame = {
-    val dfAggs = terms.zipWithIndex.map { case (t, i) =>
-      coalesce(sum(when(col("term") === t, col("df"))), lit(0L))
-        .cast("double").as(s"df$i")
+                           terms: Seq[String]): Bm25Stats = {
+    val c = ix.rows(spark, "corpus") match {
+      case Seq(r) => r
+      case rs => throw new IllegalStateException(
+        s"text index ${ix.dir}: expected one corpus row, found ${rs.size}")
     }
-    ix.corpus(spark).crossJoin(
-      ix.termDf(spark).filter(col("term").isin(terms: _*))
-        .agg(dfAggs.head, dfAggs.tail: _*))
+    // an empty corpus has a null avgdl: the field is absent
+    def stat(f: String): Column =
+      if (c.getFieldRepetitionCount(f) == 0) lit(null).cast("double")
+      else bound_double(c.getDouble(f, 0))
+    val slice = ix.rows(spark, "term_df", FilterCompat.get(FilterApi.in(
+      FilterApi.binaryColumn("term"), terms.map(Binary.fromString).toSet.asJava)))
+    val df = slice.groupMapReduce(_.getString("term", 0))(_.getLong("df", 0))(_ + _)
+    Bm25Stats(stat("n"), stat("avgdl"),
+      terms.map(t => bound_double(df.getOrElse(t, 0L).toDouble)))
   }
 
   /** (doc_id, len, tf0..tf(T-1)) for every document matching ≥ 1 query
@@ -471,16 +502,14 @@ object Search {
       .agg(tfAggs.head, tfAggs.tail: _*)
   }
 
-  /** [[bm25]] from the artifact: one postings lookup + the stats row. */
+  /** [[bm25]] from the artifact: one postings lookup, scored with the
+    * statistics [[indexedStats]] read. */
   def bm25Indexed(spark: SparkSession, ix: TextIndex.Loaded, term: String,
                   k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val stats = indexedStats(spark, ix, Seq(term))
-      .withColumnRenamed("df0", "df")
-    val (idf, tfNorm) = bm25Parts(col("tf"), col("df"),
-      col("len"), col("n"), col("avgdl"), k1, b)
+    val s = indexedStats(spark, ix, Seq(term))
+    val (idf, tfNorm) = bm25Parts(col("tf"), s.df.head,
+      col("len"), s.n, s.avgdl, k1, b)
     ix.postings(spark).filter(col("term") === term)
-      .select(col("doc_id"), col("tf"), col("len"))
-      .crossJoin(broadcast(stats))
       .select(col("doc_id"), round(idf * tfNorm, 6).as("bm25"))
       .orderBy(col("bm25").desc, col("doc_id").asc)
   }
@@ -488,14 +517,11 @@ object Search {
   /** [[tfidf]] from the artifact. */
   def tfidfIndexed(spark: SparkSession, ix: TextIndex.Loaded,
                    term: String): DataFrame = {
-    val stats = indexedStats(spark, ix, Seq(term))
-      .withColumnRenamed("df0", "df")
+    val s = indexedStats(spark, ix, Seq(term))
     ix.postings(spark).filter(col("term") === term)
-      .select(col("doc_id"), col("tf"), col("len"))
-      .crossJoin(broadcast(stats))
       .select(col("doc_id"),
         round(col("tf").cast("double") / col("len") *
-          log((col("n") + 1.0) / (col("df") + 1.0)), 6).as("tfidf"))
+          log((s.n + 1.0) / (s.df.head + 1.0)), 6).as("tfidf"))
       .orderBy(col("tfidf").desc, col("doc_id").asc)
   }
 
@@ -513,10 +539,22 @@ object Search {
       (tf * lit(k1 + 1.0)) /
         (tf + lit(k1) * (lit(1.0) - lit(b) + lit(b) * len / avgdl)))
 
-  private def bm25Sum(terms: Seq[String], k1: Double, b: Double): Column =
-    terms.indices.map { i =>
-      val (idf, tfn) = bm25Parts(col(s"tf$i"), col(s"df$i"), col("len"),
-        col("n"), col("avgdl"), k1, b)
+  /** BM25's corpus statistics as scoring inputs: n, avgdl and one df
+    * per query term — column references into a scan path's broadcast
+    * stats row ([[scanStats]]) or the index path's bound constants
+    * ([[indexedStats]]). */
+  private final case class Bm25Stats(n: Column, avgdl: Column,
+                                     df: Seq[Column])
+
+  /** The (n, avgdl, df0..df(T-1)) columns of a scan path's stats row. */
+  private def scanStats(terms: Seq[String]): Bm25Stats =
+    Bm25Stats(col("n"), col("avgdl"), terms.indices.map(i => col(s"df$i")))
+
+  /** Σ over query terms of BM25, reading tf$i and len per document. */
+  private def bm25Sum(stats: Bm25Stats, k1: Double, b: Double): Column =
+    stats.df.zipWithIndex.map { case (df, i) =>
+      val (idf, tfn) = bm25Parts(col(s"tf$i"), df, col("len"),
+        stats.n, stats.avgdl, k1, b)
       when(col(s"tf$i") > 0, idf * tfn).otherwise(lit(0.0))
     }.reduce(_ + _)
 
@@ -525,18 +563,11 @@ object Search {
                         terms: Seq[String], k: Int = 20, k1: Double = 1.2,
                         b: Double = 0.75): DataFrame =
     indexedTfWide(spark, ix, terms)
-      .crossJoin(broadcast(indexedStats(spark, ix, terms)))
-      .select(col("doc_id"), round(bm25Sum(terms, k1, b), 6).as("score"))
+      .select(col("doc_id"),
+        round(bm25Sum(indexedStats(spark, ix, terms), k1, b), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)
 
-  /** ES `_explain` endpoint: the per-document score DECOMPOSITION for
-    * a term query — every factor the BM25 product multiplies (tf,
-    * doc length, df, the idf term, the tf-norm term) emitted as
-    * columns next to the final score, served from the index like
-    * [[bm25Indexed]] (whose arithmetic this reproduces factor by
-    * factor). One pushed term read + the broadcast stats row; the
-    * explanation costs nothing beyond the query it explains. */
   /** ES `_terms_enum` API: lexicographic enumeration of the index
     * terms matching a prefix, with their doc counts — served entirely
     * from the persisted (term, df) dictionary. The startsWith
@@ -609,15 +640,13 @@ object Search {
                posTerm: String, negTerm: String,
                negativeBoost: Double = 0.5, k: Int = 15,
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val stats = indexedStats(spark, ix, Seq(posTerm))
-      .withColumnRenamed("df0", "df")
-    val (idf, tfNorm) = bm25Parts(col("tf"), col("df"),
-      col("len"), col("n"), col("avgdl"), k1, b)
+    val s = indexedStats(spark, ix, Seq(posTerm))
+    val (idf, tfNorm) = bm25Parts(col("tf"), s.df.head,
+      col("len"), s.n, s.avgdl, k1, b)
     val neg = ix.postings(spark).filter(col("term") === negTerm)
       .select(col("doc_id"), lit(true).as("demoted"))
     ix.postings(spark).filter(col("term") === posTerm)
       .select(col("doc_id"), col("tf"), col("len"))
-      .crossJoin(broadcast(stats))
       .join(neg, Seq("doc_id"), "left")
       .withColumn("demoted", coalesce(col("demoted"), lit(false)))
       .select(col("doc_id"), col("demoted"),
@@ -689,8 +718,8 @@ object Search {
         ix.postings(spark).select(col("doc_id"), lit(0.0).as("fscore"))
           .limit(0)
       else indexedTfWide(spark, ix, terms)
-        .crossJoin(broadcast(indexedStats(spark, ix, terms)))
-        .select(col("doc_id"), bm25Sum(terms, k1, b).as("fscore"))
+        .select(col("doc_id"),
+          bm25Sum(indexedStats(spark, ix, terms), k1, b).as("fscore"))
     // SARGable upper bound: bump the last char. A last char of
     // Char.MaxValue would wrap to an empty/inverted range, so fall
     // back to the open-ended >= read with a startsWith residual —
@@ -749,18 +778,22 @@ object Search {
       .orderBy(col("term"))
   }
 
+  /** ES `_explain` endpoint: the per-document score DECOMPOSITION for
+    * a term query — every factor the BM25 product multiplies (tf,
+    * doc length, df, the idf term, the tf-norm term) emitted as
+    * columns next to the final score, served from the index like
+    * [[bm25Indexed]] (whose arithmetic this reproduces factor by
+    * factor). One pushed term read + the statistics read; the
+    * explanation costs nothing beyond the query it explains. */
   def explainBm25(spark: SparkSession, ix: TextIndex.Loaded,
                   term: String, k: Int = 10, k1: Double = 1.2,
                   b: Double = 0.75): DataFrame = {
-    val stats = indexedStats(spark, ix, Seq(term))
-      .withColumnRenamed("df0", "df")
-    val (idf, tfNorm) = bm25Parts(col("tf"), col("df"),
-      col("len"), col("n"), col("avgdl"), k1, b)
+    val s = indexedStats(spark, ix, Seq(term))
+    val (idf, tfNorm) = bm25Parts(col("tf"), s.df.head,
+      col("len"), s.n, s.avgdl, k1, b)
     ix.postings(spark).filter(col("term") === term)
-      .select(col("doc_id"), col("tf"), col("len"))
-      .crossJoin(broadcast(stats))
       .select(col("doc_id"), col("tf"), col("len"),
-        col("df").cast("long").as("df"),
+        s.df.head.cast("long").as("df"),
         round(idf, 6).as("idf"),
         round(tfNorm, 6).as("tf_norm"),
         round(idf * tfNorm, 6).as("bm25"))
@@ -808,8 +841,9 @@ object Search {
                        k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val allTerms = queries.flatMap(_._2).distinct
-    // dictionary df as double — the exact cast indexedStats applied,
-    // so single-term batches stay bit-identical to bm25Indexed
+    // dictionary df as double — the same long-to-double conversion
+    // indexedStats applies, so single-term batches stay bit-identical
+    // to bm25Indexed
     val termStats = ix.termDf(spark).filter(col("term").isin(allTerms: _*))
       .select(col("term"), col("df").cast("double").as("df"))
     val qdf = {
@@ -1103,9 +1137,8 @@ object Search {
     indexedTfWide(spark, ix, terms)
       .withColumn("n_matched", matched)
       .filter(col("n_matched") >= minMatch)
-      .crossJoin(broadcast(indexedStats(spark, ix, terms)))
       .select(col("doc_id"), col("n_matched").cast("long").as("n_matched"),
-        round(bm25Sum(terms, k1, b), 6).as("score"))
+        round(bm25Sum(indexedStats(spark, ix, terms), k1, b), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
   }
@@ -1119,8 +1152,9 @@ object Search {
                      phraseWeight: Double = 2.0, k1: Double = 1.2,
                      b: Double = 0.75): DataFrame =
     indexedTfWide(spark, ix, terms)
-      .crossJoin(broadcast(indexedStats(spark, ix, terms)))
-      .select(col("doc_id"), round(bm25Sum(terms, k1, b), 6).as("primary_score"))
+      .select(col("doc_id"),
+        round(bm25Sum(indexedStats(spark, ix, terms), k1, b), 6)
+          .as("primary_score"))
       .orderBy(col("primary_score").desc, col("doc_id"))
       .limit(window)
       .join(Tables.documents(spark, dir)
@@ -1141,14 +1175,12 @@ object Search {
                                       ix: TextIndex.Loaded, term: String,
                                       k1: Double = 1.2,
                                       b: Double = 0.75): DataFrame = {
-    val stats = indexedStats(spark, ix, Seq(term))
-      .withColumnRenamed("df0", "df")
-    val (idf, tfNorm) = bm25Parts(col("tf"), col("df"),
-      col("len"), col("n"), col("avgdl"), k1, b)
+    val s = indexedStats(spark, ix, Seq(term))
+    val (idf, tfNorm) = bm25Parts(col("tf"), s.df.head,
+      col("len"), s.n, s.avgdl, k1, b)
     ix.postings(spark).filter(col("term") === term)
       .join(Tables.documents(spark, dir)
         .select(col("doc_id"), col("source")), "doc_id")
-      .crossJoin(broadcast(stats))
       .select(col("doc_id"), col("source"), round(idf * tfNorm, 6).as("score"))
   }
 

@@ -169,6 +169,24 @@ class ManagedArtifactSpec extends SparkSpec {
     assert(AnnIndex.ensure(vectors, key).dir == b.dir)
   }
 
+  test("ann index: a missing ivf table makes ensure rebuild, not throw") {
+    val key = "crash-spec-ann-ivf"
+    AnnIndex.evictMemo(key)
+    ArtifactGen.wipe(AnnIndex.rootFor(key))
+    val a = AnnIndex.ensure(vectors, key)
+    // a hard kill between swapIn's delete and rename of ivf (a purge):
+    // the load's row count meets the missing table before the
+    // lockstep check runs
+    ArtifactGen.wipe(Paths.get(a.dir, "ivf"))
+    AnnIndex.evictMemo(key)
+    val b = AnnIndex.ensure(vectors, key)
+    assert(b.dir != a.dir && b.dir.endsWith("gen-2"),
+      s"a torn artifact must rebuild into a fresh generation: ${b.dir}")
+    assert(b.nRows == b.ivf(spark).count() && b.nRows == a.nRows)
+    AnnIndex.evictMemo(key)
+    assert(AnnIndex.ensure(vectors, key).dir == b.dir)
+  }
+
   test("a stale handle's append never overwrites a newer generation's memo entry") {
     val key = "stale-handle-spec-ann"
     AnnIndex.evictMemo(key)

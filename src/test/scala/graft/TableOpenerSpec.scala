@@ -1,37 +1,15 @@
 package graft
 
-import org.apache.spark.GraftBusShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 import graft.operators.{AnnIndex, DedupIndex, Search, TextIndex}
 
 /** The per-`Loaded` table opener (operators.ArtifactGen.Handle.open):
   * a table's schema is inferred on its first open only. Counts Spark
-  * jobs by their call sites (the stage names), never wall time. */
+  * jobs by their call sites (the stage names, SparkSpec.jobsOf), never
+  * wall time. */
 class TableOpenerSpec extends SparkSpec {
-
-  /** The stage names of every job `body` launches, one Seq per job.
-    * The listener bus is drained before and after, so no other job's
-    * events land in the record. */
-  private def jobsOf(body: => Unit): Seq[Seq[String]] = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.add(js.stageInfos.map(_.name)); ()
-      }
-    }
-    assert(GraftBusShim.waitUntilListenerBusEmpty(sc, 30000))
-    sc.addSparkListener(listener)
-    try {
-      body
-      assert(GraftBusShim.waitUntilListenerBusEmpty(sc, 30000))
-    } finally sc.removeSparkListener(listener)
-    jobs.asScala.toSeq
-  }
 
   /** A job that infers a parquet schema: its stage is named after the
     * `spark.read.parquet` call. */
