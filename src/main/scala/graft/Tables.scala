@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+import graft.operators.Fingerprint
 
 /** Readers for the driver-generated test tables (TESTDATA.md).
   *
@@ -17,7 +19,27 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else {
+      val path = s"$dir/$name.parquet"
+      spark.read.schema(schemaOf(spark, path, Fingerprint.ofTables(dir, name)))
+        .parquet(path)
+    }
+
+  // path → (fingerprint, schema): inferring a schema is a one-task Spark
+  // job, so it runs once per version of a table's files. A rewritten
+  // table has a new fingerprint (file names, lengths, mtimes) and is
+  // inferred again, replacing its entry. Fingerprint lists the local
+  // filesystem, where these tables are generated.
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
+
+  private def schemaOf(spark: SparkSession, path: String,
+                       fingerprint: String): StructType =
+    Option(schemas.get(path)).filter(_._1 == fingerprint).map(_._2).getOrElse {
+      val s = spark.read.parquet(path).schema
+      schemas.put(path, (fingerprint, s))
+      s
+    }
 
   /** Upstream writers have shipped `events.ts` under several parquet
     * encodings over time — TIMESTAMP(NANOS) (which Spark's vectorized

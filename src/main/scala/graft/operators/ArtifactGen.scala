@@ -69,16 +69,16 @@ object ArtifactGen {
     private val schemas =
       new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-    protected def open(spark: SparkSession, table: String): DataFrame = {
-      val path = s"$dir/$table"
-      Option(schemas.get(table)) match {
-        case Some(s) => spark.read.schema(s).parquet(path)
-        case None =>
-          val df = spark.read.parquet(path)
-          schemas.putIfAbsent(table, df.schema)
-          df
+    protected def open(spark: SparkSession, table: String): DataFrame =
+      spark.read.schema(schema(spark, table)).parquet(s"$dir/$table")
+
+    /** `table`'s schema: inferred on the first call, memoized after. */
+    protected def schema(spark: SparkSession, table: String): StructType =
+      Option(schemas.get(table)).getOrElse {
+        val s = spark.read.parquet(s"$dir/$table").schema
+        schemas.putIfAbsent(table, s)
+        s
       }
-    }
 
     /** The records of `table` that pass `filter`, read on the driver
       * through parquet-hadoop: no Spark job and no schema inference

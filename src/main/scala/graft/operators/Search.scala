@@ -445,9 +445,12 @@ object Search {
   // term dictionary, (n, avgdl) from the corpus-stats row — all
   // computed ONCE at ingest by TextIndex.build with the very aggregate
   // expressions the in-query stats passes used. What changes is the
-  // ACCESS PATH: a term query reads the term's postings (term-sorted
-  // parquet ⇒ row-group skipping) instead of tokenizing every document
-  // per query, and its statistics are read on the driver, without a
+  // ACCESS PATH: a term query reads the term's postings (each file
+  // (term, doc_id)-sorted ⇒ row-group skipping) instead of tokenizing
+  // every document per query. Postings are bucketed by doc_id, so the
+  // per-document aggregate runs in the scan's tasks with no shuffle: a
+  // request is one Spark job, one task per bucket, whose top-k merges
+  // on the driver. Its statistics are read on the driver, without a
   // Spark job, when the frame is BUILT ([[indexedStats]]), then enter
   // the scoring projection as constants. So a frame built before an
   // addSegment or purge and collected after it scores with the older
@@ -747,9 +750,8 @@ object Search {
     * frequency, first token position, and corpus-wide document
     * frequency. ES answers this from stored per-doc term vectors or —
     * the `realtime` path — by re-analyzing the ONE document; postings
-    * here are term-partitioned (a doc_id probe would scan the whole
-    * inverted index, the forward-index problem ES stores term vectors
-    * to avoid), so this takes the realtime path: a pushed doc_id
+    * here are inverted (term, doc_id) rows, not per-doc term vectors,
+    * so this takes the realtime path: a pushed doc_id
     * point-read re-analyzes the single row row-locally, and corpus
     * statistics come from the persisted term dictionary, streamed ONCE
     * against a broadcast semi-join probe of the doc's term set (the
@@ -937,57 +939,54 @@ object Search {
   }
 
   /** ES match_phrase served FROM THE POSITIONAL INDEX — Lucene's
-    * phrase evaluation: each phrase term contributes its posting leg
-    * (a pushed term-equality read of the `positions` postings — file
-    * row-group skipping on the term column, never a corpus scan or
-    * re-tokenization), the legs intersect by an equi-join on
-    * `doc_id`, and the adjacency check is a row-local
-    * positions-array walk: a start position `p` survives iff leg `k`
-    * contains `p+k` for every k. Output is (doc_id, phrase_freq) —
-    * the count of valid start positions, the statistic ES feeds into
-    * phrase scoring. At 100 TB this reads |terms| posting lists and
-    * joins frames bounded by the rarest term's df; the scan path
-    * (p10) re-tokenizes the corpus per query. */
+    * phrase evaluation: ONE pushed `term IN (…)` read of the
+    * `positions` postings (row-group skipping on the term column,
+    * never a corpus scan or re-tokenization) gathers, per document,
+    * each phrase term's positions, and the adjacency check is a
+    * row-local positions-array walk: a start position `p` survives iff
+    * leg `k` contains `p+k` for every k ([[phraseWalk]]). Output is
+    * (doc_id, phrase_freq) — the count of valid start positions, the
+    * statistic ES feeds into phrase scoring. Postings are bucketed by
+    * doc_id, so the per-document gathering runs shard-locally: no
+    * join, no broadcast, no shuffle. The scan path (p10) re-tokenizes
+    * the corpus per query. */
   def phraseFromIndex(spark: SparkSession, ix: TextIndex.Loaded,
                       terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "phrase needs at least one term")
-    val legs = terms.zipWithIndex.map { case (t, i) =>
-      ix.postings(spark).filter(col("term") === t)
-        .select(col("doc_id"), col("positions").as(s"_p$i"))
-    }
-    val joined = legs.reduce((a, b) => a.join(b, Seq("doc_id")))
-    val starts = terms.indices.tail.foldLeft(col("_p0")) { (acc, k) =>
-      filter(acc, p => array_contains(col(s"_p$k"), p + k))
-    }
-    joined.select(col("doc_id"), size(starts).cast("long").as("phrase_freq"))
-      .filter(col("phrase_freq") > 0)
-      .orderBy(col("doc_id"))
+    phraseWalk(ix.postings(spark).filter(col("term").isin(terms: _*)),
+      terms.map(col("term") === _))
   }
 
   /** ES match_phrase_prefix from the positional index: the fixed
-    * terms run as [[phraseFromIndex]] legs; the trailing prefix
-    * becomes a SARGABLE term-range read of the postings
-    * (`term LIKE 'pre%'` prunes parquet row-groups via the term
-    * min/max stats — the dictionary range scan Lucene does), its
-    * per-doc positions unioned across matching terms before the same
-    * adjacency walk. */
+    * terms are [[phraseFromIndex]] legs; the trailing prefix leg is a
+    * SARGABLE term-range predicate (`term LIKE 'pre%'` prunes parquet
+    * row-groups via the term min/max stats — the dictionary range scan
+    * Lucene does), its positions unioned per document across the
+    * matching terms. One read serves both: `term IN (…) OR
+    * startsWith(prefix)`, so a fixed term the prefix also matches
+    * feeds both legs. */
   def phrasePrefixFromIndex(spark: SparkSession, ix: TextIndex.Loaded,
                             terms: Seq[String], prefix: String): DataFrame = {
     require(terms.nonEmpty, "phrase_prefix needs at least one fixed term")
-    val k = terms.size
-    val legs = terms.zipWithIndex.map { case (t, i) =>
-      ix.postings(spark).filter(col("term") === t)
-        .select(col("doc_id"), col("positions").as(s"_p$i"))
+    val pre = col("term").startsWith(prefix)
+    phraseWalk(ix.postings(spark).filter(col("term").isin(terms: _*) || pre),
+      terms.map(col("term") === _) :+ pre)
+  }
+
+  /** (doc_id, phrase_freq) over the postings rows `read`: leg `k`'s
+    * positions in a document are those of its rows matching `legs(k)`
+    * (one row per (term, doc_id), so a term leg has one row and a
+    * prefix leg the union of its terms'). A document missing a leg has
+    * an empty one and no start survives — the inner-join semantics. */
+  private def phraseWalk(read: DataFrame, legs: Seq[Column]): DataFrame = {
+    val gathered = legs.zipWithIndex.map { case (m, k) =>
+      flatten(collect_list(when(m, col("positions")))).as(s"_p$k")
     }
-    val pre = ix.postings(spark).filter(col("term").startsWith(prefix))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(flatten(collect_list(col("positions"))))
-        .as(s"_p$k"))
-    val joined = (legs :+ pre).reduce((a, b) => a.join(b, Seq("doc_id")))
-    val starts = (1 to k).foldLeft(col("_p0")) { (acc, j) =>
-      filter(acc, p => array_contains(col(s"_p$j"), p + j))
+    val starts = legs.indices.tail.foldLeft(col("_p0")) { (acc, k) =>
+      filter(acc, p => array_contains(col(s"_p$k"), p + k))
     }
-    joined.select(col("doc_id"), size(starts).cast("long").as("phrase_freq"))
+    read.groupBy(col("doc_id")).agg(gathered.head, gathered.tail: _*)
+      .select(col("doc_id"), size(starts).cast("long").as("phrase_freq"))
       .filter(col("phrase_freq") > 0)
       .orderBy(col("doc_id"))
   }

@@ -1,6 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, GraftShim, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 import graft.functions.Analyzers
 
@@ -24,12 +29,19 @@ import graft.functions.Analyzers
   *               match_phrase / span queries from the index instead
   *               of a corpus re-tokenization; ~one int per
   *               occurrence, the same storage trade Lucene makes by
-  *               default). repartition(term) +
-  *               sortWithinPartitions(term) gives parquet row-group
-  *               min/max stats on `term`, so a term-equality query
-  *               reads a fraction of the files (PushedFilters +
-  *               row-group skipping — the inverted-file access path
-  *               as storage layout, proved in TextIndexSpec).
+  *               default). SHARDED by doc_id, the way ES routes each
+  *               document to one shard by id hash: `buckets` hash
+  *               buckets (Spark's bucket hash and bucket-file names),
+  *               each file sorted by (term, doc_id), so a term or
+  *               prefix predicate still prunes row groups
+  *               (PushedFilters + row-group min/max on `term`). Read
+  *               as a bucketed relation, every per-document aggregate
+  *               or doc_id join over postings runs shard-locally with
+  *               no shuffle: a search request is one Spark job of one
+  *               task per bucket, its top-k merged on the driver.
+  *   _BUCKETS    the bucket count: the building session's
+  *               `spark.sql.shuffle.partitions`, fixed for the
+  *               generation (appends, purges and compaction keep it).
   *   term_df/    (term, df) — per-term document frequency (the term
   *               dictionary statistics).
   *   shingles/   (term, doc_id) — doc-membership postings over the
@@ -57,14 +69,19 @@ import graft.functions.Analyzers
   */
 object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
     "graft_text_index",
-    // "v5": the shingle membership postings + dictionary joined the
-    // layout ("v4" added generations and positional postings)
-    version = "v5", idCol = "doc_id") {
+    // "v6": postings bucketed by doc_id ("v5" added the shingle
+    // membership postings + dictionary, "v4" generations and
+    // positional postings)
+    version = "v6", idCol = "doc_id") {
 
   final case class Loaded(dir: String, key: String = "")
       extends ArtifactGen.Handle {
+    /** The generation's postings bucket count, from `_BUCKETS`. */
+    lazy val buckets: Int =
+      new String(Files.readAllBytes(Paths.get(dir, "_BUCKETS")), UTF_8).trim.toInt
     def postings(spark: SparkSession): DataFrame =
-      open(spark, "postings")
+      GraftShim.readBucketed(spark, s"$dir/postings",
+        schema(spark, "postings"), postingsSpec(buckets))
     def termDf(spark: SparkSession): DataFrame =
       open(spark, "term_df")
     def shingles(spark: SparkSession): DataFrame =
@@ -125,20 +142,54 @@ object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
       .select(col("doc_id"), col("toks"), size(col("toks")).as("len"))
 
   /** Rows clustered and sorted by term: parquet row-group min/max
-    * stats on `term` for the postings-style tables. */
+    * stats on `term` for the shingle membership table. */
   private def termSorted(df: DataFrame): DataFrame =
     df.repartition(col("term")).sortWithinPartitions(col("term"), col("doc_id"))
 
-  /** The positional postings of analyzed docs, term-sorted. */
-  private def postingsOf(withLen: DataFrame): DataFrame =
-    termSorted(withLen.select(col("doc_id"), col("len"),
+  /** The postings layout: `n` doc_id hash buckets, each file sorted by
+    * (term, doc_id). */
+  private def postingsSpec(n: Int): BucketSpec =
+    BucketSpec(n, Seq("doc_id"), Seq("term", "doc_id"))
+
+  /** Rows routed to their bucket: Spark's hash partitioning on doc_id
+    * into `n` partitions IS the bucket hash, so each write task holds
+    * one bucket and writes one file. An explicit partition count is
+    * exempt from AQE coalescing. */
+  private def byBucket(df: DataFrame, n: Int): DataFrame =
+    df.repartition(n, col("doc_id"))
+
+  /** Write `df`, already routed by [[byBucket]], as postings files. A
+    * bucketed write of no rows leaves no file, and a directory without
+    * one has no schema to read, so an empty corpus (or a purge of every
+    * document) keeps one empty file, named into bucket 0. */
+  private def writePostings(df: DataFrame, path: String, mode: SaveMode,
+                            n: Int): Unit = {
+    GraftShim.writeBucketed(df, path, mode, postingsSpec(n))
+    val dir = new HPath(path)
+    val fs = dir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    if (!fs.listStatus(dir).exists(_.getPath.getName.endsWith(".parquet"))) {
+      val tmp = new HPath(s"$path.empty-tmp")
+      df.limit(0).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      fs.listStatus(tmp).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+        .foreach(f => fs.rename(f,
+          new HPath(dir, f.getName.replaceFirst("-(c\\d{3}\\.)", "_00000.$1"))))
+      fs.delete(tmp, true)
+    }
+  }
+
+  /** The positional postings of analyzed docs, routed to `n` buckets.
+    * The documents are routed before the explode, so the (term, doc_id)
+    * aggregate runs bucket-locally: one shuffle of document rows, not
+    * of postings. */
+  private def postingsOf(withLen: DataFrame, n: Int): DataFrame =
+    byBucket(withLen, n).select(col("doc_id"), col("len"),
         posexplode(col("toks")).as(Seq("pos", "term")))
       .groupBy(col("term"), col("doc_id"), col("len"))
       .agg(count(lit(1)).cast("int").as("tf"),
         // collect_list order is partition-nondeterministic — sort for
         // a canonical artifact (phrase checks only need membership,
         // but a byte-stable index is what makes rebuilds comparable)
-        sort_array(collect_list(col("pos").cast("int"))).as("positions")))
+        sort_array(collect_list(col("pos").cast("int"))).as("positions"))
 
   /** Shingle membership: the shingle stream DISTINCT per doc — one row
     * per (shingle, doc), the exact row set rare_terms' per-doc
@@ -167,6 +218,7 @@ object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
     * length norms and corpus statistics, persist all of it. */
   def build(docs: DataFrame, dir: String): Loaded = {
     val spark = docs.sparkSession
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // pinned for the whole build: FOUR consumers below (doclen,
     // corpus stats, postings, shingles) would otherwise each re-run
     // the full-corpus tokenization — the exact cost this artifact
@@ -189,7 +241,8 @@ object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
         .write.mode("overwrite").parquet(s"$dir/doclen"),
       () => corpusOf(withLen).write.mode("overwrite").parquet(s"$dir/corpus"),
       () => {
-        postingsOf(withLen).write.mode("overwrite").parquet(s"$dir/postings")
+        writePostings(postingsOf(withLen, n), s"$dir/postings",
+          SaveMode.Overwrite, n)
         dictOf(spark.read.parquet(s"$dir/postings"))
           .write.mode("overwrite").parquet(s"$dir/term_df")
       },
@@ -200,13 +253,14 @@ object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
           .write.mode("overwrite").parquet(s"$dir/shingle_df")
       })
 
+    Files.write(Paths.get(dir, "_BUCKETS"), n.toString.getBytes(UTF_8))
     ArtifactGen.markDone(dir)
     Loaded(dir)
     } finally { withLen.unpersist(blocking = false); () }
   }
 
   /** Incremental maintenance — the Lucene SEGMENT model: a new batch of
-    * documents becomes an additional set of term-sorted posting files
+    * documents becomes an additional set of bucketed posting files
     * in the SAME postings directory (parquet append — existing
     * segments are never rewritten; each file keeps its own term
     * min/max row-group stats, so term lookups still skip), the
@@ -308,7 +362,8 @@ object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
         .write.mode("append").parquet(s"$dir/doclen")
       Par.run(
         () => {
-          postingsOf(withLen).write.mode("append").parquet(s"$dir/postings")
+          writePostings(postingsOf(withLen, base.buckets), s"$dir/postings",
+            SaveMode.Append, base.buckets)
 
           // dictionary + stats merges: DICTIONARY-sized, rewritten via
           // write-to-tmp + atomic swap (the Sink.compact discipline)
@@ -408,8 +463,9 @@ object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
     val shCols = base.shingles(spark).columns.map(col).toSeq
     Par.run(
       () => {
-        swapIn(spark, base, "postings")(overwrite(termSorted(
-          liveView(spark, base, base.postings(spark)).select(pCols: _*))))
+        swapIn(spark, base, "postings")(writePostings(byBucket(
+          liveView(spark, base, base.postings(spark)).select(pCols: _*),
+          base.buckets), _, SaveMode.Overwrite, base.buckets))
         swapIn(spark, base, "term_df")(overwrite(dictOf(base.postings(spark))))
       },
       () => {
@@ -478,13 +534,15 @@ object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
 
   /** Segment compaction — the maintenance pass that keeps lookup cost
     * bounded after many small appends: rewrite the postings directory
-    * into term-partitioned, term-sorted files (restoring one-segment
-    * row-group skipping) via write-to-tmp + atomic rename. Returns
-    * (files before, files after). Run per partition-directory at
-    * scale, like [[graft.sources.Sink.compact]]. */
+    * into one (term, doc_id)-sorted file per bucket (restoring
+    * one-segment row-group skipping) via write-to-tmp + atomic rename.
+    * Returns (files before, files after). Run per partition-directory
+    * at scale, like [[graft.sources.Sink.compact]]. */
   def compactPostings(spark: SparkSession, base: Loaded): (Int, Int) = {
     val before = base.postings(spark).inputFiles.length
-    swapIn(spark, base, "postings")(overwrite(termSorted(base.postings(spark))))
+    swapIn(spark, base, "postings")(writePostings(
+      byBucket(base.postings(spark), base.buckets), _, SaveMode.Overwrite,
+      base.buckets))
     (before, base.postings(spark).inputFiles.length)
   }
 }

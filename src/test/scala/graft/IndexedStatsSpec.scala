@@ -38,18 +38,22 @@ class IndexedStatsSpec extends SparkSpec {
 
   test("a warm index-served request reads its statistics without a Spark job") {
     def search = Search.searchBm25Indexed(spark, ix, Seq("table", "spark"), k = 20)
-    // the postings aggregate's shuffle and the top-k: nothing else
+    // the bucket-local postings aggregate and the top-k, in one job:
+    // nothing else
     val jobs = warmJobs(search)
-    assert(jobs.size == 2, jobs)
+    assert(jobs.size == 1, jobs)
     // building the frame reads the statistics, and launches no job
     assert(jobsOf { search; () }.isEmpty)
     val bm25 = warmJobs(Search.bm25Indexed(spark, ix, "spark"))
     assert(bm25.size == SubtreeBm25Indexed - 3, bm25)
     val boosting = warmJobs(Search.boosting(spark, ix, "spark", "slow"))
     assert(boosting.size == SubtreeBoosting - 3, boosting)
+    // its two legs meet in a full-outer doc_id join that the bucketed
+    // postings co-partition: the statistics' three jobs and the legs'
+    // three shuffle jobs are all gone
     val prefix = warmJobs(
       Search.matchBoolPrefix(spark, ix, Seq("merge"), "ba", k = 10))
-    assert(prefix.size == SubtreeMatchBoolPrefix - 3, prefix)
+    assert(prefix.size == SubtreeMatchBoolPrefix - 6, prefix)
   }
 
   test("an addSegment through a held handle is visible to its next request") {

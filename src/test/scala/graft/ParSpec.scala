@@ -158,6 +158,10 @@ class ParSpec extends SparkSpec {
       t.start()
       // the latch awaits and the join below are hang guards only
       assert(jobStarted.await(60, TimeUnit.SECONDS), "the job never started")
+      // a job's start precedes its task's: interrupting before the task
+      // blocks would cancel a task that never reached the latch
+      assert(ParSpec.taskRunning.await(60, TimeUnit.SECONDS),
+        "the task never started")
       t.interrupt()
       t.join(60000)
       assert(!t.isAlive, "Par.run never returned: the job was not cancelled")
@@ -179,9 +183,10 @@ class ParSpec extends SparkSpec {
 object ParSpec {
   val never = new CountDownLatch(1)
   val taskInterrupted = new CountDownLatch(1)
+  val taskRunning = new CountDownLatch(1)
 
   def blockUntilInterrupted(): Unit =
-    try never.await() catch {
+    try { taskRunning.countDown(); never.await() } catch {
       case e: InterruptedException => taskInterrupted.countDown(); throw e
     }
 }

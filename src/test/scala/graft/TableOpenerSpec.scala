@@ -39,6 +39,29 @@ class TableOpenerSpec extends SparkSpec {
     assert(second.isEmpty, second)
   }
 
+  test("a second Tables.documents call launches no Spark job") {
+    val dir = Scratch.dir("opener-tables")
+    Tables.documents(spark, sf).write.parquet(s"$dir/documents.parquet")
+    val first = jobsOf { Tables.documents(spark, dir); () }
+    assert(first.count(inference) == 1, first)
+    val second = jobsOf { Tables.documents(spark, dir); () }
+    assert(second.isEmpty, second)
+  }
+
+  test("a table rewritten with a different schema is inferred again") {
+    val dir = Scratch.dir("opener-rewrite")
+    val s = spark
+    import s.implicits._
+    Seq((1L, "a")).toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    assert(Tables.documents(spark, dir).columns.toSeq == Seq("doc_id", "text"))
+    Seq((1L, "a", 2.0)).toDF("doc_id", "text", "score")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val reread = Tables.documents(spark, dir)
+    assert(reread.columns.toSeq == Seq("doc_id", "text", "score"))
+    assert(reread.collect().map(_.getDouble(2)).toSeq == Seq(2.0))
+  }
+
   test("warm index-served search requests launch no schema-inference job") {
     val ix = TextIndex.build(Tables.documents(spark, sf),
       Scratch.dir("opener-search"))
