@@ -323,177 +323,6 @@ object BenchScale {
       (r, (System.nanoTime() - t0) / 1e9)
     }
 
-    // STEP-scaling probe for BPE training (not a data decade): x26
-    // runs a per-merge Spark job loop, so a production 32k-merge vocab
-    // pays 32k sequential driver round-trips — this mode measures the
-    // per-step constant directly. SPARK_GRAFT_BPE_STEPS="8,64,256"
-    // runs bpeTrain at each step count over the base dir and reports
-    // total + marginal per-step seconds (marginal between successive
-    // step counts isolates the steady-state step cost from the corpus
-    // collapse both runs share).
-    sys.env.get("SPARK_GRAFT_BPE_STEPS").foreach { spec =>
-      val stepCounts = spec.split(",").map(_.trim.toInt).toSeq.sorted
-      // SPARK_GRAFT_BPE_BATCH=B measures the batched-round variant
-      // (bpeTrainBatched) instead of the sequential per-merge loop
-      val batchOpt = sys.env.get("SPARK_GRAFT_BPE_BATCH").map(_.trim.toInt)
-      // the sf0.1 generator's documents draw from a 31-word
-      // vocabulary — BPE EXHAUSTS it at 90 merges (measured; the
-      // emitted_merges field below is the receipt), so production
-      // step counts need a vocab-rich corpus. SPARK_GRAFT_BPE_SCALE=k
-      // expands the vocabulary with the same word-tagging
-      // de-correlation the data-decade probes use ([[tagText]] —
-      // replica word streams are disjoint by construction): k
-      // replicas ≈ 31·k distinct words, each word's final collapse a
-      // distinct merge, so the supply comfortably exceeds 4-digit
-      // step counts while the text STRUCTURE stays the generator's.
-      val bpeScale = sys.env.getOrElse("SPARK_GRAFT_BPE_SCALE", "1").toInt
-      val baseDocs = Tables.documents(spark, base)
-      val docs =
-        if (bpeScale <= 1) baseDocs
-        else baseDocs
-          .select(explode(sequence(lit(0), lit(bpeScale - 1))).as("rk"),
-            col("text"))
-          .select(tagText(col("text"), col("rk")).as("text"))
-          .repartition(spark.sparkContext.defaultParallelism)
-      // emitted-merge COUNT per run: a corpus whose pair supply
-      // exhausts below the requested step count would otherwise
-      // masquerade as a fast steady state — the count makes the
-      // probe self-verifying (emitted == requested, or the row is
-      // explicitly an exhaustion bound, not a rate)
-      val times = stepCounts.map { k =>
-        Bench.isolate(spark)
-        val (got, s) = timed {
-          batchOpt match {
-            case Some(b) =>
-              // emitted MERGES only: the batched trainer now appends a
-              // terminal supply_exhausted marker row on exhausted runs
-              // (its scaladoc) — a receipt, not a merge. Real merges
-              // always carry pair_count ≥ 1; the marker carries 0 (a
-              // corpus word could in principle spell the marker text,
-              // so discriminate on the count, not the symbol).
-              operators.TextStats.bpeTrainBatched(spark, docs, steps = k,
-                batch = b)
-                .filter(col("pair_count") > 0).count()
-            case None =>
-              operators.TextStats.bpeTrain(spark, docs, steps = k).count()
-          }
-        }
-        System.err.println(
-          f"[bpe-scale] steps=$k emitted=$got batch=${batchOpt.getOrElse(1)} $s%.1fs")
-        (k, got, s)
-      }
-      // marginal per EMITTED merge between successive runs — under
-      // exhaustion both runs emit the same count and the marginal is
-      // reported against a 0 denominator guard instead of lying
-      val marginals = times.sliding(2).collect {
-        case Seq((k1, g1, t1), (k2, g2, t2)) if g2 > g1 =>
-          s""""${k1}_to_$k2":${f"${(t2 - t1) / (g2 - g1)}%.3f"}"""
-      }.mkString("{", ",", "}")
-      val totals = times
-        .map { case (k, _, s) => s""""$k":${f"$s%.3f"}""" }
-        .mkString("{", ",", "}")
-      val emitted = times
-        .map { case (k, g, _) => s""""$k":$g""" }
-        .mkString("{", ",", "}")
-      // driver heap AFTER the largest run (post-GC): the trainer's
-      // driver state is the learned-merge list + one argmax row per
-      // round — this number is the evidence it stays corpus-independent
-      val rt = Runtime.getRuntime
-      System.gc()
-      val usedMb = (rt.totalMemory() - rt.freeMemory()) >> 20
-      val line = s"""{"metric":"bpe_step_probe","base_dir":"$base",""" +
-        s""""batch":${batchOpt.getOrElse(1)},"vocab_scale":$bpeScale,""" +
-        s""""driver_heap_used_mb":$usedMb,""" +
-        s""""emitted_merges":$emitted,""" +
-        s""""total_sec":$totals,"marginal_sec_per_step":$marginals}"""
-      println(line)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(
-          sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "bench_bpe.json")),
-        (line + "\n").getBytes("UTF-8"))
-      spark.stop()
-      return
-    }
-
-    // SERVE BREAKDOWN (round-14 verdict task 1): the n3b dispatcher
-    // rows grew at both routing decades while the per-arm sweep showed
-    // the compressed scan itself fast — so the overhead lives in the
-    // serve path AROUND the scan and needs a measured owner. This mode
-    // materializes each stage of the ONE shipped pipeline
-    // (Similarity.ivfPqRerankStages — the same code knnIvfPqRerankBatch
-    // returns the tail of) in isolation and reports cumulative +
-    // marginal seconds per stage, next to the flat arm and the full
-    // AnnIndex.search dispatch, into `serve_breakdown` fields. Each
-    // variant re-runs the earlier stages (lazy frames share no state
-    // across isolate()), so marginals are differences of cumulative
-    // runs under the Bench isolation discipline.
-    sys.env.get("SPARK_GRAFT_SERVE_BREAKDOWN").foreach { _ =>
-      val dir = if (scale <= 1) base
-                else { replicate(spark, base, out, scale); out }
-      val ix = SparkEntry.annIndexFor(spark, dir)
-      val emb = SparkEntry.annPlantedCorpus(spark, dir)
-      val nq = sys.env.getOrElse("SPARK_GRAFT_SERVE_Q", "3").toInt
-      // n3b's probe ids at nq=3 (the bench row this attributes); more
-      // queries sample by the RecallProbe's salted held-out order
-      val qids =
-        if (nq <= 3) SparkEntry.annProbeIds
-        else emb.filter(!col("vec_id").isin(
-            (SparkEntry.annProbeIds ++
-              SparkEntry.annProbeIds.map(_ + 1000000L)): _*))
-          .orderBy(xxhash64(col("vec_id") + 777777L), col("vec_id"))
-          .limit(nq).select(col("vec_id")).collect().map(_.getLong(0)).toSeq
-      def live(df: DataFrame) = operators.AnnIndex.liveView(spark, ix, df)
-      def stages() = operators.Similarity.ivfPqRerankStages(
-        emb, live(ix.ivf(spark)), live(ix.ivfPqCodes(spark)),
-        ix.cents, ix.resCbs, qids, k = 10, nHint = ix.nRows,
-        span = ix.span)
-      def noop(df: DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      // warm the reader paths once (untimed), as Bench does
-      Tables(spark, dir, "embeddings")
-        .write.format("noop").mode("overwrite").save()
-      Bench.isolate(spark)
-      val (s0, _) = timed { stages() } // probe collect only
-      Bench.isolate(spark)
-      val (_, tAdc) = timed { noop(stages().adc) }
-      Bench.isolate(spark)
-      val (_, tShort) = timed { noop(stages().shortlist) }
-      Bench.isolate(spark)
-      val (_, tExact) = timed { noop(stages().exact) }
-      Bench.isolate(spark)
-      val (_, tFull) = timed { noop(stages().result) }
-      Bench.isolate(spark)
-      val (_, tSearch) = timed { noop(operators.AnnIndex.search(
-        spark, ix, emb, qids, k = 10)) }
-      Bench.isolate(spark)
-      val (_, tFlat) = timed { noop(operators.Similarity
-        .knnIvfBatchAssigned(emb, live(ix.ivf(spark)), ix.cents, qids,
-          k = 10)) }
-      // rerank depth and probed-cell count are deterministic per
-      // (index, query set) — s0 already holds them; rebuilding the
-      // pipeline here would pay another probe collect for nothing
-      val st = s0
-      val line =
-        f"""{"metric":"serve_breakdown","dir":"$dir","queries":${qids.length},""" +
-          f""""nlist":${ix.cents.length},"n_rows":${ix.nRows},""" +
-          f""""rerank_depth":${st.rerank},"probed_cells":${st.cells.length},""" +
-          f""""probe_collect_sec":${s0.probeSec}%.3f,""" +
-          f""""cum_adc_sec":$tAdc%.3f,"cum_shortlist_sec":$tShort%.3f,""" +
-          f""""cum_exact_sec":$tExact%.3f,"cum_full_sec":$tFull%.3f,""" +
-          f""""marginal_shortlist_sec":${tShort - tAdc}%.3f,""" +
-          f""""marginal_exact_sec":${tExact - tShort}%.3f,""" +
-          f""""marginal_labels_sec":${tFull - tExact}%.3f,""" +
-          f""""search_dispatch_sec":$tSearch%.3f,"flat_arm_sec":$tFlat%.3f}"""
-      println(line)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(
-          sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "bench_serve.json")),
-        (line + "\n").getBytes("UTF-8"))
-      spark.stop()
-      if (scale > 1) cleanupScaled(out)
-      return
-    }
-
     // SPARK_GRAFT_REPLICATE_ONLY=1: materialize the scaled corpus and
     // exit — the RecallProbe (decade gates, router/grouped-layout
     // probes) consumes the directory as SPARK_GRAFT_SF_DIR without

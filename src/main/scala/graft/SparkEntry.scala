@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -280,64 +281,38 @@ object SparkEntry {
     DedupIndex.ensure(Tables.documents(s, d).filter(col("doc_id") % 10 =!= 0),
       "most-" + TextIndex.corpusKey(d))
 
-  /** The bucketed-layout ingest job behind z3: orders and lineitem
-    * written `bucketBy(8, key)` into the session warehouse, memoized
-    * per (corpus dir, session catalog) — built once per JVM like the
-    * ANN/text index artifacts, and untimed in Bench's indexing phase.
-    * `repartition(nb, key)` aligns task hashing with bucket hashing
-    * (both pmod(murmur3, nb)): one file per bucket, not tasks×buckets. */
-  private[graft] val bucketedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  /** The bucketed co-located layout behind z3: orders and lineitem in
+    * `nb` hash buckets on the order key, each bucket file sorted by it,
+    * written with the bucket writer TextIndex's postings use
+    * ([[ArtifactGen.writeBuckets]], no catalog table) and read back as
+    * bucketed relations. A maintained ingest layout like
+    * [[Denorm.childrenTable]]: one directory per corpus version, keyed
+    * by the two tables' fingerprint under a layout-version segment and
+    * `_DONE`-marked last, so it is built once per machine (untimed in
+    * Bench's indexing phase) and every later session, in this JVM or
+    * another, reads it with no job. */
   private[graft] def bucketedTablesFor(s: SparkSession,
-                                       d: String): (String, String) = {
+                                       d: String): (DataFrame, DataFrame) = {
     val nb = 8
-    def prep(df: DataFrame, key: String, table: String): String = {
-      // a previous JVM leaves the warehouse directory behind while the
-      // in-memory catalog forgets the table — saveAsTable then refuses
-      // with LOCATION_ALREADY_EXISTS, so clear both sides first
-      s.sql(s"DROP TABLE IF EXISTS $table")
-      val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir"))
-      val loc = java.nio.file.Paths.get(
-        if (wh.getScheme == "file") wh.getPath else wh.toString, table)
-      if (java.nio.file.Files.exists(loc)) {
-        import scala.jdk.CollectionConverters._
-        // Files.walk holds directory fds until CLOSED (try/finally —
-        // the leak class the x26b comment records as an fd-exhaustion
-        // refusal in this long-lived JVM)
-        val walk = java.nio.file.Files.walk(loc)
-        try walk.iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.delete)
-        finally walk.close()
+    val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+      "graft_z3_layout", "v1", Fingerprint.ofTables(d, "orders", "lineitem"))
+    val tables = Seq(
+      ("orders", "o_orderkey",
+        Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"))),
+      ("lineitem", "l_orderkey",
+        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_extendedprice"))))
+    def spec(key: String) = BucketSpec(nb, Seq(key), Seq(key))
+    if (!java.nio.file.Files.exists(dir.resolve("_DONE"))) {
+      tables.foreach { case (t, key, df) =>
+        ArtifactGen.writeBuckets(ArtifactGen.byBucket(df, spec(key)),
+          s"$dir/$t", SaveMode.Overwrite, spec(key))
       }
-      df.repartition(nb, col(key))
-        .write.mode("overwrite").bucketBy(nb, key).sortBy(key)
-        .saveAsTable(table)
-      table
+      ArtifactGen.markDone(dir.toString)
     }
-    // table names carry the corpus fingerprint (the AnnIndex/TextIndex
-    // version-keying discipline): two corpus dirs in one JVM get
-    // DIFFERENT tables instead of clobbering one global name while the
-    // memo still vouches for it. The memo is revalidated against the
-    // session catalog — a fresh SparkSession in the same JVM has an
-    // empty in-memory catalog even though the memo (and the warehouse
-    // files) survive, so a stale hit rebuilds instead of throwing
-    // TABLE_NOT_FOUND at read time.
-    val keyHex = Fingerprint.ofTables(d, "orders", "lineitem").take(12)
-    val names = (s"graft_z3_orders_$keyHex", s"graft_z3_lineitem_$keyHex")
-    val hit = bucketedMemo.get(d)
-    if (hit == names && s.catalog.tableExists(names._1) &&
-        s.catalog.tableExists(names._2)) names
-    else {
-      val built = (prep(Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_orderstatus")),
-        "o_orderkey", names._1),
-        prep(Tables.lineitem(s, d)
-            .select(col("l_orderkey"), col("l_extendedprice")),
-          "l_orderkey", names._2))
-      bucketedMemo.put(d, built)
-      built
+    val Seq(o, l) = tables.map { case (t, key, df) =>
+      GraftShim.readBucketed(s, s"$dir/$t", df.schema, spec(key))
     }
+    (o, l)
   }
 
   // Physical row order is NOT part of the verification contract: the

@@ -93,7 +93,7 @@ object Analyzers {
   // Each pipeline's token-filter chain runs as ONE fused codegen'd
   // expression (expressions.EnglishChain / FoldNgrams / FoldShingles):
   // the staged single-filter functions above stay as the semantic
-  // reference (AnalyzerSpec asserts fused == staged on golden vectors),
+  // reference (AnalyzerSpec chains them and asserts fused == staged),
   // but higher-order-function chains are CodegenFallback and re-walk
   // the token array once per stage — the fused form is one primitive
   // loop inside whole-stage codegen.
@@ -103,28 +103,15 @@ object Analyzers {
   def englando(c: Column): Column =
     expressions.english_chain(tokenize(htmlStrip(c)))
 
-  /** Staged reference implementation of [[englando]]. */
-  def englandoStaged(c: Column): Column =
-    porterStemTokens(removeStopwords(lowercaseTokens(possessiveStem(
-      tokenize(htmlStrip(c))))))
-
   /** `custom_ngram` (`settings.json:20-29`):
     * html_strip → standard → lowercase → asciifold → ngram(1,10). */
   def customNgram(c: Column, minGram: Int = 1, maxGram: Int = 10): Column =
     expressions.fold_ngrams(tokenize(htmlStrip(c)), minGram, maxGram)
 
-  /** Staged reference implementation of [[customNgram]]. */
-  def customNgramStaged(c: Column): Column =
-    ngramTokens(asciiFoldTokens(lowercaseTokens(tokenize(htmlStrip(c)))))
-
   /** `custom_shingles` (`settings.json:30-39`):
     * html_strip → standard → lowercase → asciifold → shingle. */
   def customShingles(c: Column): Column =
     expressions.fold_shingles(tokenize(htmlStrip(c)))
-
-  /** Staged reference implementation of [[customShingles]]. */
-  def customShinglesStaged(c: Column): Column =
-    shingleTokens(asciiFoldTokens(lowercaseTokens(tokenize(htmlStrip(c)))))
 
   /** `keyword_lowercase` (`settings.json:40-44`): keyword → lowercase. */
   def keywordLowercase(c: Column): Column =

@@ -9,7 +9,9 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, GraftShim, SaveMode,
+  SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -328,6 +330,35 @@ object ArtifactGen {
   /** A build's last write: the artifact in `dir` is complete. */
   def markDone(dir: String): Unit = {
     Files.write(Paths.get(dir, "_DONE"), Array.emptyByteArray); ()
+  }
+
+  /** Rows routed to their bucket of `spec`: Spark's hash partitioning on
+    * the bucket columns into `numBuckets` partitions IS the bucket hash,
+    * so each write task holds one bucket and writes one file. An
+    * explicit partition count is exempt from AQE coalescing. */
+  def byBucket(df: DataFrame, spec: BucketSpec): DataFrame =
+    df.repartition(spec.numBuckets, spec.bucketColumnNames.map(col): _*)
+
+  /** Write `df`, already routed by [[byBucket]], as the hash-bucketed
+    * parquet directory `path` laid out by `spec` — ES's one shard per
+    * routed id hash — read back with `GraftShim.readBucketed`. A
+    * bucketed write of no rows leaves no file, and a directory without
+    * one has no schema to read, so an empty input (an empty corpus, or
+    * a purge of every document) keeps one empty file, named into
+    * bucket 0. */
+  def writeBuckets(df: DataFrame, path: String, mode: SaveMode,
+                   spec: BucketSpec): Unit = {
+    GraftShim.writeBucketed(df, path, mode, spec)
+    val dir = new HPath(path)
+    val fs = dir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    if (!fs.listStatus(dir).exists(_.getPath.getName.endsWith(".parquet"))) {
+      val tmp = new HPath(s"$path.empty-tmp")
+      df.limit(0).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      fs.listStatus(tmp).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+        .foreach(f => fs.rename(f,
+          new HPath(dir, f.getName.replaceFirst("-(c\\d{3}\\.)", "_00000.$1"))))
+      fs.delete(tmp, true)
+    }
   }
 
   /** The live generation: `_CURRENT`'s target, but only if that

@@ -45,8 +45,9 @@ object Dedup {
     * of the input relation), not an inline tokenize(...) expression —
     * the shingling lambda references it per element, so an inlined
     * expression would re-tokenize the text once per shingle (measured
-    * ~19 s for 5 k docs at sf0.1). Use [[withShingleSet]], which puts a
-    * projection boundary in the right place. */
+    * ~19 s for 5 k docs at sf0.1). Select the tokens in one projection
+    * and shingle them in the next: that boundary is what keeps the
+    * tokenization to once per row. */
   def shingleSet(toks: Column, n: Int = 3): Column = {
     val k = size(toks)
     array_distinct(
@@ -55,16 +56,6 @@ object Dedup {
           i => concat_ws(" ", slice(toks, i, lit(n)))))
       .otherwise(array(concat_ws(" ", toks))))
   }
-
-  /** (id, shingles) with tokenization materialized behind a projection
-    * boundary (tokens are referenced several times by the shingling
-    * expression, so CollapseProject keeps the two projections apart —
-    * tokenize runs exactly once per row). */
-  def withShingleSet(docs: DataFrame, textCol: String = "text",
-                     idCol: String = "doc_id", n: Int = 3): DataFrame =
-    docs.select(col(idCol).as("id"),
-        Analyzers.tokenize(normalize(col(textCol))).as("toks"))
-      .select(col("id"), shingleSet(col("toks"), n).as("shingles"))
 
   /** (id, shingles) as distinct 64-bit hashes via the codegen'd
     * [[graft.functions.expressions.ShingleHashes]] — the fast path the
@@ -87,25 +78,18 @@ object Dedup {
       .groupBy(md5(normalize(col(textCol))).as("fingerprint"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** MinHash signatures via explode + hash-aggregate: one row per
-    * (doc, shingle) posting, then `numHashes` codegen'd `min(xxhash64
-    * (sh, i))` aggregates with map-side partial aggregation. This is
-    * deliberately NOT a nested higher-order-function expression:
-    * Catalyst's project-collapsing would inline the shingle computation
-    * into every lambda element and the whole tree is CodegenFallback —
-    * the agg formulation keeps everything inside whole-stage codegen
-    * and shuffles each doc id exactly once. */
-  def minhashSignatures(docs: DataFrame, textCol: String, idCol: String,
-                        numHashes: Int): DataFrame =
-    minhashSignaturesFromSets(withHashedShingleSet(docs, textCol, idCol),
-      numHashes)
-
-  /** [[minhashSignatures]] over an ALREADY-ANALYZED (id, shingles)
-    * frame — the entry point for callers that hold the hashed shingle
-    * sets (usually persisted) and must not pay the tokenize+shingle
-    * analysis a second time (DedupIndex computes the sets once per
-    * build/append and derives BOTH the banded index and the verify
-    * side from them). */
+  /** MinHash signatures of an ALREADY-ANALYZED (id, shingles) frame
+    * via explode + hash-aggregate: one row per (doc, shingle) posting,
+    * then `numHashes` codegen'd `min(xxhash64(sh, i))` aggregates with
+    * map-side partial aggregation. This is deliberately NOT a nested
+    * higher-order-function expression: Catalyst's project-collapsing
+    * would inline the shingle computation into every lambda element
+    * and the whole tree is CodegenFallback — the agg formulation keeps
+    * everything inside whole-stage codegen and shuffles each doc id
+    * exactly once. Callers hold the hashed shingle sets (usually
+    * persisted) and never pay the tokenize+shingle analysis a second
+    * time (DedupIndex computes the sets once per build/append and
+    * derives BOTH the banded index and the verify side from them). */
   private[graft] def minhashSignaturesFromSets(sets: DataFrame,
                                                numHashes: Int): DataFrame = {
     // shingles arrive as 64-bit hashes (codegen'd ShingleHashes); the
@@ -446,8 +430,8 @@ object Dedup {
   }
 
   /** 60-bit SimHash per doc via explode + hash-aggregate (same codegen
-    * rationale as [[minhashSignatures]]): per-bit majority vote of the
-    * tokens' hash bits — 60 `sum` aggregates with map-side combine,
+    * rationale as [[minhashSignaturesFromSets]]): per-bit majority vote
+    * of the tokens' hash bits — 60 `sum` aggregates with map-side combine,
     * then one packing projection.
     *
     * The token hash family is two polynomial mod-prime code-point
@@ -741,7 +725,7 @@ object Dedup {
     *
     * Scale shape: gram extraction is row-local (explode over the
     * position sequence; `toks` is a materialized attribute so
-    * tokenize runs once per row — the [[withShingleSet]] discipline);
+    * tokenize runs once per row — the [[shingleSet]] discipline);
     * doc-frequency is a distinct + count on the 8-byte gram hash,
     * both with map-side partials; the mask-back is an equi-join on
     * the same hash (AQE broadcasts the repeated-gram side when it is

@@ -41,7 +41,7 @@ object Percolate {
     qs.toDF("query_id", "must", "must_not", "should", "min_should")
   }
 
-  private def tokenized(docs: DataFrame): DataFrame =
+  private[graft] def tokenized(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       array_distinct(Analyzers.tokenize(lower(col("text")))).as("toks"))
 
@@ -159,25 +159,5 @@ object Percolate {
     else termDf.filter(col("term").isin(wanted: _*))
       .select(col("term"), col("df").cast("long"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-  }
-
-  /** (docs×queries evaluated by the nested loop, pairs the index would
-    * evaluate) — the pre-selection win, measured. */
-  def evaluationCounts(docs: DataFrame, qs: Seq[StoredQuery],
-                       df: Map[String, Long] = Map.empty,
-                       conjunctionTerms: Int = 2): (Long, Long) = {
-    // ONE aggregate serves both counts (the old count() + sum() pair
-    // re-ran the full-corpus tokenization twice), and the sum is
-    // null-guarded: over zero docs it aggregates to null and a bare
-    // getLong NPE'd instead of reporting (0, 0) — round-13 review
-    val t = tokenized(docs)
-    val r = t.agg(count(lit(1)).as("n_docs"),
-      sum(size(graft.functions.expressions
-        .candidate_queries(col("toks"),
-          indexSpec(qs, df, conjunctionTerms)))).as("n"))
-      .head()
-    val full = r.getLong(0) * qs.length
-    val cand = if (r.isNullAt(1)) 0L else r.getLong(1)
-    (full, cand)
   }
 }

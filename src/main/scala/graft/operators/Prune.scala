@@ -2,40 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.expressions
 
-/** Scan-pruning operators: cut the rows a downstream join/shuffle ever
-  * sees, the cheapest win there is at 100 TB.
+/** Data-skipping layout keys: the values a layout clusters by so that
+  * a selective scan skips whole files, the cheapest win there is at
+  * 100 TB.
   */
 object Prune {
-
-  /** Bloom-filter semi-join pre-filter — the runtime-filter shape
-    * (SPARK-32268) as an explicit operator. When a fact ⋈ dim join is
-    * too big to broadcast but the dim's KEY SET fits a bloom sketch,
-    * filtering the fact scan through the sketch first removes most
-    * non-matching rows before they are shuffled: the shuffle then
-    * carries ~selectivity·|fact| rows instead of |fact|. AQE's
-    * InjectRuntimeFilter does this automatically under one join; the
-    * explicit form lets a pipeline build the sketch ONCE and reuse it
-    * across several downstream stages (or persist it between runs).
-    *
-    * The sketch is a distributed aggregate (partial blooms merge
-    * associatively); only the finished ~1 MB filter crosses the driver,
-    * which re-enters the plan as a foldable literal — same bounded
-    * driver traffic as a broadcast, 1000× smaller than the key list.
-    * Probe values go through xxhash64 on both sides (the
-    * InjectRuntimeFilter convention). The filter is one-sided: it can
-    * pass a non-matching row (false positive — the exact join behind it
-    * still decides), but NEVER drops a matching one; `bf1`'s contract
-    * columns verify both properties against the exact key set.
-    */
-  def bloomPrefilter(fact: DataFrame, dim: DataFrame,
-                     factKey: String, dimKey: String): DataFrame = {
-    val bloom = dim
-      .select(expressions.bloom_agg(xxhash64(col(dimKey))).as("bf"))
-      .head().getAs[Array[Byte]](0)
-    fact.filter(expressions.might_contain(lit(bloom), xxhash64(col(factKey))))
-  }
 
   /** Morton (Z-order) interleave of two non-negative bucketed dims:
     * bit i of `a` lands at position 2i+1, bit i of `b` at 2i. Rows
@@ -43,8 +15,7 @@ object Prune {
     * z clusters the file-level min/max ranges of both columns at once —
     * the multi-dimensional data-skipping layout (Delta/Iceberg
     * Z-ORDER). A linear sort clusters only its leading column; a
-    * predicate on the second dim then intersects EVERY file
-    * (PruneSpec demonstrates the difference on real files).
+    * predicate on the second dim then intersects EVERY file.
     * Plain builtin bit ops — codegen'd, and replayed verbatim by the
     * DuckDB oracle (`zvalueSql`). */
   def zvalue(a: Column, b: Column, bits: Int = 8): Column =
@@ -65,7 +36,7 @@ object Prune {
   /** Equi-depth (rank) bucketing for a skewed numeric dim — the prep
     * step that makes z-ordering real data work. Raw value ranges are
     * useless as Morton coordinates when the distribution is skewed
-    * (PruneSpec shows a 70%-dense box skipping nothing); production
+    * (a box over raw values holds 70% of the rows); production
     * z-ordering therefore interleaves RANKS, not values. Bucket
     * boundaries come from `approxQuantile` (Greenwald–Khanna, one pass,
     * bounded driver state — the x5/a6 sketch discipline); the bucket id
@@ -78,18 +49,4 @@ object Prune {
     val arr = typedlit[Seq[Double]](bounds.toSeq)
     size(filter(arr, b => b <= col(dim).cast("double"))).cast("long")
   }
-
-  /** Write `df` clustered by the z-value of two bucketed dims:
-    * range-partition on z (contiguous Morton segments per file), sort
-    * within partitions, write parquet. Readers with predicates on
-    * EITHER dim then skip whole files/row-groups via min/max stats.
-    * At 100 TB this is a one-off layout cost (one range shuffle) paid
-    * back by every subsequent selective scan. */
-  def zorderWrite(df: DataFrame, a: Column, b: Column, path: String,
-                  files: Int = 16, bits: Int = 8): Unit =
-    df.withColumn("zv", zvalue(a, b, bits))
-      .repartitionByRange(files, col("zv"))
-      .sortWithinPartitions("zv")
-      .drop("zv")
-      .write.mode("overwrite").parquet(path)
 }

@@ -24,19 +24,6 @@ import graft.functions.expressions.bound_double
   */
 object Search {
 
-  /** P6: true iff any array element has a non-null field — ES
-    * `exists: links.url` over a nested path
-    * (`elastic_queries.json:30-40`). */
-  def existsIn(arr: Column, pred: Column => Column): Column =
-    exists(arr, pred)
-
-  /** P8/F2-lite: ES `match` on an analyzed nested text field — true iff
-    * any element's analyzed tokens contain the (analyzed) query term. */
-  def nestedMatch(arr: Column, field: Column => Column, term: String): Column =
-    exists(arr, e => array_contains(
-      Analyzers.englando(field(e)), graft.functions.PorterStemmer.stem(
-        term.toLowerCase(java.util.Locale.ROOT))))
-
   /** ES `fuzzy`/`match … fuzziness` semantics: a token matches if its
     * plain edit distance to the query term is ≤ `maxEdits`. Builtin
     * `levenshtein` inside the HOF lambda — codegen'd, row-local, no
@@ -49,13 +36,6 @@ object Search {
     size(filter(toks, t =>
       (abs(length(t) - lit(term.length)) <= maxEdits) &&
         (levenshtein(t, lit(term)) <= maxEdits)))
-
-  /** P7 bool combinator: weighted sum of boolean clause matches —
-    * kept as the generic constant-score building block (ES
-    * `constant_score` / filter-context boosting). */
-  def weightedScore(clauses: Seq[(Column, Double)]): Column =
-    clauses.map { case (m, w) => when(m, lit(w)).otherwise(lit(0.0)) }
-      .reduce(_ + _)
 
   /** F1: `function_score` with a weighted `should` clause
     * (`elastic_queries.json:3-22`), scored the way ES actually scores

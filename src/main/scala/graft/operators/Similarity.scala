@@ -775,31 +775,6 @@ object Similarity {
       math.min(candidates / 32L, (Int.MaxValue / 4).toLong).toInt)
   }
 
-  def knnIvfPqRerankBatch(emb: DataFrame, ivf: DataFrame, codes: DataFrame,
-                          cents: Array[Array[Double]],
-                          cbs: Array[Array[Array[Double]]],
-                          queryIds: Seq[Long], k: Int = 10,
-                          nprobe: Int = AnnIndex.AutoNprobe,
-                          rerank: Int = 0, nHint: Long = -1L,
-                          span: Int = 1): DataFrame =
-    ivfPqRerankStages(emb, ivf, codes, cents, cbs, queryIds, k, nprobe,
-      rerank, nHint, span).result
-
-  /** The compressed serve pipeline with its stage frames exposed —
-    * [[knnIvfPqRerankBatch]] returns `.result`; the scale probe's
-    * serve-breakdown mode ([[graft.BenchScale]],
-    * SPARK_GRAFT_SERVE_BREAKDOWN) materializes each stage separately
-    * to ATTRIBUTE serve wall-clock to probe-collect / ADC scan /
-    * shortlist heap / rerank fetch / label join (round-14 verdict
-    * task 1: the n3b dispatcher rows grew while the compressed scan
-    * itself measured fast — the overhead needed a measured owner, not
-    * a guess). One implementation; the probe can never drift from the
-    * shipped path. */
-  private[graft] final case class PqServeStages(
-      probeSec: Double, cells: Seq[Int], rerank: Int,
-      adc: DataFrame, shortlist: DataFrame, exact: DataFrame,
-      result: DataFrame)
-
   /** `span` > 1 marks the [[AnnIndex.GroupCap]]-bounded grouped
     * layout (cell file-groups — `cgrp` is the partition column, cell
     * a data column): the static literal prune then lands on BOTH —
@@ -812,12 +787,13 @@ object Similarity {
     * drop candidates; the default 1 is always CORRECT on any layout
     * (the cell filter is a data filter either way), it only forgoes
     * partition pruning on grouped tables. */
-  private[graft] def ivfPqRerankStages(
-      emb: DataFrame, ivf: DataFrame, codes: DataFrame,
-      cents: Array[Array[Double]], cbs: Array[Array[Array[Double]]],
-      queryIds: Seq[Long], k: Int = 10,
-      nprobe: Int = AnnIndex.AutoNprobe,
-      rerank: Int = 0, nHint: Long = -1L, span: Int = 1): PqServeStages = {
+  def knnIvfPqRerankBatch(emb: DataFrame, ivf: DataFrame, codes: DataFrame,
+                          cents: Array[Array[Double]],
+                          cbs: Array[Array[Array[Double]]],
+                          queryIds: Seq[Long], k: Int = 10,
+                          nprobe: Int = AnnIndex.AutoNprobe,
+                          rerank: Int = 0, nHint: Long = -1L,
+                          span: Int = 1): DataFrame = {
     val np = resolveNprobe(nprobe, cents.length)
     val r = if (rerank > 0) rerank
             else rerankDepthFor(k, np, cents.length, nHint)
@@ -832,7 +808,6 @@ object Similarity {
     // collect instead of a second scan over the corpus (round-14
     // verdict task 4 — the serve path paid a full query-side scan to
     // re-fetch vectors the driver already held).
-    val t0 = System.nanoTime()
     val probes = e.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id"), col("v"), col("nrm")).collect()
       .map { row =>
@@ -849,7 +824,6 @@ object Similarity {
         }
         (row.getLong(0), vRaw, qn, probed, bias, luts)
       }
-    val probeSec = (System.nanoTime() - t0) / 1e9
     val spark = emb.sparkSession
     import spark.implicits._
     // TWO small broadcast sides, so the LUT matrix rides ONCE per
@@ -921,9 +895,8 @@ object Similarity {
     // a 2-column projection: every result id lies in a probed cell by
     // construction, and the old full-corpus (vec_id, label) scan was
     // the single largest stage of the serve at the routing decades
-    val result = topKPerQuery(exact,
+    topKPerQuery(exact,
       cellPrune(ivf).select(col("vec_id"), col("label")), k)
-    PqServeStages(probeSec, cellsAll, r, adc, shortlist, exact, result)
   }
 
   /** Filtered vector search — ES kNN's `filter` parameter / FAISS's
@@ -1792,17 +1765,10 @@ object Similarity {
     * cosine, the planted ×2-scaled copy retrieved at rank 1 (scaling
     * preserves codes AND direction, so a correct two-stage path can
     * never miss it), ranks descending. All TRUE by construction on a
-    * correct implementation; constant-TRUE oracle. */
-  def rerankContract(corpus: DataFrame, probeIds: Seq[Long], k: Int = 10,
-                     oversample: Int = 4,
-                     plantOffset: Long = 1000000L): DataFrame =
-    rerankContractWith(corpus, quantizedIndex(corpus), probeIds, k,
-      oversample, plantOffset)
-
-  /** [[rerankContract]] over a PRE-QUANTIZED index table (the
-    * [[AnnIndex]] artifact's `sq8`: vec_id, qd, qscale, nrm — the
-    * stored int8 layout): stage 1 scans the persisted codes, never
-    * re-quantizing the corpus per query. */
+    * correct implementation; constant-TRUE oracle. The index is a
+    * PRE-QUANTIZED table (the [[AnnIndex]] artifact's `sq8`: vec_id,
+    * qd, qscale, nrm — the stored int8 layout): stage 1 scans the
+    * persisted codes, never re-quantizing the corpus per query. */
   def rerankContractWith(corpus: DataFrame, sq8: DataFrame,
                          probeIds: Seq[Long], k: Int = 10,
                          oversample: Int = 4,
@@ -1849,7 +1815,7 @@ object Similarity {
     // amax and the codes each materialize behind a projection boundary
     // (referenced several times downstream, incl. inside lambdas), so
     // CollapseProject cannot inline the array_max into a per-element
-    // recompute — the same staging discipline as Dedup.withShingleSet
+    // recompute — the same staging discipline as Dedup.shingleSet
     val staged = emb
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .select(col("vec_id"), col("v"),

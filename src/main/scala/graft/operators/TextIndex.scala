@@ -3,7 +3,6 @@ package graft.operators
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, GraftShim, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
@@ -151,38 +150,13 @@ object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
   private def postingsSpec(n: Int): BucketSpec =
     BucketSpec(n, Seq("doc_id"), Seq("term", "doc_id"))
 
-  /** Rows routed to their bucket: Spark's hash partitioning on doc_id
-    * into `n` partitions IS the bucket hash, so each write task holds
-    * one bucket and writes one file. An explicit partition count is
-    * exempt from AQE coalescing. */
-  private def byBucket(df: DataFrame, n: Int): DataFrame =
-    df.repartition(n, col("doc_id"))
-
-  /** Write `df`, already routed by [[byBucket]], as postings files. A
-    * bucketed write of no rows leaves no file, and a directory without
-    * one has no schema to read, so an empty corpus (or a purge of every
-    * document) keeps one empty file, named into bucket 0. */
-  private def writePostings(df: DataFrame, path: String, mode: SaveMode,
-                            n: Int): Unit = {
-    GraftShim.writeBucketed(df, path, mode, postingsSpec(n))
-    val dir = new HPath(path)
-    val fs = dir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (!fs.listStatus(dir).exists(_.getPath.getName.endsWith(".parquet"))) {
-      val tmp = new HPath(s"$path.empty-tmp")
-      df.limit(0).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      fs.listStatus(tmp).map(_.getPath).filter(_.getName.endsWith(".parquet"))
-        .foreach(f => fs.rename(f,
-          new HPath(dir, f.getName.replaceFirst("-(c\\d{3}\\.)", "_00000.$1"))))
-      fs.delete(tmp, true)
-    }
-  }
-
   /** The positional postings of analyzed docs, routed to `n` buckets.
     * The documents are routed before the explode, so the (term, doc_id)
     * aggregate runs bucket-locally: one shuffle of document rows, not
     * of postings. */
   private def postingsOf(withLen: DataFrame, n: Int): DataFrame =
-    byBucket(withLen, n).select(col("doc_id"), col("len"),
+    ArtifactGen.byBucket(withLen, postingsSpec(n))
+      .select(col("doc_id"), col("len"),
         posexplode(col("toks")).as(Seq("pos", "term")))
       .groupBy(col("term"), col("doc_id"), col("len"))
       .agg(count(lit(1)).cast("int").as("tf"),
@@ -241,8 +215,8 @@ object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
         .write.mode("overwrite").parquet(s"$dir/doclen"),
       () => corpusOf(withLen).write.mode("overwrite").parquet(s"$dir/corpus"),
       () => {
-        writePostings(postingsOf(withLen, n), s"$dir/postings",
-          SaveMode.Overwrite, n)
+        ArtifactGen.writeBuckets(postingsOf(withLen, n), s"$dir/postings",
+          SaveMode.Overwrite, postingsSpec(n))
         dictOf(spark.read.parquet(s"$dir/postings"))
           .write.mode("overwrite").parquet(s"$dir/term_df")
       },
@@ -362,8 +336,8 @@ object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
         .write.mode("append").parquet(s"$dir/doclen")
       Par.run(
         () => {
-          writePostings(postingsOf(withLen, base.buckets), s"$dir/postings",
-            SaveMode.Append, base.buckets)
+          ArtifactGen.writeBuckets(postingsOf(withLen, base.buckets),
+            s"$dir/postings", SaveMode.Append, postingsSpec(base.buckets))
 
           // dictionary + stats merges: DICTIONARY-sized, rewritten via
           // write-to-tmp + atomic swap (the Sink.compact discipline)
@@ -463,9 +437,11 @@ object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
     val shCols = base.shingles(spark).columns.map(col).toSeq
     Par.run(
       () => {
-        swapIn(spark, base, "postings")(writePostings(byBucket(
-          liveView(spark, base, base.postings(spark)).select(pCols: _*),
-          base.buckets), _, SaveMode.Overwrite, base.buckets))
+        val spec = postingsSpec(base.buckets)
+        swapIn(spark, base, "postings")(ArtifactGen.writeBuckets(
+          ArtifactGen.byBucket(
+            liveView(spark, base, base.postings(spark)).select(pCols: _*), spec),
+          _, SaveMode.Overwrite, spec))
         swapIn(spark, base, "term_df")(overwrite(dictOf(base.postings(spark))))
       },
       () => {
@@ -540,9 +516,10 @@ object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
     * at scale, like [[graft.sources.Sink.compact]]. */
   def compactPostings(spark: SparkSession, base: Loaded): (Int, Int) = {
     val before = base.postings(spark).inputFiles.length
-    swapIn(spark, base, "postings")(writePostings(
-      byBucket(base.postings(spark), base.buckets), _, SaveMode.Overwrite,
-      base.buckets))
+    val spec = postingsSpec(base.buckets)
+    swapIn(spark, base, "postings")(ArtifactGen.writeBuckets(
+      ArtifactGen.byBucket(base.postings(spark), spec), _, SaveMode.Overwrite,
+      spec))
     (before, base.postings(spark).inputFiles.length)
   }
 }

@@ -601,37 +601,6 @@ object Sink {
     lines.length.toLong
   }
 
-  /** Delete one snapshot id and garbage-collect blobs no remaining
-    * manifest references — the ES delete-snapshot semantics (blobs are
-    * shared, so deletion is reference-counted against the manifest
-    * set, never a directory wipe). Single-writer, like
-    * [[snapshotIncremental]]. Returns the number of blobs removed. */
-  def deleteSnapshot(spark: SparkSession, repoDir: String,
-                     snapId: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val repo = new org.apache.hadoop.fs.Path(repoDir)
-    val rfs = repo.getFileSystem(conf)
-    val claim = acquireWriter(rfs, repo)
-    try {
-      ensureRepoFormat(rfs, repo)
-      val snapDir = new org.apache.hadoop.fs.Path(repo, s"snap-$snapId")
-      require(rfs.exists(snapDir), s"no snapshot '$snapId' in $repoDir")
-      // blob versions are keyed (relpath, md5) — the GC identity
-      val doomed = readManifest(rfs,
-          new org.apache.hadoop.fs.Path(snapDir, "MANIFEST"))
-        .map { case (md5, _, rel) => (rel, md5) }.toSet
-      claim.verifyHeld(rfs) // last check before the destructive phase
-      rfs.delete(snapDir, true)
-      val live = priorManifests(rfs, repo).flatMap(readManifest(rfs, _))
-        .map { case (md5, _, rel) => (rel, md5) }.toSet
-      val orphans = doomed -- live
-      orphans.foreach { case (rel, md5) =>
-        rfs.delete(blobPath(repo, rel, md5), false)
-      }
-      orphans.size.toLong
-    } finally claim.release(rfs)
-  }
-
   /** Incremental-repository FORMAT guard (the round-12 advisor's
     * finding): format 2 stores one content VERSION per blob at
     * `blobs/<rel>/<md5>`; the pre-round-12 format 1 stored `blobs/<rel>`
@@ -689,8 +658,7 @@ object Sink {
 
   /** One blob VERSION per (relpath, content): `blobs/<rel>/<md5>`.
     * rel-scoped (not a flat content-addressed store) so every
-    * manifest row maps to exactly one blob and GC arithmetic stays a
-    * set difference of (rel, md5) pairs; a source path can never be
+    * manifest row maps to exactly one blob; a source path can never be
     * both a file and a directory, so rel-as-directory is
     * collision-free. */
   private def blobPath(repo: org.apache.hadoop.fs.Path, rel: String,
@@ -919,30 +887,6 @@ object Sink {
       }
     } finally { in.close(); out.close() }
     dig.digest().map("%02x".format(_)).mkString
-  }
-
-  /** Bucketed table write: pre-partition + pre-sort by the join key so
-    * repeated joins/aggregations on that key run with ZERO exchanges
-    * (the cluster-scale answer to "co-locate the big join" —
-    * SURVEY.md §4; verified plan-level in BucketingSpec). At 100 TB
-    * this is the difference between shuffling the fact table per query
-    * and shuffling it once at ingest. */
-  def bucketedTable(df: DataFrame, name: String, bucketCol: String,
-                    buckets: Int = 8): Unit = {
-    val spark = df.sparkSession
-    // a stale managed-table location (e.g. from a previous session with
-    // a fresh in-memory catalog) blocks creation — reclaim it first
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    // the catalog lowercases table identifiers when laying out the
-    // managed location — mirror it, or the reclaim misses
-    // warehouse/mytable for bucketedTable(df, "MyTable", ...)
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir") +
-        s"/${name.toLowerCase(java.util.Locale.ROOT)}")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    df.write.bucketBy(buckets, bucketCol).sortBy(bucketCol)
-      .mode("overwrite").format("parquet").saveAsTable(name)
   }
 
   /** Date-partitioned write: directory-partition the output on a

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
   * scalar expressions (graft.functions.expressions) still need to cross
   * that boundary, so this one-file shim lives in the sql package.
   *
-  * The public writer also refuses `bucketBy` outside `saveAsTable`, and a
+  * The public writer also buckets only into a catalog table, and a
   * path read carries no bucket spec. The two parquet calls below write and
   * read a hash-bucketed directory with no catalog table, through the same
   * `DataSource` plumbing `DataFrameWriter.save` and `DataFrameReader.load`

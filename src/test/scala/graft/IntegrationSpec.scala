@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.operators.{Search, TweetFixture}
+import graft.operators.TweetFixture
 import graft.sources.Sink
 
 /** The reference's full `main()` lifecycle (SURVEY.md §3.1,
@@ -28,10 +28,10 @@ class IntegrationSpec extends SparkSpec {
 
     // the search query (elastic_queries.json) over the index
     val hits = spark.table("tweets")
-      .filter(Search.existsIn(col("links"), l => l.getField("url").isNotNull))
-      .withColumn("score", Search.weightedScore(Seq(
-        exists(col("context_annotations"),
-          a => a.getField("domain").getField("name").contains("News")) -> 5.0)))
+      .filter(exists(col("links"), l => l.getField("url").isNotNull))
+      .withColumn("score", when(exists(col("context_annotations"),
+          a => a.getField("domain").getField("name").contains("News")), lit(5.0))
+        .otherwise(lit(0.0)))
       .orderBy(col("score").desc, col("id"))
     assert(hits.head().getAs[Long]("id") == TweetFixture.mainId)
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Percolate
 
@@ -12,6 +13,25 @@ import graft.operators.Percolate
 class PercolateIndexSpec extends SparkSpec {
 
   private lazy val docs = Tables.documents(spark, sf)
+
+  /** (docs×queries evaluated by the nested loop, pairs the index would
+    * evaluate) — the pre-selection win of the live
+    * [[Percolate.indexSpec]], measured over the live
+    * [[Percolate.tokenized]] analysis. */
+  private def evaluationCounts(docs: DataFrame, qs: Seq[Percolate.StoredQuery],
+                               df: Map[String, Long] = Map.empty,
+                               conjunctionTerms: Int = 2): (Long, Long) = {
+    // ONE aggregate serves both counts, and the sum is null-guarded:
+    // over zero docs it aggregates to null, which reports (0, 0)
+    val r = Percolate.tokenized(docs).agg(count(lit(1)).as("n_docs"),
+      sum(size(graft.functions.expressions
+        .candidate_queries(col("toks"),
+          Percolate.indexSpec(qs, df, conjunctionTerms)))).as("n"))
+      .head()
+    val full = r.getLong(0) * qs.length
+    val cand = if (r.isNullAt(1)) 0L else r.getLong(1)
+    (full, cand)
+  }
 
   /** 1000 deterministic stored queries over a vocabulary: two-thirds
     * must-queries, a quarter should-queries, a sliver of residual
@@ -72,7 +92,7 @@ class PercolateIndexSpec extends SparkSpec {
 
   test("candidate pre-selection prunes most of the evaluation pairs") {
     val qs = fixture(sparseVocab)
-    val (full, cand) = Percolate.evaluationCounts(sparseDocs, qs)
+    val (full, cand) = evaluationCounts(sparseDocs, qs)
     assert(full == 500L * 1000)
     // residual (no-necessary-term) queries are always-candidates by
     // construction — subtract that floor; the INDEXABLE queries must
@@ -122,9 +142,9 @@ class PercolateIndexSpec extends SparkSpec {
     // two-term intersection on, both rankings collapse to the same
     // (tiny) candidate set on this fixture and the comparison is moot
     val qs = skewFixture(10000)
-    val (full, byLength) = Percolate.evaluationCounts(skewDocs, qs,
+    val (full, byLength) = evaluationCounts(skewDocs, qs,
       conjunctionTerms = 1)
-    val (_, byDf) = Percolate.evaluationCounts(skewDocs, qs, skewDf,
+    val (_, byDf) = evaluationCounts(skewDocs, qs, skewDf,
       conjunctionTerms = 1)
     assert(full == 500L * 10000)
     // the length proxy keys on the common term → candidate sets the
@@ -177,9 +197,9 @@ class PercolateIndexSpec extends SparkSpec {
 
   test("two-term conjunction shrinks candidates multiplicatively vs single-term") {
     val qs = midFixture(10000)
-    val (full, single) = Percolate.evaluationCounts(midDocs, qs,
+    val (full, single) = evaluationCounts(midDocs, qs,
       conjunctionTerms = 1)
-    val (_, conj) = Percolate.evaluationCounts(midDocs, qs,
+    val (_, conj) = evaluationCounts(midDocs, qs,
       conjunctionTerms = 2)
     assert(full == 500L * 10000)
     // single-term candidates ≈ |posting(rarest)| ≈ 10% of pairs; the

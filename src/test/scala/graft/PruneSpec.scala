@@ -4,68 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.Prune
 
 class PruneSpec extends SparkSpec {
-  import spark.implicits._
-
   private def urgent = Tables.orders(spark, sf)
     .filter(col("o_orderpriority") === "1-URGENT")
-
-  test("bloom prefilter: one-sided — keeps every match, prunes most rest") {
-    val li = Tables.lineitem(spark, sf)
-    val passed = Prune.bloomPrefilter(li, urgent, "l_orderkey", "o_orderkey")
-    val exactKeys = li.join(urgent.select("o_orderkey"),
-        li("l_orderkey") === col("o_orderkey"), "left_semi")
-      .select("l_orderkey").distinct().as[Long].collect().toSet
-    val passedKeys = passed.select("l_orderkey").distinct()
-      .as[Long].collect().toSet
-    // never drops a matching row (the property the exact join relies on)
-    assert(exactKeys.subsetOf(passedKeys))
-    // actually prunes: non-matching keys mostly fail the sketch
-    val total = li.select("l_orderkey").distinct().count()
-    assert(passedKeys.size < total,
-      s"bloom passed all $total keys - no pruning happened")
-    // with ~2k items in the default 8M-bit sketch the fp rate is ~0:
-    // allow 1% slack over exact before calling it broken
-    assert(passedKeys.size <= exactKeys.size + 1 + (total - exactKeys.size) / 100)
-  }
-
-  test("z-order layout skips files on the second dim; linear sort cannot") {
-    // uniform bucketed dims: the raw `value` column is exponentially
-    // skewed (70% of rows under any useful box — nothing could skip),
-    // and production z-ordering buckets by RANK for exactly that
-    // reason; uniform dims isolate the layout property under test
-    val ev = Tables.events(spark, sf).select(
-      col("event_id"),
-      (col("user_id") % 256L).as("ua"),
-      (col("event_id") % 256L).as("vb"))
-    val files = 16
-    val zDir = "/tmp/graft-zorder-z"
-    val linDir = "/tmp/graft-zorder-lin"
-    Prune.zorderWrite(ev, col("ua"), col("vb"), zDir, files = files)
-    // the linear strawman: same file count, clustered by ua then vb
-    ev.repartitionByRange(files, col("ua"), col("vb"))
-      .sortWithinPartitions("ua", "vb")
-      .write.mode("overwrite").parquet(linDir)
-    // per-file min/max of the SECOND dim = what a reader's stats-based
-    // file skipping sees for a predicate on vb
-    def intersecting(dir: String): (Long, Long) = {
-      val stats = spark.read.parquet(dir)
-        .groupBy(input_file_name().as("f"))
-        .agg(min("vb").as("lo"), max("vb").as("hi"))
-      (stats.filter(col("lo") <= 31).count(), stats.count())
-    }
-    val (zHit, zAll) = intersecting(zDir)
-    val (linHit, linAll) = intersecting(linDir)
-    assert(zAll == files && linAll == files)
-    // linear: every ua-slice spans the vb domain, nothing skippable;
-    // z-order: the box vb<32 touches only the Morton segments whose
-    // vb high bits are 0 — at most half the files, in practice ~1/4
-    assert(zHit * 2 <= linHit,
-      s"z-order hit $zHit/$zAll files vs linear $linHit/$linAll")
-    // both layouts hold identical data
-    val a = spark.read.parquet(zDir).agg(sum("event_id")).head().getLong(0)
-    val b = spark.read.parquet(linDir).agg(sum("event_id")).head().getLong(0)
-    assert(a == b)
-  }
 
   test("rank bucketing makes the skewed dim z-orderable (equi-depth)") {
     val evRaw = Tables.events(spark, sf)
@@ -78,15 +18,6 @@ class PruneSpec extends SparkSpec {
     val inBox = ev.filter(col("vb") <= 15).count()
     assert(math.abs(inBox.toDouble / n - 0.25) < 0.10,
       s"first-quartile box holds $inBox of $n rows - not equi-depth")
-    val dir = "/tmp/graft-zorder-rank"
-    Prune.zorderWrite(ev, col("ua"), col("vb"), dir, files = 16)
-    val stats = spark.read.parquet(dir)
-      .groupBy(input_file_name().as("f"))
-      .agg(min("vb").as("lo"))
-    val hit = stats.filter(col("lo") <= 15).count()
-    val all = stats.count()
-    assert(hit * 2 <= all,
-      s"rank-bucketed z-order hit $hit/$all files for a quartile box")
   }
 
   test("bloom functions are SQL-callable with a scalar-subquery build") {

@@ -18,8 +18,8 @@ class SearchSpec extends SparkSpec {
     val hits = docs
       .filter(col("author.following_count") > 100 &&
         col("author.followers_count") > 5 &&
-        Search.existsIn(col("links"), l => l.getField("url").isNotNull))
-      .withColumn("score", Search.weightedScore(Seq(matchDomain -> 5.0)))
+        exists(col("links"), l => l.getField("url").isNotNull))
+      .withColumn("score", when(matchDomain, lit(5.0)).otherwise(lit(0.0)))
       .orderBy(col("score").desc, col("id"))
       .collect()
     // only the main tweet passes the filters (parent has no links);
@@ -40,18 +40,11 @@ class SearchSpec extends SparkSpec {
     assert(pushed.toSeq == overDocs.toSeq)
   }
 
-  test("filter clauses contribute no score; should clauses stack") {
-    val score = Search.weightedScore(Seq(
-      (col("author.followers_count") > 0) -> 2.0,
-      (col("language") === "en") -> 3.0))
-    val r = docs.withColumn("s", score).select("id", "s").collect()
-      .map(x => x.getLong(0) -> x.getDouble(1)).toMap
-    assert(r(TweetFixture.mainId) == 5.0) // both clauses hit
-  }
-
   test("nested match respects analyzed-text semantics") {
-    val m = docs.filter(Search.nestedMatch(col("context_annotations"),
-      a => a.getField("entity").getField("name"), "Conflicts"))
+    val m = docs.filter(exists(col("context_annotations"),
+      a => array_contains(
+        graft.functions.Analyzers.englando(a.getField("entity").getField("name")),
+        graft.functions.PorterStemmer.stem("conflicts"))))
     // englando stems "Conflicts" -> "conflict" and matches the
     // tokenized entity name "Russo-Ukrainian conflict"
     assert(m.count() == 1)

@@ -1,0 +1,167 @@
+#!/usr/bin/env python3
+"""List the library code that only tests reach.
+
+    python3 tools/deadcode.py
+
+One identifier-count pass over every Scala file under `src/main`,
+`perfbench/src` and `src/test` (comments and string literals stripped).
+A public `def` declared in a class, object or trait body under
+`src/main` is reported when no non-test file names it outside its own
+declarations: no other `src/main` file, no `perfbench/src` file, and no
+other line of its own file. Overrides and `main` entry points are
+skipped, and so are names declared more than once in `src/main`
+(overloads, or one name in several objects), because a name count
+cannot tell their callers apart.
+
+Each reported name is either test-only (some spec calls it) or
+unreferenced. The script exits 1 when a reported name is not in
+ALLOWED below; every entry there states why the def stays.
+"""
+import os
+import re
+import sys
+from collections import Counter
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+MAIN, BENCH, TEST = "src/main", "perfbench/src", "src/test"
+
+# name -> why the def stays although no workload calls it
+ALLOWED = {
+    # scan twins: the corpus-scan form of an index-served request, kept
+    # as the oracle the index-served answer must equal
+    "topHits": "scan twin, oracle for TextIndexSpec",
+    "significantTerms": "scan twin, oracle for TextIndexSpec",
+    "collapse": "scan twin, oracle for TextIndexSpec and SearchOpsSpec",
+    "rareTerms": "scan twin, oracle for TextIndexSpec",
+    "rescore": "scan twin, oracle for TextIndexSpec and SearchOpsSpec",
+    # single analyzer stages: AnalyzerSpec chains them into the staged
+    # reference the fused pipelines must equal
+    "asciiFoldTokens": "analyzer stage of AnalyzerSpec's staged reference",
+    "ngramTokens": "analyzer stage of AnalyzerSpec's staged reference",
+    "porterStemTokens": "analyzer stage of AnalyzerSpec's staged reference",
+    "possessiveStem": "analyzer stage of AnalyzerSpec's staged reference",
+    # vector search without a persisted index: the oracles the
+    # AnnIndex-served and batched paths are checked against
+    "knnLsh": "per-query twin, oracle for SimilaritySpec's batched LSH",
+    "knnIvf": "per-query twin, oracle for SimilaritySpec's batched IVF",
+    "ivfContract": "index trained in the call, oracle for AnnIndexSpec",
+    "pqContract": "index trained in the call, oracle for AnnIndexSpec",
+    "ivfPqContract": "index trained in the call, oracle for AnnIndexSpec",
+    # test-only operators with no oracle role: ROADMAP item 11 lists
+    # them for deletion with their spec cases
+    "knnIvfBatch": "test-only; deletion candidate (ROADMAP item 11)",
+    "knnQuantizedRerank": "test-only; deletion candidate (ROADMAP item 11)",
+    "cosineDupPairs": "test-only; deletion candidate (ROADMAP item 11)",
+}
+
+IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+DEF = re.compile(r"^\s*((?:(?:final|override|implicit|inline|private"
+                 r"(?:\[\w+\])?|protected(?:\[\w+\])?)\s+)*)def\s+"
+                 r"([A-Za-z_][A-Za-z0-9_]*)")
+TEMPLATE = re.compile(r"\b(object|class|trait)\b")
+CHAR = re.compile(r"'(\\.|[^\\'])'")
+
+
+def strip(src, strings=True):
+    """`src` with comments (and, if `strings`, string literals) blanked,
+    newlines kept. Identifier counts keep the strings: an interpolated
+    `${call(x)}` is a reference."""
+    out, i, n = [], 0, len(src)
+    while i < n:
+        if src.startswith("//", i):
+            j = src.find("\n", i)
+            i = n if j < 0 else j
+        elif src.startswith("/*", i):
+            j = src.find("*/", i + 2)
+            j = n if j < 0 else j + 2
+            out.append("\n" * src.count("\n", i, j))
+            i = j
+        elif src[i] == '"':
+            if src.startswith('"""', i):
+                j = src.find('"""', i + 3)
+                j = n if j < 0 else j + 3
+                while j < n and src[j] == '"':
+                    j += 1
+            else:
+                j = i + 1
+                while j < n and src[j] not in '"\n':
+                    j += 2 if src[j] == "\\" else 1
+                j = min(j + 1, n)
+            lit = src[i:j]
+            out.append('""' + "\n" * lit.count("\n") if strings else lit)
+            i = j
+        elif src[i] == "'" and CHAR.match(src, i):
+            # a char literal such as '{' must not open a brace
+            out.append("' '")
+            i = CHAR.match(src, i).end()
+        else:
+            out.append(src[i])
+            i += 1
+    return "".join(out)
+
+
+def scala_files(top):
+    for d, _, fs in os.walk(os.path.join(ROOT, top)):
+        for f in sorted(fs):
+            if f.endswith(".scala"):
+                yield os.path.relpath(os.path.join(d, f), ROOT)
+
+
+def member_defs(code):
+    """(name, public) of each def whose innermost enclosing brace opens
+    a class, object or trait body."""
+    defs, stack = [], []
+    for line in code.split("\n"):
+        m = DEF.match(line)
+        if m and (not stack or stack[-1]):
+            mods = m.group(1)
+            if "override" not in mods:
+                defs.append((m.group(2), not re.search(r"private|protected", mods)))
+        for k, ch in enumerate(line):
+            if ch == "{":
+                stack.append(bool(TEMPLATE.search(line[:k])))
+            elif ch == "}" and stack:
+                stack.pop()
+    return defs
+
+
+def main():
+    counts, tests, declared = {}, Counter(), Counter()
+    public = {}
+    for top in (MAIN, BENCH, TEST):
+        for path in scala_files(top):
+            src = open(os.path.join(ROOT, path), encoding="utf-8").read()
+            c = Counter(IDENT.findall(strip(src, strings=False)))
+            if top == TEST:
+                tests.update(c)
+                continue
+            counts[path] = c
+            if top == MAIN:
+                for name, pub in member_defs(strip(src)):
+                    declared[name] += 1
+                    if pub and name != "main":
+                        public.setdefault(name, path)
+    live = Counter()
+    for c in counts.values():
+        live.update(c)
+    found = []
+    for name, path in sorted(public.items(), key=lambda kv: (kv[1], kv[0])):
+        if declared[name] > 1 or live[name] > declared[name]:
+            continue
+        found.append((path, name, "test-only" if tests[name] else "unreferenced"))
+    bad = 0
+    for path, name, kind in found:
+        why = ALLOWED.get(name)
+        if why is None:
+            bad += 1
+        print(f"{path}: {name} ({kind}) "
+              + (f"allowed: {why}" if why else "NOT ALLOWED"))
+    stale = sorted(set(ALLOWED) - {name for _, name, _ in found})
+    for name in stale:
+        print(f"allow-list entry no longer needed: {name}")
+    print(f"{len(found)} defs with no non-test caller, {bad} not allowed")
+    return 1 if bad else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
