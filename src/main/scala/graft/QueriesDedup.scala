@@ -83,8 +83,7 @@ private[graft] object QueriesDedup {
     }),
     "d5_cosine_pairs" -> ((s, d) =>
       // exact all-pairs semantics, tiled so the quadratic work shuffle-
-      // partitions instead of planning a BroadcastNestedLoopJoin; the
-      // near-dup LSH variant is Similarity.cosineDupPairs
+      // partitions instead of planning a BroadcastNestedLoopJoin
       Similarity.cosinePairsBlocked(Tables.embeddings(s, d), 0.4)),
     "d11_chunk_dedup" -> ((s, d) =>
       graft.operators.Dedup.chunkDedup(Tables.documents(s, d),

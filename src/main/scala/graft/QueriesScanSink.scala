@@ -528,7 +528,7 @@ private[graft] object QueriesScanSink {
     }),
     "s16_delete_by_query" -> ((s, d) => {
       // The Lucene/ES DELETE lifecycle under the gate
-      // (TextIndex.deleteByQuery scaladoc): tombstone-append
+      // (ArtifactGen.Tombstoned scaladoc): tombstone-append
       // (O(deleted), postings untouched) → masked reads (liveView —
       // the query-time live-docs mask; df('fast') must already
       // exclude tombstoned docs while postings physically contain

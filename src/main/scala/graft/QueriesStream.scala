@@ -43,7 +43,7 @@ private[graft] object QueriesStream {
       // .runVectorDeleteIngest scaladoc): the ANN twin of st12 —
       // delete requests arrive as a multi-batch stream, each batch
       // tombstones O(batch) and applies the pressure policy
-      // (AnnIndex.maybePurge), terminal merge at close. Readback:
+      // (Tombstoned.maybePurge), terminal merge at close. Readback:
       // live counts across all four encoding tables, the nearest
       // LIVE neighbor of vec 1 by the exact BIGINT quantized dot
       // (n12's invariant, through the streamed lifecycle), and

@@ -20,7 +20,7 @@ private[graft] object QueriesVector {
 
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "n12_vector_delete" -> ((s, d) => {
-      // Vector deletes (AnnIndex.deleteVectors scaladoc): tombstone →
+      // Vector deletes (ArtifactGen.Tombstoned scaladoc): tombstone →
       // masked probe → purge across all four index tables. The probe
       // invariant: the nearest live neighbor of vec 1 by the exact
       // BIGINT quantized dot (the h2 vector-leg arithmetic — no float
@@ -31,7 +31,7 @@ private[graft] object QueriesVector {
         .select(col("vec_id"), col("label"), col("embedding"))
       val ix = AnnIndex.build(emb, Scratch.dir("n12ix"))
       val nBefore = ix.ivf(s).count()
-      val nDel = AnnIndex.deleteVectors(s, ix,
+      val nDel = AnnIndex.deleteByQuery(s, ix,
         emb.filter(col("vec_id") % 7 === 0).select(col("vec_id")))
       val q = emb.select(col("vec_id"),
         transform(col("embedding"),

@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   * is the scheduled ingest pipeline stage that re-runs per corpus
   * version; [[ensure]]'s fingerprint key models exactly that.
   */
-object AnnIndex extends ArtifactGen.ManagedArtifact("AnnIndex",
+object AnnIndex extends ArtifactGen.Tombstoned("AnnIndex",
     "graft_ann_index",
     // Any change to the ROUTED-ASSIGNMENT semantics
     // (Centroids.RouteBeam, RouteThreshold, the routing construction)
@@ -507,59 +507,14 @@ object AnnIndex extends ArtifactGen.ManagedArtifact("AnnIndex",
       if (base.nRows > 0) base.copy(nRows = base.nRows + nDelta) else base)
   }
 
-  /** Delete-by-id, the tombstone model [[TextIndex.deleteByQuery]]
-    * applies to postings, here for vectors (FAISS `remove_ids` is
-    * eager; Lucene-backed ES kNN tombstones like any doc): victim
-    * vec_ids append to a `deletes/` table, probes mask through
-    * [[liveView]], and [[purgeDeletes]] is the merge that drops them
-    * from all four index tables. Ids not in the index are ignored.
-    * Cost note as in [[TextIndex.deleteByQuery]]: the append is
-    * O(deleted); the counted-contract membership check is one pruned
-    * id-column pass over the ivf table. */
-  def deleteVectors(spark: SparkSession, base: Loaded,
-                    ids: DataFrame): Long =
-    tombstone(spark, base, ids, base.ivf(spark).select(col("vec_id")))
+  /** ivf holds one row per indexed vector. */
+  protected def idTable(spark: SparkSession, l: Loaded): DataFrame =
+    l.ivf(spark).select(col("vec_id"))
 
-  /** Tombstone-pressure purge policy — the [[TextIndex.maybePurge]]
-    * discipline for vectors (FAISS deployments likewise batch
-    * `remove_ids` and rebuild/merge on accumulated deletions): the
-    * four-table [[purgeDeletes]] merge runs only when tombstones
-    * exceed `maxRatio` of the LIVE vector count; a retention trickle
-    * stays O(deleted) appends until pressure accumulates. Returns
-    * whether a purge ran. */
-  def maybePurge(spark: SparkSession, base: Loaded,
-                 maxRatio: Double = 0.1): Boolean = {
-    require(maxRatio > 0.0, "maxRatio must be positive")
-    if (!hasDeletes(spark, base)) return false
-    // BOTH pressure numbers from ONE job (was: a deletes count job plus
-    // a full ivf count job per micro-batch — runVectorDeleteIngest pays
-    // this per batch): union the two tables' footer-count scans with a
-    // side tag. The physical ivf count is deliberately re-read (not
-    // taken from the handle's nRows): a caller that purged through THIS
-    // method holds a stale pre-purge handle — immutable case class —
-    // and a stale count would silently shift the pressure threshold.
-    val row = base.ivf(spark).select(lit(1L).as("side"))
-      .unionByName(deletes(spark, base)
-        .select(lit(0L).as("side")))
-      .agg(count(lit(1)).as("total"),
-        coalesce(sum(col("side")), lit(0L)).as("n_ivf"))
-      .head()
-    val tomb = row.getAs[Long]("total") - row.getAs[Long]("n_ivf")
-    val live = row.getAs[Long]("n_ivf") - tomb
-    if (tomb.toDouble > maxRatio * math.max(live, 1L).toDouble) {
-      purgeDeletes(spark, base)
-      true
-    } else false
-  }
-
-  /** Physically drop tombstoned vectors from ivf, pq_codes,
-    * ivfpq_codes and sq8 (write-tmp + swap per table; a torn swap
-    * invalidates the artifact and evicts the memo, the
-    * [[TextIndex]] swapIn discipline), then clear the tombstones.
-    * Corpus-sized by design — the scheduled merge, like
-    * [[TextIndex.purgeDeletes]]. */
-  def purgeDeletes(spark: SparkSession, base: Loaded): Loaded = {
-    if (!hasDeletes(spark, base)) return base
+  /** The live-row rewrite of [[purgeDeletes]]: ivf, pq_codes,
+    * ivfpq_codes and sq8 without the tombstoned vectors (FAISS
+    * deployments likewise batch `remove_ids` into a merge). */
+  protected def rewriteLive(spark: SparkSession, base: Loaded): Loaded = {
     // the cell-partitioned tables are rewritten by the build's own
     // writer: clustered on the partition key, the v7 within-cell
     // vec_id sort kept, and — grouped layout — the file-roll bound
@@ -567,10 +522,9 @@ object AnnIndex extends ArtifactGen.ManagedArtifact("AnnIndex",
     // maxRecordsPerFile would fuse each group into one unbounded file,
     // silently undoing the size cap until a rebuild).
     // The four rewrites are independent (separate tables, separate
-    // tmp+swap dirs) and run CONCURRENTLY (Par scaladoc); deletes/ is
-    // cleared only after all four land, so an interrupted purge still
-    // masks through liveView, and any crash subset leaves the four
-    // row counts disagreeing — exactly what lockstep flags
+    // tmp+swap dirs) and run CONCURRENTLY (Par scaladoc); any crash
+    // subset leaves the four row counts disagreeing — exactly what
+    // lockstep flags
     val dim = base.cents.head.length
     // the refreshed live row count rides the ivf rewrite itself (an
     // Observation on the frame the swap already scans) instead of a
@@ -588,7 +542,6 @@ object AnnIndex extends ArtifactGen.ManagedArtifact("AnnIndex",
         _, base.span, "overwrite", recordsPerFile(4L * base.resCbs.length + 8))),
       () => swapIn(spark, base, "sq8")(overwrite(
         liveView(spark, base, base.sq8(spark)))))
-    clearDeletes(spark, base)
     // refresh the live row count riding the handle (the addVectors
     // discipline in reverse): without it, load()'s pre-purge count —
     // which included tombstoned rows — permanently over-sizes the

@@ -12,7 +12,7 @@ import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.{AnalysisException, DataFrame, GraftShim, SaveMode,
   SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum}
 import org.apache.spark.sql.types.StructType
 
 /** Generation-directory + pointer lifecycle for persisted ingest
@@ -71,7 +71,8 @@ object ArtifactGen {
     private val schemas =
       new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-    protected def open(spark: SparkSession, table: String): DataFrame =
+    protected[operators] def open(spark: SparkSession,
+                                  table: String): DataFrame =
       spark.read.schema(schema(spark, table)).parquet(s"$dir/$table")
 
     /** `table`'s schema: inferred on the first call, memoized after. */
@@ -104,15 +105,15 @@ object ArtifactGen {
     }
   }
 
-  /** ES's index lifecycle (build, bulk append, alias swap, delete,
-    * merge), shared by [[TextIndex]], [[AnnIndex]] and [[DedupIndex]].
-    * A family supplies its handle type `L`, how a generation is built
-    * and loaded, and the lockstep predicate of its tables; `family`
-    * names it in logs, `version` is its LAYOUT version (bump it on any
-    * layout change so an older artifact is never half-read) and
-    * `idCol` keys its tombstones. */
+  /** ES's index lifecycle (build, bulk append, alias swap), shared by
+    * [[TextIndex]], [[AnnIndex]] and [[DedupIndex]]; the families that
+    * delete extend [[Tombstoned]]. A family supplies its handle type
+    * `L`, how a generation is built and loaded, and the lockstep
+    * predicate of its tables; `family` names it in logs and `version`
+    * is its LAYOUT version (bump it on any layout change so an older
+    * artifact is never half-read). */
   abstract class ManagedArtifact(family: String, rootDir: String,
-                                 version: String, idCol: String) {
+                                 version: String) {
     type L <: Handle
 
     /** The completed generation in `dir`, as a handle keyed `key`. */
@@ -277,9 +278,34 @@ object ArtifactGen {
     /** The `write` of a [[swapIn]] that replaces a table with `df`. */
     protected def overwrite(df: DataFrame): String => Unit =
       df.write.mode("overwrite").parquet(_)
+  }
 
-    // tombstones, the Lucene live-docs model: deletes append ids to
-    // `deletes/`, reads mask them, a family's purge drops them physically
+  /** Tombstones outweighing this share of the live ids trigger
+    * [[Tombstoned.maybePurge]]'s merge — ES's
+    * `index.merge.policy.deletes_pct_allowed`, one policy for every
+    * family that deletes. */
+  val MaxTombstoneRatio = 0.1
+
+  /** The delete half of ES's lifecycle, the Lucene live-docs model, for
+    * the families that delete ([[TextIndex]], [[AnnIndex]]):
+    * [[deleteByQuery]] appends ids to `deletes/`, reads mask them
+    * ([[liveView]]), and [[purgeDeletes]] is the merge that drops them
+    * physically, run under tombstone pressure by [[maybePurge]]. A
+    * family supplies the id column `idCol`, the table that lists every
+    * indexed id once ([[idTable]]) and the rewrite of its tables to
+    * their live rows ([[rewriteLive]]). */
+  abstract class Tombstoned(family: String, rootDir: String,
+                            version: String, idCol: String)
+      extends ManagedArtifact(family, rootDir, version) {
+
+    /** Every indexed id of `l`, one row each, in column `idCol`. */
+    protected def idTable(spark: SparkSession, l: L): DataFrame
+
+    /** Rewrite every table of `l` without its tombstoned rows
+      * ([[swapIn]] each), returning the handle later callers get. The
+      * tombstones are still in place while it runs. */
+    protected def rewriteLive(spark: SparkSession, l: L): L
+
     private def deletesPath(l: L): String = s"${l.dir}/deletes"
 
     /** Does the tombstone table exist? Probed through the Hadoop
@@ -291,9 +317,12 @@ object ArtifactGen {
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
 
-    /** The tombstone table (only read it when [[hasDeletes]]). */
-    protected def deletes(spark: SparkSession, l: L): DataFrame =
-      spark.read.parquet(deletesPath(l))
+    /** The tombstone table (only read it when [[hasDeletes]]), opened
+      * through the handle's schema memo like every artifact table; its
+      * one column has the id table's type ([[deleteByQuery]] casts), so
+      * the memoized schema holds across purges. */
+    private def deletes(spark: SparkSession, l: L): DataFrame =
+      l.open(spark, "deletes")
 
     /** A table of the artifact restricted to LIVE (non-tombstoned) rows:
       * an anti-join against the deletes table (small until a purge is
@@ -302,13 +331,18 @@ object ArtifactGen {
       if (!hasDeletes(spark, l)) table
       else table.join(deletes(spark, l), Seq(idCol), "left_anti")
 
-    /** Tombstone the ids of `ids` live in `members` (an id-bearing table
-      * of the artifact) and return how many; absent ids are ignored, as
-      * in ES delete_by_query. */
-    protected def tombstone(spark: SparkSession, l: L, ids: DataFrame,
-                            members: DataFrame): Long = {
-      val victims = ids.select(col(idCol))
-        .join(liveView(spark, l, members), Seq(idCol), "left_semi")
+    /** Delete-by-query: tombstone the ids of `ids` that are live in the
+      * index and return how many. Postings and encodings are NOT
+      * rewritten; ids not in the index are ignored, as in ES
+      * delete_by_query. The append is O(deleted); finding the victims
+      * reads the id table's id column, the corpus read ES's
+      * delete_by_query pays too. Only distinct live ids are appended,
+      * so `deletes/` never holds an id twice or one the index lacks —
+      * what lets [[maybePurge]] count it raw. */
+    def deleteByQuery(spark: SparkSession, l: L, ids: DataFrame): Long = {
+      val members = liveView(spark, l, idTable(spark, l))
+      val victims = ids.select(col(idCol).cast(members.schema(idCol).dataType))
+        .join(members, Seq(idCol), "left_semi")
         .distinct()
         // pinned: count() and the append would each re-run the join
         .persist()
@@ -319,11 +353,45 @@ object ArtifactGen {
       } finally { victims.unpersist(blocking = false); () }
     }
 
-    /** Drop the tombstones once a purge has made them physical. */
-    protected def clearDeletes(spark: SparkSession, l: L): Unit = {
-      val p = new HPath(deletesPath(l))
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      ()
+    /** The merge that makes tombstones physical: [[rewriteLive]], then
+      * drop the tombstones. Corpus-sized by design — the segment merge
+      * Lucene amortizes deletes into. `deletes/` is cleared only after
+      * every table is rewritten, so an interrupted purge still masks
+      * through [[liveView]] and re-runs to completion. */
+    def purgeDeletes(spark: SparkSession, l: L): L =
+      if (!hasDeletes(spark, l)) l
+      else {
+        val purged = rewriteLive(spark, l)
+        // a failure here leaves a consistent artifact + stale
+        // tombstones: deletes are idempotent
+        val p = new HPath(deletesPath(l))
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+        purged
+      }
+
+    /** Tombstone-pressure purge policy — ES's merge-policy discipline:
+      * the corpus-sized [[purgeDeletes]] merge runs only when tombstones
+      * exceed [[MaxTombstoneRatio]] of the LIVE ids, so a steady trickle
+      * of deletes costs O(deleted) appends until pressure accumulates.
+      * Both numbers come from ONE aggregate over the id table and the
+      * tombstones, unioned with a side tag. The tombstone count is exact
+      * ([[deleteByQuery]] appends only distinct live ids). After an
+      * interrupted purge some tombstoned ids are already gone from the
+      * id table, so `live` reads low and the check errs toward purging
+      * again, which finishes the interrupted merge. Returns whether a
+      * purge ran. A streaming delete ingest calls this per micro-batch
+      * ([[graft.streaming.IndexStream]]). */
+    def maybePurge(spark: SparkSession, l: L): Boolean = {
+      if (!hasDeletes(spark, l)) return false
+      val row = idTable(spark, l).select(lit(1L).as("side"))
+        .unionByName(deletes(spark, l).select(lit(0L).as("side")))
+        .agg(count(lit(1)), coalesce(sum(col("side")), lit(0L)))
+        .head()
+      val nIds = row.getLong(1)
+      val tomb = row.getLong(0) - nIds
+      val purge = tomb > MaxTombstoneRatio * math.max(nIds - tomb, 1L)
+      if (purge) purgeDeletes(spark, l)
+      purge
     }
   }
 

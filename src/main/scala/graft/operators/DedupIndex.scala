@@ -38,7 +38,7 @@ object DedupIndex extends ArtifactGen.ManagedArtifact("DedupIndex",
     // "v2": the build switched to representative-only buckets/shingle
     // tables (earlier all-docs artifacts would trip the exact lockstep
     // invariant)
-    version = "v2", idCol = "doc_id") {
+    version = "v2") {
 
   final case class Loaded(dir: String, key: String = "")
       extends ArtifactGen.Handle {

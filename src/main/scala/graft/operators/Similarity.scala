@@ -590,29 +590,6 @@ object Similarity {
     topKPerQuery(scored, emb.select(col("vec_id"), col("label")), k)
   }
 
-  /** Batched IVF-flat ANN: every query's `nprobe` nearest cells become
-    * exploded (qid, cell) probe rows, candidates come from a cell
-    * equi-join against the assigned corpus — one distributed pass for
-    * the whole query set, no per-query driver action (contrast
-    * [[knnIvf]]). */
-  def knnIvfBatch(emb: DataFrame, queryIds: Seq[Long], k: Int = 10,
-                  nlist: Int = 16, nprobe: Int = AnnIndex.AutoNprobe): DataFrame =
-    knnIvfBatchWith(emb, kmeansCentroids(emb, nlist), queryIds, k, nprobe)
-
-  /** [[knnIvfBatch]] with pre-trained centroids — the production shape
-    * (centroids are an ingest-time artifact, queries reuse them) and
-    * what lets [[ivfContract]] verify the very same index it probes
-    * without a second training pass. */
-  def knnIvfBatchWith(emb: DataFrame, cents: Array[Array[Double]],
-                      queryIds: Seq[Long], k: Int = 10,
-                      nprobe: Int = AnnIndex.AutoNprobe): DataFrame = {
-    val e = withNorm(emb)
-    knnIvfBatchAssigned(emb,
-      e.select(col("vec_id"), col("v"), col("nrm"),
-        cellOf(cents, col("v"), col("nrm")).as("cell")),
-      cents, queryIds, k, nprobe)
-  }
-
   /** The recall probe's CONTROL arm ([[graft.RecallProbe]]): the same
     * centroids and query set with routing forced OFF on BOTH sides —
     * exact flat assignment of every corpus vector (the n·nlist term
@@ -632,12 +609,16 @@ object Similarity {
       cents, queryIds, wanted = None, k, nprobe, routed = false)
   }
 
-  /** [[knnIvfBatchWith]] probing a pre-ASSIGNED corpus — `assigned` is
-    * (vec_id, v, nrm, cell), typically [[AnnIndex]]'s persisted IVF
-    * table written `partitionBy("cell")`: the cell equi-join against
-    * the tiny exploded probe side then reads only the probed cells'
-    * files (partition pruning), the inverted-file access path made of
-    * storage layout. `emb` supplies query vectors and labels only. */
+  /** Batched IVF-flat ANN over a pre-ASSIGNED corpus: every query's
+    * `nprobe` nearest cells become exploded (qid, cell) probe rows, and
+    * candidates come from a cell equi-join — one distributed pass for
+    * the whole query set, no per-query driver action (contrast
+    * [[knnIvf]]). `assigned` is (vec_id, v, nrm, cell), typically
+    * [[AnnIndex]]'s persisted IVF table written `partitionBy("cell")`:
+    * the cell equi-join against the tiny probe side then reads only the
+    * probed cells' files (partition pruning), the inverted-file access
+    * path made of storage layout. `emb` supplies query vectors and
+    * labels only. */
   def knnIvfBatchAssigned(emb: DataFrame, assigned: DataFrame,
                           cents: Array[Array[Double]],
                           queryIds: Seq[Long], k: Int = 10,
@@ -1026,7 +1007,7 @@ object Similarity {
   }
 
   /** ANN contract over the batched IVF path: train ONCE, probe and
-    * verify against the same centroids ([[knnIvfBatchWith]]). */
+    * verify against the same centroids ([[ivfContractWith]]). */
   def ivfContract(corpus: DataFrame, probeIds: Seq[Long], k: Int = 10,
                   plantOffset: Long = 1000000L,
                   nlist: Int = 16, nprobe: Int = AnnIndex.AutoNprobe): DataFrame = {
@@ -1097,8 +1078,7 @@ object Similarity {
     * (replication B trades against B² parallelism — pick B near
     * √cores); per-tile working set (2·n/B vectors) is the memory
     * knob. Same output as [[cosinePairsBrute]] (asserted in
-    * SimilaritySpec); for near-dup thresholds (≥ ~0.8) use
-    * [[cosineDupPairs]], which prunes instead of sharding. */
+    * SimilaritySpec). */
   def cosinePairsBlocked(emb: DataFrame, threshold: Double,
                          blocks: Int = 8): DataFrame = {
     val tiles = lit((0 until blocks).toArray)
@@ -1125,26 +1105,6 @@ object Similarity {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6)
-          .as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** Embedding-cosine near-duplicate pairs at scale: LSH-bucket the
-    * corpus, compare only within buckets — the within-bucket pair join
-    * replaces the impossible all-pairs cross join at 100 TB. */
-  def cosineDupPairs(emb: DataFrame, threshold: Double = 0.95,
-                     nPlanes: Int = 4, seed: Long = 42L): DataFrame = {
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    val planes = hyperplanes(dim, nPlanes, seed)
-    val b0 = withNorm(emb).select(col("vec_id"), col("v"), col("nrm"),
-      lshBucket(col("v"), planes).as("bucket"))
-    val l = b0.as("l")
-    val r = b0.as("r")
-    l.join(r, col("l.bucket") === col("r.bucket") &&
-        col("l.vec_id") < col("r.vec_id"))
-      .select(col("l.vec_id").as("id_a"), col("r.vec_id").as("id_b"),
-        round(dot(col("l.v"), col("r.v")) / (col("l.nrm") * col("r.nrm")), 6)
           .as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
       .orderBy(col("id_a"), col("id_b"))
@@ -1688,7 +1648,7 @@ object Similarity {
   private def sq8Code(x: Column, amax: Column): Column =
     floor(x / (amax / 127.0d) + 0.5d)
 
-  private[operators] def quantizedIndex(emb: DataFrame): DataFrame = {
+  private[graft] def quantizedIndex(emb: DataFrame): DataFrame = {
     val staged = withNorm(emb)
       .select(col("vec_id"), col("v"), col("nrm"),
         array_max(transform(col("v"), x => abs(x))).as("amax"))
@@ -1699,17 +1659,15 @@ object Similarity {
         .as("qd"))
   }
 
-  /** Stage 1 of [[knnQuantizedRerank]]: approximate cosine on int8
-    * codes — dot(qa,qb)·sa·sb/(‖a‖·‖b‖) — keeping the top
-    * `n` candidates per query. One corpus scan for the whole query
-    * set; the shuffle carries 16·n bytes per query (bounded-heap
+  /** N7, the production ANN serving shape, stage 1: approximate cosine
+    * on the int8 codes of `idx` ([[quantizedIndex]]) —
+    * dot(qa,qb)·sa·sb/(‖a‖·‖b‖) — keeping the top `n` candidates per
+    * query. One scan for the whole query set; the shuffle carries 16·n
+    * bytes per query (bounded-heap
     * [[graft.functions.aggregates.TopKByScore]]). */
-  private def quantizedCandidates(emb: DataFrame, queryIds: Seq[Long],
-                                  n: Int): DataFrame =
-    quantizedCandidatesIdx(quantizedIndex(emb), queryIds, n)
-
-  private def quantizedCandidatesIdx(idx: DataFrame, queryIds: Seq[Long],
-                                     n: Int): DataFrame = {
+  private[graft] def quantizedCandidatesIdx(idx: DataFrame,
+                                            queryIds: Seq[Long],
+                                            n: Int): DataFrame = {
     val queries = idx.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("qid"), col("qd").as("qqd"),
         col("qscale").as("qqs"), col("nrm").as("qn"))
@@ -1725,21 +1683,13 @@ object Similarity {
       .select(col("qid"), col("s.vec_id").as("vec_id"))
   }
 
-  /** N7: two-stage quantized retrieval — the production ANN serving
-    * shape: a cheap first pass scores int8 codes (4× smaller scans,
-    * byte kernels) and keeps `k·oversample` candidates; the exact
-    * second pass re-scores ONLY those with full-precision cosine and
-    * returns the top k. Work drops from n·d float ops to n·d byte ops
-    * + k·oversample·d float ops per query; recall loss is bounded by
-    * the SQ8 score error and vanishes as oversample grows. */
-  def knnQuantizedRerank(emb: DataFrame, queryIds: Seq[Long], k: Int = 10,
-                         oversample: Int = 4): DataFrame = {
-    val cand = quantizedCandidates(emb, queryIds, k * oversample)
-    rerankExact(emb, cand, queryIds, k)
-  }
-
-  private def rerankExact(emb: DataFrame, cand: DataFrame,
-                          queryIds: Seq[Long], k: Int): DataFrame = {
+  /** N7 stage 2: re-score only the stage-1 candidates `cand` with
+    * full-precision cosine and keep the top k — n·d byte ops plus
+    * k·oversample·d float ops per query instead of n·d float ops;
+    * recall loss is bounded by the SQ8 score error and vanishes as
+    * oversample grows. */
+  private[graft] def rerankExact(emb: DataFrame, cand: DataFrame,
+                                 queryIds: Seq[Long], k: Int): DataFrame = {
     val e = withNorm(emb)
     val queries = e.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("qid"), col("v").as("qv"),

@@ -66,7 +66,7 @@ import graft.functions.Analyzers
   * in exact longs, so every statistic round-trips identically and the
   * artifact-backed queries hash-match their scan-based oracles.
   */
-object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
+object TextIndex extends ArtifactGen.Tombstoned("TextIndex",
     "graft_text_index",
     // "v6": postings bucketed by doc_id ("v5" added the shingle
     // membership postings + dictionary, "v4" generations and
@@ -388,35 +388,15 @@ object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
     } finally withLen.unpersist(blocking = false)
   }
 
-  /** Delete-by-query, the Lucene TOMBSTONE model: deletion appends the
-    * victim doc ids to a `deletes/` table (the live-docs bitmap Lucene
-    * keeps per segment; postings are NOT rewritten), queries mask
-    * tombstoned docs at read time ([[liveView]]), and [[purgeDeletes]]
-    * is the merge that physically drops them. Returns the number of
-    * newly tombstoned docs. Ids not in the index are ignored (deleting
-    * an absent doc is a no-op, as in ES delete_by_query).
-    *
-    * Cost, honestly: the APPEND is O(deleted), but the
-    * live-membership check behind the returned count reads the
-    * doclen id column (one pruned columnar pass over the corpus) —
-    * the same corpus read ES's delete_by_query pays to find its
-    * victims. A count-free pipeline can append tombstones blindly
-    * (liveView's anti-join ignores absent/duplicate ids) and skip
-    * that pass; the counted contract is what the gate verifies. */
-  def deleteByQuery(spark: SparkSession, base: Loaded,
-                    ids: DataFrame): Long =
-    tombstone(spark, base, ids, base.doclen(spark))
+  /** doclen lists every indexed doc, also the ones with no postings. */
+  protected def idTable(spark: SparkSession, l: Loaded): DataFrame =
+    l.doclen(spark)
 
-  /** The merge that makes tombstones physical: rewrite postings and
-    * doclen without the deleted docs (swapIn discipline — write-tmp +
-    * swap, torn swap invalidates), recompute the dictionary from the
-    * retained postings and the corpus stats from the retained doclen
-    * (exact longs, the [[build]] expressions), then drop the deletes
-    * table. Corpus-sized work by design — this IS the segment merge
-    * Lucene amortizes deletes into; per-partition at scale like
-    * [[compactPostings]]. */
-  def purgeDeletes(spark: SparkSession, base: Loaded): Loaded = {
-    if (!hasDeletes(spark, base)) return base
+  /** The live-row rewrite of [[purgeDeletes]]: postings, shingles and
+    * doclen without the deleted docs, the dictionaries recomputed from
+    * the retained membership tables and the corpus stats from the
+    * retained doclen (exact longs, the [[build]] expressions). */
+  protected def rewriteLive(spark: SparkSession, base: Loaded): Loaded = {
     // re-select the original column order: a using-column anti-join
     // moves the join key to the FRONT of the output (observed: purged
     // postings came back (doc_id, term, ...) without this), and a
@@ -427,9 +407,7 @@ object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
     // reads its own table's just-swapped, already-purged form — the
     // cheaper read), overlapped via Par: the torn-window states a
     // concurrent schedule can leave are the same pairwise-consistent
-    // mixes the sequential order could already leave (deletes/ is
-    // cleared only after ALL chains complete, so an interrupted purge
-    // still masks through liveView and re-runs to completion)
+    // mixes the sequential order could already leave
     val pCols = base.postings(spark).columns.map(col).toSeq
     // shingle membership is (term, doc_id) with term leading — the
     // doc_id-keyed anti-join would move doc_id to the front, so
@@ -455,57 +433,7 @@ object TextIndex extends ArtifactGen.ManagedArtifact("TextIndex",
             .select(col("doc_id"), col("len"))))
         swapIn(spark, base, "corpus")(overwrite(corpusOf(base.doclen(spark))))
       })
-    // tombstones are now physical — clear them (a failure here leaves
-    // a consistent index + stale tombstones: deletes are idempotent)
-    clearDeletes(spark, base)
     base
-  }
-
-  /** Tombstone-pressure purge policy — ES's merge-policy discipline
-    * (`index.merge.policy.deletes_pct_allowed`): the corpus-sized
-    * [[purgeDeletes]] merge runs only when tombstones exceed
-    * `maxRatio` of the LIVE doc count, so a steady trickle of deletes
-    * costs O(deleted) appends until pressure accumulates, and the
-    * merge amortizes over many delete batches. The pressure number is
-    * the count of DISTINCT tombstones that actually hit an indexed
-    * doc (a tombstone-distinct semi-join against the doclen id
-    * column — one pruned columnar pass, the same price
-    * [[deleteByQuery]]'s count documents): the raw tombstone-file
-    * row count would be inflated by the blind-append pipelines the
-    * delete scaladoc itself invites (duplicate/absent ids), driving
-    * `live` low or negative and tripping a corpus-sized purge every
-    * micro-batch (round-13 review). Returns whether a purge ran. A
-    * streaming delete ingest calls this per micro-batch
-    * ([[graft.streaming.IndexStream.runDeleteIngest]]). */
-  def maybePurge(spark: SparkSession, base: Loaded,
-                 maxRatio: Double = 0.1): Boolean = {
-    require(maxRatio > 0.0, "maxRatio must be positive")
-    if (!hasDeletes(spark, base)) return false
-    // two-tier check: the RAW tombstone-file row count (metadata-only,
-    // the per-micro-batch steady-state cost) over-counts the exact
-    // pressure (duplicates/absent ids only inflate it), so when even
-    // the inflated count against the most-pessimistic live bound
-    // doesn't trip the threshold, the exact count cannot either —
-    // the doclen semi-join runs only when the raw signal trips
-    // (measured: the always-join form doubled s16's bench row)
-    val tombRaw = deletes(spark, base).count()
-    // the indexed-doc count comes from the single-row corpus stats
-    // table (n == doclen count by the lockstep invariant; deletes
-    // never touch either until the purge swaps both) — a 1-file read
-    // instead of a doclen scan, per micro-batch
-    val doclenCnt = base.corpus(spark).head().getAs[Double]("n").toLong
-    if (tombRaw.toDouble <=
-        maxRatio * math.max(doclenCnt - tombRaw, 1L).toDouble)
-      return false
-    val tomb = deletes(spark, base)
-      .select(col("doc_id")).distinct()
-      .join(base.doclen(spark), Seq("doc_id"), "left_semi")
-      .count()
-    val live = doclenCnt - tomb
-    if (tomb.toDouble > maxRatio * math.max(live, 1L).toDouble) {
-      purgeDeletes(spark, base)
-      true
-    } else false
   }
 
   /** Segment compaction — the maintenance pass that keeps lookup cost

@@ -126,7 +126,11 @@ object EventStream {
       d.toString
     }
 
-  /** Pin spark.sql.shuffle.partitions for a streaming run's lifetime.
+  /** The shuffle (and state) partition cap of a streaming run. */
+  private val StreamPartitions = 8
+
+  /** Pin spark.sql.shuffle.partitions for a streaming run's lifetime,
+    * at most [[StreamPartitions]].
     * Stateful queries snapshot the setting at their first batch as the
     * STATE partition count, and the HDFS-backed store commits one
     * delta file per state partition per micro-batch — at this
@@ -142,9 +146,8 @@ object EventStream {
   private[streaming] def withPinnedStreamPartitions[T](
       spark: SparkSession)(body: => T): T = {
     val oldParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val streamParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8")
     spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(oldParts.toInt, streamParts.toInt).toString)
+      math.min(oldParts.toInt, StreamPartitions).toString)
     try body
     finally spark.conf.set("spark.sql.shuffle.partitions", oldParts)
   }

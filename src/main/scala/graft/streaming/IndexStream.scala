@@ -1,9 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.operators.TextIndex
+import graft.operators.{AnnIndex, ArtifactGen, TextIndex}
 
 /** Streaming INDEX ingest — the search index maintained from a
   * document STREAM, one Lucene-model segment per micro-batch: the
@@ -102,67 +103,52 @@ object IndexStream {
 
   /** Streaming DELETE ingest — retention / right-to-be-forgotten
     * delete requests arriving as a STREAM, folded into the standing
-    * index as tombstone appends per micro-batch
-    * ([[TextIndex.deleteByQuery]] — O(batch), postings untouched),
-    * then ONE scheduled [[TextIndex.purgeDeletes]] merge makes them
-    * physical. This is exactly ES's shape: delete_by_query requests
-    * tombstone as they arrive; segment merges reclaim on their own
-    * cadence — the deletion stream never REWRITES the index
-    * (per-batch work is the tombstone append plus the counted
-    * contract's id-column membership pass — see the
-    * [[TextIndex.deleteByQuery]] cost note; the one corpus-sized
-    * rewrite is the single scheduled purge). Returns the purged
-    * index, the number of non-empty request batches, and the total
-    * docs tombstoned. */
-  def runDeleteIngest(spark: SparkSession, dir: String,
-                      nSplits: Int = 2): (TextIndex.Loaded, Long, Long) = {
-    import org.apache.spark.sql.functions.col
-    val docs = graft.Tables.documents(spark, dir)
-    val ix = TextIndex.build(docs, graft.Scratch.dir("st12ix"))
-    val victims = docs.filter(col("doc_id") % 3 === 0).select(col("doc_id"))
+    * index `ix` of `a` as tombstone appends per micro-batch
+    * ([[ArtifactGen.Tombstoned.deleteByQuery]] — O(batch), the index
+    * tables untouched) under the tombstone-pressure policy
+    * ([[ArtifactGen.Tombstoned.maybePurge]]), then ONE terminal
+    * [[ArtifactGen.Tombstoned.purgeDeletes]] at stream close (ES
+    * forcemerge on rollover): a final sub-threshold remainder must not
+    * outlive the stream, because the readback describes LIVE rows.
+    * This is exactly ES's shape: delete_by_query requests tombstone as
+    * they arrive; segment merges reclaim on their own cadence. Returns
+    * the purged index, the number of non-empty request batches, and the
+    * total ids tombstoned. */
+  private def foldDeletes(a: ArtifactGen.Tombstoned)(spark: SparkSession,
+      ix: a.L, victims: DataFrame, nSplits: Int,
+      prefix: String): (a.L, Long, Long) = {
     var deleted = 0L
-    val batches = foldFileStream(spark, victims, nSplits, "st12") { b =>
-      deleted += TextIndex.deleteByQuery(spark, ix, b)
-      // ES's merge-policy discipline per micro-batch: the corpus-sized
-      // merge runs only under tombstone PRESSURE (here every batch
-      // deletes ~1/6 of the corpus, far past the 10% threshold, so
-      // each batch purges — a retention trickle would instead
-      // accumulate O(deleted) tombstones until the ratio trips)
-      TextIndex.maybePurge(spark, ix, maxRatio = 0.1)
+    val batches = foldFileStream(spark, victims, nSplits, prefix) { b =>
+      deleted += a.deleteByQuery(spark, ix, b)
+      a.maybePurge(spark, ix)
       ()
     }
-    // stream close = the terminal merge (ES forcemerge on rollover):
-    // a final sub-threshold remainder must not outlive the stream,
-    // because the readback's corpus invariants describe LIVE docs
-    (TextIndex.purgeDeletes(spark, ix), batches, deleted)
+    (a.purgeDeletes(spark, ix), batches, deleted)
   }
 
-  /** ST13: streaming VECTOR delete ingest — the ANN twin of
-    * [[runDeleteIngest]] (and the streaming face of n12's batch
-    * lifecycle): vector retention/right-to-be-forgotten requests
-    * arrive as a multi-batch stream, each micro-batch tombstones in
-    * O(batch) ([[graft.operators.AnnIndex.deleteVectors]] — the four
-    * encoding tables untouched) and applies the tombstone-pressure
-    * policy ([[graft.operators.AnnIndex.maybePurge]]), with the
-    * terminal four-table merge at stream close. Returns the purged
-    * index, the number of non-empty request batches, and the total
-    * vectors tombstoned. */
+  /** ST12: [[foldDeletes]] over the text index, a third of the
+    * documents deleted (each batch ~1/6 of the corpus, far past the
+    * pressure threshold, so each batch purges). */
+  def runDeleteIngest(spark: SparkSession, dir: String,
+                      nSplits: Int = 2): (TextIndex.Loaded, Long, Long) = {
+    val docs = graft.Tables.documents(spark, dir)
+    foldDeletes(TextIndex)(spark,
+      TextIndex.build(docs, graft.Scratch.dir("st12ix")),
+      docs.filter(col("doc_id") % 3 === 0).select(col("doc_id")),
+      nSplits, "st12")
+  }
+
+  /** ST13: [[foldDeletes]] over the ANN index — the streaming face of
+    * n12's batch lifecycle, a fifth of the vectors deleted. */
   def runVectorDeleteIngest(spark: SparkSession, dir: String,
                             nSplits: Int = 2)
-      : (graft.operators.AnnIndex.Loaded, Long, Long) = {
-    import org.apache.spark.sql.functions.col
-    import graft.operators.AnnIndex
+      : (AnnIndex.Loaded, Long, Long) = {
     val emb = graft.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
-    val ix = AnnIndex.build(emb, graft.Scratch.dir("st13ix"))
-    val victims = emb.filter(col("vec_id") % 5 === 0).select(col("vec_id"))
-    var deleted = 0L
-    val batches = foldFileStream(spark, victims, nSplits, "st13") { b =>
-      deleted += AnnIndex.deleteVectors(spark, ix, b)
-      AnnIndex.maybePurge(spark, ix, maxRatio = 0.1)
-      ()
-    }
-    (AnnIndex.purgeDeletes(spark, ix), batches, deleted)
+    foldDeletes(AnnIndex)(spark,
+      AnnIndex.build(emb, graft.Scratch.dir("st13ix")),
+      emb.filter(col("vec_id") % 5 === 0).select(col("vec_id")),
+      nSplits, "st13")
   }
 
   /** Streaming VECTOR ingest — the ANN twin of [[runIndexIngest]] and

@@ -251,9 +251,9 @@ class AnnIndexSpec extends SparkSpec {
     val n = ix.ivf(spark).count()
     val victims = corpus.filter(col("vec_id") % 5 === 0)
       .select(col("vec_id"))
-    val nDel = AnnIndex.deleteVectors(spark, ix, victims)
+    val nDel = AnnIndex.deleteByQuery(spark, ix, victims)
     assert(nDel == victims.count())
-    assert(AnnIndex.deleteVectors(spark, ix, victims) == 0L)
+    assert(AnnIndex.deleteByQuery(spark, ix, victims) == 0L)
     assert(AnnIndex.liveView(spark, ix, ix.ivf(spark)).count() == n - nDel)
     assert(ix.ivf(spark).count() == n) // physically intact pre-purge
     AnnIndex.purgeDeletes(spark, ix)
@@ -279,7 +279,7 @@ class AnnIndexSpec extends SparkSpec {
     assert(ix.nRows == n)
     val victims = corpus.filter(col("vec_id") % 7 === 0)
       .select(col("vec_id"))
-    val nDel = AnnIndex.deleteVectors(spark, ix, victims)
+    val nDel = AnnIndex.deleteByQuery(spark, ix, victims)
     assert(nDel > 0)
     val purged = AnnIndex.purgeDeletes(spark, ix)
     assert(purged.nRows == n - nDel)
@@ -329,7 +329,7 @@ class AnnIndexSpec extends SparkSpec {
     val before = pqTop(1L)
     assert(before.head == 1000001L, "planted twin ranks first pre-delete")
     import spark.implicits._
-    val nDel = AnnIndex.deleteVectors(spark, ix,
+    val nDel = AnnIndex.deleteByQuery(spark, ix,
       Seq(1000001L).toDF("vec_id"))
     assert(nDel == 1L)
     val after = pqTop(1L)
@@ -343,23 +343,23 @@ class AnnIndexSpec extends SparkSpec {
     val ix = AnnIndex.build(corpus, freshDir())
     val n = ix.ivf(spark).count()
     // nothing tombstoned → nothing to read, no-op
-    assert(!AnnIndex.maybePurge(spark, ix, maxRatio = 0.1))
+    assert(!AnnIndex.maybePurge(spark, ix))
     // ~2% deleted: far under a 10% pressure threshold — the merge
     // must NOT run (tables intact, mask keeps serving)
     val few = corpus.filter(col("vec_id") % 50 === 0).select(col("vec_id"))
-    val nFew = AnnIndex.deleteVectors(spark, ix, few)
+    val nFew = AnnIndex.deleteByQuery(spark, ix, few)
     assert(nFew > 0)
-    assert(!AnnIndex.maybePurge(spark, ix, maxRatio = 0.1))
+    assert(!AnnIndex.maybePurge(spark, ix))
     assert(ix.ivf(spark).count() == n)
     assert(AnnIndex.liveView(spark, ix, ix.ivf(spark)).count() == n - nFew)
     // pile on past the ratio → the four-table merge runs
     val many = corpus.filter(col("vec_id") % 5 === 0).select(col("vec_id"))
-    val nMany = AnnIndex.deleteVectors(spark, ix, many)
-    assert(AnnIndex.maybePurge(spark, ix, maxRatio = 0.1))
+    val nMany = AnnIndex.deleteByQuery(spark, ix, many)
+    assert(AnnIndex.maybePurge(spark, ix))
     Seq(ix.ivf(spark), ix.pqCodes(spark), ix.ivfPqCodes(spark),
       ix.sq8(spark)).foreach(t => assert(t.count() == n - nFew - nMany))
     // pressure relieved: the next check is a no-op again
-    assert(!AnnIndex.maybePurge(spark, ix, maxRatio = 0.1))
+    assert(!AnnIndex.maybePurge(spark, ix))
   }
 
   test("addVectors rejects duplicate vec_ids loudly") {
@@ -572,8 +572,8 @@ class AnnIndexSpec extends SparkSpec {
     val flatIx2 = AnnIndex.addVectors(flatIx, delta)
     val ix2 = AnnIndex.addVectors(ix, delta)
     val victims = Seq(qids.head + 1L, 900003L).toDF("vec_id")
-    AnnIndex.deleteVectors(spark, flatIx2, victims)
-    AnnIndex.deleteVectors(spark, ix2, victims)
+    AnnIndex.deleteByQuery(spark, flatIx2, victims)
+    AnnIndex.deleteByQuery(spark, ix2, victims)
     val flatIx3 = AnnIndex.purgeDeletes(spark, flatIx2)
     val ix3 = AnnIndex.purgeDeletes(spark, ix2)
     Seq("ivf", "ivfpq_codes").foreach { sub =>

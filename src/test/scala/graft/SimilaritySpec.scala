@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{AnnIndex, Similarity}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -123,16 +123,6 @@ class SimilaritySpec extends SparkSpec {
     assert(cells.length == 16)
   }
 
-  test("cosineDupPairs finds planted duplicate") {
-    val emb = Tables.embeddings(spark, sf).limit(50)
-    val dup = emb.filter(col("vec_id") === 7L)
-      .select((col("vec_id") + 10000L).as("vec_id"), col("embedding"),
-        col("label"))
-    val pairs = Similarity.cosineDupPairs(emb.unionByName(dup), 0.999)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((7L, 10007L)))
-  }
-
   private def neighborList(df: org.apache.spark.sql.DataFrame) =
     df.select("vec_id", "cos_sim").as[(Long, Double)].collect().toSeq
 
@@ -200,7 +190,10 @@ class SimilaritySpec extends SparkSpec {
   test("batched IVF over a query set equals per-query IVF") {
     val emb = Tables.embeddings(spark, sf)
     val qids = Seq(1L, 5L, 9L)
-    val batch = Similarity.knnIvfBatch(emb, qids, k = 10)
+    // knnIvf's training and assignment, probed in one batch
+    val cents = Similarity.kmeansCentroids(emb, 16)
+    val batch = Similarity.knnIvfBatchAssigned(emb,
+      AnnIndex.assignCells(emb, cents), cents, qids, k = 10)
     qids.foreach { q =>
       val single = neighborList(Similarity.knnIvf(emb, q, k = 10))
       val fromBatch = neighborList(
@@ -241,10 +234,15 @@ class SimilaritySpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf)
     val n = emb.count().toInt
     val probes = Seq(1L, 5L)
+    // n7's two stages (rerankContractWith): int8 candidates from the
+    // sq8 table, then the exact rerank
+    val sq8 = Similarity.quantizedIndex(emb)
+    def rerank(oversample: Int) = Similarity.rerankExact(emb,
+      Similarity.quantizedCandidatesIdx(sq8, probes, 10 * oversample),
+      probes, k = 10)
     // oversample covering the whole corpus → stage 1 prunes nothing →
     // the exact rerank IS brute force
-    val full = Similarity
-      .knnQuantizedRerank(emb, probes, k = 10, oversample = n)
+    val full = rerank(oversample = n)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     val brute = Similarity.knnBruteBatch(emb, probes, k = 10)
       .select(col("qid"), col("vec_id"), col("rank"))
@@ -252,8 +250,7 @@ class SimilaritySpec extends SparkSpec {
     assert(full == brute)
     // modest oversampling still recovers most of the exact top-10:
     // SQ8 score error is far below typical top-k score gaps
-    val os4 = Similarity
-      .knnQuantizedRerank(emb, probes, k = 10, oversample = 4)
+    val os4 = rerank(oversample = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val bruteIds = brute.map(t => (t._1, t._2))
     assert((os4 intersect bruteIds).size >= (bruteIds.size * 7) / 10)

@@ -297,14 +297,14 @@ class TextIndexSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("textixpress").toString)
     val n = pix.doclen(spark).count()
     // no tombstones at all → no-op, nothing to read
-    assert(!TextIndex.maybePurge(spark, pix, maxRatio = 0.1))
+    assert(!TextIndex.maybePurge(spark, pix))
     // tombstone ~2% of the corpus: 0.02/0.98 ≈ 2% of live — far under
     // a 10% threshold, so the merge must NOT run (tombstones persist,
     // the mask keeps serving)
     val few = docs.filter(col("doc_id") % 50 === 0).select(col("doc_id"))
     val nFew = TextIndex.deleteByQuery(spark, pix, few)
     assert(nFew > 0)
-    assert(!TextIndex.maybePurge(spark, pix, maxRatio = 0.1))
+    assert(!TextIndex.maybePurge(spark, pix))
     assert(pix.doclen(spark).count() == n,
       "below threshold the tables must be untouched (tombstones only)")
     assert(TextIndex.liveView(spark, pix, pix.doclen(spark)).count()
@@ -313,11 +313,27 @@ class TextIndexSpec extends SparkSpec {
     // merge runs and the tombstones become physical
     val many = docs.filter(col("doc_id") % 3 === 0).select(col("doc_id"))
     val nMany = TextIndex.deleteByQuery(spark, pix, many)
-    assert(TextIndex.maybePurge(spark, pix, maxRatio = 0.1))
+    assert(TextIndex.maybePurge(spark, pix))
     assert(pix.doclen(spark).count() == n - nFew - nMany,
       "crossing the threshold must purge physically")
     // and the pressure is relieved: the next check is a no-op again
-    assert(!TextIndex.maybePurge(spark, pix, maxRatio = 0.1))
+    assert(!TextIndex.maybePurge(spark, pix))
+  }
+
+  test("maybePurge below the threshold counts its pressure in one aggregate") {
+    val docs = Tables.documents(spark, sf)
+    val pix = TextIndex.build(docs,
+      java.nio.file.Files.createTempDirectory("textixjobs").toString)
+    assert(TextIndex.deleteByQuery(spark, pix,
+      docs.filter(col("doc_id") % 50 === 0).select(col("doc_id"))) > 0)
+    // one aggregate over the doclen ids and the tombstones: two jobs
+    // under AQE (its shuffle stage and its result), plus the
+    // tombstone table's schema inference on the handle's first read
+    // of it; the memo serves every later read
+    val cold = jobsOf(assert(!TextIndex.maybePurge(spark, pix)))
+    assert(cold.size <= 3, cold)
+    val warm = jobsOf(assert(!TextIndex.maybePurge(spark, pix)))
+    assert(warm.size <= 2, warm)
   }
 
   test("term predicates push into the postings scan") {

@@ -15,7 +15,9 @@ cannot tell their callers apart.
 
 Each reported name is either test-only (some spec calls it) or
 unreferenced. The script exits 1 when a reported name is not in
-ALLOWED below; every entry there states why the def stays.
+ALLOWED below, or when an ALLOWED name is no longer reported (a stale
+entry would outlive its code); every entry there states why the def
+stays.
 """
 import os
 import re
@@ -47,11 +49,6 @@ ALLOWED = {
     "ivfContract": "index trained in the call, oracle for AnnIndexSpec",
     "pqContract": "index trained in the call, oracle for AnnIndexSpec",
     "ivfPqContract": "index trained in the call, oracle for AnnIndexSpec",
-    # test-only operators with no oracle role: ROADMAP item 11 lists
-    # them for deletion with their spec cases
-    "knnIvfBatch": "test-only; deletion candidate (ROADMAP item 11)",
-    "knnQuantizedRerank": "test-only; deletion candidate (ROADMAP item 11)",
-    "cosineDupPairs": "test-only; deletion candidate (ROADMAP item 11)",
 }
 
 IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
@@ -158,9 +155,10 @@ def main():
               + (f"allowed: {why}" if why else "NOT ALLOWED"))
     stale = sorted(set(ALLOWED) - {name for _, name, _ in found})
     for name in stale:
-        print(f"allow-list entry no longer needed: {name}")
-    print(f"{len(found)} defs with no non-test caller, {bad} not allowed")
-    return 1 if bad else 0
+        print(f"STALE allow-list entry, no longer reported: {name}")
+    print(f"{len(found)} defs with no non-test caller, {bad} not allowed, "
+          f"{len(stale)} stale allow-list entries")
+    return 1 if bad or stale else 0
 
 
 if __name__ == "__main__":
