@@ -75,62 +75,17 @@ object Bench {
       f""""sentinel_$n":$s%.3f""" }).mkString("", ",", "}")
   }
 
-  /** Per-query anchor for health attribution (round-13 review:
-    * denorm_docs wandered 3.74→31.15 s between same-binary runs while
-    * the io sentinels moved only ~40% — the health block flagged the
-    * BOX but nothing attributed the affected ROWS). The committed
-    * canonical `bench_out.json` is the anchor; it is read BEFORE the
-    * suite runs (the full run overwrites it at the end) and any
-    * successful query measuring >3× its anchor and >0.5 s lands in the
-    * health block's `anomalies` map with its ratio. Parse failures or
-    * a missing anchor degrade to no attribution, never an abort. */
-  private def anchorQueries(path: String, sfDir: String): Map[String, Double] = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) return Map.empty
-    try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = om.readTree(java.nio.file.Files.readAllBytes(p))
-      // an anchor from a different scale factor would flag every row —
-      // timings are only comparable at the same sf
-      val sf = root.get("sf")
-      if (sf == null || sf.asText("") != sfDir) return Map.empty
-      // a FAILED anchor query records a near-zero time in the queries
-      // map (it is only marked in failed[]) — anchoring against it
-      // would flag any later SUCCESSFUL run of that query as a huge
-      // anomaly; drop failed keys from the anchor
-      val failed = Option(root.get("failed")).map { f =>
-        val b = Set.newBuilder[String]
-        val it = f.elements()
-        while (it.hasNext) b += it.next().asText("")
-        b.result()
-      }.getOrElse(Set.empty[String])
-      val q = root.get("queries")
-      if (q == null) Map.empty
-      else {
-        val b = Map.newBuilder[String, Double]
-        val it = q.fields()
-        while (it.hasNext) {
-          val e = it.next()
-          if (!failed(e.getKey))
-            b += e.getKey -> e.getValue.asDouble(-1.0)
-        }
-        b.result()
-      }
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-  }
-
-  /** Rolling per-query medians across the round's full-suite runs
-    * (round-14 verdict task 5): the 3×-vs-anchor attribution catches
-    * gross box degradation, but the flagship row wandered 3.74 →
-    * 7.14 s between same-binary runs — a 1.9× move that stayed under
-    * the anomaly threshold while the sentinels moved only ~11–16%.
-    * Every full run appends its per-query times to
-    * `bench_history.jsonl`; the NEXT run reads the last [[HistoryRuns]]
-    * same-sf lines, takes per-query medians, and flags the top-10
-    * rows BY MEDIAN that measure >1.75× their median into the health
-    * block's `wander` map — so a driver-run artifact self-explains a
-    * flagship wander (or shows it gone) without any human diffing
-    * runs. Parse failures degrade to no flags, never an abort. */
+  /** Rolling per-query medians across the round's full-suite runs —
+    * the bench's one per-row attribution (round-14 verdict task 5: the
+    * flagship row wandered 3.74 → 7.14 s between same-binary runs
+    * while the sentinels moved only ~11–16%). Every full run appends
+    * its per-query times to `bench_history.jsonl`; the NEXT run reads
+    * the last [[HistoryRuns]] same-sf lines, takes per-query medians,
+    * and flags every successful row above 0.5 s that measures >1.75×
+    * its median into the health block's `wander` map — so a driver-run
+    * artifact self-explains a wander (or shows it gone) without any
+    * human diffing runs. Parse failures degrade to no flags, never an
+    * abort. */
   private val HistoryRuns = 8
   private val HistoryFile = "bench_history.jsonl"
 
@@ -220,11 +175,6 @@ object Bench {
     // measures box state, not JIT) and BEFORE the timed suite
     val health = ioHealth(spark, sfDir)
     System.err.println(s"[bench] health $health")
-    // anchor read BEFORE the suite (a full run overwrites the file);
-    // SPARK_GRAFT_BENCH_ANCHOR overrides for scaled/dev runs whose
-    // timings are incomparable to the sf0.1 canonical anchor
-    val anchor = anchorQueries(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_ANCHOR", "bench_out.json"), sfDir)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
@@ -250,28 +200,19 @@ object Bench {
     // replace the committed canonical full-suite bench_out.json.
     val onlyTag = only.fold("")(s =>
       s""""only":${s.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},""")
-    // per-query health attribution: successful rows >3× their anchor
-    // AND >0.5 s, with the measured ratio — so a degraded run
-    // self-identifies the affected ROWS, not just the box state
-    val anomalies = results.collect { case (k, v, true)
-        if anchor.getOrElse(k, -1.0) > 0.0 && v > 0.5 &&
-           v > 3.0 * anchor(k) =>
-      f""""$k":${v / anchor(k)}%.2f"""
-    }
-    // finer-grained wander flags vs the ROLLING MEDIAN of recent runs
-    // (historyMedians scaladoc): the top-10 rows by median, >1.75×
+    // per-query health attribution (historyMedians scaladoc): every
+    // successful row above 0.5 s that measures >1.75× its rolling
+    // median, with the ratio — so a degraded run self-identifies the
+    // affected ROWS, not just the box state
     val medians = historyMedians(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", HistoryFile), sfDir)
-    val top10 = medians.toSeq.sortBy(-_._2).take(10).map(_._1).toSet
     val wander = results.collect { case (k, v, true)
-        if top10(k) && v > 1.75 * medians(k) =>
+        if v > 0.5 && medians.get(k).exists(m => v > 1.75 * m) =>
       f""""$k":${v / medians(k)}%.2f"""
     }
     val healthFull = health.dropRight(1) +
-      s""","anchored":${anchor.nonEmpty}""" +
       s""","median_runs":${medians.nonEmpty}""" +
-      s""","wander":${wander.mkString("{", ",", "}")}""" +
-      s""","anomalies":${anomalies.mkString("{", ",", "}")}}"""
+      s""","wander":${wander.mkString("{", ",", "}")}}"""
     val line = s"""{"metric":"total","value":$total,"unit":"sec",$onlyTag""" +
       s""""health":$healthFull,"queries":$qs,""" +
       s""""failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}"""

@@ -136,79 +136,248 @@ object Search {
       .limit(k)
   }
 
-  /** F2: real TF-IDF relevance over `documents.text` for one query term
-    * — the corpus statistics path the ES `match` clause implies
-    * (SURVEY.md §2.7 F2): tf from the doc's own tokens, df from a
-    * corpus-wide aggregation. The df table is tiny (one row per term in
-    * the vocabulary that matches the query) and is broadcast back — at
-    * 100 TB the pattern is the same: aggregate-then-broadcast, no
-    * per-row corpus scan. */
-  /** F2 full fidelity: Okapi BM25 for one query term, fully
-    * declarative — corpus statistics (N, df, avgdl) come from a 1-row
-    * aggregate cross-joined (broadcast) back into the per-doc scoring
-    * projection. No collect(), no second scan of the corpus beyond the
-    * stats aggregation; the identical shape works at any scale. This is
-    * the scoring ES's `match` clause implies (SURVEY.md §2.7 F2). */
+  /** F2 full fidelity: Okapi BM25 for one query term — the scoring ES's
+    * `match` clause implies (SURVEY.md §2.7 F2): per-document tf and
+    * length against the corpus statistics (N, df, avgdl), every
+    * matching document ranked by score. */
   def bm25(spark: SparkSession, dir: String, term: String,
-           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val pre = Tables.documents(spark, dir)
-      .select(col("doc_id"), Analyzers.tokenize(lower(col("text"))).as("toks"))
-      .select(col("doc_id"),
-        size(filter(col("toks"), t => t === term)).as("tf"),
-        size(col("toks")).as("len"))
-    val stats = pre.agg(
-      count(lit(1)).cast("double").as("n"),
-      avg(col("len")).as("avgdl"),
-      sum(when(col("tf") > 0, 1).otherwise(0)).cast("double").as("df"))
-    val (idf, tfNorm) = bm25Parts(col("tf"), col("df"),
-      col("len"), col("n"), col("avgdl"), k1, b)
-    pre.filter(col("tf") > 0)
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), round(idf * tfNorm, 6).as("bm25"))
-      .orderBy(col("bm25").desc, col("doc_id").asc)
-  }
+           k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25Of(scanned(spark, dir, Seq(term)), k1, b)
+
+  /** [[bm25]] from the artifact. */
+  def bm25Indexed(spark: SparkSession, ix: TextIndex.Loaded, term: String,
+                  k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25Of(indexed(spark, ix, Seq(term)), k1, b)
 
   /** Multi-term ranked retrieval: score = Σ over query terms of BM25 —
     * the ES `match` query with OR semantics over an analyzed query
-    * string. One corpus scan computes all per-term tfs; stats broadcast
-    * once; top-k two-phase. */
+    * string; top-k two-phase. */
   def searchBm25(spark: SparkSession, dir: String, terms: Seq[String],
-                 k: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                 k: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    searchBm25Of(scanned(spark, dir, terms), k, k1, b)
+
+  /** [[searchBm25]] from the artifact. */
+  def searchBm25Indexed(spark: SparkSession, ix: TextIndex.Loaded,
+                        terms: Seq[String], k: Int = 20, k1: Double = 1.2,
+                        b: Double = 0.75): DataFrame =
+    searchBm25Of(indexed(spark, ix, terms), k, k1, b)
+
+  /** F2: TF-IDF relevance for one query term — tf from the doc's own
+    * tokens over its length, a smoothed idf from the corpus df
+    * (SURVEY.md §2.7 F2). */
+  def tfidf(spark: SparkSession, dir: String, term: String): DataFrame =
+    tfidfOf(scanned(spark, dir, Seq(term)))
+
+  /** [[tfidf]] from the artifact. */
+  def tfidfIndexed(spark: SparkSession, ix: TextIndex.Loaded,
+                   term: String): DataFrame =
+    tfidfOf(indexed(spark, ix, Seq(term)))
+
+  // ---- BM25 over an access path ------------------------------------
+  //
+  // Each BM25 request shape (bm25Of … scoredWithBucket) is written once,
+  // over a TfSource, the way ES scores a `match` alike over whatever
+  // index serves it. `scanned` tokenizes every document per query and
+  // aggregates the statistics in a 1-row broadcast: the oracle the index
+  // path must equal bit for bit (TextIndexSpec, IndexedStatsSpec).
+  // `indexed` reads the postings ((term, doc_id)-sorted files ⇒
+  // row-group skipping; doc_id buckets ⇒ the per-document aggregate
+  // runs in the scan's tasks, one job, no shuffle) and the statistics
+  // TextIndex.build computed with the scan's own aggregate expressions.
+  // It reads them on the driver when the frame is BUILT
+  // ([[indexedStats]]), so a frame built before an addSegment or purge
+  // and collected after it scores with the older statistics; build and
+  // collect a request together (every in-repo caller does).
+
+  /** A BM25 request's access path: `frame` holds (doc_id, len,
+    * tf0..tf(T-1)) per document, plus the columns a scan keeps;
+    * `stats` scores it; `matched` keeps the documents matching ≥ 1
+    * query term. Postings hold no other document, so an index frame's
+    * `matched` is `true`, a filter the planner drops. */
+  private final case class TfSource(frame: DataFrame, stats: Bm25Stats,
+                                    matched: Column)
+
+  /** [[TfSource]] by corpus scan: every document tokenized, `keep`
+    * carried through, and the statistics row — n, avgdl, df0..df(T-1)
+    * — aggregated over the same scan and cross-joined in. */
+  private def scanned(spark: SparkSession, dir: String, terms: Seq[String],
+                      keep: Column*): TfSource = {
     val pre = Tables.documents(spark, dir)
-      .select(col("doc_id"), Analyzers.tokenize(lower(col("text"))).as("toks"))
-      .select(col("doc_id") +: size(col("toks")).as("len") +:
+      .select((col("doc_id") +: keep) :+
+        Analyzers.tokenize(lower(col("text"))).as("toks"): _*)
+      .select(col("*") +: size(col("toks")).as("len") +:
         terms.zipWithIndex.map { case (t, i) =>
           size(filter(col("toks"), x => x === t)).as(s"tf$i") }: _*)
+      .drop("toks")
     val aggs = count(lit(1)).cast("double").as("n") +:
       avg(col("len")).as("avgdl") +:
       terms.indices.map(i =>
-        sum(when(col(s"tf$i") > 0, 1).otherwise(0)).cast("double")
-          .as(s"df$i"))
-    val stats = pre.agg(aggs.head, aggs.tail: _*)
-    val score = bm25Sum(scanStats(terms), k1, b)
-    pre.filter(terms.indices.map(i => col(s"tf$i") > 0).reduce(_ || _))
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), round(score, 6).as("score"))
+        sum(when(col(s"tf$i") > 0, 1).otherwise(0)).cast("double").as(s"df$i"))
+    TfSource(pre.crossJoin(broadcast(pre.agg(aggs.head, aggs.tail: _*))),
+      Bm25Stats(col("n"), col("avgdl"), terms.indices.map(i => col(s"df$i"))),
+      terms.indices.map(i => col(s"tf$i") > 0).reduce(_ || _))
+  }
+
+  /** [[TfSource]] from the artifact: every live document matching ≥ 1
+    * query term, read from the postings, scored with the statistics
+    * [[indexedStats]] reads. (doc_id, term) is unique in postings, so
+    * the conditional sum reproduces each tf exactly. */
+  private def indexed(spark: SparkSession, ix: TextIndex.Loaded,
+                      terms: Seq[String]): TfSource = {
+    val tfAggs = terms.zipWithIndex.map { case (t, i) =>
+      sum(when(col("term") === t, col("tf")).otherwise(0))
+        .cast("int").as(s"tf$i")
+    }
+    TfSource(live(spark, ix).filter(col("term").isin(terms: _*))
+        .groupBy(col("doc_id"), col("len"))
+        .agg(tfAggs.head, tfAggs.tail: _*),
+      indexedStats(spark, ix, terms), lit(true))
+  }
+
+  /** The postings of `ix` with tombstoned documents masked
+    * ([[TextIndex.liveView]]): as in ES, a deleted document leaves the
+    * hits at once, while the corpus and dictionary statistics count it
+    * until a purge. With no tombstones the postings pass through. */
+  private def live(spark: SparkSession, ix: TextIndex.Loaded): DataFrame =
+    TextIndex.liveView(spark, ix, ix.postings(spark))
+
+  /** The index path's fetch phase: `cols` of the stored documents joined
+    * onto `hits` by doc_id — a pruned columnar read, no re-analysis. A
+    * scan keeps these columns in its frame instead. */
+  private def fetched(spark: SparkSession, dir: String, cols: Column*)
+                     (hits: DataFrame): DataFrame =
+    hits.join(Tables.documents(spark, dir).select(col("doc_id") +: cols: _*),
+      "doc_id")
+
+  /** [[bm25]]'s shape: the one term's BM25 per matching document. */
+  private def bm25Of(src: TfSource, k1: Double, b: Double): DataFrame =
+    src.frame.filter(src.matched)
+      .select(col("doc_id"), round(bm25Sum(src.stats, k1, b), 6).as("bm25"))
+      .orderBy(col("bm25").desc, col("doc_id").asc)
+
+  /** [[tfidf]]'s shape. */
+  private def tfidfOf(src: TfSource): DataFrame =
+    src.frame.filter(src.matched)
+      .select(col("doc_id"),
+        round(col("tf0").cast("double") / col("len") *
+          log((src.stats.n + 1.0) / (src.stats.df.head + 1.0)), 6).as("tfidf"))
+      .orderBy(col("tfidf").desc, col("doc_id").asc)
+
+  /** [[searchBm25]]'s shape. */
+  private def searchBm25Of(src: TfSource, k: Int, k1: Double,
+                           b: Double): DataFrame =
+    src.frame.filter(src.matched)
+      .select(col("doc_id"), round(bm25Sum(src.stats, k1, b), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
+      .limit(k)
+
+  /** [[minShouldMatch]]'s shape: a scan frame holds every document, so
+    * `minMatch = 0` keeps the zero-match ones at score 0. */
+  private def minShouldMatchOf(src: TfSource, minMatch: Int, k: Int,
+                               k1: Double, b: Double): DataFrame = {
+    val nMatched = src.stats.df.indices
+      .map(i => when(col(s"tf$i") > 0, 1).otherwise(0)).reduce(_ + _)
+    src.frame.withColumn("n_matched", nMatched)
+      .filter(col("n_matched") >= minMatch)
+      .select(col("doc_id"), col("n_matched").cast("long").as("n_matched"),
+        round(bm25Sum(src.stats, k1, b), 6).as("score"))
+      .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
   }
 
-  def tfidf(spark: SparkSession, dir: String, term: String): DataFrame = {
-    val pre = Tables.documents(spark, dir)
-      .select(col("doc_id"), Analyzers.tokenize(lower(col("text"))).as("toks"))
-      .select(col("doc_id"),
-        size(filter(col("toks"), t => t === term)).as("tf"),
-        size(col("toks")).as("len"))
-    val stats = pre.agg(
-      count(lit(1)).cast("double").as("n"),
-      sum(when(col("tf") > 0, 1).otherwise(0)).cast("double").as("df"))
-    pre.filter(col("tf") > 0)
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        round(col("tf").cast("double") / col("len") *
-          log((col("n") + 1.0) / (col("df") + 1.0)), 6).as("tfidf"))
-      .orderBy(col("tfidf").desc, col("doc_id").asc)
+  /** [[rescore]]'s shape; `fetch` adds the lower-cased text `lt` to the
+    * `window` primary hits (a scan frame already carries it). */
+  private def rescoreOf(src: TfSource, fetch: DataFrame => DataFrame,
+                        phrase: String, window: Int, k: Int,
+                        phraseWeight: Double, k1: Double,
+                        b: Double): DataFrame =
+    fetch(src.frame.filter(src.matched)
+        .withColumn("primary_score", round(bm25Sum(src.stats, k1, b), 6))
+        // two-phase top-`window` (TakeOrderedAndProject), never a global
+        // sort: each shuffle partition surrenders at most `window` rows
+        .orderBy(col("primary_score").desc, col("doc_id"))
+        .limit(window))
+      // the costly secondary scorer — only ever computed on the window
+      .withColumn("phrase_n",
+        (size(split(col("lt"), java.util.regex.Pattern.quote(phrase.toLowerCase), -1)) - 1)
+          .cast("long"))
+      .select(col("doc_id"), col("primary_score"), col("phrase_n"),
+        round(col("primary_score") + lit(phraseWeight) * col("phrase_n"), 6)
+          .as("score"))
+      .orderBy(col("score").desc, col("doc_id"))
+      .limit(k)
+
+  /** Per-doc BM25 with the bucket column `source` kept — the shared
+    * scored base for [[topHits]]/[[collapse]], score rounded to 6 (the
+    * cut discipline every ranked query here uses, so rank boundaries
+    * are engine-portable). `fetch` adds `source` to an index frame. */
+  private def scoredWithBucket(src: TfSource,
+                               fetch: DataFrame => DataFrame): DataFrame =
+    fetch(src.frame.filter(src.matched))
+      .select(col("doc_id"), col("source"),
+        round(bm25Sum(src.stats, k1 = 1.2, b = 0.75), 6).as("score"))
+
+  /** (n, avgdl, df per query term) from the artifact, read ONCE on the
+    * driver when the request's frame is built: the 1-row corpus table
+    * and the query terms' dictionary slice (a record filter pushed into
+    * the parquet reader), through [[ArtifactGen.Handle.rows]] — no Spark
+    * job. df sums on the driver per term (nothing assumes one
+    * dictionary row per term), and a term absent from the dictionary
+    * gets df 0, exactly like the scan-based conditional count. The
+    * values enter the scoring projection as bound constants
+    * (`expressions.bound_double`), not literals: a literal would be
+    * inlined into the generated code, so every request whose
+    * statistics differ would compile its stages anew. A bound constant
+    * is evaluated per row in generated code exactly like the scan
+    * paths' column references, so scores stay bit-identical. Nothing
+    * is memoized on the handle — an append stays visible to the next
+    * request through a held handle. */
+  private def indexedStats(spark: SparkSession, ix: TextIndex.Loaded,
+                           terms: Seq[String]): Bm25Stats = {
+    val c = ix.rows(spark, "corpus") match {
+      case Seq(r) => r
+      case rs => throw new IllegalStateException(
+        s"text index ${ix.dir}: expected one corpus row, found ${rs.size}")
+    }
+    // an empty corpus has a null avgdl: the field is absent
+    def stat(f: String): Column =
+      if (c.getFieldRepetitionCount(f) == 0) lit(null).cast("double")
+      else bound_double(c.getDouble(f, 0))
+    val slice = ix.rows(spark, "term_df", FilterCompat.get(FilterApi.in(
+      FilterApi.binaryColumn("term"), terms.map(Binary.fromString).toSet.asJava)))
+    val df = slice.groupMapReduce(_.getString("term", 0))(_.getLong("df", 0))(_ + _)
+    Bm25Stats(stat("n"), stat("avgdl"),
+      terms.map(t => bound_double(df.getOrElse(t, 0L).toDouble)))
   }
+
+  /** The BM25 formula's (idf, length-normalized tf) PAIR — the one
+    * encoding of the arithmetic (the round-13 review counted ten
+    * inlined copies; a scoring tweak applied to some and not others
+    * would silently break the spec-locked scan-vs-index score
+    * equality). Callers multiply `idf * tfNorm` themselves — the
+    * pair keeps the float grouping (a·(b/c), never (a·b)/c) and the
+    * explain-style paths' access to the components. */
+  private[operators] def bm25Parts(tf: Column, df: Column, len: Column,
+                                   n: Column, avgdl: Column,
+                                   k1: Double, b: Double): (Column, Column) =
+    (log((n - df + 0.5) / (df + 0.5) + 1.0),
+      (tf * lit(k1 + 1.0)) /
+        (tf + lit(k1) * (lit(1.0) - lit(b) + lit(b) * len / avgdl)))
+
+  /** BM25's corpus statistics as scoring inputs: n, avgdl and one df
+    * per query term — column references into a scan path's broadcast
+    * stats row ([[scanned]]) or the index path's bound constants
+    * ([[indexedStats]]). */
+  private final case class Bm25Stats(n: Column, avgdl: Column,
+                                     df: Seq[Column])
+
+  /** Σ over query terms of BM25, reading tf$i and len per document. */
+  private def bm25Sum(stats: Bm25Stats, k1: Double, b: Double): Column =
+    stats.df.zipWithIndex.map { case (df, i) =>
+      val (idf, tfn) = bm25Parts(col(s"tf$i"), df, col("len"),
+        stats.n, stats.avgdl, k1, b)
+      when(col(s"tf$i") > 0, idf * tfn).otherwise(lit(0.0))
+    }.reduce(_ + _)
 
   /** ES `significant_terms` aggregation with the JLH score: per
     * category, the terms whose in-category document frequency is
@@ -257,30 +426,6 @@ object Search {
         col("score"), col("rk").cast("long").as("rk"))
   }
 
-  /** Per-doc BM25 with the bucket column kept — the shared scored base
-    * for [[topHits]]/[[collapse]]: ONE corpus scan for tf/len, 1-row
-    * stats broadcast, score rounded to 6 (the cut discipline every
-    * ranked query here uses, so rank boundaries are engine-portable). */
-  private def scoredWithBucket(spark: SparkSession, dir: String,
-                               term: String, k1: Double = 1.2,
-                               b: Double = 0.75): DataFrame = {
-    val pre = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"),
-        Analyzers.tokenize(lower(col("text"))).as("toks"))
-      .select(col("doc_id"), col("source"),
-        size(filter(col("toks"), t => t === term)).as("tf"),
-        size(col("toks")).as("len"))
-    val stats = pre.agg(
-      count(lit(1)).cast("double").as("n"),
-      avg(col("len")).as("avgdl"),
-      sum(when(col("tf") > 0, 1).otherwise(0)).cast("double").as("df"))
-    val (idf, tfNorm) = bm25Parts(col("tf"), col("df"),
-      col("len"), col("n"), col("avgdl"), k1, b)
-    pre.filter(col("tf") > 0)
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("source"), round(idf * tfNorm, 6).as("score"))
-  }
-
   /** ES `top_hits` sub-aggregation: inside each bucket of a terms agg
     * (here: `source`), the k best-scoring matching documents with their
     * bucket-local rank. Plans as a window over the bucket key —
@@ -289,14 +434,16 @@ object Search {
     * query-then-fetch shape per shard). */
   def topHits(spark: SparkSession, dir: String, term: String,
               k: Int = 2): DataFrame =
-    topHitsFrom(scoredWithBucket(spark, dir, term), k)
+    topHitsFrom(scoredWithBucket(
+      scanned(spark, dir, Seq(term), col("source")), identity), k)
 
   /** [[topHits]] reading the [[TextIndex]] artifact instead of
     * re-analyzing the corpus. */
   def topHitsIndexed(spark: SparkSession, dir: String,
                      ix: TextIndex.Loaded, term: String,
                      k: Int = 2): DataFrame =
-    topHitsFrom(scoredWithBucketIndexed(spark, dir, ix, term), k)
+    topHitsFrom(scoredWithBucket(indexed(spark, ix, Seq(term)),
+      fetched(spark, dir, col("source"))), k)
 
   private def topHitsFrom(scored: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -318,13 +465,15 @@ object Search {
     * global top-k. */
   def collapse(spark: SparkSession, dir: String, term: String,
                k: Int = 10): DataFrame =
-    collapseFrom(scoredWithBucket(spark, dir, term), k)
+    collapseFrom(scoredWithBucket(
+      scanned(spark, dir, Seq(term), col("source")), identity), k)
 
   /** [[collapse]] reading the [[TextIndex]] artifact. */
   def collapseIndexed(spark: SparkSession, dir: String,
                       ix: TextIndex.Loaded, term: String,
                       k: Int = 10): DataFrame =
-    collapseFrom(scoredWithBucketIndexed(spark, dir, ix, term), k)
+    collapseFrom(scoredWithBucket(indexed(spark, ix, Seq(term)),
+      fetched(spark, dir, col("source"))), k)
 
   private def collapseFrom(scored: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -349,31 +498,27 @@ object Search {
   /** ES bool `should` with `minimum_should_match`: a doc qualifies
     * only when at least `minMatch` of the term clauses hit; score is
     * the BM25 sum over the MATCHED clauses (unmatched contribute 0).
-    * Same one-scan/broadcast-stats shape as [[searchBm25]] — the
-    * clause-count filter is one more codegen'd predicate, not a pass. */
+    * Same shape as [[searchBm25]] — the clause-count filter is one more
+    * codegen'd predicate, not a pass. */
   def minShouldMatch(spark: SparkSession, dir: String, terms: Seq[String],
                      minMatch: Int, k: Int = 20, k1: Double = 1.2,
-                     b: Double = 0.75): DataFrame = {
-    val pre = Tables.documents(spark, dir)
-      .select(col("doc_id"), Analyzers.tokenize(lower(col("text"))).as("toks"))
-      .select(col("doc_id") +: size(col("toks")).as("len") +:
-        terms.zipWithIndex.map { case (t, i) =>
-          size(filter(col("toks"), x => x === t)).as(s"tf$i") }: _*)
-    val aggs = count(lit(1)).cast("double").as("n") +:
-      avg(col("len")).as("avgdl") +:
-      terms.indices.map(i =>
-        sum(when(col(s"tf$i") > 0, 1).otherwise(0)).cast("double").as(s"df$i"))
-    val stats = pre.agg(aggs.head, aggs.tail: _*)
-    val matched = terms.indices
-      .map(i => when(col(s"tf$i") > 0, 1).otherwise(0)).reduce(_ + _)
-    val score = bm25Sum(scanStats(terms), k1, b)
-    pre.withColumn("n_matched", matched)
-      .filter(col("n_matched") >= minMatch)
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("n_matched").cast("long").as("n_matched"),
-        round(score, 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+                     b: Double = 0.75): DataFrame =
+    minShouldMatchOf(scanned(spark, dir, terms), minMatch, k, k1, b)
+
+  /** [[minShouldMatch]] from the artifact. */
+  def minShouldMatchIndexed(spark: SparkSession, ix: TextIndex.Loaded,
+                            terms: Seq[String], minMatch: Int, k: Int = 20,
+                            k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    // the indexed path derives its doc set from postings, so it can
+    // only ever see documents matching ≥1 term; minMatch = 0 (every
+    // clause optional — zero-match docs pad the tail at score 0) is
+    // answerable only by the scan path. Fail loudly instead of
+    // silently diverging from minShouldMatch's row set.
+    require(minMatch >= 1,
+      "minShouldMatchIndexed requires minMatch >= 1 — an inverted " +
+        "index cannot enumerate zero-match documents; use the " +
+        "scan-based minShouldMatch for minimum_should_match = 0")
+    minShouldMatchOf(indexed(spark, ix, terms), minMatch, k, k1, b)
   }
 
   /** ES `rescore`: a cheap primary query ranks the corpus, then ONLY
@@ -386,170 +531,21 @@ object Search {
   def rescore(spark: SparkSession, dir: String, terms: Seq[String],
               phrase: String, window: Int = 50, k: Int = 20,
               phraseWeight: Double = 2.0, k1: Double = 1.2,
-              b: Double = 0.75): DataFrame = {
-    val pre = Tables.documents(spark, dir)
-      .select(col("doc_id"), lower(col("text")).as("lt"),
-        Analyzers.tokenize(lower(col("text"))).as("toks"))
-      .select(col("doc_id") +: col("lt") +: size(col("toks")).as("len") +:
-        terms.zipWithIndex.map { case (t, i) =>
-          size(filter(col("toks"), x => x === t)).as(s"tf$i") }: _*)
-    val aggs = count(lit(1)).cast("double").as("n") +:
-      avg(col("len")).as("avgdl") +:
-      terms.indices.map(i =>
-        sum(when(col(s"tf$i") > 0, 1).otherwise(0)).cast("double").as(s"df$i"))
-    val stats = pre.agg(aggs.head, aggs.tail: _*)
-    val primary = bm25Sum(scanStats(terms), k1, b)
-    pre.filter(terms.indices.map(i => col(s"tf$i") > 0).reduce(_ || _))
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("lt"), round(primary, 6).as("primary_score"))
-      // two-phase top-`window` (TakeOrderedAndProject), never a global
-      // sort: each shuffle partition surrenders at most `window` rows
-      .orderBy(col("primary_score").desc, col("doc_id"))
-      .limit(window)
-      // the costly secondary scorer — only ever computed on the window
-      .withColumn("phrase_n",
-        (size(split(col("lt"), java.util.regex.Pattern.quote(phrase.toLowerCase), -1)) - 1)
-          .cast("long"))
-      .select(col("doc_id"), col("primary_score"), col("phrase_n"),
-        round(col("primary_score") + lit(phraseWeight) * col("phrase_n"), 6)
-          .as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
-  }
+              b: Double = 0.75): DataFrame =
+    rescoreOf(scanned(spark, dir, terms, lower(col("text")).as("lt")),
+      identity, phrase, window, k, phraseWeight, k1, b)
 
-  // ---- TextIndex-backed variants -----------------------------------
-  //
-  // Identical semantics and bit-identical scores to the scan-based
-  // paths above (TextIndexSpec and IndexedStatsSpec prove result
-  // equality): tf/len come from the persisted postings, df from the
-  // term dictionary, (n, avgdl) from the corpus-stats row — all
-  // computed ONCE at ingest by TextIndex.build with the very aggregate
-  // expressions the in-query stats passes used. What changes is the
-  // ACCESS PATH: a term query reads the term's postings (each file
-  // (term, doc_id)-sorted ⇒ row-group skipping) instead of tokenizing
-  // every document per query. Postings are bucketed by doc_id, so the
-  // per-document aggregate runs in the scan's tasks with no shuffle: a
-  // request is one Spark job, one task per bucket, whose top-k merges
-  // on the driver. Its statistics are read on the driver, without a
-  // Spark job, when the frame is BUILT ([[indexedStats]]), then enter
-  // the scoring projection as constants. So a frame built before an
-  // addSegment or purge and collected after it scores with the older
-  // statistics; build and collect a request together (every in-repo
-  // caller does, in one query lambda or one timed thunk).
-
-  /** (n, avgdl, df per query term) from the artifact, read ONCE on the
-    * driver when the request's frame is built: the 1-row corpus table
-    * and the query terms' dictionary slice (a record filter pushed into
-    * the parquet reader), through [[ArtifactGen.Handle.rows]] — no Spark
-    * job. df sums on the driver per term (nothing assumes one
-    * dictionary row per term), and a term absent from the dictionary
-    * gets df 0, exactly like the scan-based conditional count. The
-    * values enter the scoring projection as bound constants
-    * (`expressions.bound_double`), not literals: a literal would be
-    * inlined into the generated code, so every request whose
-    * statistics differ would compile its stages anew. A bound constant
-    * is evaluated per row in generated code exactly like the scan
-    * paths' column references, so scores stay bit-identical. Nothing
-    * is memoized on the handle — an append stays visible to the next
-    * request through a held handle. */
-  private def indexedStats(spark: SparkSession, ix: TextIndex.Loaded,
-                           terms: Seq[String]): Bm25Stats = {
-    val c = ix.rows(spark, "corpus") match {
-      case Seq(r) => r
-      case rs => throw new IllegalStateException(
-        s"text index ${ix.dir}: expected one corpus row, found ${rs.size}")
-    }
-    // an empty corpus has a null avgdl: the field is absent
-    def stat(f: String): Column =
-      if (c.getFieldRepetitionCount(f) == 0) lit(null).cast("double")
-      else bound_double(c.getDouble(f, 0))
-    val slice = ix.rows(spark, "term_df", FilterCompat.get(FilterApi.in(
-      FilterApi.binaryColumn("term"), terms.map(Binary.fromString).toSet.asJava)))
-    val df = slice.groupMapReduce(_.getString("term", 0))(_.getLong("df", 0))(_ + _)
-    Bm25Stats(stat("n"), stat("avgdl"),
-      terms.map(t => bound_double(df.getOrElse(t, 0L).toDouble)))
-  }
-
-  /** (doc_id, len, tf0..tf(T-1)) for every document matching ≥ 1 query
-    * term — the per-doc signals of [[searchBm25]]'s corpus scan, read
-    * from the postings instead. (doc_id, term) is unique in postings,
-    * so the conditional sum reproduces each tf exactly. */
-  private def indexedTfWide(spark: SparkSession, ix: TextIndex.Loaded,
-                            terms: Seq[String]): DataFrame = {
-    val tfAggs = terms.zipWithIndex.map { case (t, i) =>
-      sum(when(col("term") === t, col("tf")).otherwise(0))
-        .cast("int").as(s"tf$i")
-    }
-    ix.postings(spark).filter(col("term").isin(terms: _*))
-      .groupBy(col("doc_id"), col("len"))
-      .agg(tfAggs.head, tfAggs.tail: _*)
-  }
-
-  /** [[bm25]] from the artifact: one postings lookup, scored with the
-    * statistics [[indexedStats]] read. */
-  def bm25Indexed(spark: SparkSession, ix: TextIndex.Loaded, term: String,
-                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val s = indexedStats(spark, ix, Seq(term))
-    val (idf, tfNorm) = bm25Parts(col("tf"), s.df.head,
-      col("len"), s.n, s.avgdl, k1, b)
-    ix.postings(spark).filter(col("term") === term)
-      .select(col("doc_id"), round(idf * tfNorm, 6).as("bm25"))
-      .orderBy(col("bm25").desc, col("doc_id").asc)
-  }
-
-  /** [[tfidf]] from the artifact. */
-  def tfidfIndexed(spark: SparkSession, ix: TextIndex.Loaded,
-                   term: String): DataFrame = {
-    val s = indexedStats(spark, ix, Seq(term))
-    ix.postings(spark).filter(col("term") === term)
-      .select(col("doc_id"),
-        round(col("tf").cast("double") / col("len") *
-          log((s.n + 1.0) / (s.df.head + 1.0)), 6).as("tfidf"))
-      .orderBy(col("tfidf").desc, col("doc_id").asc)
-  }
-
-  /** The BM25 formula's (idf, length-normalized tf) PAIR — the one
-    * encoding of the arithmetic (the round-13 review counted ten
-    * inlined copies; a scoring tweak applied to some and not others
-    * would silently break the spec-locked scan-vs-index score
-    * equality). Callers multiply `idf * tfNorm` themselves — the
-    * pair keeps the float grouping (a·(b/c), never (a·b)/c) and the
-    * explain-style paths' access to the components. */
-  private[operators] def bm25Parts(tf: Column, df: Column, len: Column,
-                                   n: Column, avgdl: Column,
-                                   k1: Double, b: Double): (Column, Column) =
-    (log((n - df + 0.5) / (df + 0.5) + 1.0),
-      (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0) - lit(b) + lit(b) * len / avgdl)))
-
-  /** BM25's corpus statistics as scoring inputs: n, avgdl and one df
-    * per query term — column references into a scan path's broadcast
-    * stats row ([[scanStats]]) or the index path's bound constants
-    * ([[indexedStats]]). */
-  private final case class Bm25Stats(n: Column, avgdl: Column,
-                                     df: Seq[Column])
-
-  /** The (n, avgdl, df0..df(T-1)) columns of a scan path's stats row. */
-  private def scanStats(terms: Seq[String]): Bm25Stats =
-    Bm25Stats(col("n"), col("avgdl"), terms.indices.map(i => col(s"df$i")))
-
-  /** Σ over query terms of BM25, reading tf$i and len per document. */
-  private def bm25Sum(stats: Bm25Stats, k1: Double, b: Double): Column =
-    stats.df.zipWithIndex.map { case (df, i) =>
-      val (idf, tfn) = bm25Parts(col(s"tf$i"), df, col("len"),
-        stats.n, stats.avgdl, k1, b)
-      when(col(s"tf$i") > 0, idf * tfn).otherwise(lit(0.0))
-    }.reduce(_ + _)
-
-  /** [[searchBm25]] from the artifact. */
-  def searchBm25Indexed(spark: SparkSession, ix: TextIndex.Loaded,
-                        terms: Seq[String], k: Int = 20, k1: Double = 1.2,
-                        b: Double = 0.75): DataFrame =
-    indexedTfWide(spark, ix, terms)
-      .select(col("doc_id"),
-        round(bm25Sum(indexedStats(spark, ix, terms), k1, b), 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
+  /** [[rescore]] from the artifact: the primary ranking never touches
+    * document text at all; raw text is fetched for ONLY the `window`
+    * surviving rows before the phrase pass (the ES fetch phase). */
+  def rescoreIndexed(spark: SparkSession, dir: String,
+                     ix: TextIndex.Loaded, terms: Seq[String],
+                     phrase: String, window: Int = 50, k: Int = 20,
+                     phraseWeight: Double = 2.0, k1: Double = 1.2,
+                     b: Double = 0.75): DataFrame =
+    rescoreOf(indexed(spark, ix, terms),
+      fetched(spark, dir, lower(col("text")).as("lt")),
+      phrase, window, k, phraseWeight, k1, b)
 
   /** ES `_terms_enum` API: lexicographic enumeration of the index
     * terms matching a prefix, with their doc counts — served entirely
@@ -592,7 +588,7 @@ object Search {
     val dfs = broadcast(ix.termDf(spark)
       .filter(col("term").isin(terms: _*))
       .select(col("term"), col("df").cast("long").as("df")))
-    ix.postings(spark).filter(col("term").isin(terms: _*))
+    live(spark, ix).filter(col("term").isin(terms: _*))
       .select(col("term"), col("doc_id"), col("tf").cast("long").as("tf"))
       .join(qdf, "term")
       .join(dfs, "term")
@@ -626,9 +622,10 @@ object Search {
     val s = indexedStats(spark, ix, Seq(posTerm))
     val (idf, tfNorm) = bm25Parts(col("tf"), s.df.head,
       col("len"), s.n, s.avgdl, k1, b)
-    val neg = ix.postings(spark).filter(col("term") === negTerm)
+    val postings = live(spark, ix)
+    val neg = postings.filter(col("term") === negTerm)
       .select(col("doc_id"), lit(true).as("demoted"))
-    ix.postings(spark).filter(col("term") === posTerm)
+    postings.filter(col("term") === posTerm)
       .select(col("doc_id"), col("tf"), col("len"))
       .join(neg, Seq("doc_id"), "left")
       .withColumn("demoted", coalesce(col("demoted"), lit(false)))
@@ -665,7 +662,7 @@ object Search {
     val matched = ix.termDf(spark)
       .filter(col("term").endsWith(suffix))
       .select(col("term"))
-    ix.postings(spark).join(broadcast(matched), Seq("term"))
+    live(spark, ix).join(broadcast(matched), Seq("term"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_terms"),
         sum(col("tf")).cast("long").as("sum_tf"))
@@ -694,20 +691,21 @@ object Search {
     // word, the natural search-as-you-type opening state (ES accepts
     // it): the full-term leg degrades to an empty frame and the
     // result is the prefix clause's constant score alone. Without the
-    // guard, indexedTfWide's head-of-empty-aggs threw (round-13
+    // guard, the index source's head-of-empty-aggs threw (round-13
     // review).
+    val postings = live(spark, ix)
     val fullScores =
       if (terms.isEmpty)
-        ix.postings(spark).select(col("doc_id"), lit(0.0).as("fscore"))
-          .limit(0)
-      else indexedTfWide(spark, ix, terms)
-        .select(col("doc_id"),
-          bm25Sum(indexedStats(spark, ix, terms), k1, b).as("fscore"))
+        postings.select(col("doc_id"), lit(0.0).as("fscore")).limit(0)
+      else {
+        val src = indexed(spark, ix, terms)
+        src.frame.select(col("doc_id"), bm25Sum(src.stats, k1, b).as("fscore"))
+      }
     // SARGable upper bound: bump the last char. A last char of
     // Char.MaxValue would wrap to an empty/inverted range, so fall
     // back to the open-ended >= read with a startsWith residual —
     // still one pruned range scan, just without the upper fence.
-    val preRange = ix.postings(spark).filter(
+    val preRange = postings.filter(
       if (prefix.last == Char.MaxValue)
         col("term") >= prefix && col("term").startsWith(prefix)
       else {
@@ -773,7 +771,7 @@ object Search {
     val s = indexedStats(spark, ix, Seq(term))
     val (idf, tfNorm) = bm25Parts(col("tf"), s.df.head,
       col("len"), s.n, s.avgdl, k1, b)
-    ix.postings(spark).filter(col("term") === term)
+    live(spark, ix).filter(col("term") === term)
       .select(col("doc_id"), col("tf"), col("len"),
         s.df.head.cast("long").as("df"),
         round(idf, 6).as("idf"),
@@ -835,7 +833,7 @@ object Search {
     }
     val (idf, tfNorm) = bm25Parts(col("tf"), col("df"),
       col("len"), col("n"), col("avgdl"), k1, b)
-    ix.postings(spark).filter(col("term").isin(allTerms: _*))
+    live(spark, ix).filter(col("term").isin(allTerms: _*))
       .select(col("term"), col("doc_id"), col("tf"), col("len"))
       .join(broadcast(termStats), Seq("term"))
       .crossJoin(broadcast(ix.corpus(spark)))
@@ -933,7 +931,7 @@ object Search {
   def phraseFromIndex(spark: SparkSession, ix: TextIndex.Loaded,
                       terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "phrase needs at least one term")
-    phraseWalk(ix.postings(spark).filter(col("term").isin(terms: _*)),
+    phraseWalk(live(spark, ix).filter(col("term").isin(terms: _*)),
       terms.map(col("term") === _))
   }
 
@@ -949,7 +947,7 @@ object Search {
                             terms: Seq[String], prefix: String): DataFrame = {
     require(terms.nonEmpty, "phrase_prefix needs at least one fixed term")
     val pre = col("term").startsWith(prefix)
-    phraseWalk(ix.postings(spark).filter(col("term").isin(terms: _*) || pre),
+    phraseWalk(live(spark, ix).filter(col("term").isin(terms: _*) || pre),
       terms.map(col("term") === _) :+ pre)
   }
 
@@ -977,7 +975,7 @@ object Search {
     * position (the positions array is sorted at build time). */
   def spanFirstFromIndex(spark: SparkSession, ix: TextIndex.Loaded,
                          term: String, end: Int): DataFrame =
-    ix.postings(spark).filter(col("term") === term)
+    live(spark, ix).filter(col("term") === term)
       .select(col("doc_id"),
         element_at(col("positions"), 1).cast("long").as("first_pos"))
       .filter(col("first_pos") < end)
@@ -1098,71 +1096,6 @@ object Search {
       .limit(k)
   }
 
-  /** [[minShouldMatch]] from the artifact. */
-  def minShouldMatchIndexed(spark: SparkSession, ix: TextIndex.Loaded,
-                            terms: Seq[String], minMatch: Int, k: Int = 20,
-                            k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // the indexed path derives its doc set from postings, so it can
-    // only ever see documents matching ≥1 term; minMatch = 0 (every
-    // clause optional — zero-match docs pad the tail at score 0) is
-    // answerable only by the scan path. Fail loudly instead of
-    // silently diverging from minShouldMatch's row set.
-    require(minMatch >= 1,
-      "minShouldMatchIndexed requires minMatch >= 1 — an inverted " +
-        "index cannot enumerate zero-match documents; use the " +
-        "scan-based minShouldMatch for minimum_should_match = 0")
-    val matched = terms.indices
-      .map(i => when(col(s"tf$i") > 0, 1).otherwise(0)).reduce(_ + _)
-    indexedTfWide(spark, ix, terms)
-      .withColumn("n_matched", matched)
-      .filter(col("n_matched") >= minMatch)
-      .select(col("doc_id"), col("n_matched").cast("long").as("n_matched"),
-        round(bm25Sum(indexedStats(spark, ix, terms), k1, b), 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
-  }
-
-  /** [[rescore]] from the artifact: the primary ranking never touches
-    * document text at all; raw text is fetched for ONLY the `window`
-    * surviving rows before the phrase pass (the ES fetch phase). */
-  def rescoreIndexed(spark: SparkSession, dir: String,
-                     ix: TextIndex.Loaded, terms: Seq[String],
-                     phrase: String, window: Int = 50, k: Int = 20,
-                     phraseWeight: Double = 2.0, k1: Double = 1.2,
-                     b: Double = 0.75): DataFrame =
-    indexedTfWide(spark, ix, terms)
-      .select(col("doc_id"),
-        round(bm25Sum(indexedStats(spark, ix, terms), k1, b), 6)
-          .as("primary_score"))
-      .orderBy(col("primary_score").desc, col("doc_id"))
-      .limit(window)
-      .join(Tables.documents(spark, dir)
-        .select(col("doc_id"), lower(col("text")).as("lt")), "doc_id")
-      .withColumn("phrase_n",
-        (size(split(col("lt"), java.util.regex.Pattern.quote(phrase.toLowerCase), -1)) - 1)
-          .cast("long"))
-      .select(col("doc_id"), col("primary_score"), col("phrase_n"),
-        round(col("primary_score") + lit(phraseWeight) * col("phrase_n"), 6)
-          .as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
-
-  /** [[scoredWithBucket]] from the artifact: the match set comes from
-    * the term's postings; only (doc_id, source) is read from the
-    * stored documents — a pruned columnar fetch, no re-analysis. */
-  private def scoredWithBucketIndexed(spark: SparkSession, dir: String,
-                                      ix: TextIndex.Loaded, term: String,
-                                      k1: Double = 1.2,
-                                      b: Double = 0.75): DataFrame = {
-    val s = indexedStats(spark, ix, Seq(term))
-    val (idf, tfNorm) = bm25Parts(col("tf"), s.df.head,
-      col("len"), s.n, s.avgdl, k1, b)
-    ix.postings(spark).filter(col("term") === term)
-      .join(Tables.documents(spark, dir)
-        .select(col("doc_id"), col("source")), "doc_id")
-      .select(col("doc_id"), col("source"), round(idf * tfNorm, 6).as("score"))
-  }
-
   /** [[significantTerms]] from the artifact: the distinct (doc, token)
     * pairs ARE the postings; the background frequency is the term
     * dictionary's df. `cats` carries every document's (id, cat) — a
@@ -1171,7 +1104,7 @@ object Search {
   def significantTermsIndexed(spark: SparkSession, ix: TextIndex.Loaded,
                               cats: DataFrame, k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tok = ix.postings(spark)
+    val tok = live(spark, ix)
       .select(col("doc_id").as("id"), col("term").as("token"))
       .join(broadcast(cats), "id")
     val fg = tok.groupBy("cat", "token").agg(count(lit(1)).as("fg_df"))

@@ -31,11 +31,6 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** cos(a,b), computed as dot/(‖a‖·‖b‖) in exactly that operation
-    * order (matches the DuckDB oracle expression bit-for-bit). */
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (norm(a) * norm(b))
-
   /** (id, v, nrm) projection: vectors as array<double> with their norm
     * materialized once. Zero vectors are EXCLUDED here: cosine is
     * undefined for them, and under ANSI SQL (Spark 4 default) the

@@ -770,7 +770,7 @@ object TextStats {
     * vocabulary (combiner-friendly groupBy — the only corpus-sized
     * shuffle); each of the K training steps then runs over the
     * vocabulary alone: explode to adjacent pairs, one combiner-friendly
-    * pair-count shuffle, a 1-ROW collect (the argmax — bounded driver
+    * pair-count shuffle, a few-row collect (the argmax — bounded driver
     * state, the k-means/PageRank discipline), and a literal-replace
     * projection. Lineage is truncated per step (`localCheckpoint`), so
     * the K-step loop never builds a K-deep plan.
@@ -782,55 +782,20 @@ object TextStats {
     * replays training verbatim (a run like "aaaa" merges once per
     * pass where reference BPE merges greedily twice; the pair COUNTS
     * stay exact under the declared semantics on both sides).
-    * Tie-break: (count desc, left, right) — total order, no RNG. */
+    * Tie-break: (count desc, left, right) — total order, no RNG.
+    *
+    * This is [[bpeTrainBatched]] with one merge per round, without its
+    * `round` column and its supply-exhausted marker row (the only row
+    * with an empty `left_sym`): an exhausted supply just ends the
+    * table early. */
   def bpeTrain(spark: SparkSession, docs: DataFrame, steps: Int = 8,
-               textCol: String = "text"): DataFrame = {
-    import spark.implicits._
-    var vocab = docs
-      .select(explode(Analyzers.tokenize(lower(col(textCol)))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .select(concat(lit(" "),
-        array_join(split(col("w"), ""), " "), lit(" ")).as("rep"),
-        col("freq"))
-      .localCheckpoint()
-    val learned = Seq.newBuilder[(Int, String, String, String, Long)]
-    var exhausted = false
-    for (step <- 1 to steps if !exhausted) {
-      val top = vocab
-        .select(split(trim(col("rep")), " ").as("syms"), col("freq"))
-        // zip of the array against its own tail — length-0 safe for
-        // single-symbol words (sequence(0, size-2) would descend)
-        .select(explode(expr(
-          """zip_with(slice(syms, 1, size(syms) - 1),
-                      slice(syms, 2, size(syms) - 1),
-                      (l, r) -> struct(l AS l, r AS r))"""))
-          .as("p"), col("freq"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("c"))
-        .orderBy(col("c").desc, col("l"), col("r"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val best = top(0)
-        val (l, r, c) = (best.getString(0), best.getString(1), best.getLong(2))
-        learned += ((step, l, r, l + r, c))
-        vocab = vocab
-          .withColumn("rep",
-            regexp_replace(col("rep"),
-              lit(java.util.regex.Pattern.quote(s" $l $r ")),
-              lit(java.util.regex.Matcher.quoteReplacement(s" $l$r "))))
-          .localCheckpoint()
-      }
-    }
-    learned.result()
-      .toDF("step", "left_sym", "right_sym", "merged", "pair_count")
-      .select(col("step").cast("long"), col("left_sym"), col("right_sym"),
-        col("merged"), col("pair_count"))
-      .orderBy(col("step"))
-  }
+               textCol: String = "text"): DataFrame =
+    bpeTrainBatched(spark, docs, steps, batch = 1, textCol)
+      .filter(col("left_sym") =!= "")
+      .drop("round")
 
   /** Batched BPE merge learning — the driver-latency fix for
-    * [[bpeTrain]]'s one-Spark-job-per-merge loop. The r11 step probe
+    * sequential BPE's one-Spark-job-per-merge loop. The r11 step probe
     * measured the per-step constant at ~30–60 ms (vocab-sized shuffle
     * + 1-row argmax + checkpoint), INDEPENDENT of corpus size — so a
     * production 32k-merge vocabulary costs ~half an hour of
@@ -846,8 +811,8 @@ object TextStats {
     * The documented approximation (standard in scaled BPE trainers):
     * sequential BPE recounts after EVERY merge, so merge k's count
     * reflects merges 1..k−1 — a batched round ranks all its picks on
-    * the same pre-round counts. `batch = 1` reproduces [[bpeTrain]]
-    * bit-for-bit (spec-locked); the top-1 pick always survives the
+    * the same pre-round counts. `batch = 1` is sequential BPE
+    * ([[bpeTrain]]): the top-1 pick always survives the
     * disjointness screen, so every round makes progress. Output adds
     * a `round` column so the batching is itself verifiable (within a
     * round, all claimed symbols distinct).

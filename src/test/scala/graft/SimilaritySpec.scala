@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.operators.{AnnIndex, Similarity}
 
@@ -9,9 +10,12 @@ class SimilaritySpec extends SparkSpec {
   test("cosine of identical vectors is 1, orthogonal is 0") {
     val df = Seq((Array(1.0, 0.0), Array(1.0, 0.0), Array(0.0, 1.0)))
       .toDF("a", "b", "c")
+    // cos(a,b) as the pair scorers compute it: dot/(‖a‖·‖b‖)
+    def cosine(a: Column, b: Column): Column =
+      Similarity.dot(a, b) / (Similarity.norm(a) * Similarity.norm(b))
     val r = df.select(
-      Similarity.cosine(col("a"), col("b")).as("same"),
-      Similarity.cosine(col("a"), col("c")).as("orth")).head()
+      cosine(col("a"), col("b")).as("same"),
+      cosine(col("a"), col("c")).as("orth")).head()
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
     assert(math.abs(r.getDouble(1)) < 1e-12)
   }

@@ -276,6 +276,36 @@ class TextIndexSpec extends SparkSpec {
     assert(dix.doclen(spark).filter(col("doc_id") === 3).count() == 1)
   }
 
+  test("index-served requests drop a deleted document before any purge") {
+    import spark.implicits._
+    val mix = TextIndex.build(Tables.documents(spark, sf),
+      java.nio.file.Files.createTempDirectory("textixmask").toString)
+    // built per call: a request reads the tombstones when it is built
+    def requests: Seq[(String, DataFrame)] = Seq(
+      "searchBm25Indexed" ->
+        Search.searchBm25Indexed(spark, mix, Seq("row", "column"), k = 1000000),
+      "bm25Indexed" -> Search.bm25Indexed(spark, mix, "row"),
+      "phraseFromIndex" -> Search.phraseFromIndex(spark, mix, Seq("row", "column")),
+      "phrasePrefixFromIndex" ->
+        Search.phrasePrefixFromIndex(spark, mix, Seq("row"), "col"))
+    def ids(rows: Seq[org.apache.spark.sql.Row]): Seq[Long] =
+      rows.map(_.getAs[Long]("doc_id"))
+    val before = requests.map { case (_, df) => df.collect().toSeq }
+    // the best-ranked bm25 hit that every request returns
+    val inAll = before.map(ids(_).toSet).reduce(_ & _)
+    val victim = ids(before.head).find(inAll)
+    assert(victim.isDefined, "no document matches every request")
+    assert(TextIndex.deleteByQuery(spark, mix,
+      Seq(victim.get).toDF("doc_id")) == 1L)
+    // the statistics still count the deleted document until a purge
+    // (ES's contract), so every other hit keeps its row and score
+    requests.zip(before).foreach { case ((name, df), rows) =>
+      val after = df.collect().toSeq
+      assert(!ids(after).contains(victim.get), s"$name still returns ${victim.get}")
+      assert(after == rows.filterNot(_.getAs[Long]("doc_id") == victim.get), name)
+    }
+  }
+
   test("rare_terms from the shingle dictionary equals the scan path; no tokenizer in-plan") {
     val docs = Tables.documents(spark, sf)
     val fromIndex = Search.rareTermsIndexed(spark, ix, maxDocCount = 2)
