@@ -307,8 +307,8 @@ private[graft] object QueriesScanSink {
     }),
     "s21_snapshot_restore" -> ((s, d) => {
       // ES snapshot/restore (Sink.snapshot/restore scaladoc): bulk
-      // write an index, snapshot it into a repository (per-file md5
-      // manifest written LAST), restore into a fresh directory with
+      // write an index, snapshot it into an empty repository (per-file
+      // md5 manifest written LAST), restore into a fresh directory with
       // every checksum re-verified as the bytes stream, and prove the
       // restored index answers queries identically — the verified row
       // is the source-table replay, so a dropped file, a truncated
@@ -318,8 +318,8 @@ private[graft] object QueriesScanSink {
       val dest = Scratch.dir("s21dest")
       graft.sources.Sink.bulkWrite(s, Tables.customer(s, d),
         "c_custkey", src)
-      val nSnap = graft.sources.Sink.snapshot(s, src, repo)
-      val nRest = graft.sources.Sink.restore(s, repo, dest)
+      val nSnap = graft.sources.Sink.snapshot(s, src, repo, "1").files
+      val nRest = graft.sources.Sink.restore(s, repo, "1", dest).files
       s.read.parquet(dest)
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("c_custkey")).as("n_ids"),
@@ -328,9 +328,9 @@ private[graft] object QueriesScanSink {
           lit(nSnap == nRest && nSnap > 0).as("files_match"))
     }),
     "s22_snapshot_distributed" -> ((s, d) => {
-      // s21's CLUSTER-parallel twin (Sink.snapshotDistributed /
-      // restoreDistributed scaladoc): the copy+hash of every file
-      // runs as Spark tasks — the shape that scales a 100 TB
+      // s21 on the task arm (Sink.onTaskArm, Sink.fanOut scaladoc):
+      // the copy+hash of every file runs as Spark tasks, the arm a
+      // multi-host cluster selects — the shape that scales a 100 TB
       // repository past one JVM's NIC, where the 16-thread driver
       // pool serializes — while the walk and the manifest (written
       // LAST, under the same `_WRITER` claim) stay driver-side.
@@ -342,8 +342,10 @@ private[graft] object QueriesScanSink {
       val dest = Scratch.dir("s22dest")
       graft.sources.Sink.bulkWrite(s, Tables.supplier(s, d),
         "s_suppkey", src)
-      val nSnap = graft.sources.Sink.snapshotDistributed(s, src, repo)
-      val nRest = graft.sources.Sink.restoreDistributed(s, repo, dest)
+      val (nSnap, nRest) = graft.sources.Sink.onTaskArm {
+        (graft.sources.Sink.snapshot(s, src, repo, "1").files,
+          graft.sources.Sink.restore(s, repo, "1", dest).files)
+      }
       s.read.parquet(dest)
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("s_suppkey")).as("n_ids"),
@@ -352,7 +354,7 @@ private[graft] object QueriesScanSink {
           lit(nSnap == nRest && nSnap > 0).as("files_match"))
     }),
     "s23_snapshot_auto" -> ((s, d) => {
-      // Arm-SELECTED snapshot/restore (Sink.snapshotAuto/restoreAuto,
+      // Arm-SELECTED snapshot/restore (Sink.snapshot/restore,
       // chooseDistributedCopy scaladoc): topology + tree size pick
       // pool vs cluster fan-out — bench_snapshot.json measured the
       // 16-thread pool at 7.98×/7.25× vs the distributed arm's
@@ -365,15 +367,15 @@ private[graft] object QueriesScanSink {
       val repo = Scratch.dir("s23repo")
       val dest = Scratch.dir("s23dest")
       graft.sources.Sink.bulkWrite(s, Tables.part(s, d), "p_partkey", src)
-      val (nSnap, distS) = graft.sources.Sink.snapshotAuto(s, src, repo)
-      val (nRest, distR) = graft.sources.Sink.restoreAuto(s, repo, dest)
+      val snap = graft.sources.Sink.snapshot(s, src, repo, "1")
+      val rest = graft.sources.Sink.restore(s, repo, "1", dest)
       s.read.parquet(dest)
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("p_partkey")).as("n_ids"),
           sum(col("p_partkey")).as("sum_key"))
         .select(col("n_rows"), col("n_ids"), col("sum_key"),
-          lit(nSnap == nRest && nSnap > 0).as("files_match"),
-          lit(!distS && !distR).as("used_pool"))
+          lit(snap.files == rest.files && snap.files > 0).as("files_match"),
+          lit(!snap.distributed && !rest.distributed).as("used_pool"))
     }),
     "s24_failover_drill" -> ((s, d) => {
       // The reference's RESILIENCE drill, re-expressed for an engine
@@ -386,7 +388,7 @@ private[graft] object QueriesScanSink {
       // its promotion IS a verified restore — so the drill here is
       // STRICTER than the reference's 1-of-3 node stop: (1) bulk-write
       // the index with a per-doc seq_no, snapshot it; (2) KILL the
-      // primary by deleting its whole tree; (3) promote: restoreAuto
+      // primary by deleting its whole tree; (3) promote: restore
       // re-verifies every md5 as bytes stream, primary_term
       // increments; (4) the full CRUD set runs against the PROMOTED
       // index and lands on disk — add a batch under fresh ids, a
@@ -404,13 +406,13 @@ private[graft] object QueriesScanSink {
       val docs0 = Tables.customer(s, d)
         .select(col("c_custkey"), col("c_acctbal"), lit(1L).as("seq_no"))
       graft.sources.Sink.bulkWrite(s, docs0, "c_custkey", live)
-      val (nSnap, _) = graft.sources.Sink.snapshotAuto(s, live, repo)
+      val nSnap = graft.sources.Sink.snapshot(s, live, repo, "1").files
       // node kill — total loss of the primary's tree
       val fs = new org.apache.hadoop.fs.Path(live)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       require(fs.delete(new org.apache.hadoop.fs.Path(live), true),
         "failover drill: could not kill the primary tree")
-      val (nRest, _) = graft.sources.Sink.restoreAuto(s, repo, promoted)
+      val nRest = graft.sources.Sink.restore(s, repo, "1", promoted).files
       val primaryTerm = 2L // term 1 = original primary, 2 = promotion
       // CRUD against the promoted index; the rewrite is the merge
       // model every update/delete row in this family uses
@@ -453,9 +455,9 @@ private[graft] object QueriesScanSink {
       val ix = textIndexFor(s, d)
       val repo = Scratch.dir("s21brepo")
       val root = java.nio.file.Paths.get(Scratch.dir("s21broot"))
-      val nSnap = graft.sources.Sink.snapshot(s, ix.dir, repo)
-      val nRest = graft.sources.Sink.restore(s, repo,
-        root.resolve("gen-1").toString)
+      val nSnap = graft.sources.Sink.snapshot(s, ix.dir, repo, "1").files
+      val nRest = graft.sources.Sink.restore(s, repo, "1",
+        root.resolve("gen-1").toString).files
       require(nSnap == nRest && nSnap > 0,
         s"artifact snapshot/restore file-count mismatch: $nSnap vs $nRest")
       graft.operators.ArtifactGen.publish(root, root.resolve("gen-1"))
@@ -467,7 +469,7 @@ private[graft] object QueriesScanSink {
         Seq("spark", "window"), k = 20)
     }),
     "s21c_incremental_snapshot" -> ((s, d) => {
-      // ES INCREMENTAL snapshots (Sink.snapshotIncremental scaladoc):
+      // ES INCREMENTAL snapshots (Sink.snapshot scaladoc):
       // snapshot a text index built on 2/3 of the corpus, append the
       // remaining third as a segment, snapshot AGAIN — the second
       // snapshot must copy ONLY the delta files (segment files are
@@ -481,15 +483,17 @@ private[graft] object QueriesScanSink {
       val base = graft.operators.TextIndex.build(
         docs.filter(col("doc_id") % 3 =!= 0), ixDir)
       val repo = Scratch.dir("s21crepo")
-      val (t1, c1) = graft.sources.Sink.snapshotIncremental(s, ixDir, repo, "1")
-      require(t1 > 0 && c1 == t1, "first snapshot copies everything")
+      val first = graft.sources.Sink.snapshot(s, ixDir, repo, "1")
+      require(first.files > 0 && first.copied == first.files,
+        "first snapshot copies everything")
       graft.operators.TextIndex.addSegment(base,
         docs.filter(col("doc_id") % 3 === 0))
-      val (t2, c2) = graft.sources.Sink.snapshotIncremental(s, ixDir, repo, "2")
-      require(c2 > 0 && c2 < t2,
-        s"second snapshot must copy only the segment delta: copied $c2 of $t2")
+      val second = graft.sources.Sink.snapshot(s, ixDir, repo, "2")
+      require(second.copied > 0 && second.copied < second.files,
+        "second snapshot must copy only the segment delta: copied " +
+          s"${second.copied} of ${second.files}")
       val root = java.nio.file.Paths.get(Scratch.dir("s21croot"))
-      graft.sources.Sink.restoreSnapshot(s, repo, "2",
+      graft.sources.Sink.restore(s, repo, "2",
         root.resolve("gen-1").toString)
       graft.operators.ArtifactGen.publish(root, root.resolve("gen-1"))
       val restored = graft.operators.ArtifactGen.currentDir(root)

@@ -1,5 +1,13 @@
 package graft.sources
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+
+import scala.reflect.ClassTag
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,13 +27,13 @@ import org.apache.spark.sql.functions._
   *  - A5 ingest counters (`src/main.py:128-156`) → `LongAccumulator`
   *    filled executor-side during the write.
   */
-/** Hadoop `Configuration` is not `java.io.Serializable`; the
-  * distributed snapshot/restore paths ship it to executors through the
+/** Hadoop `Configuration` is not `java.io.Serializable`; the task arm
+  * of the snapshot/restore fan-out ships it to executors through the
   * standard Writable round-trip (`write`/`readFields` inside Java
   * serialization hooks) — the same construction Spark uses internally
   * for its own (non-public) serializable-configuration wrapper. */
 private[sources] class SerializableHadoopConf(
-    @transient var value: org.apache.hadoop.conf.Configuration)
+    @transient var value: Configuration)
     extends Serializable {
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
     out.defaultWriteObject()
@@ -33,7 +41,7 @@ private[sources] class SerializableHadoopConf(
   }
   private def readObject(in: java.io.ObjectInputStream): Unit = {
     in.defaultReadObject()
-    value = new org.apache.hadoop.conf.Configuration(false)
+    value = new Configuration(false)
     value.readFields(in)
   }
 }
@@ -85,31 +93,19 @@ object Sink {
 
   /** Sum of parquet footer record counts under `path` — the
     * write-committed row total, read from file METADATA only. Footers
-    * are opened in a bounded thread pool: a large write commits
-    * thousands of part files, and one serial remote open each would
-    * make the ack itself minutes of driver latency on object storage. */
+    * are opened on [[fanOut]]'s driver pool (metadata reads never
+    * become a Spark job): a large write commits thousands of part
+    * files, and one serial remote open each would make the ack itself
+    * minutes of driver latency on object storage. */
   def committedRowCount(spark: SparkSession, path: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val files = fs.listStatus(p)
+    val p = new Path(path)
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(p).toSeq
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    if (files.isEmpty) return 0L
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, files.length))
-    try {
-      import scala.jdk.CollectionConverters._
-      pool.invokeAll(files.toSeq.map { f =>
-        new java.util.concurrent.Callable[Long] {
-          def call(): Long = {
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromStatus(f, conf)
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try r.getRecordCount finally r.close()
-          }
-        }
-      }.asJava).asScala.map(_.get()).sum
-    } finally pool.shutdown()
+    fanOut(spark, files, distributed = false) { (c, f) =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, c))
+      try r.getRecordCount finally r.close()
+    }.sum
   }
 
   /** ES `_reindex` with `conflicts: proceed` + `op_type: create`: copy
@@ -144,7 +140,7 @@ object Sink {
     * are safe, the second run noops every id the first created. */
   def reindex(spark: SparkSession, source: DataFrame, idCol: String,
               destDir: String, shards: Int = 3): (Long, Long, Long) = {
-    val dest = new org.apache.hadoop.fs.Path(destDir)
+    val dest = new Path(destDir)
     val dfs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val claim = acquireWriter(dfs, dest)
     try {
@@ -163,193 +159,148 @@ object Sink {
     } finally claim.release(dfs)
   }
 
-  /** ES snapshot: copy an index directory's committed files — walked
-    * RECURSIVELY, so a gen-N artifact tree (a text index's
-    * postings/dict/stats subdirectories, an ANN index's four tables, a
-    * dedup index) snapshots as one unit, not just a flat parquet sink —
-    * into a repository, writing a MANIFEST of per-file (md5, length,
-    * repo-relative path) LAST — the `_DONE` discipline: a snapshot
-    * interrupted mid-copy has no manifest and [[restore]] refuses it,
-    * so a repository can never serve a torn snapshot. Checksums are
-    * computed WHILE the bytes stream (one read per file, no second
-    * pass); files stream through the Hadoop FS API, so the repository
-    * can live on any supported filesystem — the ES repository-plugin
-    * analog (ES snapshots likewise cover a whole index incl. every
-    * segment file). Hidden and in-flight files (`_temporary`,
-    * dotfiles) are skipped at EVERY level like Spark's own
-    * committed-file readers; lifecycle markers (`_DONE`, `_SUCCESS`)
-    * are data and travel with the tree. Returns the file count. */
-  def snapshot(spark: SparkSession, srcDir: String,
-               repoDir: String, threads: Int = CopyThreads): Long = {
+  /** What one [[snapshot]] or [[restore]] did: the files in the
+    * snapshot, the files whose bytes moved (a snapshot reuses the blobs
+    * earlier snapshots hold; a restore copies every file), and whether
+    * the copies ran as Spark tasks instead of on the driver pool. */
+  final case class CopyResult(files: Long, copied: Long, distributed: Boolean)
+
+  /** ES snapshot into an incremental multi-snapshot repository: segment
+    * files are immutable once committed, so a file an earlier snapshot
+    * already holds is never copied again (ES snapshots of a 100 TB
+    * index copy only the new segments). A one-shot snapshot is the
+    * first snapshot into an empty repository.
+    *
+    * The source is walked RECURSIVELY, so a gen-N artifact tree (a text
+    * index's postings/dict/stats subdirectories, an ANN index's tables,
+    * a dedup index) snapshots as one unit, as ES snapshots cover every
+    * segment file of an index. Hidden and in-flight files
+    * (`_temporary`, dotfiles) are skipped at every level like Spark's
+    * own committed-file readers; lifecycle markers (`_DONE`,
+    * `_SUCCESS`) are data and travel with the tree. Files stream
+    * through the Hadoop FS API (the repository-plugin analog), hashed
+    * while the bytes stream.
+    *
+    * Layout: `blobs/<relpath>/<md5>` holds one CONTENT VERSION per
+    * (relpath, md5) — a same-path file whose bytes changed gets a NEW
+    * blob instead of overwriting the one earlier snapshots reference —
+    * and `snap-<id>/MANIFEST` lists (md5, length, relpath) per file,
+    * written LAST (the `_DONE` discipline: a snapshot interrupted
+    * mid-copy has no manifest and [[restore]] refuses it).
+    *
+    * Reuse identity is (relpath, length) against the union of prior
+    * manifests — a CONVENTION-guarded check: committed parquet part
+    * files carry unique names and artifact tables swap under new
+    * directory names. A file mutated in place at identical length
+    * would be snapshotted as its OLD bytes (and restore's md5 check
+    * passes, since the manifest records the old md5). Trees that mutate
+    * in place pass `verifyReuse = true`: the reuse branch re-hashes the
+    * source (one streaming read, no copy) and falls through to a fresh
+    * blob version on mismatch. Blob existence is planned from the
+    * manifest union alone — no per-blob `exists` RPC (manifests are
+    * written after their blobs).
+    *
+    * The per-file work (reuse, or copy to a dot-temp and rename to its
+    * blob version) runs through [[fanOut]] on the arm
+    * [[chooseDistributedCopy]] picks; the walk and the manifest stay on
+    * the driver. SINGLE-WRITER per repository is ENFORCED
+    * ([[acquireWriter]]): a second concurrent snapshotter refuses
+    * loudly; a crashed writer's claim expires after the grace. */
+  def snapshot(spark: SparkSession, srcDir: String, repoDir: String,
+               snapId: String, verifyReuse: Boolean = false): CopyResult = {
+    require(snapId.nonEmpty && !snapId.contains("/"),
+      s"bad snapshot id: '$snapId'")
     val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(srcDir)
-    val repo = new org.apache.hadoop.fs.Path(repoDir)
-    val sfs = src.getFileSystem(conf)
+    val src = new Path(srcDir)
+    val repo = new Path(repoDir)
     val rfs = repo.getFileSystem(conf)
-    rfs.mkdirs(repo)
     val claim = acquireWriter(rfs, repo)
     try {
-      val files = walkCommitted(sfs, src)
-      val manifest = inParallel(files, threads) { case (st, rel) =>
-        // Hadoop create() makes parent dirs, so subtrees need no mkdirs
-        val md5 = copyWithMd5(sfs, st.getPath, rfs,
-          new org.apache.hadoop.fs.Path(repo, rel))
-        s"$md5 ${st.getLen} $rel"
+      ensureRepoFormat(rfs, repo)
+      val mPath = new Path(repo, s"snap-$snapId/MANIFEST")
+      require(!rfs.exists(mPath),
+        s"snapshot '$snapId' already exists in $repoDir")
+      // the union of prior manifests: relpath -> (md5, length)
+      val known = priorManifests(rfs, repo).flatMap(readManifest(rfs, _))
+        .map { case (md5, len, rel) => rel -> ((md5, len)) }.toMap
+      val files = walkCommitted(src.getFileSystem(conf), src)
+        .map { case (st, rel) =>
+          (st.getPath.toString, st.getLen, rel,
+            known.get(rel).collect { case (m, len) if len == st.getLen => m })
+        }
+      val dist = useTasks(spark, files.length, files.map(_._2).sum)
+      val repoStr = repo.toString
+      val placed = fanOut(spark, files, dist) {
+        case (c, (abs, _, rel, prior)) =>
+          val from = new Path(abs)
+          val sfs = from.getFileSystem(c)
+          val reused = prior.filter(m => !verifyReuse ||
+            md5Copy(sfs, from, java.io.OutputStream.nullOutputStream()) == m)
+          reused.map((_, false))
+            .getOrElse((placeBlob(c, sfs, from, repoStr, rel), true))
       }
       claim.verifyHeld(rfs) // manifest is the commit — verify first
-      val out = rfs.create(
-        new org.apache.hadoop.fs.Path(repo, "MANIFEST"), true)
+      val manifest = files.zip(placed)
+        .map { case ((_, len, rel, _), (md5, _)) => s"$md5 $len $rel" }
+      val out = rfs.create(mPath, true)
       try out.write((manifest.mkString("\n") + "\n").getBytes("UTF-8"))
       finally out.close()
-      files.length.toLong
+      CopyResult(files.length, placed.count(_._2), dist)
     } finally claim.release(rfs)
   }
 
-  /** ES restore: copy a [[snapshot]] repository back into `destDir` —
-    * manifest paths are repo-relative, so a snapshotted artifact TREE
-    * restores with its subdirectory structure intact (Hadoop `create`
-    * makes parent directories) —
-    * re-verifying every manifest checksum AS the bytes stream —
-    * bit-rot, truncation, or a torn snapshot (no MANIFEST) refuse
-    * loudly instead of restoring silently wrong data. (On a
-    * checksummed filesystem — LocalFileSystem keeps `.crc` sidecars —
-    * the FS-level verification may refuse first; the manifest md5 is
-    * the backstop for filesystems without one, e.g. object stores.)
-    * Returns the restored file count. */
-  def restore(spark: SparkSession, repoDir: String,
-              destDir: String, threads: Int = CopyThreads): Long = {
+  /** ES restore of snapshot `snapId` into `destDir`. Manifest paths are
+    * repo-relative, so an artifact TREE restores with its subdirectory
+    * structure intact (Hadoop `create` makes parent directories). Every
+    * byte is re-verified against the snapshot's own manifest md5 AS it
+    * streams, so bit-rot, truncation, a wrong or missing blob version,
+    * or a torn snapshot (no MANIFEST) refuses loudly instead of
+    * restoring silently wrong data. (On a checksummed filesystem —
+    * LocalFileSystem keeps `.crc` sidecars — the FS-level check may
+    * refuse first; the manifest md5 is the backstop for filesystems
+    * without one, e.g. object stores. What this does NOT catch: a
+    * manifest that recorded a stale md5 because an in-place mutation
+    * slipped past [[snapshot]]'s convention-guarded reuse.) The copies
+    * run through [[fanOut]] on the arm [[chooseDistributedCopy]]
+    * picks from the manifest. */
+  def restore(spark: SparkSession, repoDir: String, snapId: String,
+              destDir: String): CopyResult = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val repo = new org.apache.hadoop.fs.Path(repoDir)
-    val dest = new org.apache.hadoop.fs.Path(destDir)
+    val repo = new Path(repoDir)
+    val dest = new Path(destDir)
     val rfs = repo.getFileSystem(conf)
-    val dfs = dest.getFileSystem(conf)
-    val mPath = new org.apache.hadoop.fs.Path(repo, "MANIFEST")
+    val mPath = new Path(repo, s"snap-$snapId/MANIFEST")
     require(rfs.exists(mPath),
-      s"$repoDir has no MANIFEST — torn or not a snapshot repository")
-    val lines = {
-      val in = rfs.open(mPath)
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty).toList
-      finally in.close()
-    }
-    dfs.mkdirs(dest)
-    inParallel(lines, threads) { line =>
-      val Array(md5, len, name) = line.split(" ", 3)
-      val from = new org.apache.hadoop.fs.Path(repo, name)
-      val got = copyWithMd5(rfs, from, dfs,
-        new org.apache.hadoop.fs.Path(dest, name))
-      require(got == md5 && rfs.getFileStatus(from).getLen == len.toLong,
-        s"checksum mismatch restoring $name — repository corrupt")
-    }
-    lines.length.toLong
-  }
-
-  /** [[snapshot]] with the byte traffic fanned out over the CLUSTER —
-    * the ES repositories model taken to its actual topology: ES copies
-    * segment files shard-parallel from the data nodes that own them;
-    * the [[CopyThreads]] driver pool (measured 2.5–2.9× in
-    * `bench_snapshot.json`) still serializes a 100 TB tree's bytes
-    * through ONE JVM's NIC and page cache. Here the committed-file
-    * WALK (metadata-only) and the MANIFEST write (written LAST, under
-    * the same `_WRITER` claim) stay on the driver, while the
-    * copy+hash of each file runs as a Spark job: one task per file
-    * batch, executors open source and repository through a broadcast
-    * Hadoop configuration, and per-file (md5, length, relpath) rows
-    * come back to the driver — manifest-sized state, never the bytes.
-    * A failed copy fails its task and the job (no manifest is
-    * written, so the repository never holds a torn snapshot — the
-    * same discipline as the pool path). The RDD is deliberate: this
-    * is genuine per-partition imperative IO, not relational work.
-    * Semantics (walk filter, checksum, manifest format) are identical
-    * to [[snapshot]] — asserted in SinkSpec by cross-restoring. */
-  def snapshotDistributed(spark: SparkSession, srcDir: String,
-                          repoDir: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(srcDir)
-    val repo = new org.apache.hadoop.fs.Path(repoDir)
-    val sfs = src.getFileSystem(conf)
-    val rfs = repo.getFileSystem(conf)
-    rfs.mkdirs(repo)
-    val claim = acquireWriter(rfs, repo)
-    try {
-      val files = walkCommitted(sfs, src)
-        .map { case (st, rel) => (st.getPath.toString, st.getLen, rel) }
-      val bc = spark.sparkContext
-        .broadcast(new SerializableHadoopConf(conf))
-      val slices = math.max(1, math.min(files.length,
-        spark.sparkContext.defaultParallelism * 2))
-      val repoStr = repo.toString
-      val manifest =
-        if (files.isEmpty) Seq.empty[String]
-        else spark.sparkContext.parallelize(files, slices)
-          .map { case (abs, len, rel) =>
-            val c = bc.value.value
-            val from = new org.apache.hadoop.fs.Path(abs)
-            val to = new org.apache.hadoop.fs.Path(repoStr, rel)
-            val md5 = copyWithMd5(from.getFileSystem(c), from,
-              to.getFileSystem(c), to)
-            (rel, s"$md5 $len $rel")
-          }
-          .collect().toSeq.sortBy(_._1).map(_._2)
-      claim.verifyHeld(rfs) // manifest is the commit — verify first
-      val out = rfs.create(
-        new org.apache.hadoop.fs.Path(repo, "MANIFEST"), true)
-      try out.write((manifest.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-      files.length.toLong
-    } finally claim.release(rfs)
-  }
-
-  /** [[restore]]'s distributed twin — the manifest (driver-read,
-    * manifest-sized) becomes a Spark job whose tasks copy AND
-    * re-verify each file's md5 executor-side; any mismatch fails its
-    * task and the restore, exactly the pool path's refusal but with
-    * the bytes moving cluster-parallel. */
-  def restoreDistributed(spark: SparkSession, repoDir: String,
-                         destDir: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val repo = new org.apache.hadoop.fs.Path(repoDir)
-    val dest = new org.apache.hadoop.fs.Path(destDir)
-    val rfs = repo.getFileSystem(conf)
-    val mPath = new org.apache.hadoop.fs.Path(repo, "MANIFEST")
-    require(rfs.exists(mPath),
-      s"$repoDir has no MANIFEST — torn or not a snapshot repository")
+      s"snapshot '$snapId' in $repoDir has no MANIFEST — torn or absent")
+    ensureRepoFormat(rfs, repo, write = false) // read-only caller
     val lines = readManifest(rfs, mPath)
     dest.getFileSystem(conf).mkdirs(dest)
-    if (lines.nonEmpty) {
-      val bc = spark.sparkContext
-        .broadcast(new SerializableHadoopConf(conf))
-      val slices = math.max(1, math.min(lines.length,
-        spark.sparkContext.defaultParallelism * 2))
-      val repoStr = repo.toString
-      val destStr = dest.toString
-      spark.sparkContext.parallelize(lines, slices)
-        .foreach { case (md5, len, rel) =>
-          val c = bc.value.value
-          val from = new org.apache.hadoop.fs.Path(repoStr, rel)
-          val ffs = from.getFileSystem(c)
-          val to = new org.apache.hadoop.fs.Path(destStr, rel)
-          val got = copyWithMd5(ffs, from, to.getFileSystem(c), to)
-          require(got == md5 && ffs.getFileStatus(from).getLen == len,
-            s"checksum mismatch restoring $rel — repository corrupt")
-        }
+    val dist = useTasks(spark, lines.length, lines.map(_._2).sum)
+    val (repoStr, destStr) = (repo.toString, dest.toString)
+    fanOut(spark, lines, dist) { case (c, (md5, len, rel)) =>
+      val from = blobPath(repoStr, rel, md5)
+      val ffs = from.getFileSystem(c)
+      val to = new Path(destStr, rel)
+      val got = md5Copy(ffs, from, to.getFileSystem(c).create(to, true))
+      require(got == md5 && ffs.getFileStatus(from).getLen == len,
+        s"checksum mismatch restoring $rel from snapshot '$snapId'")
     }
-    lines.length.toLong
+    CopyResult(lines.length, lines.length, dist)
   }
 
-  /** Copy-arm selector for the snapshot/restore family — pure and
+  /** Copy-arm selector for [[snapshot]] and [[restore]] — pure and
     * regime-testable. `bench_snapshot.json` measured both arms on one
     * box (1024 × 64 KB, min-of-3): the 16-thread driver pool wins
-    * 7.98×/7.25× vs the distributed arm's 4.67×/2.73× — task
-    * scheduling + result collection cost ~1 s that a single NIC's
-    * bytes never amortize, so ON ONE HOST THE POOL ALWAYS WINS. The
-    * distributed arm exists for the topology the pool cannot reach:
-    * multiple executor HOSTS, where the pool serializes a 100 TB
-    * tree's bytes through one JVM's NIC while executors copy
-    * host-parallel. So: distribute iff the cluster spans >1 host AND
-    * the job is big enough to amortize per-task overhead (either
-    * enough files to fan out, or enough bytes that NIC bandwidth —
-    * not latency — dominates). */
+    * 7.98×/7.25× vs the task arm's 4.67×/2.73× — task scheduling +
+    * result collection cost ~1 s that a single NIC's bytes never
+    * amortize, so ON ONE HOST THE POOL ALWAYS WINS. The task arm exists
+    * for the topology the pool cannot reach: multiple executor HOSTS,
+    * where the pool serializes a 100 TB tree's bytes through one JVM's
+    * NIC while executors copy host-parallel (ES copies segment files
+    * shard-parallel from the data nodes that own them). So: distribute
+    * iff the cluster spans >1 host AND the job is big enough to
+    * amortize per-task overhead (either enough files to fan out, or
+    * enough bytes that NIC bandwidth — not latency — dominates). */
   private[graft] def chooseDistributedCopy(executorHosts: Int, files: Long,
                                            totalBytes: Long): Boolean =
     executorHosts > 1 &&
@@ -364,6 +315,27 @@ object Sink {
     * LAN rates — smaller trees never pay back a Spark job. */
   val DistributedCopyMinBytes: Long = 256L << 20
 
+  /** Run every [[snapshot]] and [[restore]] inside `body` on the task
+    * arm, the arm [[chooseDistributedCopy]] selects on a multi-host
+    * cluster, so a single-host runtime (s22, SinkSpec) still covers
+    * it. */
+  private[graft] def onTaskArm[T](body: => T): T =
+    taskArmForced.withValue(true)(body)
+
+  private val taskArmForced = new scala.util.DynamicVariable(false)
+
+  private def useTasks(spark: SparkSession, files: Long,
+                       bytes: Long): Boolean =
+    taskArmForced.value ||
+      chooseDistributedCopy(executorHostCount(spark), files, bytes)
+
+  /** Loopback identities (name and both address families) folded out
+    * of the executor host count — local-mode block managers register
+    * under these. Single-sourced so the spec pins the SAME set the
+    * selector consults. */
+  private[graft] val LoopbackHosts =
+    Set("localhost", "127.0.0.1", "::1", "0:0:0:0:0:0:0:1")
+
   /** Distinct EXECUTOR hosts — the driver's own block manager is
     * excluded: with the driver on host A and every executor on host
     * B (client-mode topology), counting A would read "2 hosts" and
@@ -372,13 +344,6 @@ object Sink {
     * on the driver host is deliberately folded into the driver's
     * host (that NIC is the pool's anyway). Local mode → empty set →
     * 1. */
-  /** Loopback identities (name and both address families) folded out
-    * of the executor host count — local-mode block managers register
-    * under these. Single-sourced so the spec pins the SAME set the
-    * selector consults. */
-  private[graft] val LoopbackHosts =
-    Set("localhost", "127.0.0.1", "::1", "0:0:0:0:0:0:0:1")
-
   private def executorHostCount(spark: SparkSession): Int = {
     val driverHost =
       canonicalHost(spark.sparkContext.getConf.get("spark.driver.host", ""))
@@ -425,212 +390,29 @@ object Sink {
     catch { case _: java.net.UnknownHostException => t.toLowerCase }
   }
 
-  /** [[snapshot]] with the arm CHOSEN from topology + tree size
-    * ([[chooseDistributedCopy]]): the driver pool on one host, the
-    * cluster fan-out past one NIC. The selection walk is
-    * metadata-only (the chosen arm re-walks; both walks are the same
-    * deterministic listing under the repository's `_WRITER` claim).
-    * Returns (file count, usedDistributed). */
-  def snapshotAuto(spark: SparkSession, srcDir: String,
-                   repoDir: String): (Long, Boolean) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(srcDir)
-    val files = walkCommitted(src.getFileSystem(conf), src)
-    val dist = chooseDistributedCopy(executorHostCount(spark),
-      files.length.toLong, files.map(_._1.getLen).sum)
-    val n = if (dist) snapshotDistributed(spark, srcDir, repoDir)
-            else snapshot(spark, srcDir, repoDir)
-    (n, dist)
-  }
-
-  /** [[restore]]'s auto-arm twin: the manifest (driver-read,
-    * manifest-sized — needed by either arm anyway) supplies the
-    * file count and byte total for [[chooseDistributedCopy]].
-    * Returns (file count, usedDistributed). */
-  def restoreAuto(spark: SparkSession, repoDir: String,
-                  destDir: String): (Long, Boolean) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val repo = new org.apache.hadoop.fs.Path(repoDir)
-    val rfs = repo.getFileSystem(conf)
-    val mPath = new org.apache.hadoop.fs.Path(repo, "MANIFEST")
-    require(rfs.exists(mPath),
-      s"$repoDir has no MANIFEST — torn or not a snapshot repository")
-    val lines = readManifest(rfs, mPath)
-    val dist = chooseDistributedCopy(executorHostCount(spark),
-      lines.length.toLong, lines.map(_._2).sum)
-    val n = if (dist) restoreDistributed(spark, repoDir, destDir)
-            else restore(spark, repoDir, destDir)
-    (n, dist)
-  }
-
-  /** ES INCREMENTAL snapshot — the multi-snapshot repository model:
-    * segment files are immutable once committed, so a repository that
-    * already holds a file from an earlier snapshot never copies it
-    * again (ES snapshots of a 100 TB index copy only the new segments;
-    * dailies are cheap because merges and appends touch a small
-    * fraction of the tree). Layout: `blobs/<relpath>/<md5>` holds one
-    * CONTENT VERSION per (relpath, md5) — a same-path file whose bytes
-    * changed between snapshots gets a NEW blob instead of overwriting
-    * the one earlier snapshots reference (overwriting shared blobs
-    * silently destroyed every prior snapshot of that path — the
-    * round-11 advisor's finding); `snap-<id>/MANIFEST` lists
-    * (md5, length, relpath) per file, written LAST per snapshot — the
-    * same torn-snapshot refusal discipline as [[snapshot]], per
-    * snapshot id.
-    *
-    * Reuse identity is (relpath, length) against the union of prior
-    * manifests — a CONVENTION-guarded check, not a verified one:
-    * committed parquet part files carry unique names and artifact
-    * tables swap under NEW directory names, so a path-level match of
-    * equal length is the same immutable file under the committed-file
-    * conventions this repo's writers follow. A file whose content
-    * changed at identical (relpath, length) would be snapshotted as
-    * its OLD bytes, and [[restoreSnapshot]]'s md5 check would pass
-    * (the manifest records the old md5) — restore re-verification
-    * protects against bit-rot and torn copies, NOT against reuse of a
-    * mutated source. Trees that mutate files in place must pass
-    * `verifyReuse = true`: the reuse branch then re-hashes the source
-    * (one streaming read, no copy) and falls through to a fresh blob
-    * version on mismatch — full correctness at the cost of reading
-    * unchanged bytes once per snapshot (what ES avoids by trusting
-    * segment immutability).
-    *
-    * Blob existence is planned from the manifest union ALONE — no
-    * per-blob `exists` RPC (manifests are written after their blobs,
-    * so a referenced blob exists unless the repo was tampered with,
-    * and restore's per-byte verification refuses loudly then). Copies
-    * fan out over a bounded pool ([[CopyThreads]]) — ES repositories
-    * copy segment files shard-parallel; a 100 TB tree must not
-    * serialize through one driver thread. SINGLE-WRITER per
-    * repository is ENFORCED via the artifact families' claim
-    * discipline ([[acquireWriter]]): a second concurrent snapshotter
-    * refuses loudly; a crashed writer's claim expires after the
-    * grace. Returns (files in snapshot, files actually copied). */
-  def snapshotIncremental(spark: SparkSession, srcDir: String,
-                          repoDir: String, snapId: String,
-                          verifyReuse: Boolean = false,
-                          threads: Int = CopyThreads): (Long, Long) = {
-    require(snapId.nonEmpty && !snapId.contains("/"),
-      s"bad snapshot id: '$snapId'")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(srcDir)
-    val repo = new org.apache.hadoop.fs.Path(repoDir)
-    val sfs = src.getFileSystem(conf)
-    val rfs = repo.getFileSystem(conf)
-    rfs.mkdirs(repo)
-    val claim = acquireWriter(rfs, repo)
-    try {
-      ensureRepoFormat(rfs, repo)
-      val snapDir = new org.apache.hadoop.fs.Path(repo, s"snap-$snapId")
-      require(!rfs.exists(new org.apache.hadoop.fs.Path(snapDir, "MANIFEST")),
-        s"snapshot '$snapId' already exists in $repoDir")
-      rfs.mkdirs(snapDir)
-      // the union of prior manifests: relpath -> (md5, length)
-      val known = priorManifests(rfs, repo).flatMap(readManifest(rfs, _))
-        .map { case (md5, len, rel) => rel -> ((md5, len)) }.toMap
-      val files = walkCommitted(sfs, src)
-      val copied = new java.util.concurrent.atomic.AtomicLong(0L)
-      def freshBlob(st: org.apache.hadoop.fs.FileStatus,
-                    rel: String): String = {
-        copied.incrementAndGet()
-        // content isn't known until hashed: stream to a dot-temp
-        // INSIDE the version directory (create() makes the parent, so
-        // no separate mkdirs RPC) and rename within the directory —
-        // the cheapest atomic publish. A failed rename means the same
-        // bytes are already versioned (or a concurrent writer raced,
-        // which the _WRITER claim excludes): verify and drop the temp.
-        val tmp = new org.apache.hadoop.fs.Path(repo,
-          s"blobs/$rel/.tmp-${java.util.UUID.randomUUID()}")
-        val md5 = copyWithMd5(sfs, st.getPath, rfs, tmp)
-        val target = blobPath(repo, rel, md5)
-        if (!rfs.rename(tmp, target)) {
-          require(rfs.exists(target), s"could not place blob for $rel")
-          rfs.delete(tmp, false)
-        }
-        md5
-      }
-      val manifest = inParallel(files, threads) { case (st, rel) =>
-        val md5 = known.get(rel) match {
-          case Some((m, len)) if len == st.getLen =>
-            if (!verifyReuse) m
-            else {
-              val actual = md5Of(sfs, st.getPath)
-              if (actual == m) m else freshBlob(st, rel)
-            }
-          case _ => freshBlob(st, rel)
-        }
-        s"$md5 ${st.getLen} $rel"
-      }
-      claim.verifyHeld(rfs) // manifest is the commit — verify first
-      val out = rfs.create(
-        new org.apache.hadoop.fs.Path(snapDir, "MANIFEST"), true)
-      try out.write((manifest.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-      (files.length.toLong, copied.get())
-    } finally claim.release(rfs)
-  }
-
-  /** Restore one snapshot id from an incremental repository —
-    * [[restore]]'s full-verification discipline against the shared
-    * blob store: every byte re-verified against the snapshot's own
-    * manifest md5, so bit-rot, truncation, or a wrong/missing blob
-    * version refuses loudly. (What this does NOT catch: a manifest
-    * that recorded a stale md5 because an in-place source mutation
-    * slipped past the convention-guarded reuse check — see
-    * [[snapshotIncremental]]'s `verifyReuse`.) */
-  def restoreSnapshot(spark: SparkSession, repoDir: String, snapId: String,
-                      destDir: String, threads: Int = CopyThreads): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val repo = new org.apache.hadoop.fs.Path(repoDir)
-    val dest = new org.apache.hadoop.fs.Path(destDir)
-    val rfs = repo.getFileSystem(conf)
-    val dfs = dest.getFileSystem(conf)
-    val mPath = new org.apache.hadoop.fs.Path(repo, s"snap-$snapId/MANIFEST")
-    require(rfs.exists(mPath),
-      s"snapshot '$snapId' in $repoDir has no MANIFEST — torn or absent")
-    ensureRepoFormat(rfs, repo, write = false) // read-only caller
-    val lines = readManifest(rfs, mPath)
-    dfs.mkdirs(dest)
-    inParallel(lines, threads) { case (md5, len, rel) =>
-      val from = blobPath(repo, rel, md5)
-      val got = copyWithMd5(rfs, from, dfs,
-        new org.apache.hadoop.fs.Path(dest, rel))
-      require(got == md5 && rfs.getFileStatus(from).getLen == len,
-        s"checksum mismatch restoring $rel from snapshot '$snapId'")
-    }
-    lines.length.toLong
-  }
-
-  /** Incremental-repository FORMAT guard (the round-12 advisor's
-    * finding): format 2 stores one content VERSION per blob at
-    * `blobs/<rel>/<md5>`; the pre-round-12 format 1 stored `blobs/<rel>`
-    * as a flat FILE. Snapshotting format-2 entries into a format-1
-    * repository would reuse prior-manifest rows whose blobs resolve to
-    * paths that don't exist under the new layout — the new snapshot
-    * "succeeds" but can never restore, and `freshBlob` on a changed
-    * file errors because `blobs/<rel>` already exists as a file. A
-    * `_FORMAT` marker pins the layout; a repo without one (round-12
-    * repos wrote format-2 blobs before the marker existed) is
-    * adjudicated from the SHAPE of one referenced blob — `blobs/<rel>`
-    * is a directory in format 2 — so legacy repositories refuse
-    * LOUDLY at snapshot time instead of writing unrestorable
-    * manifests. `write = false` for read-only callers (restore): they
-    * verify but never create the marker. */
-  private def ensureRepoFormat(rfs: org.apache.hadoop.fs.FileSystem,
-                               repo: org.apache.hadoop.fs.Path,
+  /** Repository FORMAT guard (the round-12 advisor's finding): format 2
+    * stores one content VERSION per blob at `blobs/<rel>/<md5>`; the
+    * pre-round-12 format 1 stored `blobs/<rel>` as a flat FILE.
+    * Snapshotting format-2 entries into a format-1 repository would
+    * reuse prior-manifest rows whose blobs resolve to paths that don't
+    * exist under the new layout — the new snapshot "succeeds" but can
+    * never restore, and placing a changed file's blob errors because
+    * `blobs/<rel>` already exists as a file. A `_FORMAT` marker pins the
+    * layout; a repo without one (round-12 repos wrote format-2 blobs
+    * before the marker existed) is adjudicated from the SHAPE of one
+    * referenced blob — `blobs/<rel>` is a directory in format 2 — so
+    * legacy repositories refuse LOUDLY at snapshot time instead of
+    * writing unrestorable manifests. `write = false` for read-only
+    * callers (restore): they verify but never create the marker. */
+  private def ensureRepoFormat(rfs: FileSystem, repo: Path,
                                write: Boolean = true): Unit = {
-    val fPath = new org.apache.hadoop.fs.Path(repo, "_FORMAT")
+    val fPath = new Path(repo, "_FORMAT")
     if (rfs.exists(fPath)) {
-      val v = {
-        val in = rfs.open(fPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().next().trim
-        finally in.close()
-      }
+      val v = contentAt(rfs, fPath)
       require(v == "2",
-        s"$repo declares incremental-repository format '$v'; this " +
-          "writer speaks format 2 (content-versioned blobs/<rel>/<md5>)" +
-          " — refusing to mix layouts")
+        s"$repo declares repository format '$v'; this writer speaks " +
+          "format 2 (content-versioned blobs/<rel>/<md5>) — refusing " +
+          "to mix layouts")
       return
     }
     // no marker: adopt (marker-less format-2 repo) or refuse (legacy
@@ -639,9 +421,9 @@ object Sink {
     priorManifests(rfs, repo).headOption
       .flatMap(readManifest(rfs, _).headOption)
       .foreach { case (_, _, rel) =>
-        val p = new org.apache.hadoop.fs.Path(repo, s"blobs/$rel")
+        val p = new Path(repo, s"blobs/$rel")
         require(rfs.exists(p) && rfs.getFileStatus(p).isDirectory,
-          s"$repo is a LEGACY (format-1) incremental repository — " +
+          s"$repo is a LEGACY (format-1) snapshot repository — " +
             "blobs/<relpath> is a flat file, but this writer stores " +
             "content-versioned blobs/<relpath>/<md5>. Refusing: a " +
             "mixed-layout snapshot would reuse manifest entries whose " +
@@ -661,20 +443,37 @@ object Sink {
     * manifest row maps to exactly one blob; a source path can never be
     * both a file and a directory, so rel-as-directory is
     * collision-free. */
-  private def blobPath(repo: org.apache.hadoop.fs.Path, rel: String,
-                       md5: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(repo, s"blobs/$rel/$md5")
+  private def blobPath(repo: String, rel: String, md5: String): Path =
+    new Path(repo, s"blobs/$rel/$md5")
 
-  /** Recursive committed-file walk shared by the snapshot family:
-    * hidden and in-flight entries (`_temporary`, dotfiles) skipped at
-    * every level like Spark's committed-file readers; lifecycle
-    * markers (`_DONE`, `_SUCCESS`) are data and travel. Sorted by
-    * relpath for deterministic manifests. */
-  private def walkCommitted(sfs: org.apache.hadoop.fs.FileSystem,
-                            src: org.apache.hadoop.fs.Path)
-      : Seq[(org.apache.hadoop.fs.FileStatus, String)] = {
-    def walk(dir: org.apache.hadoop.fs.Path,
-             prefix: String): Seq[(org.apache.hadoop.fs.FileStatus, String)] =
+  /** Copy `from` into a fresh blob version of `rel`, returning its md5.
+    * Content isn't known until hashed: stream to a dot-temp INSIDE the
+    * version directory (create() makes the parent, so no separate
+    * mkdirs RPC) and rename within the directory — the cheapest atomic
+    * publish. A failed rename means the same bytes are already
+    * versioned (or a concurrent writer raced, which the _WRITER claim
+    * excludes): verify and drop the temp. */
+  private def placeBlob(c: Configuration, sfs: FileSystem, from: Path,
+                        repo: String, rel: String): String = {
+    val tmp = new Path(repo, s"blobs/$rel/.tmp-${java.util.UUID.randomUUID()}")
+    val rfs = tmp.getFileSystem(c)
+    val md5 = md5Copy(sfs, from, rfs.create(tmp, true))
+    val target = blobPath(repo, rel, md5)
+    if (!rfs.rename(tmp, target)) {
+      require(rfs.exists(target), s"could not place blob for $rel")
+      rfs.delete(tmp, false)
+    }
+    md5
+  }
+
+  /** Recursive committed-file walk of [[snapshot]]: hidden and
+    * in-flight entries (`_temporary`, dotfiles) skipped at every level
+    * like Spark's committed-file readers; lifecycle markers (`_DONE`,
+    * `_SUCCESS`) are data and travel. Sorted by relpath for
+    * deterministic manifests. */
+  private def walkCommitted(sfs: FileSystem,
+                            src: Path): Seq[(FileStatus, String)] = {
+    def walk(dir: Path, prefix: String): Seq[(FileStatus, String)] =
       sfs.listStatus(dir).toSeq
         .filterNot { st =>
           val n = st.getPath.getName
@@ -687,30 +486,67 @@ object Sink {
     walk(src, "").sortBy(_._2)
   }
 
-  /** Copy/hash fan-out width for the snapshot/restore family — ES
-    * repositories move segment files shard-parallel; a 100 TB tree
-    * must not serialize its bytes through one driver thread. */
-  val CopyThreads = 16
+  /** Width of [[fanOut]]'s driver pool — ES repositories move segment
+    * files shard-parallel; a 100 TB tree must not serialize its bytes
+    * through one driver thread. */
+  private val CopyThreads = 16
 
-  /** Run `f` over `items` on a bounded pool, results in input order;
-    * a task failure rethrows its cause (so `require` refusals keep
-    * their type across the pool boundary). */
-  private def inParallel[A, B](items: Seq[A], threads: Int)(f: A => B): Seq[B] = {
-    if (items.isEmpty) return Seq.empty
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(threads, items.length)))
-    try {
-      val futs = items.map(a => pool.submit(
-        new java.util.concurrent.Callable[B] { def call(): B = f(a) }))
-      futs.map { fu =>
-        try fu.get()
+  /** Run the per-file work `f` over `items`, results in input order,
+    * on one of two arms. The driver arm is a bounded pool; the task arm
+    * is ONE Spark job — one task per item slice, executors open files
+    * through a broadcast Hadoop configuration, and only `f`'s small
+    * results come back (manifest-sized state, never the bytes). The RDD
+    * is deliberate: this is per-file imperative IO, not relational
+    * work.
+    *
+    * The driver arm awaits EVERY item before returning or throwing,
+    * then rethrows the FIRST failure in input order with later ones
+    * suppressed onto it (`Par.run`'s contract): a copy still running
+    * after `restore` threw would keep writing into the destination, or
+    * into the repository after `snapshot` released its `_WRITER` claim.
+    * An interrupt of the caller drops the queued items, interrupts the
+    * running ones, still awaits them, and then throws
+    * InterruptedException with the interrupt flag restored. On the task
+    * arm a failed task fails the job and Spark kills the job's other
+    * tasks. */
+  private def fanOut[A: ClassTag, B: ClassTag](spark: SparkSession,
+      items: Seq[A], distributed: Boolean)(f: (Configuration, A) => B): Seq[B] =
+    if (items.isEmpty) Seq.empty
+    else if (distributed) {
+      val sc = spark.sparkContext
+      val bc = sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
+      sc.parallelize(items, math.min(items.length, sc.defaultParallelism * 2))
+        .map(a => f(bc.value.value, a)).collect().toSeq
+    } else {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val pool = Executors.newFixedThreadPool(math.min(CopyThreads, items.length))
+      val futs =
+        try items.map(a => pool.submit(new Callable[B] { def call(): B = f(conf, a) }))
+        finally pool.shutdown()
+      var interrupted = false
+      while (!pool.isTerminated)
+        try pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
         catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
+          case _: InterruptedException =>
+            interrupted = true
+            pool.shutdownNow()
         }
+      if (interrupted) {
+        Thread.currentThread().interrupt()
+        throw new InterruptedException(
+          "interrupted while awaiting copies (all of them stopped)")
       }
-    } finally pool.shutdown()
-  }
+      val got = futs.map { fu =>
+        try Right(fu.get())
+        catch { case e: ExecutionException => Left(e.getCause) }
+      }
+      val errs = got.collect { case Left(e) => e }
+      errs.headOption.foreach { e =>
+        errs.tail.foreach(e.addSuppressed)
+        throw e
+      }
+      got.collect { case Right(b) => b }
+    }
 
   /** SINGLE-WRITER enforcement for a mutating directory (snapshot
     * repository, [[reindex]] destination) — the artifact families'
@@ -751,16 +587,16 @@ object Sink {
     * committing, and the torn-write discipline (manifest LAST,
     * content-versioned blobs) makes the abort clean. */
   private[graft] final case class WriterClaim(
-      marker: org.apache.hadoop.fs.Path, token: String) {
+      marker: Path, token: String) {
     /** Refuse to commit unless OUR token is still in the marker —
       * the displaced-owner backstop for the reclaim races above. */
-    def verifyHeld(fs: org.apache.hadoop.fs.FileSystem): Unit =
+    def verifyHeld(fs: FileSystem): Unit =
       if (!contentAt(fs, marker).endsWith(token))
         throw new IllegalStateException(
           s"writer claim for ${marker.getParent} was lost before commit " +
             "(marker no longer holds this writer's token) — another " +
             "writer reclaimed it; aborting without committing")
-    def release(fs: org.apache.hadoop.fs.FileSystem): Unit = {
+    def release(fs: FileSystem): Unit = {
       // delete only OUR claim: releasing after a displacement must
       // not remove the new owner's marker
       if (contentAt(fs, marker).endsWith(token)) fs.delete(marker, false)
@@ -769,8 +605,8 @@ object Sink {
   }
 
   /** First line of a claim/tombstone file, "" when unreadable. */
-  private def contentAt(fs: org.apache.hadoop.fs.FileSystem,
-                        p: org.apache.hadoop.fs.Path): String =
+  private def contentAt(fs: FileSystem,
+                        p: Path): String =
     try {
       val in = fs.open(p)
       try scala.io.Source.fromInputStream(in, "UTF-8")
@@ -778,12 +614,12 @@ object Sink {
       finally in.close()
     } catch { case _: Exception => "" }
 
-  private[graft] def acquireWriter(fs: org.apache.hadoop.fs.FileSystem,
-                                   dir: org.apache.hadoop.fs.Path,
+  private[graft] def acquireWriter(fs: FileSystem,
+                                   dir: Path,
                                    graceMs: Long = 15 * 60 * 1000L)
       : WriterClaim = {
     fs.mkdirs(dir)
-    val marker = new org.apache.hadoop.fs.Path(dir, "_WRITER")
+    val marker = new Path(dir, "_WRITER")
     val token = java.util.UUID.randomUUID().toString
     var attempt = 0
     while (attempt < 3) {
@@ -816,7 +652,7 @@ object Sink {
           // crashed writer: reclaim by ATOMIC RENAME to a unique
           // tombstone — exactly one of N waiters wins; losers loop and
           // contend against the winner's fresh marker
-          val tomb = new org.apache.hadoop.fs.Path(dir,
+          val tomb = new Path(dir,
             s".writer-stale-${java.util.UUID.randomUUID()}")
           if (fs.rename(marker, tomb)) {
             // the marker may have been REPLACED since `obs` was read
@@ -836,31 +672,36 @@ object Sink {
       s"could not claim writer marker in $dir after 3 attempts")
   }
 
-  /** md5 of a file's bytes — one streaming read, no copy (the
-    * `verifyReuse` arm of [[snapshotIncremental]]). */
-  private def md5Of(fs: org.apache.hadoop.fs.FileSystem,
-                    path: org.apache.hadoop.fs.Path): String = {
+  /** Stream `from` into `out` (closed after), returning the md5 of the
+    * bytes read — one read per file, hashed while the bytes stream;
+    * `OutputStream.nullOutputStream()` only hashes. */
+  private def md5Copy(sfs: FileSystem, from: Path,
+                      out: => java.io.OutputStream): String = {
     val dig = java.security.MessageDigest.getInstance("MD5")
-    val in = new java.security.DigestInputStream(fs.open(path), dig)
+    val in = new java.security.DigestInputStream(sfs.open(from), dig)
     try {
-      val buf = new Array[Byte](1 << 16)
-      while (in.read(buf) >= 0) ()
+      val o = out
+      try {
+        val buf = new Array[Byte](1 << 16)
+        var n = in.read(buf)
+        while (n >= 0) {
+          if (n > 0) o.write(buf, 0, n)
+          n = in.read(buf)
+        }
+      } finally o.close()
     } finally in.close()
     dig.digest().map("%02x".format(_)).mkString
   }
 
-  private def priorManifests(rfs: org.apache.hadoop.fs.FileSystem,
-                             repo: org.apache.hadoop.fs.Path)
-      : Seq[org.apache.hadoop.fs.Path] =
+  private def priorManifests(rfs: FileSystem, repo: Path): Seq[Path] =
     if (!rfs.exists(repo)) Seq.empty
     else rfs.listStatus(repo).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("snap-"))
-      .map(st => new org.apache.hadoop.fs.Path(st.getPath, "MANIFEST"))
+      .map(st => new Path(st.getPath, "MANIFEST"))
       .filter(rfs.exists(_))
 
-  private def readManifest(rfs: org.apache.hadoop.fs.FileSystem,
-                           mPath: org.apache.hadoop.fs.Path)
-      : Seq[(String, Long, String)] = {
+  private def readManifest(rfs: FileSystem,
+                           mPath: Path): Seq[(String, Long, String)] = {
     val in = rfs.open(mPath)
     try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
       .filter(_.nonEmpty).map { line =>
@@ -868,25 +709,6 @@ object Sink {
         (md5, len.toLong, rel)
       }.toList
     finally in.close()
-  }
-
-  /** Stream-copy one file, returning the md5 of the bytes copied. */
-  private def copyWithMd5(sfs: org.apache.hadoop.fs.FileSystem,
-                          from: org.apache.hadoop.fs.Path,
-                          dfs: org.apache.hadoop.fs.FileSystem,
-                          to: org.apache.hadoop.fs.Path): String = {
-    val dig = java.security.MessageDigest.getInstance("MD5")
-    val in = new java.security.DigestInputStream(sfs.open(from), dig)
-    val out = dfs.create(to, true)
-    try {
-      val buf = new Array[Byte](1 << 16)
-      var n = in.read(buf)
-      while (n >= 0) {
-        if (n > 0) out.write(buf, 0, n)
-        n = in.read(buf)
-      }
-    } finally { in.close(); out.close() }
-    dig.digest().map("%02x".format(_)).mkString
   }
 
   /** Date-partitioned write: directory-partition the output on a
@@ -912,11 +734,11 @@ object Sink {
     val want = math.max(1, math.ceil(rows.toDouble / targetRows).toInt)
     val tmp = path.stripSuffix("/") + ".compact-tmp"
     before.repartition(want).write.mode("overwrite").parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
+    val fs = FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
+    val dst = new Path(path)
     fs.delete(dst, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
+    fs.rename(new Path(tmp), dst)
     (nFiles, spark.read.parquet(path).inputFiles.length)
   }
 
@@ -1074,9 +896,9 @@ object Sink {
     // on the wrong filesystem (the round-9 review finding); the alias
     // pointer is probed through the same fs
     requireLocalAliasPath(baseDir)
-    val base = new org.apache.hadoop.fs.Path(baseDir)
+    val base = new Path(baseDir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(base, "_alias")))
+    if (!fs.exists(new Path(base, "_alias")))
       return Seq.empty
     val liveOpt = aliasVersion(baseDir).trim.stripPrefix("v").toIntOption
     liveOpt match {
@@ -1093,7 +915,7 @@ object Sink {
         versions.filter(_ < live).sorted(Ordering[Int].reverse)
           .drop(keepLast - 1)
           .map { v =>
-            fs.delete(new org.apache.hadoop.fs.Path(base, s"v$v"), true)
+            fs.delete(new Path(base, s"v$v"), true)
             s"v$v"
           }
     }

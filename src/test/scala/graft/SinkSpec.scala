@@ -1,12 +1,30 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.CountDownLatch
+
+import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
+
 import graft.sources.Sink
 
 /** Ingestion surface: DDL, bulk write with id routing + ack, streamed
   * fetch, keyset pagination (reference `src/main.py` lifecycle). */
 class SinkSpec extends SparkSpec {
+
+  private def filesUnder(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) f.listFiles().toSeq.flatMap(filesUnder)
+    else Seq(f)
+
+  private def chain(t: Throwable): Seq[String] =
+    if (t == null) Seq.empty else t.getMessage +: chain(t.getCause)
+
+  /** A restore refused a corrupt blob: the manifest md5 check, or the
+    * FS-level `.crc` check of a checksummed filesystem, fired — on the
+    * task arm inside the failed job's cause chain. */
+  private def refusedCorrupt(ex: Throwable): Boolean =
+    chain(ex).exists(m => m != null &&
+      (m.contains("checksum mismatch") || m.contains("Checksum")))
 
   test("bulk write routes by id hash into the configured shard count") {
     val tmp = Files.createTempDirectory("graft-sink").toString
@@ -63,15 +81,16 @@ class SinkSpec extends SparkSpec {
     val repo = Files.createTempDirectory("graft-snap-repo").toString
     val dest = Files.createTempDirectory("graft-snap-dest").toString
     Sink.bulkWrite(spark, Tables.region(spark, sf), "r_regionkey", src)
-    val n = Sink.snapshot(spark, src, repo)
+    val n = Sink.snapshot(spark, src, repo, "1").files
     assert(n > 0)
-    assert(Sink.restore(spark, repo, dest) == n)
+    assert(Sink.restore(spark, repo, "1", dest).files == n)
     // the restored index answers identically
     assert(spark.read.parquet(dest).collect().map(_.toSeq).toSet ==
       spark.read.parquet(src).collect().map(_.toSeq).toSet)
     // one flipped byte in the repository → restore refuses loudly
-    val victim = new java.io.File(repo).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
+    val victim = filesUnder(new java.io.File(s"$repo/blobs"))
+      .filter(f => f.getPath.contains(".parquet") &&
+        !f.getName.startsWith(".")).head
     val bytes = java.nio.file.Files.readAllBytes(victim.toPath)
     bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0xff).toByte
     java.nio.file.Files.write(victim.toPath, bytes)
@@ -79,15 +98,58 @@ class SinkSpec extends SparkSpec {
     // on a checksummed FS (LocalFileSystem keeps .crc sidecars) the
     // FS-level verification may fire before the manifest md5 — either
     // way the restore refuses loudly
-    val ex = intercept[Exception] { Sink.restore(spark, repo, dest2) }
+    val ex = intercept[Exception] { Sink.restore(spark, repo, "1", dest2) }
     assert(ex.isInstanceOf[IllegalArgumentException] ||
       ex.isInstanceOf[org.apache.hadoop.fs.ChecksumException],
       s"unexpected refusal type: ${ex.getClass}")
     // a torn repository (no MANIFEST) refuses
     val repo2 = Files.createTempDirectory("graft-snap-repo2").toString
     intercept[IllegalArgumentException] {
-      Sink.restore(spark, repo2, dest2)
+      Sink.restore(spark, repo2, "1", dest2)
     }
+  }
+
+  test("a failed copy is rethrown only after every other copy finished") {
+    // the first file in manifest order fails; 40 more copies (more than
+    // the pool's width, so some are still queued) are held until it has
+    // failed. Returning or throwing before they finish would leave them
+    // writing into the repository after the _WRITER claim's release, or
+    // into the destination after restore threw.
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.gated.impl", classOf[GatedFs].getName)
+    val held = (0 until 40).map(i => f"held-$i%02d.bin")
+    val src = Files.createTempDirectory("graft-await-src")
+    ("fail.bin" +: held).foreach(n =>
+      Files.write(src.resolve(n), n.getBytes("UTF-8")))
+    val repo = Files.createTempDirectory("graft-await-repo")
+    Sink.snapshot(spark, src.toString, repo.toString, "1")
+    def gate(failed: CountDownLatch): Unit =
+      GatedFs.onOpen = p =>
+        if (p.toString.contains("fail.bin")) {
+          failed.countDown()
+          throw new java.io.IOException("injected copy failure")
+        } else if (p.toString.contains("held-")) failed.await()
+    try {
+      gate(new CountDownLatch(1))
+      val repo2 = Files.createTempDirectory("graft-await-repo2")
+      val ex = intercept[java.io.IOException] {
+        Sink.snapshot(spark, s"gated:$src", repo2.toString, "1")
+      }
+      assert(ex.getMessage == "injected copy failure")
+      held.foreach(n => assert(
+        filesUnder(repo2.resolve(s"blobs/$n").toFile)
+          .count(!_.getName.startsWith(".")) == 1,
+        s"snapshot threw before the copy of $n was placed"))
+      gate(new CountDownLatch(1))
+      val dest = Files.createTempDirectory("graft-await-dest")
+      val ex2 = intercept[java.io.IOException] {
+        Sink.restore(spark, s"gated:$repo", "1", dest.toString)
+      }
+      assert(ex2.getMessage == "injected copy failure")
+      held.foreach(n => assert(
+        new String(Files.readAllBytes(dest.resolve(n)), "UTF-8") == n,
+        s"restore threw before the copy of $n was complete"))
+    } finally GatedFs.onOpen = _ => ()
   }
 
   test("snapshot/restore walks artifact TREES: subdirs round-trip, markers travel, hidden skipped, torn refused") {
@@ -101,9 +163,9 @@ class SinkSpec extends SparkSpec {
     Files.write(src.resolve(".hidden"), "skip".getBytes("UTF-8"))
     val repo = Files.createTempDirectory("graft-tree-repo").toString
     val dest = Files.createTempDirectory("graft-tree-dest").toString
-    val n = Sink.snapshot(spark, src.toString, repo)
+    val n = Sink.snapshot(spark, src.toString, repo, "1").files
     assert(n > 2, s"tree snapshot should carry files from both subdirs, got $n")
-    assert(Sink.restore(spark, repo, dest) == n)
+    assert(Sink.restore(spark, repo, "1", dest).files == n)
     // subdirectory tables answer identically from the restore
     assert(spark.read.parquet(s"$dest/postings").collect().map(_.toSeq).toSet ==
       spark.read.parquet(src.resolve("postings").toString)
@@ -114,57 +176,60 @@ class SinkSpec extends SparkSpec {
     // COMPLETE); hidden files do not
     assert(new java.io.File(s"$dest/_DONE").exists())
     assert(!new java.io.File(s"$dest/.hidden").exists())
-    assert(!new java.io.File(s"$repo/.hidden").exists())
+    assert(!new java.io.File(s"$repo/blobs/.hidden").exists())
     // a torn tree repository (manifest deleted mid-snapshot) refuses
-    Files.delete(java.nio.file.Paths.get(repo, "MANIFEST"))
+    Files.delete(java.nio.file.Paths.get(repo, "snap-1", "MANIFEST"))
     intercept[IllegalArgumentException] {
-      Sink.restore(spark, repo, Files.createTempDirectory("gtd2").toString)
+      Sink.restore(spark, repo, "1",
+        Files.createTempDirectory("gtd2").toString)
     }
   }
 
   test("incremental snapshots: second snapshot copies only the delta; both restore") {
-    import org.apache.spark.sql.SaveMode
-    val src = Files.createTempDirectory("graft-inc-src").toString
-    val repo = Files.createTempDirectory("graft-inc-repo").toString
-    Tables.region(spark, sf).write.parquet(s"$src/a")
-    val (t1, c1) = Sink.snapshotIncremental(spark, src, repo, "1")
-    assert(t1 > 0 && c1 == t1, "first snapshot copies everything")
-    // append a NEW table dir (immutable files: the old ones untouched)
-    Tables.nation(spark, sf).write.parquet(s"$src/b")
-    val (t2, c2) = Sink.snapshotIncremental(spark, src, repo, "2")
-    assert(t2 > t1 && c2 == t2 - t1,
-      s"second snapshot must copy only the new files: copied $c2 of $t2 (prior $t1)")
-    // duplicate snapshot ids refuse
-    intercept[IllegalArgumentException] {
-      Sink.snapshotIncremental(spark, src, repo, "2")
+    for (tasks <- Seq(false, true)) {
+      def onArm[T](body: => T): T = if (tasks) Sink.onTaskArm(body) else body
+      val src = Files.createTempDirectory("graft-inc-src").toString
+      val repo = Files.createTempDirectory("graft-inc-repo").toString
+      Tables.region(spark, sf).write.parquet(s"$src/a")
+      val first = onArm(Sink.snapshot(spark, src, repo, "1"))
+      val t1 = first.files
+      assert(t1 > 0 && first.copied == t1, "first snapshot copies everything")
+      assert(first.distributed == tasks)
+      // append a NEW table dir (immutable files: the old ones untouched)
+      Tables.nation(spark, sf).write.parquet(s"$src/b")
+      val second = onArm(Sink.snapshot(spark, src, repo, "2"))
+      val (t2, c2) = (second.files, second.copied)
+      assert(t2 > t1 && c2 == t2 - t1,
+        s"second snapshot must copy only the new files: copied $c2 of $t2 (prior $t1)")
+      // duplicate snapshot ids refuse
+      intercept[IllegalArgumentException] {
+        onArm(Sink.snapshot(spark, src, repo, "2"))
+      }
+      // both snapshots restore independently and answer correctly
+      val d1 = Files.createTempDirectory("graft-inc-d1").toString
+      val d2 = Files.createTempDirectory("graft-inc-d2").toString
+      assert(onArm(Sink.restore(spark, repo, "1", d1)).files == t1)
+      assert(onArm(Sink.restore(spark, repo, "2", d2)).files == t2)
+      assert(spark.read.parquet(s"$d1/a").count() == 5)
+      assert(spark.read.parquet(s"$d2/a").count() == 5)
+      assert(spark.read.parquet(s"$d2/b").count() == 25)
+      assert(!new java.io.File(s"$d1/b").exists(),
+        "snapshot 1 must not restore files from snapshot 2")
+      // the reuse-safety backstop: a corrupt SHARED blob refuses at
+      // restore (every byte re-verified against the snapshot's own
+      // manifest md5 — blob reuse can never serve wrong content silently)
+      val victim = filesUnder(new java.io.File(s"$repo/blobs/a"))
+        .filter(f => f.getPath.contains(".parquet") &&
+          !f.getName.startsWith(".")).head
+      val bytes = java.nio.file.Files.readAllBytes(victim.toPath)
+      bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0xff).toByte
+      java.nio.file.Files.write(victim.toPath, bytes)
+      val d4 = Files.createTempDirectory("graft-inc-d4").toString
+      val ex = intercept[Exception] {
+        onArm(Sink.restore(spark, repo, "1", d4))
+      }
+      assert(refusedCorrupt(ex), s"corrupt blob must refuse, got: ${chain(ex)}")
     }
-    // both snapshots restore independently and answer correctly
-    val d1 = Files.createTempDirectory("graft-inc-d1").toString
-    val d2 = Files.createTempDirectory("graft-inc-d2").toString
-    assert(Sink.restoreSnapshot(spark, repo, "1", d1) == t1)
-    assert(Sink.restoreSnapshot(spark, repo, "2", d2) == t2)
-    assert(spark.read.parquet(s"$d1/a").count() == 5)
-    assert(spark.read.parquet(s"$d2/a").count() == 5)
-    assert(spark.read.parquet(s"$d2/b").count() == 25)
-    assert(!new java.io.File(s"$d1/b").exists(),
-      "snapshot 1 must not restore files from snapshot 2")
-    // the reuse-safety backstop: a corrupt SHARED blob refuses at
-    // restore (every byte re-verified against the snapshot's own
-    // manifest md5 — blob reuse can never serve wrong content silently)
-    def filesUnder(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(filesUnder)
-      else Seq(f)
-    val victim = filesUnder(new java.io.File(s"$repo/blobs/a"))
-      .filter(f => f.getPath.contains(".parquet") &&
-        !f.getName.startsWith(".")).head
-    val bytes = java.nio.file.Files.readAllBytes(victim.toPath)
-    bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0xff).toByte
-    java.nio.file.Files.write(victim.toPath, bytes)
-    val d4 = Files.createTempDirectory("graft-inc-d4").toString
-    val ex = intercept[Exception] { Sink.restoreSnapshot(spark, repo, "1", d4) }
-    assert(ex.isInstanceOf[IllegalArgumentException] ||
-      ex.isInstanceOf[org.apache.hadoop.fs.ChecksumException],
-      s"unexpected refusal type: ${ex.getClass}")
   }
 
   test("changed same-path file gets a NEW blob version; earlier snapshots stay restorable") {
@@ -174,19 +239,19 @@ class SinkSpec extends SparkSpec {
     val src = Files.createTempDirectory("graft-ver-src")
     val repo = Files.createTempDirectory("graft-ver-repo").toString
     Files.write(src.resolve("data.bin"), "generation-one".getBytes("UTF-8"))
-    val (t1, c1) = Sink.snapshotIncremental(spark, src.toString, repo, "1")
-    assert(t1 == 1 && c1 == 1)
+    val r1 = Sink.snapshot(spark, src.toString, repo, "1")
+    assert(r1.files == 1 && r1.copied == 1)
     // mutate the file IN PLACE with a different length — against the
     // committed-file convention, which is exactly when blob keying
     // must protect snapshot 1
     Files.write(src.resolve("data.bin"),
       "generation-two-longer-content".getBytes("UTF-8"))
-    val (t2, c2) = Sink.snapshotIncremental(spark, src.toString, repo, "2")
-    assert(t2 == 1 && c2 == 1, "changed length must re-copy")
+    val r2 = Sink.snapshot(spark, src.toString, repo, "2")
+    assert(r2.files == 1 && r2.copied == 1, "changed length must re-copy")
     val d1 = Files.createTempDirectory("graft-ver-d1")
     val d2 = Files.createTempDirectory("graft-ver-d2")
-    assert(Sink.restoreSnapshot(spark, repo, "1", d1.toString) == 1)
-    assert(Sink.restoreSnapshot(spark, repo, "2", d2.toString) == 1)
+    assert(Sink.restore(spark, repo, "1", d1.toString).files == 1)
+    assert(Sink.restore(spark, repo, "2", d2.toString).files == 1)
     assert(new String(Files.readAllBytes(d1.resolve("data.bin")), "UTF-8")
       == "generation-one", "snapshot 1 must restore its own bytes")
     assert(new String(Files.readAllBytes(d2.resolve("data.bin")), "UTF-8")
@@ -198,26 +263,26 @@ class SinkSpec extends SparkSpec {
     val repo1 = Files.createTempDirectory("graft-vr-repo1").toString
     val repo2 = Files.createTempDirectory("graft-vr-repo2").toString
     Files.write(src.resolve("data.bin"), "AAAA".getBytes("UTF-8"))
-    Sink.snapshotIncremental(spark, src.toString, repo1, "1")
-    Sink.snapshotIncremental(spark, src.toString, repo2, "1")
+    Sink.snapshot(spark, src.toString, repo1, "1")
+    Sink.snapshot(spark, src.toString, repo2, "1")
     // mutate content at IDENTICAL length — invisible to the
     // (relpath, length) convention check
     Files.write(src.resolve("data.bin"), "BBBB".getBytes("UTF-8"))
     // default: reuse trusts the convention — snapshot 2 records the
     // OLD md5 (documented; restore serves snapshot-1 bytes)
-    val (_, c2a) = Sink.snapshotIncremental(spark, src.toString, repo1, "2")
+    val c2a = Sink.snapshot(spark, src.toString, repo1, "2").copied
     assert(c2a == 0, "convention-guarded reuse must not copy")
     // verifyReuse: the reuse branch re-hashes the source and falls
     // through to a fresh blob version on mismatch
-    val (_, c2b) = Sink.snapshotIncremental(spark, src.toString, repo2, "2",
-      verifyReuse = true)
+    val c2b = Sink.snapshot(spark, src.toString, repo2, "2",
+      verifyReuse = true).copied
     assert(c2b == 1, "verifyReuse must detect the same-length mutation")
     val d = Files.createTempDirectory("graft-vr-d")
-    Sink.restoreSnapshot(spark, repo2, "2", d.toString)
+    Sink.restore(spark, repo2, "2", d.toString)
     assert(new String(Files.readAllBytes(d.resolve("data.bin")), "UTF-8")
       == "BBBB")
     val d1 = Files.createTempDirectory("graft-vr-d1")
-    Sink.restoreSnapshot(spark, repo2, "1", d1.toString)
+    Sink.restore(spark, repo2, "1", d1.toString)
     assert(new String(Files.readAllBytes(d1.resolve("data.bin")), "UTF-8")
       == "AAAA", "both content versions coexist in the repo")
   }
@@ -229,41 +294,40 @@ class SinkSpec extends SparkSpec {
     Files.write(src.resolve(".hidden"), "skip".getBytes("UTF-8"))
     val repoD = Files.createTempDirectory("graft-dist-repo").toString
     val repoP = Files.createTempDirectory("graft-dist-repo2").toString
-    val n = Sink.snapshotDistributed(spark, src.toString, repoD)
-    assert(n == Sink.snapshot(spark, src.toString, repoP),
-      "both walkers must snapshot the same committed set")
+    val snapD = Sink.onTaskArm(Sink.snapshot(spark, src.toString, repoD, "1"))
+    val snapP = Sink.snapshot(spark, src.toString, repoP, "1")
+    assert(snapD.distributed && !snapP.distributed)
+    val n = snapD.files
+    assert(n == snapP.files,
+      "both arms must snapshot the same committed set")
     // manifests agree byte-for-byte: same files, same hashes, same order
     def manifest(repo: String) =
       new String(Files.readAllBytes(
-        java.nio.file.Paths.get(repo, "MANIFEST")), "UTF-8")
+        java.nio.file.Paths.get(repo, "snap-1", "MANIFEST")), "UTF-8")
     assert(manifest(repoD) == manifest(repoP))
-    assert(!new java.io.File(s"$repoD/.hidden").exists())
+    assert(!new java.io.File(s"$repoD/blobs/.hidden").exists())
     // cross-restore: pool-path restore from the distributed repo and
     // distributed restore from the pool repo both verify and agree
     val d1 = Files.createTempDirectory("graft-dist-d1").toString
     val d2 = Files.createTempDirectory("graft-dist-d2").toString
-    assert(Sink.restore(spark, repoD, d1) == n)
-    assert(Sink.restoreDistributed(spark, repoP, d2) == n)
+    assert(Sink.restore(spark, repoD, "1", d1).files == n)
+    assert(Sink.onTaskArm(Sink.restore(spark, repoP, "1", d2)).files == n)
     assert(spark.read.parquet(s"$d1/postings").collect().map(_.toSeq).toSet ==
       spark.read.parquet(s"$d2/postings").collect().map(_.toSeq).toSet)
     assert(new java.io.File(s"$d2/_DONE").exists())
     // executor-side verification refuses a corrupt blob loudly
-    def filesUnder(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(filesUnder)
-      else Seq(f)
-    val victim = filesUnder(new java.io.File(s"$repoD/postings"))
-      .filter(f => f.getName.endsWith(".parquet")).head
+    val victim = filesUnder(new java.io.File(s"$repoD/blobs/postings"))
+      .filter(f => f.getPath.contains(".parquet") &&
+        !f.getName.startsWith(".")).head
     val bytes = Files.readAllBytes(victim.toPath)
     bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0xff).toByte
     Files.deleteIfExists(
       victim.toPath.resolveSibling("." + victim.getName + ".crc"))
     Files.write(victim.toPath, bytes)
     val ex = intercept[Exception] {
-      Sink.restoreDistributed(spark, repoD,
-        Files.createTempDirectory("graft-dist-d3").toString)
+      Sink.onTaskArm(Sink.restore(spark, repoD, "1",
+        Files.createTempDirectory("graft-dist-d3").toString))
     }
-    def chain(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty else t.getMessage +: chain(t.getCause)
     assert(chain(ex).exists(m => m != null &&
       (m.contains("checksum mismatch") || m.contains("Checksum"))),
       s"corrupt blob must refuse with a checksum error, got: ${chain(ex)}")
@@ -309,17 +373,18 @@ class SinkSpec extends SparkSpec {
       "multi-host at the file floor distributes")
     assert(Sink.chooseDistributedCopy(2, 1L, bigBytes),
       "multi-host at the byte floor distributes")
-    // the wrappers on this local[n] (single-host) runtime: both pick
-    // the pool, and the round-trip verifies like the explicit arms
+    // snapshot/restore on this local[n] (single-host) runtime: both
+    // pick the pool, and the round-trip verifies like the task arm
     val src = Files.createTempDirectory("graft-auto-src")
     Tables.region(spark, sf).write.parquet(src.resolve("postings").toString)
     Files.write(src.resolve("_DONE"), "ok\n".getBytes("UTF-8"))
     val repo = Files.createTempDirectory("graft-auto-repo").toString
     val dest = Files.createTempDirectory("graft-auto-dest").toString
-    val (nSnap, distS) = Sink.snapshotAuto(spark, src.toString, repo)
-    val (nRest, distR) = Sink.restoreAuto(spark, repo, dest)
-    assert(nSnap == nRest && nSnap > 0)
-    assert(!distS && !distR, "single-host runtime must select the pool arm")
+    val snap = Sink.snapshot(spark, src.toString, repo, "1")
+    val rest = Sink.restore(spark, repo, "1", dest)
+    assert(snap.files == rest.files && snap.files > 0)
+    assert(!snap.distributed && !rest.distributed,
+      "single-host runtime must select the pool arm")
     assert(spark.read.parquet(s"$dest/postings").count() ==
       Tables.region(spark, sf).count())
   }
@@ -335,7 +400,7 @@ class SinkSpec extends SparkSpec {
     Files.write(legacy.resolve("snap-1/MANIFEST"),
       "0123456789abcdef0123456789abcdef 2 old.bin\n".getBytes("UTF-8"))
     val ex = intercept[IllegalArgumentException] {
-      Sink.snapshotIncremental(spark, src.toString, legacy.toString, "2")
+      Sink.snapshot(spark, src.toString, legacy.toString, "2")
     }
     assert(ex.getMessage.contains("LEGACY"),
       s"legacy layout must refuse loudly, got: ${ex.getMessage}")
@@ -344,30 +409,29 @@ class SinkSpec extends SparkSpec {
     // a marker-less FORMAT-2 repo (round-12 vintage) is adopted: the
     // blob shape adjudicates, the marker is written, snapshots proceed
     val repo = Files.createTempDirectory("graft-fmt-adopt")
-    Sink.snapshotIncremental(spark, src.toString, repo.toString, "1")
+    Sink.snapshot(spark, src.toString, repo.toString, "1")
     assert(Files.exists(repo.resolve("_FORMAT")),
       "first snapshot must pin the repo format")
     Files.delete(repo.resolve("_FORMAT")) // simulate a pre-marker repo
     Files.write(src.resolve("more.bin"), "delta".getBytes("UTF-8"))
-    val (t2, c2) =
-      Sink.snapshotIncremental(spark, src.toString, repo.toString, "2")
-    assert(t2 == 2 && c2 == 1, "adopted repo must keep reusing blobs")
+    val r2 = Sink.snapshot(spark, src.toString, repo.toString, "2")
+    assert(r2.files == 2 && r2.copied == 1, "adopted repo must keep reusing blobs")
     assert(Files.exists(repo.resolve("_FORMAT")), "adoption re-pins")
     // an unknown declared format refuses (snapshot AND restore);
     // out-of-band nio writes must drop the LocalFileSystem crc sidecar
     Files.deleteIfExists(repo.resolve("._FORMAT.crc"))
     Files.write(repo.resolve("_FORMAT"), "99\n".getBytes("UTF-8"))
     intercept[IllegalArgumentException] {
-      Sink.snapshotIncremental(spark, src.toString, repo.toString, "3")
+      Sink.snapshot(spark, src.toString, repo.toString, "3")
     }
     intercept[IllegalArgumentException] {
-      Sink.restoreSnapshot(spark, repo.toString, "1",
+      Sink.restore(spark, repo.toString, "1",
         Files.createTempDirectory("graft-fmt-d").toString)
     }
     // ...and restoring a healthy repo still works with the marker back
     Files.write(repo.resolve("_FORMAT"), "2\n".getBytes("UTF-8"))
     val d = Files.createTempDirectory("graft-fmt-d2")
-    assert(Sink.restoreSnapshot(spark, repo.toString, "2", d.toString) == 2)
+    assert(Sink.restore(spark, repo.toString, "2", d.toString).files == 2)
     assert(new String(Files.readAllBytes(d.resolve("data.bin")), "UTF-8")
       == "fresh")
   }
@@ -380,15 +444,14 @@ class SinkSpec extends SparkSpec {
     Files.write(repo.resolve("_WRITER"),
       s"${System.currentTimeMillis()}\n".getBytes("UTF-8"))
     val ex = intercept[IllegalStateException] {
-      Sink.snapshotIncremental(spark, src.toString, repo.toString, "1")
+      Sink.snapshot(spark, src.toString, repo.toString, "1")
     }
     assert(ex.getMessage.contains("single-writer"))
     // a CRASHED writer: timestamp and mtime both older than the grace
     Files.write(repo.resolve("_WRITER"), "12345\n".getBytes("UTF-8"))
     repo.resolve("_WRITER").toFile.setLastModified(12345L)
-    val (t, c) = Sink.snapshotIncremental(spark, src.toString,
-      repo.toString, "1")
-    assert(t == 1 && c == 1, "stale claim must be reclaimed")
+    val r = Sink.snapshot(spark, src.toString, repo.toString, "1")
+    assert(r.files == 1 && r.copied == 1, "stale claim must be reclaimed")
     assert(!Files.exists(repo.resolve("_WRITER")),
       "claim must be released after the snapshot")
     // reindex enforces the same discipline on its destination
@@ -566,4 +629,20 @@ class SinkSpec extends SparkSpec {
     // absolute paths are never mistaken for schemes
     Sink.aliasSwap(Scratch.dir("aliasplain"), 2)
   }
+}
+
+/** Local files under the `gated:` scheme with a hook on every open, so a
+  * spec can fail one copy of the snapshot/restore fan-out and hold the
+  * others on a latch. */
+class GatedFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("gated:///")
+  override def getScheme: String = "gated"
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    GatedFs.onOpen(f)
+    super.open(f, bufferSize)
+  }
+}
+
+object GatedFs {
+  @volatile var onOpen: Path => Unit = _ => ()
 }

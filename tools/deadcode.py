@@ -7,9 +7,10 @@ One identifier-count pass over every Scala file under `src/main`,
 `perfbench/src` and `src/test` (comments and string literals stripped,
 except the `${…}` and `$name` interpolations of an interpolated string,
 which are code).
-A public `def` declared in a class, object or trait body under
-`src/main` is reported when no non-test file names it outside its own
-declarations: no other `src/main` file, no `perfbench/src` file, and no
+A `def` declared in a class, object or trait body under `src/main`
+that is public or qualified-private (`private[graft]`, `protected[x]`:
+visible to a whole package, tests included) is reported when no
+non-test file names it outside its own declarations: no other `src/main` file, no `perfbench/src` file, and no
 other line of its own file. Overrides and `main` entry points are
 skipped, and so are names declared more than once in `src/main`
 (overloads, or one name in several objects), because a name count
@@ -137,15 +138,17 @@ def scala_files(top):
 
 
 def member_defs(code):
-    """(name, public) of each def whose innermost enclosing brace opens
-    a class, object or trait body."""
+    """(name, audited) of each def whose innermost enclosing brace opens
+    a class, object or trait body; a qualified `private[x]` or
+    `protected[x]` def is audited like a public one."""
     defs, stack = [], []
     for line in code.split("\n"):
         m = DEF.match(line)
         if m and (not stack or stack[-1]):
             mods = m.group(1)
             if "override" not in mods:
-                defs.append((m.group(2), not re.search(r"private|protected", mods)))
+                defs.append((m.group(2),
+                             not re.search(r"(?:private|protected)(?!\[)", mods)))
         for k, ch in enumerate(line):
             if ch == "{":
                 stack.append(bool(TEMPLATE.search(line[:k])))
