@@ -132,14 +132,6 @@ object BenchScale {
     m
   }
 
-  /** Replica expansion as ONE scan per table: crossJoin against a
-    * broadcast `range(scale)` replica index and compute the key
-    * offsets / de-correlation from the `k` COLUMN. The previous
-    * formulation unioned `scale` re-reads of the base table — a
-    * `scale`-branch plan whose analysis cost and scan count both grow
-    * with the replication factor, exactly the non-scalable shape this
-    * probe exists to catch (at 1000× it is a 1000-branch union).
-    * This one is constant-size: plan ∝ 1, scans ∝ 1, rows ∝ scale. */
   /** SPARK_GRAFT_TABLES (comma-separated) narrows which tables are
     * replicated — a focused probe of one family (e.g. the ANN decade:
     * embeddings only, ~0.6 GB at ×1000) must not pay the full-corpus
@@ -161,6 +153,14 @@ object BenchScale {
     s"$scale rev5$subset$mode"
   }
 
+  /** Replica expansion as ONE scan per table: crossJoin against a
+    * broadcast `range(scale)` replica index and compute the key
+    * offsets / de-correlation from the `k` COLUMN. The previous
+    * formulation unioned `scale` re-reads of the base table — a
+    * `scale`-branch plan whose analysis cost and scan count both grow
+    * with the replication factor, exactly the non-scalable shape this
+    * probe exists to catch (at 1000× it is a 1000-branch union).
+    * This one is constant-size: plan ∝ 1, scans ∝ 1, rows ∝ scale. */
   def replicate(spark: SparkSession, base: String, out: String,
                 scale: Int): Unit = {
     // rev bumps when the replicated table SET changes (rev2 added

@@ -6,7 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 
-/** Loop-based nearest-centroid kernels for IVF assignment/probing.
+/** Loop-based nearest-centroid kernels for IVF assignment/probing,
+  * and the driver-side cosine Lloyd's trainer that assigns through the
+  * same kernel ([[CentroidImpl.cosineLloyds]]).
   *
   * Why not the expression-tree form (one `struct(dot(v, lit(c)), -i)`
   * per centroid inside a `sort_array`)? That unrolls O(nlist·dim)
@@ -29,14 +31,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
   * by either path. */
 object CentroidImpl {
 
-  def nearest(v: ArrayData, nrm: Double, cents: Array[Array[Double]]): Int = {
+  def nearest(v: ArrayData, nrm: Double, cents: Array[Array[Double]]): Int =
     // one primitive copy up front: the row's vector arrives as
     // ArrayData (often a boxed GenericArrayData after the
     // float->double cast), and nlist*dim getDouble calls per row --
     // unbox + virtual dispatch each -- dominated the x1000 encode
     // pass (70 s of a 133 s phase); dim copies then a primitive loop
     // is ~nlist/1 cheaper on accessor count
-    val vd = v.toDoubleArray()
+    nearest(v.toDoubleArray(), nrm, cents)
+
+  /** The nearest-centroid argmax over a primitive vector. Training
+    * calls it with `nrm = 1.0` on unit vectors: `x / 1.0 == x`, so a
+    * training assignment ranks exactly like the raw dot product. */
+  def nearest(vd: Array[Double], nrm: Double, cents: Array[Array[Double]]): Int = {
     var best = 0
     var bestSim = Double.NegativeInfinity
     var c = 0
@@ -51,6 +58,56 @@ object CentroidImpl {
     }
     best
   }
+
+  /** Cosine Lloyd's over unit-normalized points — the one driver-side
+    * trainer of coarse centroids ([[graft.operators.Similarity
+    * .kmeansCentroids]], the IVFPQ trainer, [[graft.operators.AnnIndex
+    * .build]] below [[Centroids.RouteThreshold]] cells) and of the
+    * routing tops ([[CentroidImplRouting.routeFor]]). First-k init;
+    * each iteration assigns every point through [[nearest]] (sim desc,
+    * index asc), sums the members in point order and takes the
+    * [[unitMean]]. Deterministic for a deterministic input; the
+    * centroids are unit-length, so nearest-by-dot is nearest-by-cosine.
+    * Cost is points·k·dim per iteration on one driver thread, which is
+    * why cell counts at or above the routing threshold train through
+    * [[graft.operators.Similarity.kmeansDistributed]] instead. */
+  def cosineLloyds(points: Array[Array[Double]], k: Int,
+                   iters: Int): Array[Array[Double]] = {
+    // the same descriptive refusal kmeansDistributed raises for the
+    // identical condition — without it a small/empty corpus died in
+    // the assignment loop with a bare ArrayIndexOutOfBounds
+    require(points.length >= k,
+      s"k-means sample holds only ${points.length} rows for k=$k " +
+        "cells — corpus too small for this cell count")
+    val dim = points.head.length
+    var cents = points.take(k).map(_.clone())
+    var it = 0
+    while (it < iters) {
+      val cur = cents
+      val sums = Array.fill(k)(new Array[Double](dim))
+      val counts = new Array[Int](k)
+      points.foreach { v =>
+        val best = nearest(v, 1.0, cur)
+        var j = 0
+        while (j < dim) { sums(best)(j) += v(j); j += 1 }
+        counts(best) += 1
+      }
+      cents = Array.tabulate(k)(c => unitMean(sums(c), counts(c), cur(c)))
+      it += 1
+    }
+    cents
+  }
+
+  /** The cosine Lloyd's update of one cell: its members' sum
+    * renormalized to unit length. An empty cell, or one whose sum is
+    * the zero vector, keeps its centroid `prev`. */
+  def unitMean(sum: Array[Double], count: Long,
+               prev: Array[Double]): Array[Double] =
+    if (count == 0L) prev
+    else {
+      val n = math.sqrt(sum.map(x => x * x).sum)
+      if (n == 0.0) prev else sum.map(_ / n)
+    }
 
   /** The `n` best cell indices in (sim desc, index asc) order — the
     * query-side probe list. Insertion against a size-n buffer: a tie
@@ -116,60 +173,18 @@ final case class CentroidRouting(topCents: Array[Array[Double]],
 
 object CentroidImplRouting {
 
-  /** Deterministic routing tables for a centroid set: cosine k-means
-    * over the (already unit-normalized) centroids, first-nTop init,
-    * 10 iterations; every cell joins its nearest top (sim desc, idx
-    * asc — the shared tie-break). */
+  /** Deterministic routing tables for a centroid set: cosine Lloyd's
+    * ([[CentroidImpl.cosineLloyds]]) over the (already unit-normalized)
+    * centroids with k = nTop ≈ √nlist and 10 iterations, then one
+    * membership pass that joins every cell to its nearest RETURNED top
+    * (sim desc, idx asc — the shared tie-break), so "a centroid's
+    * group is its nearest top" holds for the shipped tables. */
   def routeFor(cents: Array[Array[Double]], beam: Int): CentroidRouting = {
     val nTop = math.max(1, math.round(math.sqrt(cents.length.toDouble)).toInt)
-    var tops = java.util.Arrays.copyOfRange(cents.asInstanceOf[Array[AnyRef]],
-      0, nTop).asInstanceOf[Array[Array[Double]]].map(_.clone())
-    val dim = cents.head.length
-    val assign = new Array[Int](cents.length)
-    def assignAll(): Unit = {
-      var c = 0
-      while (c < cents.length) {
-        var best = 0; var bestSim = Double.NegativeInfinity
-        var t = 0
-        while (t < nTop) {
-          var d = 0.0; var j = 0
-          while (j < dim) { d += cents(c)(j) * tops(t)(j); j += 1 }
-          if (d > bestSim) { bestSim = d; best = t }
-          t += 1
-        }
-        assign(c) = best
-        c += 1
-      }
-    }
-    var it = 0
-    while (it < 10) {
-      assignAll()
-      val sums = Array.fill(nTop)(new Array[Double](dim))
-      val counts = new Array[Int](nTop)
-      var c2 = 0
-      while (c2 < cents.length) {
-        val t = assign(c2)
-        var j = 0
-        while (j < dim) { sums(t)(j) += cents(c2)(j); j += 1 }
-        counts(t) += 1
-        c2 += 1
-      }
-      tops = Array.tabulate(nTop) { t =>
-        if (counts(t) == 0) tops(t)
-        else {
-          val m = sums(t)
-          val n = math.sqrt(m.map(x => x * x).sum)
-          if (n == 0.0) tops(t) else m.map(_ / n)
-        }
-      }
-      it += 1
-    }
-    // membership must reflect the RETURNED tops (the loop updates tops
-    // after its last assignment): one final pass keeps "a centroid's
-    // group is its nearest top" true for the shipped tables
-    assignAll()
+    val tops = CentroidImpl.cosineLloyds(cents, nTop, 10)
     val members = Array.fill(nTop)(Array.newBuilder[Int])
-    cents.indices.foreach(c => members(assign(c)) += c)
+    cents.indices.foreach(c =>
+      members(CentroidImpl.nearest(cents(c), 1.0, tops)) += c)
     CentroidRouting(tops, members.map(_.result()), beam)
   }
 }

@@ -238,15 +238,6 @@ object AnnIndex extends ArtifactGen.Tombstoned("AnnIndex",
       .select(col("vec_id"), col("label"), col("v"), col("nrm"),
         Similarity.cellOf(cents, col("v"), col("nrm")).as("cell"))
 
-  /** The ingest job: train once (one bounded sample collection feeds
-    * all three trainers), encode the corpus once per index family,
-    * persist everything. */
-  /** `nlistOverride` (> 0) pins the coarse cell count instead of
-    * [[nlistFor]] — the ROUTER-DESIGN PROBE hook (round-14 verdict
-    * task 3): the two-level-router decision needs candidates/query
-    * measured under a finer-than-√n cell layout on the same corpus,
-    * which only a build at a forced nlist can produce. Managed
-    * artifacts ([[ensure]]) never pass it. */
   /** Shared writer of the two cell-partitioned tables. span == 1:
     * the unchanged v7 shape — one hash shuffle on `cell` (one writer
     * task per cell, nlist row-group-sized files, the file-count
@@ -307,6 +298,16 @@ object AnnIndex extends ArtifactGen.Tombstoned("AnnIndex",
   private def recordsPerFile(rowBytes: Long): Long =
     math.max(1L, (256L << 20) / math.max(1L, rowBytes))
 
+  /** The ingest job: train once (one bounded sample collection feeds
+    * all three trainers), encode the corpus once per index family,
+    * persist everything.
+    *
+    * `nlistOverride` (> 0) pins the coarse cell count instead of
+    * [[nlistFor]] — the ROUTER-DESIGN PROBE hook (round-14 verdict
+    * task 3): the two-level-router decision needs candidates/query
+    * measured under a finer-than-√n cell layout on the same corpus,
+    * which only a build at a forced nlist can produce. Managed
+    * artifacts ([[ensure]]) never pass it. */
   def build(corpus: DataFrame, dir: String,
             nlistOverride: Int = -1, spanOverride: Int = -1): Loaded = {
     val spark = corpus.sparkSession
@@ -323,8 +324,10 @@ object AnnIndex extends ArtifactGen.Tombstoned("AnnIndex",
     // decides the coarse resolution. TWO training regimes, gated on
     // the same threshold as serving-side routing:
     //
-    //  - nlist < RouteThreshold (every oracle-gated corpus): the exact
-    //    sequential driver trainer on the bounded 64·nlist sample —
+    //  - nlist < RouteThreshold (every oracle-gated corpus): the one
+    //    exact driver Lloyd's ([[graft.functions.CentroidImpl
+    //    .cosineLloyds]], also behind kmeansCentroids, ivfPqTrain and
+    //    the routing tables) on the bounded 64·nlist sample —
     //    bit-identical to all prior rounds. The PQ/residual codebooks
     //    train on the fixed-size PREFIX of that sample, which is
     //    exactly normalizedSample(corpus, SampleSize) (the sample is
@@ -338,8 +341,8 @@ object AnnIndex extends ArtifactGen.Tombstoned("AnnIndex",
     //    Θ(nlist·dim): the centroid matrix itself, which load() holds
     //    anyway. The PQ/residual codebooks are M·Ksub entries
     //    regardless of corpus and keep training on the bounded
-    //    normalizedSample(corpus, SampleSize) — corpus-independent
-    //    cost, constant driver state.
+    //    normalizedSample(corpus, codebookSampleFor(ksub)) —
+    //    corpus-independent cost, constant driver state.
     val n = corpus.count()
     val nlist = if (nlistOverride > 0) nlistOverride else nlistFor(n)
     // dir-count bound for the cell-partitioned tables ([[GroupCap]]
@@ -351,7 +354,7 @@ object AnnIndex extends ArtifactGen.Tombstoned("AnnIndex",
     val (cents, cbSample) =
       if (!routed) {
         val sample = Similarity.normalizedSample(corpus, sampleSizeFor(nlist))
-        (Similarity.kmeansFromSample(sample, nlist, Iters),
+        (graft.functions.CentroidImpl.cosineLloyds(sample, nlist, Iters),
           sample.take(SampleSize))
       } else
         (Similarity.kmeansDistributed(corpus, n, nlist, Iters),

@@ -105,15 +105,6 @@ object Dedup {
         array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig"))
   }
 
-  /** D2 MinHash+LSH near-dup pairs: band the signature, bucket-join on
-    * (band index, band hash), verify candidates with exact Jaccard on
-    * the shingle sets. Returns pairs (id_a < id_b) with their Jaccard.
-    *
-    * bands×rows = numHashes; collision prob for similarity s is
-    * 1-(1-s^rows)^bands (the standard S-curve). Defaults target
-    * s ≳ 0.5. The banded self-join shuffles both sides identically, so
-    * Spark's ReuseExchange evaluates the signature plan once.
-    */
   /** (id, band, bucket): the banded-signature LSH index rows for
     * `docs` — the frame a production near-dedup service MAINTAINS as
     * its standing index (new batches append their rows after
@@ -146,6 +137,15 @@ object Dedup {
             v => v.cast("string"))), b))).as(Seq("band", "bucket")))
   }
 
+  /** D2 MinHash+LSH near-dup pairs: band the signature, bucket-join on
+    * (band index, band hash), verify candidates with exact Jaccard on
+    * the shingle sets. Returns pairs (id_a < id_b) with their Jaccard.
+    *
+    * bands×rows = numHashes; collision prob for similarity s is
+    * 1-(1-s^rows)^bands (the standard S-curve). Defaults target
+    * s ≳ 0.5. The banded self-join shuffles both sides identically, so
+    * Spark's ReuseExchange evaluates the signature plan once.
+    */
   def minhashPairs(docs: DataFrame, textCol: String = "text",
                    idCol: String = "doc_id", numHashes: Int = NumHashes,
                    bands: Int = Bands, threshold: Double = 0.5): DataFrame = {
@@ -498,11 +498,6 @@ object Dedup {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** D4 exact n-gram Jaccard pairs via inverted index: explode distinct
-    * shingles, self-join on shingle (this is the posting-list join —
-    * bounded by shingle frequency, and skew-resistant by dropping
-    * ultra-common shingles), count shared per pair, Jaccard from set
-    * sizes. SQL-expressible ⇒ serves as its own DuckDB oracle. */
   /** Shared capped posting-bucket candidate machinery of
     * [[jaccardPairs]] and [[containmentPairs]] (one implementation —
     * the two copies the round-13 review found could silently diverge
@@ -553,6 +548,11 @@ object Dedup {
       .agg(count(lit(1)).as("inter"))
   }
 
+  /** D4 exact n-gram Jaccard pairs via inverted index: explode distinct
+    * shingles, self-join on shingle (this is the posting-list join —
+    * bounded by shingle frequency, and skew-resistant by dropping
+    * ultra-common shingles), count shared per pair, Jaccard from set
+    * sizes. SQL-expressible ⇒ serves as its own DuckDB oracle. */
   def jaccardPairs(docs: DataFrame, textCol: String = "text",
                    idCol: String = "doc_id", n: Int = 3,
                    threshold: Double = 0.5,

@@ -65,8 +65,6 @@ object Denorm {
     case None => df
   }
 
-  /** Array-of-structs child collection: lineitems per order, the analog
-    * of the reference's links/annotations child arrays. */
   /** Pin the child aggregation's shuffle to the CONFIGURED shuffle
     * parallelism (guide §2.5): the exchange is byte-light after
     * compression but its reduce side does the expensive per-group work
@@ -83,6 +81,8 @@ object Denorm {
     df.repartition(df.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt, col("l_orderkey"))
 
+  /** Array-of-structs child collection: lineitems per order, the analog
+    * of the reference's links/annotations child arrays. */
   def itemsPerOrder(spark: SparkSession, dir: String,
                     keep: Option[DataFrame] = None): DataFrame =
     byOrderKey(pruneTo(Tables.lineitem(spark, dir), col("l_orderkey"), keep))

@@ -841,11 +841,6 @@ object Multimodal {
 
   case class MediaHash(media_id: Long, phash: Long)
 
-  /** Planted fixtures for the perceptual-hash contract: the SAME
-    * left-white/right-black picture at 4×4 and 8×8 (different bytes,
-    * equal aHash — the rescaled-copy case byte dedup misses) and its
-    * inversion (different aHash). Grid cells: white column halves beat
-    * the global mean → bits 0x3333 row-wise; inverted → 0xCCCC. */
   /** Left/right-half test picture (shared by fixtures and specs so the
     * planted image and the tested image cannot drift apart). */
   private[graft] def halfImage(w: Int, h: Int, leftWhite: Boolean,
@@ -855,6 +850,11 @@ object Multimodal {
       if (left == leftWhite) (255, 255, 255) else (0, 0, 0)
     }, topDown)
 
+  /** Planted fixtures for the perceptual-hash contract: the SAME
+    * left-white/right-black picture at 4×4 and 8×8 (different bytes,
+    * equal aHash — the rescaled-copy case byte dedup misses) and its
+    * inversion (different aHash). Grid cells: white column halves beat
+    * the global mean → bits 0x3333 row-wise; inverted → 0xCCCC. */
   def phashFixtures(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq((-11L, halfImage(4, 4, leftWhite = true)),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.CentroidImpl
 import graft.functions.expressions.dot_product
 
 /** Similarity search over an embedding column (`Array[Float]`) —
@@ -141,14 +142,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** k-means (Lloyd) on a bounded deterministic sample — the ingest-time
-    * centroid-training job for [[knnIvf]]. The sample (hash-ordered, so
-    * stable across runs and cluster sizes) is collected to the driver:
-    * centroid training is O(sample × k × iters) and the sample is
-    * bounded (default 1024 rows) regardless of corpus size, which is
-    * exactly how FAISS trains IVF coarse quantizers; only ASSIGNMENT
-    * touches the full corpus, and that stays distributed. Centroids are
-    * L2-normalized so nearest-by-dot equals nearest-by-cosine. */
   /** The bounded deterministic training sample every driver-side
     * trainer shares (k-means, PQ, IVFPQ): xxhash64 order makes it a
     * pseudo-random-but-reproducible subset, normalized row-wise. */
@@ -159,9 +152,18 @@ object Similarity {
       .select(col("v"), col("nrm")).collect()
       .map(r => r.getSeq[Double](0).map(_ / r.getDouble(1)).toArray)
 
+  /** k-means (Lloyd) on a bounded deterministic sample — the ingest-time
+    * centroid-training job for [[knnIvf]]. The sample (hash-ordered, so
+    * stable across runs and cluster sizes) is collected to the driver:
+    * centroid training is O(sample × k × iters) and the sample is
+    * bounded (default 1024 rows) regardless of corpus size, which is
+    * exactly how FAISS trains IVF coarse quantizers; only ASSIGNMENT
+    * touches the full corpus, and that stays distributed. Centroids are
+    * L2-normalized so nearest-by-dot equals nearest-by-cosine
+    * ([[graft.functions.CentroidImpl.cosineLloyds]]). */
   def kmeansCentroids(emb: DataFrame, k: Int, iters: Int = 10,
                       sampleSize: Int = 1024): Array[Array[Double]] =
-    kmeansFromSample(normalizedSample(emb, sampleSize), k, iters)
+    CentroidImpl.cosineLloyds(normalizedSample(emb, sampleSize), k, iters)
 
   /** Fixed-point scale for the distributed Lloyd's element sums — the
     * N6 per-label-centroid reproducibility pattern: quantize each
@@ -196,17 +198,19 @@ object Similarity {
     *    per point), then reduces fixed-point elementwise sums
     *    ([[LloydFixedPoint]], [[graft.functions.LongVecSum]]) in one
     *    groupBy(cell) — k ARRAY-valued rows per iteration, the raw
-    *    model matrix with no per-element Row overhead. Empty cells
-    *    keep their centroid; means re-normalize to unit length —
-    *    the same update rule as [[kmeansFromSample]].
+    *    model matrix with no per-element Row overhead. The update is
+    *    the driver loop's ([[graft.functions.CentroidImpl.unitMean]]):
+    *    means re-normalize to unit length, empty cells keep their
+    *    centroid.
     *
-    * Semantics: routed-assignment Lloyd's, like the round-12 driver
-    * trainer — approximate BY CONTRACT above RouteThreshold (the
-    * serving contracts are invariant to WHICH centroids training
-    * chose); below the threshold [[AnnIndex.build]] keeps the exact
-    * sequential driver path bit-for-bit, so every oracle-gated corpus
-    * is untouched. Deterministic end-to-end: content-keyed sampling,
-    * deterministic kernels, order-independent integer sums. */
+    * Semantics: routed-assignment Lloyd's — approximate BY CONTRACT
+    * above RouteThreshold (the serving contracts are invariant to
+    * WHICH centroids training chose); below the threshold
+    * [[AnnIndex.build]] trains with the exact driver loop
+    * ([[graft.functions.CentroidImpl.cosineLloyds]]), so every
+    * oracle-gated corpus is untouched. Deterministic end-to-end:
+    * content-keyed sampling, deterministic kernels, order-independent
+    * integer sums. */
   private[graft] def kmeansDistributed(emb: DataFrame, nTotal: Long,
                                            k: Int, iters: Int,
                                            perCell: Int = 64): Array[Array[Double]] = {
@@ -264,188 +268,12 @@ object Similarity {
           }
           counts(c) = r.getLong(2)
         }
-        cents = Array.tabulate(k) { c =>
-          if (counts(c) == 0L) cur(c) // empty cell keeps its centroid
-          else {
-            val m = sums(c)
-            val n = math.sqrt(m.map(x => x * x).sum)
-            if (n == 0.0) cur(c) else m.map(_ / n)
-          }
-        }
+        cents = Array.tabulate(k)(c =>
+          CentroidImpl.unitMean(sums(c), counts(c), cur(c)))
         it += 1
       }
       cents
     } finally { sampled.unpersist(false); () }
-  }
-
-  /** Lloyd's over the driver-side sample. Two regimes, gated on the
-    * SAME threshold as serving-side routing
-    * ([[graft.functions.Centroids.RouteThreshold]]):
-    *
-    *  - k < 128: the exact sequential loop — every oracle-gated
-    *    corpus trains here, bit-identical to all prior rounds.
-    *  - k ≥ 128 (√n-scaled cell counts): the assignment step routes
-    *    through a per-iteration two-level coarse quantizer
-    *    ([[graft.functions.CentroidImplRouting.routeFor]] retrained
-    *    from the CURRENT centroids — k points, milliseconds), cutting
-    *    per-point cost from k·dim to ~5·√k·dim dots, and the sample
-    *    scan fans out over a FIXED 64-chunk grid across driver cores
-    *    (chunk grid fixed — not cores-derived — and partial sums
-    *    merged in chunk order, so results are deterministic across
-    *    machines and re-runs). This is the training-side twin of the
-    *    routed encode pass: without it Lloyd's is a single-core
-    *    O(64·n·dim)-per-iteration wall (the r11 ×1000 probe measured
-    *    ann_index_build at 96× for 1000× rows vs the ~28× linear
-    *    band, dominated by this loop).
-    *
-    * Routed assignment during TRAINING is the standard hierarchical
-    * k-means approximation; the FINAL assignment/probing of real
-    * vectors still uses the shipped kernels on the returned centroids,
-    * so all serving contracts (candidates ⊆ probed, planted
-    * co-location) are unaffected by how training chose them. */
-  private[operators] def kmeansFromSample(sample: Array[Array[Double]], k: Int,
-                                          iters: Int): Array[Array[Double]] = {
-    // the same descriptive refusal kmeansDistributed raises for the
-    // identical condition — without it a small/empty corpus died in
-    // the assignment loop with a bare ArrayIndexOutOfBounds
-    require(sample.length >= k,
-      s"k-means sample holds only ${sample.length} rows for k=$k " +
-        "cells — corpus too small for this cell count")
-    val dim = sample.head.length
-    var cents = sample.take(k).map(_.clone())
-    val routed = k >= graft.functions.Centroids.RouteThreshold
-    val nChunks = 64 // fixed grid — determinism across machines
-    val pool =
-      if (!routed) null
-      else java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(Runtime.getRuntime.availableProcessors(), nChunks))
-    try {
-      var it = 0
-      while (it < iters) {
-        val cur = cents
-        val sums = Array.fill(k)(new Array[Double](dim))
-        val counts = new Array[Int](k)
-        if (!routed) {
-          sample.foreach { v =>
-            var best = 0; var bestDot = Double.NegativeInfinity
-            var c = 0
-            while (c < k) {
-              var d = 0.0; var j = 0
-              while (j < dim) { d += v(j) * cur(c)(j); j += 1 }
-              if (d > bestDot) { bestDot = d; best = c }
-              c += 1
-            }
-            var j = 0
-            while (j < dim) { sums(best)(j) += v(j); j += 1 }
-            counts(best) += 1
-          }
-        } else {
-          val route = graft.functions.CentroidImplRouting.routeFor(
-            cur, graft.functions.Centroids.routeBeamFor(cur.length))
-          val assign = new Array[Int](sample.length)
-          val step = (sample.length + nChunks - 1) / nChunks
-          val tasks = (0 until nChunks).map { chunk =>
-            pool.submit(new Runnable {
-              def run(): Unit = {
-                var i = chunk * step
-                val end = math.min(i + step, sample.length)
-                while (i < end) {
-                  assign(i) = nearestRoutedArr(sample(i), cur, route)
-                  i += 1
-                }
-              }
-            })
-          }
-          tasks.foreach(_.get())
-          // merge in sample order — same accumulation order as the
-          // sequential path, so only the ASSIGNMENT is approximate
-          var i = 0
-          while (i < sample.length) {
-            val best = assign(i)
-            val v = sample(i)
-            var j = 0
-            while (j < dim) { sums(best)(j) += v(j); j += 1 }
-            counts(best) += 1
-            i += 1
-          }
-        }
-        cents = Array.tabulate(k) { c =>
-          if (counts(c) == 0) cents(c) // empty cell keeps its centroid
-          else {
-            val m = sums(c)
-            val n = math.sqrt(m.map(x => x * x).sum)
-            if (n == 0.0) cents(c) else m.map(_ / n)
-          }
-        }
-        it += 1
-      }
-      cents
-    } finally if (pool != null) pool.shutdown()
-  }
-
-  /** Plain-`Array[Double]` twin of the routed 1-NN used ONLY inside
-    * Lloyd's training iterations (the serving kernels operate on
-    * Catalyst `ArrayData`; wrapping every sample point per iteration
-    * would box dim doubles per visit). Tie-breaks (sim desc, idx asc)
-    * like the shipped kernels; falls back to the flat scan when the
-    * beam's groups are all empty, like [[graft.functions.Centroids
-    * .nearestRouted]]. */
-  private def nearestRoutedArr(v: Array[Double], cents: Array[Array[Double]],
-      route: graft.functions.CentroidRouting): Int = {
-    val dim = v.length
-    val tops = route.topCents
-    val beam = math.min(route.beam, tops.length)
-    // top `beam` groups by (sim desc, idx asc)
-    val tIdx = new Array[Int](beam)
-    val tSim = new Array[Double](beam)
-    var filled = 0
-    var t = 0
-    while (t < tops.length) {
-      var d = 0.0; var j = 0
-      while (j < dim) { d += v(j) * tops(t)(j); j += 1 }
-      if (filled < beam) {
-        var pos = filled
-        while (pos > 0 && tSim(pos - 1) < d) {
-          tSim(pos) = tSim(pos - 1); tIdx(pos) = tIdx(pos - 1); pos -= 1
-        }
-        tSim(pos) = d; tIdx(pos) = t
-        filled += 1
-      } else if (d > tSim(beam - 1)) {
-        var pos = beam - 1
-        while (pos > 0 && tSim(pos - 1) < d) {
-          tSim(pos) = tSim(pos - 1); tIdx(pos) = tIdx(pos - 1); pos -= 1
-        }
-        tSim(pos) = d; tIdx(pos) = t
-      }
-      t += 1
-    }
-    var best = -1; var bestDot = Double.NegativeInfinity
-    var g = 0
-    while (g < filled) {
-      val members = route.members(tIdx(g))
-      var m = 0
-      while (m < members.length) {
-        val c = members(m)
-        val cc = cents(c)
-        var d = 0.0; var j = 0
-        while (j < dim) { d += v(j) * cc(j); j += 1 }
-        if (d > bestDot || (d == bestDot && c < best)) { bestDot = d; best = c }
-        m += 1
-      }
-      g += 1
-    }
-    if (best >= 0) best
-    else { // all beam groups memberless: exact flat fallback
-      var c = 0; best = 0; bestDot = Double.NegativeInfinity
-      while (c < cents.length) {
-        val cc = cents(c)
-        var d = 0.0; var j = 0
-        while (j < dim) { d += v(j) * cc(j); j += 1 }
-        if (d > bestDot) { bestDot = d; best = c }
-        c += 1
-      }
-      best
-    }
   }
 
   /** Nearest-centroid cell id by (cosine desc, centroid index asc) —
@@ -672,42 +500,6 @@ object Similarity {
     topKPerQuery(scored, emb.select(col("vec_id"), col("label")), k)
   }
 
-  /** COMPRESSED-DOMAIN IVF serving with exact rerank — the FAISS
-    * IVFPQ+refine composition ([[graft.operators.AnnIndex.search]]
-    * dispatches here at routing-active cell counts; round-13 verdict
-    * task 1). IVF-FLAT serving holds recall by scaling nprobe ≈
-    * √nlist, but then scans nprobe·n/nlist FULL vectors per query —
-    * candidate work ≈ n^(3/4) of 8·dim-byte rows, the one-level
-    * router's asymptote at the recall bar. Here the probed cells are
-    * scanned in the COMPRESSED domain instead (the persisted
-    * `ivfpq_codes` table: m 1-byte-range codes + id per row, ~64×
-    * narrower than the flat rows at dim 64), ranked by ADC (exact
-    * q·centroid bias + residual LUT sums, the Jégou 2011 §V scoring
-    * the n9 contract pins), and only the top `rerank` shortlist per
-    * query fetches full-precision rows for EXACT cosine scoring — so
-    * the returned scores are identical in kind to the flat path's
-    * (the estimate is WHICH candidates, never their scores), and at
-    * `rerank` ≥ the candidate count the result is IDENTICAL to
-    * IVF-flat at the same nprobe (same probed cells via the same
-    * bit-exact host kernel, same exact scores, same tie-breaks —
-    * pinned in SimilaritySpec and the n14 oracle row).
-    *
-    * Spark shape: per-query driver state is Θ(nprobe + m·ksub)
-    * (probed cells, their biases, the ADC LUTs — model-sized); the
-    * probed-cell union is applied to BOTH scans as a STATIC literal
-    * partition filter (guaranteed file pruning — the cell equi-join
-    * alone would leave pruning to the DPP heuristic), while the
-    * broadcast (query, probed cell) rows restrict each row to the
-    * queries that probed its cell; the shortlist is the bounded
-    * [[graft.functions.TopKByScore]] heap (map-side partials, 16·R
-    * bytes per query through the shuffle); the rerank fetch
-    * broadcasts ≤ |queries|·R ids against the probed cells of the
-    * full-precision table (within-cell id-sorted since layout v7, so
-    * row-group stats make the id join skip-friendly). Candidate
-    * bytes/query: flat ≈ nprobe·(n/nlist)·(8·dim+20); compressed ≈
-    * nprobe·(n/nlist)·(4m+8) + R·(8·dim+20) — ≥8× down at dim 64
-    * whenever R ≪ candidates (the recall probe's enforced
-    * bytes-ratio gate). */
   /** Default exact-rerank shortlist depth — ONE definition shared by
     * the serving path and the recall probe's bytes ledger (the SQ8
     * single-sourcing lesson: two inlined copies let one drift
@@ -751,7 +543,44 @@ object Similarity {
       math.min(candidates / 32L, (Int.MaxValue / 4).toLong).toInt)
   }
 
-  /** `span` > 1 marks the [[AnnIndex.GroupCap]]-bounded grouped
+  /** COMPRESSED-DOMAIN IVF serving with exact rerank — the FAISS
+    * IVFPQ+refine composition ([[graft.operators.AnnIndex.search]]
+    * dispatches here at routing-active cell counts; round-13 verdict
+    * task 1). IVF-FLAT serving holds recall by scaling nprobe ≈
+    * √nlist, but then scans nprobe·n/nlist FULL vectors per query —
+    * candidate work ≈ n^(3/4) of 8·dim-byte rows, the one-level
+    * router's asymptote at the recall bar. Here the probed cells are
+    * scanned in the COMPRESSED domain instead (the persisted
+    * `ivfpq_codes` table: m 1-byte-range codes + id per row, ~64×
+    * narrower than the flat rows at dim 64), ranked by ADC (exact
+    * q·centroid bias + residual LUT sums, the Jégou 2011 §V scoring
+    * the n9 contract pins), and only the top `rerank` shortlist per
+    * query fetches full-precision rows for EXACT cosine scoring — so
+    * the returned scores are identical in kind to the flat path's
+    * (the estimate is WHICH candidates, never their scores), and at
+    * `rerank` ≥ the candidate count the result is IDENTICAL to
+    * IVF-flat at the same nprobe (same probed cells via the same
+    * bit-exact host kernel, same exact scores, same tie-breaks —
+    * pinned in SimilaritySpec and the n14 oracle row).
+    *
+    * Spark shape: per-query driver state is Θ(nprobe + m·ksub)
+    * (probed cells, their biases, the ADC LUTs — model-sized); the
+    * probed-cell union is applied to BOTH scans as a STATIC literal
+    * partition filter (guaranteed file pruning — the cell equi-join
+    * alone would leave pruning to the DPP heuristic), while the
+    * broadcast (query, probed cell) rows restrict each row to the
+    * queries that probed its cell; the shortlist is the bounded
+    * [[graft.functions.TopKByScore]] heap (map-side partials, 16·R
+    * bytes per query through the shuffle); the rerank fetch
+    * broadcasts ≤ |queries|·R ids against the probed cells of the
+    * full-precision table (within-cell id-sorted since layout v7, so
+    * row-group stats make the id join skip-friendly). Candidate
+    * bytes/query: flat ≈ nprobe·(n/nlist)·(8·dim+20); compressed ≈
+    * nprobe·(n/nlist)·(4m+8) + R·(8·dim+20) — ≥8× down at dim 64
+    * whenever R ≪ candidates (the recall probe's enforced
+    * bytes-ratio gate).
+    *
+    * `span` > 1 marks the [[AnnIndex.GroupCap]]-bounded grouped
     * layout (cell file-groups — `cgrp` is the partition column, cell
     * a data column): the static literal prune then lands on BOTH —
     * cgrp for partition-dir pruning (≤ nprobe dirs survive), cell
@@ -1105,29 +934,6 @@ object Similarity {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** N5: int8 scalar quantization of an embedding column (the FAISS
-    * SQ8 shape) — each vector rescales to its own max-magnitude so
-    * codes use the full [-127,127] range; storage drops 4× and
-    * distance kernels run on bytes. Row-local projection: quantization
-    * is scan-side at any scale.
-    *
-    * Every arithmetic step is plain IEEE-double ops (`floor(x+0.5)`,
-    * never `round`) so the DuckDB oracle replays it bit-for-bit —
-    * half-way cases round identically by construction, where the two
-    * engines' `round()` builtins disagree (HALF_UP vs half-even).
-    * The emitted `ok` column is the reconstruction contract: max
-    * |xᵢ − qᵢ·scale| ≤ scale/2 — the bound scalar quantization
-    * promises; a broken scale or rounding step violates it. */
-  /** N6: per-label centroids — the class means a clustering /
-    * classification / retrieval-eval pipeline reads off an embedding
-    * corpus. Floating-point addition is not associative, so a naive
-    * `avg` over partitions is not bitwise-reproducible across cluster
-    * sizes or runs; here each element first quantizes to integer
-    * micro-units (row-local, deterministic) and the aggregation is an
-    * exact BIGINT sum — the distributed mean becomes order-independent
-    * by construction (the fixed-point reproducibility pattern). Two
-    * shuffles: (label, dim) partial sums, then per-label array
-    * assembly; dims explode 64× but carry 3 longs each. */
   /** N8 training: product-quantization codebooks (Jégou et al. 2011,
     * "Product quantization for nearest neighbor search") — the vector
     * splits into `m` subvectors and each subspace gets its own
@@ -1142,82 +948,41 @@ object Similarity {
               sampleSize: Int = 1024): Array[Array[Array[Double]]] =
     pqTrainFromSample(normalizedSample(emb, sampleSize), m, ksub, iters)
 
-  /** Subspace trainings are INDEPENDENT (each k-means sees only its
-    * own dim/m slice), so they fan out over driver threads — one per
-    * subspace, results written to fixed slots, so the output is
-    * bit-identical to the sequential loop regardless of scheduling.
-    * Matters since the 8-bit routing-active codebooks
-    * ([[graft.operators.AnnIndex.ksubFor]]): 16 sequential trainings
-    * at ksub 256 over the 10k sample measured ~44 s of the ×1000
-    * build — pure single-core driver time on a 32-core box. */
-  private def trainSubspacesPar(m: Int)(
-      f: Int => Array[Array[Double]]): Array[Array[Array[Double]]] = {
-    val out = new Array[Array[Array[Double]]](m)
-    // failures captured per slot and RETHROWN after join — a raw
-    // thread's uncaught exception would otherwise leave a null slot
-    // and surface later as an unrelated NPE in the codebook
-    // persistence (or worse, a custom handler could let a corrupt
-    // artifact persist); Array.tabulate propagated directly and so
-    // must this
-    val errs = new Array[Throwable](m)
-    val threads = (0 until m).map { j =>
-      new Thread(() => {
-        try out(j) = f(j)
-        catch { case t: Throwable => errs(j) = t }
-      }, s"graft-pq-train-$j")
-    }
-    threads.foreach(_.start())
-    threads.foreach(_.join())
-    errs.find(_ != null).foreach(t =>
-      throw new IllegalStateException("subspace codebook training failed", t))
-    out
-  }
-
+  /** The m subspace trainings of [[pqTrain]] and [[residualCodebooks]].
+    * They are INDEPENDENT (each k-means sees only its own dim/m slice),
+    * so they run concurrently through [[Par.run]] — one task per
+    * subspace, each writing its own slot, so the output is
+    * bit-identical to the sequential loop. Matters since the 8-bit
+    * routing-active codebooks ([[graft.operators.AnnIndex.ksubFor]]):
+    * 16 sequential trainings at ksub 256 over the 10k sample measured
+    * ~44 s of the ×1000 build — pure single-core driver time on a
+    * 32-core box. */
   private[operators] def pqTrainFromSample(sample: Array[Array[Double]],
                                            m: Int, ksub: Int,
                                            iters: Int): Array[Array[Array[Double]]] = {
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim must split into $m subspaces")
     val ds = dim / m
-    trainSubspacesPar(m) { j =>
-      l2Kmeans(sample.map(_.slice(j * ds, (j + 1) * ds)), ksub, iters)
-    }
+    val out = new Array[Array[Array[Double]]](m)
+    Par.run((0 until m).map(j => () =>
+      out(j) = l2Kmeans(sample.map(_.slice(j * ds, (j + 1) * ds)), ksub, iters)): _*)
+    out
   }
 
-  /** Residual PQ codebooks for IVFPQ: each subspace trains on
-    * r = v̂ − centroid(cell(v̂)) over the shared bounded sample —
-    * extracted from [[ivfPqContract]] so the [[AnnIndex]] ingest job
-    * and the in-query trainer are the same code. */
+  /** Residual PQ codebooks for IVFPQ: [[pqTrainFromSample]] over
+    * r = v̂ − centroid(cell(v̂)) of the shared bounded sample, the cell
+    * being the exact nearest centroid — extracted from
+    * [[ivfPqContract]] so the [[AnnIndex]] ingest job and the in-query
+    * trainer are the same code. */
   private[operators] def residualCodebooks(sample: Array[Array[Double]],
                                            cents: Array[Array[Double]],
                                            m: Int, ksub: Int,
                                            iters: Int): Array[Array[Array[Double]]] = {
-    val dim = sample.head.length
-    require(dim % m == 0, s"dim $dim must split into $m subspaces")
-    val ds = dim / m
-    // argmax loop ≡ the old sortBy((-s, i)).head: max dot, lowest
-    // index on ties (strict > keeps the first), dots summed in the
-    // same element order — bit-identical cells without the per-point
-    // tuple/sort allocation storm at nlist 1414 × a 10k sample
-    def cellOfVec(vhat: Array[Double]): Int = {
-      var best = 0
-      var bestS = Double.NegativeInfinity
-      var c = 0
-      while (c < cents.length) {
-        var s = 0.0; var i = 0
-        while (i < vhat.length) { s += cents(c)(i) * vhat(i); i += 1 }
-        if (s > bestS) { bestS = s; best = c }
-        c += 1
-      }
-      best
-    }
     val residuals = sample.map { vhat =>
-      val c = cents(cellOfVec(vhat))
+      val c = cents(CentroidImpl.nearest(vhat, 1.0, cents))
       vhat.zip(c).map { case (a, b) => a - b }
     }
-    trainSubspacesPar(m) { j =>
-      l2Kmeans(residuals.map(_.slice(j * ds, (j + 1) * ds)), ksub, iters)
-    }
+    pqTrainFromSample(residuals, m, ksub, iters)
   }
 
   /** Plain L2 k-means over a driver-side sample (the subspace trainer
@@ -1427,7 +1192,7 @@ object Similarity {
                  ksub: Int = 16, iters: Int = 10,
                  sampleSize: Int = 1024): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
     val sample = normalizedSample(emb, sampleSize)
-    val cents = kmeansFromSample(sample, nlist, iters)
+    val cents = CentroidImpl.cosineLloyds(sample, nlist, iters)
     (cents, residualCodebooks(sample, cents, m, ksub, iters))
   }
 
@@ -1609,6 +1374,16 @@ object Similarity {
         coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
   }
 
+  /** N6: per-label centroids — the class means a clustering /
+    * classification / retrieval-eval pipeline reads off an embedding
+    * corpus. Floating-point addition is not associative, so a naive
+    * `avg` over partitions is not bitwise-reproducible across cluster
+    * sizes or runs; here each element first quantizes to integer
+    * micro-units (row-local, deterministic) and the aggregation is an
+    * exact BIGINT sum — the distributed mean becomes order-independent
+    * by construction (the fixed-point reproducibility pattern). Two
+    * shuffles: (label, dim) partial sums, then per-label array
+    * assembly; dims explode 64× but carry 3 longs each. */
   def labelCentroids(emb: DataFrame): DataFrame = {
     val u = emb
       .select(col("label"),
@@ -1627,12 +1402,6 @@ object Similarity {
             .cast("long").cast("string"))).as("centroid_u6"))
   }
 
-  /** (vec_id, qd, qscale, nrm): int8 codes widened back to doubles
-    * (so the codegen'd [[dot]] primitive scores them), the per-vector
-    * dequantization scale, and the EXACT norm — the stored layout of a
-    * quantized index (codes + scale + norm ≈ d + 16 bytes/vector).
-    * Zero vectors are excluded (cosine undefined, same as
-    * [[withNorm]]). */
   /** The SQ8 encode kernel — ONE encoding of the rounding/scale
     * arithmetic (`floor(x / (amax/127) + 0.5)`) shared by
     * [[quantizeInt8]] (the N5 reconstruction-contract shape) and
@@ -1643,6 +1412,12 @@ object Similarity {
   private def sq8Code(x: Column, amax: Column): Column =
     floor(x / (amax / 127.0d) + 0.5d)
 
+  /** (vec_id, qd, qscale, nrm): int8 codes widened back to doubles
+    * (so the codegen'd [[dot]] primitive scores them), the per-vector
+    * dequantization scale, and the EXACT norm — the stored layout of a
+    * quantized index (codes + scale + norm ≈ d + 16 bytes/vector).
+    * Zero vectors are excluded (cosine undefined, same as
+    * [[withNorm]]). */
   private[graft] def quantizedIndex(emb: DataFrame): DataFrame = {
     val staged = withNorm(emb)
       .select(col("vec_id"), col("v"), col("nrm"),
@@ -1756,6 +1531,19 @@ object Similarity {
           x => x).as("ranked_desc"))
   }
 
+  /** N5: int8 scalar quantization of an embedding column (the FAISS
+    * SQ8 shape) — each vector rescales to its own max-magnitude so
+    * codes use the full [-127,127] range; storage drops 4× and
+    * distance kernels run on bytes. Row-local projection: quantization
+    * is scan-side at any scale.
+    *
+    * Every arithmetic step is plain IEEE-double ops (`floor(x+0.5)`,
+    * never `round`) so the DuckDB oracle replays it bit-for-bit —
+    * half-way cases round identically by construction, where the two
+    * engines' `round()` builtins disagree (HALF_UP vs half-even).
+    * The emitted `ok` column is the reconstruction contract: max
+    * |xᵢ − qᵢ·scale| ≤ scale/2 — the bound scalar quantization
+    * promises; a broken scale or rounding step violates it. */
   def quantizeInt8(emb: DataFrame): DataFrame = {
     // amax and the codes each materialize behind a projection boundary
     // (referenced several times downstream, incl. inside lambdas), so

@@ -153,6 +153,11 @@ object TextStats {
           .otherwise(lit(0.0)))
   }
 
+  /** The [[hashSplit]] bucket as a standalone row-local Column (fusable
+    * into a scan-side filter). */
+  def splitBucket(id: Column): Column =
+    conv(substring(md5(id.cast("string")), 1, 8), 16, 10).cast("long") % 100
+
   /** X8: deterministic train/val split — hash the id, never
     * `sample()`. Sampling depends on partitioning, seed plumbing and
     * engine version; a content-hash bucket is reproducible across
@@ -160,11 +165,6 @@ object TextStats {
     * SQL), and the assignment is stable under corpus growth: a
     * document keeps its split forever, so eval sets never silently
     * leak into training after an append. Pure projection — no shuffle. */
-  /** The [[hashSplit]] bucket as a standalone row-local Column (fusable
-    * into a scan-side filter). */
-  def splitBucket(id: Column): Column =
-    conv(substring(md5(id.cast("string")), 1, 8), 16, 10).cast("long") % 100
-
   def hashSplit(docs: DataFrame, valPct: Int = 10,
                 idCol: String = "doc_id"): DataFrame = {
     val bucket = splitBucket(col(idCol))

@@ -8,25 +8,11 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Ingestion-side surface of the reference (SURVEY.md §2.1):
-  *
-  *  - S4/S5 index DDL: create-with-schema, existence check, conditional
-  *    drop (`src/main.py:12-35`) → Spark catalog operations;
-  *  - S6 bulk batch sink with per-document ids (`src/main.py:137-150`)
-  *    → id-hash-partitioned parquet write with bounded file sizes (the
-  *    3-shard/_id-routing analog: `repartition(n, id)` =
-  *    `hash(_id) % n`);
-  *  - S7 sink ack/error check (`src/main.py:147-148`) → row-count
-  *    assertion after write;
-  *  - S2 server-side cursor scan (`src/main.py:41,133`) →
-  *    `toLocalIterator` (one partition in flight, the driver never
-  *    materializes the full result);
-  *  - A5 ingest counters (`src/main.py:128-156`) → `LongAccumulator`
-  *    filled executor-side during the write.
-  */
 /** Hadoop `Configuration` is not `java.io.Serializable`; the task arm
   * of the snapshot/restore fan-out ships it to executors through the
   * standard Writable round-trip (`write`/`readFields` inside Java
@@ -46,6 +32,22 @@ private[sources] class SerializableHadoopConf(
   }
 }
 
+/** Ingestion-side surface of the reference (SURVEY.md §2.1):
+  *
+  *  - S4/S5 index DDL: create-with-schema, existence check, conditional
+  *    drop (`src/main.py:12-35`) → Spark catalog operations;
+  *  - S6 bulk batch sink with per-document ids (`src/main.py:137-150`)
+  *    → id-hash-partitioned parquet write with bounded file sizes (the
+  *    3-shard/_id-routing analog: `repartition(n, id)` =
+  *    `hash(_id) % n`);
+  *  - S7 sink ack/error check (`src/main.py:147-148`) → row-count
+  *    assertion after write;
+  *  - S2 server-side cursor scan (`src/main.py:41,133`) →
+  *    `toLocalIterator` (one partition in flight, the driver never
+  *    materializes the full result);
+  *  - A5 ingest counters (`src/main.py:128-156`) → `LongAccumulator`
+  *    filled executor-side during the write.
+  */
 object Sink {
 
   /** S4: register a table over a parquet path with an explicit schema
@@ -506,17 +508,42 @@ object Sink {
     * into the repository after `snapshot` released its `_WRITER` claim.
     * An interrupt of the caller drops the queued items, interrupts the
     * running ones, still awaits them, and then throws
-    * InterruptedException with the interrupt flag restored. On the task
-    * arm a failed task fails the job and Spark kills the job's other
-    * tasks. */
+    * InterruptedException with the interrupt flag restored. The task
+    * arm keeps the same guarantee: a failed task fails the job, Spark
+    * kills the job's other tasks with interrupt-on-cancel, and the job's
+    * failure is rethrown only once every task it started has ended
+    * ([[JobTasks]]). An interrupt of the caller cancels the job the
+    * same way. */
   private def fanOut[A: ClassTag, B: ClassTag](spark: SparkSession,
       items: Seq[A], distributed: Boolean)(f: (Configuration, A) => B): Seq[B] =
     if (items.isEmpty) Seq.empty
     else if (distributed) {
       val sc = spark.sparkContext
       val bc = sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
-      sc.parallelize(items, math.min(items.length, sc.defaultParallelism * 2))
-        .map(a => f(bc.value.value, a)).collect().toSeq
+      val rdd = sc.parallelize(items, math.min(items.length, sc.defaultParallelism * 2))
+        .map(a => f(bc.value.value, a))
+      val tag = s"graft-copy-${java.util.UUID.randomUUID()}"
+      val tasks = new JobTasks(tag)
+      val interruptOnCancel = sc.getLocalProperty(JobTasks.InterruptOnCancel)
+      sc.addSparkListener(tasks)
+      sc.addJobTag(tag)
+      sc.setInterruptOnCancel(true)
+      try rdd.collect().toSeq
+      catch {
+        case e: Throwable =>
+          // a stopped context ran no job (or has no tasks left to wait
+          // for); otherwise cancel, a no-op once the job has failed that
+          // stops it when the caller was interrupted while it ran
+          if (!sc.isStopped) {
+            sc.cancelJobsWithTag(tag, "copy fan-out failed")
+            tasks.awaitEnded()
+          }
+          throw e
+      } finally {
+        sc.setLocalProperty(JobTasks.InterruptOnCancel, interruptOnCancel)
+        sc.removeJobTag(tag)
+        sc.removeSparkListener(tasks)
+      }
     } else {
       val conf = spark.sparkContext.hadoopConfiguration
       val pool = Executors.newFixedThreadPool(math.min(CopyThreads, items.length))
@@ -547,6 +574,53 @@ object Sink {
       }
       got.collect { case Right(b) => b }
     }
+
+  /** Tracks the tasks of the one job tagged `tag`. [[awaitEnded]]
+    * returns once that job has ended and every task it started has
+    * ended too: Spark fails a job at its first failed task and kills
+    * the rest without waiting for them. Every task the job launched
+    * posts its start before the job's end (both go through the
+    * scheduler's one event loop, and a failed job launches no more
+    * tasks), so the count is complete when the end arrives. */
+  private final class JobTasks(tag: String) extends SparkListener {
+    private var jobId = -1
+    private var stages = Set.empty[Int]
+    private var running = 0
+    private var ended = false
+
+    override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
+      if (Option(js.properties).flatMap(p => Option(p.getProperty(JobTasks.Tags)))
+          .exists(_.split(",").contains(tag))) {
+        jobId = js.jobId
+        stages = js.stageIds.toSet
+      }
+    }
+    override def onTaskStart(ts: SparkListenerTaskStart): Unit = synchronized {
+      if (stages(ts.stageId)) running += 1
+    }
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = synchronized {
+      if (stages(te.stageId)) { running -= 1; notifyAll() }
+    }
+    override def onJobEnd(je: SparkListenerJobEnd): Unit = synchronized {
+      if (je.jobId == jobId) { ended = true; notifyAll() }
+    }
+
+    /** Waits through interrupts (the job is already cancelled) and
+      * restores the caller's interrupt flag before returning. */
+    def awaitEnded(): Unit = synchronized {
+      var interrupted = Thread.interrupted()
+      while (!ended || running > 0)
+        try wait() catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
+  }
+
+  private object JobTasks {
+    // the local-property keys behind SparkContext.setInterruptOnCancel
+    // and addJobTag
+    val InterruptOnCancel = "spark.job.interruptOnCancel"
+    val Tags = "spark.job.tags"
+  }
 
   /** SINGLE-WRITER enforcement for a mutating directory (snapshot
     * repository, [[reindex]] destination) — the artifact families'

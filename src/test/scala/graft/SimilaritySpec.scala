@@ -91,9 +91,10 @@ class SimilaritySpec extends SparkSpec {
 
   test("routed-regime kmeans (k >= RouteThreshold) is deterministic, " +
        "unit-norm, and clusters a planted structure") {
-    // synthetic corpus with enough distinct directions that k = 128
-    // crosses Centroids.RouteThreshold — exercises the per-iteration
-    // routed assignment + fixed-chunk parallel scan path
+    // synthetic corpus with enough distinct directions for k = 128 =
+    // Centroids.RouteThreshold cells. AnnIndex.build trains this many
+    // cells with kmeansDistributed; kmeansCentroids runs the exact
+    // driver loop at any k, and this pins that loop at k = 128
     val k = graft.functions.Centroids.RouteThreshold
     val rows = (0 until 4096).map { i =>
       val v = Array.tabulate(16)(j =>
@@ -125,6 +126,66 @@ class SimilaritySpec extends SparkSpec {
         count(lit(1)).as("n"))
       .collect()
     assert(cells.length == 16)
+  }
+
+  /** SHA-256 over each row's length and its values' bits, rows in order. */
+  private def digest(rows: Iterator[Array[Long]]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val buf = java.nio.ByteBuffer.allocate(8)
+    def put(x: Long): Unit = { buf.clear(); buf.putLong(x); md.update(buf.array()) }
+    rows.foreach { r => put(r.length.toLong); r.foreach(put) }
+    md.digest().map(b => f"$b%02x").mkString
+  }
+  private def bits(m: Array[Array[Double]]): Iterator[Array[Long]] =
+    m.iterator.map(_.map(java.lang.Double.doubleToLongBits))
+
+  test("ANN trainers reproduce their pinned outputs bit for bit") {
+    // digests of the trainers' outputs, recorded before the cosine
+    // Lloyd's loop, the nearest-centroid kernel and the subspace
+    // fan-out were shared: a reordered sum or update, or an assignment
+    // that flips, moves a digest
+    val emb = Tables.embeddings(spark, sf)
+    val got = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    got("kmeansCentroids k=16") = digest(bits(Similarity.kmeansCentroids(emb, 16)))
+    // CodegenSpec's seeded 200 centroids
+    val rnd = new scala.util.Random(11)
+    val cents200 = Array.fill(200) {
+      val v = Array.fill(16)(rnd.nextGaussian())
+      val n = math.sqrt(v.map(x => x * x).sum)
+      v.map(_ / n)
+    }
+    val route = graft.functions.CentroidImplRouting.routeFor(
+      cents200, graft.functions.Centroids.RouteBeam)
+    got("routeFor tops") = digest(bits(route.topCents))
+    got("routeFor members") = digest(route.members.iterator.map(_.map(_.toLong)))
+    Seq(16, 256).foreach { ks =>
+      got(s"pqTrain ksub=$ks") =
+        digest(Similarity.pqTrain(emb, ksub = ks).iterator.flatMap(bits))
+      // the coarse half of ivfPqTrain is kmeansCentroids(emb, 16)
+      got(s"ivfPqTrain residual ksub=$ks") =
+        digest(Similarity.ivfPqTrain(emb, ksub = ks)._2.iterator.flatMap(bits))
+    }
+    got("kmeansDistributed k=128 iters=3") = digest(bits(
+      Similarity.kmeansDistributed(emb, emb.count(), 128, iters = 3)))
+    val pinned = Map(
+      "kmeansCentroids k=16" ->
+        "58d928ac48c7ba23e514126cfc555c2541178eabbdf27dc0c697dd74d953af77",
+      "routeFor tops" ->
+        "50147147db552bacceba404e683fb91a523e1fe7224848a9687dbaada2009118",
+      "routeFor members" ->
+        "71dd6dba93149cb011c86d8f2b1735debfd052e1adf934284e2642b1989cb789",
+      "pqTrain ksub=16" ->
+        "f56c75cae9bef7c6ae72db91138d622c0047bd142af8cc983185e6ade1c7810f",
+      "ivfPqTrain residual ksub=16" ->
+        "bdc29d853a49c0b14611a6b234ebe9f42015e0ea8bb0262dc0e7ba2d2f58c7a3",
+      "pqTrain ksub=256" ->
+        "205fffea1b04975fc876ddc8bbad6bed3520c226fc9bd76b419c739255463ecc",
+      "ivfPqTrain residual ksub=256" ->
+        "28accd8afcebafb5cfa3e96db8fb7ea70a42fd3ab4ba546f99e6affb2b2369b0",
+      "kmeansDistributed k=128 iters=3" ->
+        "74d7dd007810bc7713bdb2f15bf8f296283a1464e7681fa165319eb8520eb2fd")
+    got.foreach { case (k, d) => info(s"$k -> $d") }
+    got.foreach { case (k, d) => assert(d == pinned(k), k) }
   }
 
   private def neighborList(df: org.apache.spark.sql.DataFrame) =

@@ -152,6 +152,58 @@ class SinkSpec extends SparkSpec {
     } finally GatedFs.onOpen = _ => ()
   }
 
+  test("a failed task-arm copy is rethrown only after every other task ended") {
+    // the same hazard on the task arm: the copies run as one Spark job.
+    // The first file in manifest order fails once a held copy is inside
+    // the filesystem; held copies block on a latch that only the
+    // finally below releases, so the call can throw with none of them
+    // inside only by interrupting them and awaiting their tasks.
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.gated.impl", classOf[GatedFs].getName)
+    val held = (0 until 40).map(i => f"held-$i%02d.bin")
+    val src = Files.createTempDirectory("graft-taskarm-src")
+    ("fail.bin" +: held).foreach(n =>
+      Files.write(src.resolve(n), n.getBytes("UTF-8")))
+    val repo = Files.createTempDirectory("graft-taskarm-repo")
+    Sink.snapshot(spark, src.toString, repo.toString, "1")
+    val release = new CountDownLatch(1)
+    val inside = new java.util.concurrent.atomic.AtomicInteger
+    val opensAfter = new java.util.concurrent.atomic.AtomicInteger
+    @volatile var thrown = false
+    def throwsWithNoneInside(call: => Any): Unit = {
+      val entered = new CountDownLatch(1)
+      thrown = false
+      GatedFs.onOpen = p => {
+        if (thrown) opensAfter.incrementAndGet()
+        if (p.toString.contains("fail.bin")) {
+          entered.await()
+          throw new java.io.IOException("injected copy failure")
+        } else if (p.toString.contains("held-")) {
+          inside.incrementAndGet()
+          try { entered.countDown(); release.await() }
+          finally { inside.decrementAndGet(); () }
+        }
+      }
+      val ex = intercept[Exception](Sink.onTaskArm(call))
+      thrown = true
+      assert(chain(ex).exists(m => m != null && m.contains("injected copy failure")))
+      assert(inside.get == 0,
+        s"${inside.get} held copies were still inside the filesystem when the call threw")
+      assert(opensAfter.get == 0, "a copy opened a file after the call threw")
+    }
+    try {
+      val repo2 = Files.createTempDirectory("graft-taskarm-repo2")
+      throwsWithNoneInside(
+        Sink.snapshot(spark, s"gated:$src", repo2.toString, "1"))
+      val dest = Files.createTempDirectory("graft-taskarm-dest")
+      throwsWithNoneInside(
+        Sink.restore(spark, s"gated:$repo", "1", dest.toString))
+    } finally {
+      release.countDown()
+      GatedFs.onOpen = _ => ()
+    }
+  }
+
   test("snapshot/restore walks artifact TREES: subdirs round-trip, markers travel, hidden skipped, torn refused") {
     val src = Files.createTempDirectory("graft-tree-src")
     // a gen-like artifact tree: two parquet tables in subdirectories

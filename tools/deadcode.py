@@ -21,6 +21,13 @@ unreferenced. The script exits 1 when a reported name is not in
 ALLOWED below, or when an ALLOWED name is no longer reported (a stale
 entry would outlive its code); every entry there states why the def
 stays.
+
+The same pass lists each orphaned scaladoc under `src/main`: a
+`/** … */` block followed by another one with only blanks or
+annotations between them. Scaladoc attaches only the second block to
+the next definition, so the first documents nothing (or, worse, its
+text reads as the doc of the wrong def). Any orphan makes the script
+exit 1.
 """
 import os
 import re
@@ -130,6 +137,49 @@ def strip(src, strings=True):
     return "".join(out)
 
 
+ANNOTATION = re.compile(r"@[\w.]+(\([^()]*\))?")
+
+
+def doc_blocks(src):
+    """(start, end) offsets of each `/** … */` block in `src`, skipping
+    string and char literals and line comments."""
+    out, i, n = [], 0, len(src)
+    while i < n:
+        if src.startswith("//", i):
+            j = src.find("\n", i)
+            i = n if j < 0 else j
+        elif src.startswith("/*", i):
+            j = src.find("*/", i + 2)
+            j = n if j < 0 else j + 2
+            if src.startswith("/**", i) and not src.startswith("/**/", i):
+                out.append((i, j))
+            i = j
+        elif src[i] == '"':
+            if src.startswith('"""', i):
+                j = src.find('"""', i + 3)
+                j = n if j < 0 else j + 3
+            else:
+                j = i + 1
+                while j < n and src[j] not in '"\n':
+                    j += 2 if src[j] == "\\" else 1
+                j = min(j + 1, n)
+            i = j
+        elif src[i] == "'" and CHAR.match(src, i):
+            i = CHAR.match(src, i).end()
+        else:
+            i += 1
+    return out
+
+
+def orphaned_docs(src):
+    """1-based line of each doc block followed by another doc block
+    with only blanks or annotations between them."""
+    blocks = doc_blocks(src)
+    return [src.count("\n", 0, a) + 1
+            for (a, b), (c, _) in zip(blocks, blocks[1:])
+            if not ANNOTATION.sub("", src[b:c]).strip()]
+
+
 def scala_files(top):
     for d, _, fs in os.walk(os.path.join(ROOT, top)):
         for f in sorted(fs):
@@ -159,6 +209,7 @@ def member_defs(code):
 
 def main():
     counts, tests, declared = {}, Counter(), Counter()
+    orphans = []
     public = {}
     for top in (MAIN, BENCH, TEST):
         for path in scala_files(top):
@@ -169,6 +220,7 @@ def main():
                 continue
             counts[path] = c
             if top == MAIN:
+                orphans.extend((path, ln) for ln in orphaned_docs(src))
                 for name, pub in member_defs(strip(src)):
                     declared[name] += 1
                     if pub and name != "main":
@@ -191,9 +243,12 @@ def main():
     stale = sorted(set(ALLOWED) - {name for _, name, _ in found})
     for name in stale:
         print(f"STALE allow-list entry, no longer reported: {name}")
+    for path, ln in orphans:
+        print(f"{path}:{ln}: orphaned scaladoc, followed by another doc block")
     print(f"{len(found)} defs with no non-test caller, {bad} not allowed, "
-          f"{len(stale)} stale allow-list entries")
-    return 1 if bad or stale else 0
+          f"{len(stale)} stale allow-list entries, "
+          f"{len(orphans)} orphaned scaladocs")
+    return 1 if bad or stale or orphans else 0
 
 
 if __name__ == "__main__":
