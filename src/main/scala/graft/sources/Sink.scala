@@ -1,17 +1,15 @@
 package graft.sources
 
-import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
-
 import scala.reflect.ClassTag
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.operators.Par
 
 /** Hadoop `Configuration` is not `java.io.Serializable`; the task arm
   * of the snapshot/restore fan-out ships it to executors through the
@@ -95,17 +93,19 @@ object Sink {
 
   /** Sum of parquet footer record counts under `path` — the
     * write-committed row total, read from file METADATA only. Footers
-    * are opened on [[fanOut]]'s driver pool (metadata reads never
-    * become a Spark job): a large write commits thousands of part
-    * files, and one serial remote open each would make the ack itself
-    * minutes of driver latency on object storage. */
+    * are opened [[Par.Width]] at a time through [[Par.map]] on the
+    * driver (metadata reads never become a Spark job): a large write
+    * commits thousands of part files, and one serial remote open each
+    * would make the ack itself minutes of driver latency on object
+    * storage. An unreadable footer fails the ack, and the footers
+    * still queued behind it are never opened. */
   def committedRowCount(spark: SparkSession, path: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
     val p = new Path(path)
-    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(p).toSeq
+    val files = p.getFileSystem(conf).listStatus(p).toSeq
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    fanOut(spark, files, distributed = false) { (c, f) =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, c))
+    Par.map(files) { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
       try r.getRecordCount finally r.close()
     }.sum
   }
@@ -205,7 +205,10 @@ object Sink {
     * The per-file work (reuse, or copy to a dot-temp and rename to its
     * blob version) runs through [[fanOut]] on the arm
     * [[chooseDistributedCopy]] picks; the walk and the manifest stay on
-    * the driver. SINGLE-WRITER per repository is ENFORCED
+    * the driver. After a failed copy the queued ones never run, and the
+    * call throws only once the started ones (on the task arm, the
+    * failed job's tasks) have ended: no blob is placed after the
+    * `_WRITER` claim is released. SINGLE-WRITER per repository is ENFORCED
     * ([[acquireWriter]]): a second concurrent snapshotter refuses
     * loudly; a crashed writer's claim expires after the grace. */
   def snapshot(spark: SparkSession, srcDir: String, repoDir: String,
@@ -263,8 +266,9 @@ object Sink {
     * without one, e.g. object stores. What this does NOT catch: a
     * manifest that recorded a stale md5 because an in-place mutation
     * slipped past [[snapshot]]'s convention-guarded reuse.) The copies
-    * run through [[fanOut]] on the arm [[chooseDistributedCopy]]
-    * picks from the manifest. */
+    * run through [[fanOut]] like [[snapshot]]'s: after a failed copy
+    * nothing writes into the destination once the call has thrown,
+    * though the files copied before the failure stay. */
   def restore(spark: SparkSession, repoDir: String, snapId: String,
               destDir: String): CopyResult = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -488,32 +492,13 @@ object Sink {
     walk(src, "").sortBy(_._2)
   }
 
-  /** Width of [[fanOut]]'s driver pool — ES repositories move segment
-    * files shard-parallel; a 100 TB tree must not serialize its bytes
-    * through one driver thread. */
-  private val CopyThreads = 16
-
-  /** Run the per-file work `f` over `items`, results in input order,
-    * on one of two arms. The driver arm is a bounded pool; the task arm
-    * is ONE Spark job — one task per item slice, executors open files
-    * through a broadcast Hadoop configuration, and only `f`'s small
-    * results come back (manifest-sized state, never the bytes). The RDD
-    * is deliberate: this is per-file imperative IO, not relational
-    * work.
-    *
-    * The driver arm awaits EVERY item before returning or throwing,
-    * then rethrows the FIRST failure in input order with later ones
-    * suppressed onto it (`Par.run`'s contract): a copy still running
-    * after `restore` threw would keep writing into the destination, or
-    * into the repository after `snapshot` released its `_WRITER` claim.
-    * An interrupt of the caller drops the queued items, interrupts the
-    * running ones, still awaits them, and then throws
-    * InterruptedException with the interrupt flag restored. The task
-    * arm keeps the same guarantee: a failed task fails the job, Spark
-    * kills the job's other tasks with interrupt-on-cancel, and the job's
-    * failure is rethrown only once every task it started has ended
-    * ([[JobTasks]]). An interrupt of the caller cancels the job the
-    * same way. */
+  /** Run the per-file work `f` over `items` through [[Par]], results
+    * in input order: on Par's driver pool, or as ONE Spark job whose
+    * `collect` runs inside Par (tagged, cancelled with its caller,
+    * drained on failure), one task per item slice, executors opening
+    * files through a broadcast Hadoop configuration and only `f`'s
+    * small results coming back. The RDD is deliberate: this is
+    * per-file imperative IO, not relational work. */
   private def fanOut[A: ClassTag, B: ClassTag](spark: SparkSession,
       items: Seq[A], distributed: Boolean)(f: (Configuration, A) => B): Seq[B] =
     if (items.isEmpty) Seq.empty
@@ -522,105 +507,11 @@ object Sink {
       val bc = sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
       val rdd = sc.parallelize(items, math.min(items.length, sc.defaultParallelism * 2))
         .map(a => f(bc.value.value, a))
-      val tag = s"graft-copy-${java.util.UUID.randomUUID()}"
-      val tasks = new JobTasks(tag)
-      val interruptOnCancel = sc.getLocalProperty(JobTasks.InterruptOnCancel)
-      sc.addSparkListener(tasks)
-      sc.addJobTag(tag)
-      sc.setInterruptOnCancel(true)
-      try rdd.collect().toSeq
-      catch {
-        case e: Throwable =>
-          // a stopped context ran no job (or has no tasks left to wait
-          // for); otherwise cancel, a no-op once the job has failed that
-          // stops it when the caller was interrupted while it ran
-          if (!sc.isStopped) {
-            sc.cancelJobsWithTag(tag, "copy fan-out failed")
-            tasks.awaitEnded()
-          }
-          throw e
-      } finally {
-        sc.setLocalProperty(JobTasks.InterruptOnCancel, interruptOnCancel)
-        sc.removeJobTag(tag)
-        sc.removeSparkListener(tasks)
-      }
+      Par.map(Seq(rdd))(_.collect().toSeq).head
     } else {
       val conf = spark.sparkContext.hadoopConfiguration
-      val pool = Executors.newFixedThreadPool(math.min(CopyThreads, items.length))
-      val futs =
-        try items.map(a => pool.submit(new Callable[B] { def call(): B = f(conf, a) }))
-        finally pool.shutdown()
-      var interrupted = false
-      while (!pool.isTerminated)
-        try pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
-        catch {
-          case _: InterruptedException =>
-            interrupted = true
-            pool.shutdownNow()
-        }
-      if (interrupted) {
-        Thread.currentThread().interrupt()
-        throw new InterruptedException(
-          "interrupted while awaiting copies (all of them stopped)")
-      }
-      val got = futs.map { fu =>
-        try Right(fu.get())
-        catch { case e: ExecutionException => Left(e.getCause) }
-      }
-      val errs = got.collect { case Left(e) => e }
-      errs.headOption.foreach { e =>
-        errs.tail.foreach(e.addSuppressed)
-        throw e
-      }
-      got.collect { case Right(b) => b }
+      Par.map(items)(f(conf, _))
     }
-
-  /** Tracks the tasks of the one job tagged `tag`. [[awaitEnded]]
-    * returns once that job has ended and every task it started has
-    * ended too: Spark fails a job at its first failed task and kills
-    * the rest without waiting for them. Every task the job launched
-    * posts its start before the job's end (both go through the
-    * scheduler's one event loop, and a failed job launches no more
-    * tasks), so the count is complete when the end arrives. */
-  private final class JobTasks(tag: String) extends SparkListener {
-    private var jobId = -1
-    private var stages = Set.empty[Int]
-    private var running = 0
-    private var ended = false
-
-    override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
-      if (Option(js.properties).flatMap(p => Option(p.getProperty(JobTasks.Tags)))
-          .exists(_.split(",").contains(tag))) {
-        jobId = js.jobId
-        stages = js.stageIds.toSet
-      }
-    }
-    override def onTaskStart(ts: SparkListenerTaskStart): Unit = synchronized {
-      if (stages(ts.stageId)) running += 1
-    }
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = synchronized {
-      if (stages(te.stageId)) { running -= 1; notifyAll() }
-    }
-    override def onJobEnd(je: SparkListenerJobEnd): Unit = synchronized {
-      if (je.jobId == jobId) { ended = true; notifyAll() }
-    }
-
-    /** Waits through interrupts (the job is already cancelled) and
-      * restores the caller's interrupt flag before returning. */
-    def awaitEnded(): Unit = synchronized {
-      var interrupted = Thread.interrupted()
-      while (!ended || running > 0)
-        try wait() catch { case _: InterruptedException => interrupted = true }
-      if (interrupted) Thread.currentThread().interrupt()
-    }
-  }
-
-  private object JobTasks {
-    // the local-property keys behind SparkContext.setInterruptOnCancel
-    // and addJobTag
-    val InterruptOnCancel = "spark.job.interruptOnCancel"
-    val Tags = "spark.job.tags"
-  }
 
   /** SINGLE-WRITER enforcement for a mutating directory (snapshot
     * repository, [[reindex]] destination) — the artifact families'
@@ -797,8 +688,12 @@ object Sink {
     * of KB-sized files whose per-file open/footer cost eventually
     * dominates scans. Rewrite the directory into ⌈rows/target⌉
     * near-equal files: one round-robin shuffle (repartition(n) without
-    * keys — no skew possible by construction), atomic replace via
-    * write-to-tmp + rename. Returns (filesBefore, filesAfter).
+    * keys — no skew possible by construction), written to a tmp
+    * directory beside the table, then the table is deleted and the tmp
+    * directory renamed into its place. The replace is NOT atomic: a
+    * failure between the two leaves the rows only in the tmp
+    * directory, and the error names it. Returns (filesBefore,
+    * filesAfter).
     * At 100 TB this runs per partition-directory, not per table, so
     * the shuffle is bounded by a partition's size. */
   def compact(spark: SparkSession, path: String, targetRows: Long): (Int, Int) = {
@@ -808,11 +703,11 @@ object Sink {
     val want = math.max(1, math.ceil(rows.toDouble / targetRows).toInt)
     val tmp = path.stripSuffix("/") + ".compact-tmp"
     before.repartition(want).write.mode("overwrite").parquet(tmp)
-    val fs = FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
     val dst = new Path(path)
-    fs.delete(dst, true)
-    fs.rename(new Path(tmp), dst)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.delete(dst, true) || !fs.rename(new Path(tmp), dst))
+      throw new java.io.IOException(s"compaction could not replace $path " +
+        s"(delete or rename failed); the compacted rows are in $tmp")
     (nFiles, spark.read.parquet(path).inputFiles.length)
   }
 

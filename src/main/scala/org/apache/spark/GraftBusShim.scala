@@ -25,4 +25,13 @@ object GraftBusShim {
   def waitUntilListenerBusEmpty(sc: SparkContext, timeoutMs: Long): Boolean =
     try { sc.listenerBus.waitUntilEmpty(timeoutMs); true }
     catch { case _: java.util.concurrent.TimeoutException => false }
+
+  /** Cancel the jobs tagged `tag`, then post `marker` to the listener
+    * bus once the scheduler's event loop has handled the cancel: every
+    * task launched before this call has posted its start by then (a
+    * launch queues its start event on that loop). `Par`'s drain. */
+  def cancelJobsWithTagThenPost(sc: SparkContext, tag: String,
+      reason: String, marker: scheduler.SparkListenerEvent): Unit =
+    sc.cancelJobsWithTagWithFuture(tag, reason).onComplete(_ =>
+      sc.listenerBus.post(marker))(scala.concurrent.ExecutionContext.parasitic)
 }

@@ -178,9 +178,56 @@ class ParSpec extends SparkSpec {
       ParSpec.never.countDown()
     }
   }
+
+  test("a failed or interrupted call throws only once its job's tasks ended") {
+    // One 4-task job (the session's 4 cores) inside Par.run. Held tasks
+    // block on a latch that only the finally below releases, so they
+    // end only when Spark kills them: once task 0 fails beside them, or
+    // once the caller is interrupted. Spark fails the job at once and
+    // kills its other tasks without waiting for them, so the action
+    // returns while they may still be inside. Ten rounds a direction.
+    def round(interrupt: Boolean): Unit = {
+      ParSpec.failTask0 = !interrupt
+      ParSpec.entered = new CountDownLatch(if (interrupt) 4 else 3)
+      @volatile var caught: Throwable = null
+      @volatile var insideAtThrow = -1
+      val t = new Thread(() => {
+        try Par.run(() => sc.parallelize(0 until 4, 4).foreach(ParSpec.heldTask), () => ())
+        catch { case e: Throwable => insideAtThrow = ParSpec.inside.get; caught = e }
+      })
+      t.start()
+      if (interrupt) { ParSpec.entered.await(); t.interrupt() }
+      t.join(60000) // hang guard only
+      assert(!t.isAlive, "Par.run never returned")
+      if (interrupt) assert(caught.isInstanceOf[InterruptedException], caught)
+      else assert(Iterator.iterate(caught)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage == "task 0 failed"), caught)
+      assert(insideAtThrow == 0,
+        s"$insideAtThrow held tasks were still running when Par.run threw")
+    }
+    try (1 to 10).foreach { _ => round(interrupt = false); round(interrupt = true) }
+    finally ParSpec.released.countDown()
+  }
 }
 
 object ParSpec {
+  // the drain case's job: task 0 fails once the held tasks are inside
+  // (failTask0) or holds like them; held tasks count themselves inside
+  @volatile var failTask0 = false
+  @volatile var entered = new CountDownLatch(0)
+  val inside = new AtomicInteger
+  val released = new CountDownLatch(1)
+
+  def heldTask(i: Int): Unit =
+    if (i == 0 && failTask0) {
+      entered.await()
+      throw new IllegalStateException("task 0 failed")
+    } else {
+      inside.incrementAndGet()
+      try { entered.countDown(); released.await() }
+      finally { inside.decrementAndGet(); () }
+    }
+
   val never = new CountDownLatch(1)
   val taskInterrupted = new CountDownLatch(1)
   val taskRunning = new CountDownLatch(1)

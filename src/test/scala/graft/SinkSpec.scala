@@ -109,46 +109,63 @@ class SinkSpec extends SparkSpec {
     }
   }
 
-  test("a failed copy is rethrown only after every other copy finished") {
-    // the first file in manifest order fails; 40 more copies (more than
-    // the pool's width, so some are still queued) are held until it has
-    // failed. Returning or throwing before they finish would leave them
-    // writing into the repository after the _WRITER claim's release, or
-    // into the destination after restore threw.
+  test("a failed copy skips the queued copies; it is rethrown once the started ones finished") {
+    // 41 copies on a 16-wide pool: fail.bin (first in manifest order)
+    // and the 15 held copies started beside it, 25 queued behind them.
+    // fail.bin fails once the 15 are inside the filesystem, and they
+    // fail too once it has, so every pool thread has recorded a failure
+    // before it could take a queued copy. None of the queued copies may
+    // open a file, and no copy may open one after the call threw: it
+    // would write into the repository after the _WRITER claim's
+    // release, or into the destination after restore threw.
     spark.sparkContext.hadoopConfiguration
       .set("fs.gated.impl", classOf[GatedFs].getName)
     val held = (0 until 40).map(i => f"held-$i%02d.bin")
+    val started = held.take(15).toSet
     val src = Files.createTempDirectory("graft-await-src")
     ("fail.bin" +: held).foreach(n =>
       Files.write(src.resolve(n), n.getBytes("UTF-8")))
     val repo = Files.createTempDirectory("graft-await-repo")
     Sink.snapshot(spark, src.toString, repo.toString, "1")
-    def gate(failed: CountDownLatch): Unit =
-      GatedFs.onOpen = p =>
+    val inside = new java.util.concurrent.atomic.AtomicInteger
+    val opensAfter = new java.util.concurrent.atomic.AtomicInteger
+    val opened = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var thrown = false
+    def skipsQueued(call: => Any): Unit = {
+      val entered = new CountDownLatch(started.size)
+      val failed = new CountDownLatch(1)
+      thrown = false
+      opened.clear()
+      GatedFs.onOpen = p => {
+        if (thrown) opensAfter.incrementAndGet()
         if (p.toString.contains("fail.bin")) {
+          entered.await()
           failed.countDown()
           throw new java.io.IOException("injected copy failure")
-        } else if (p.toString.contains("held-")) failed.await()
-    try {
-      gate(new CountDownLatch(1))
-      val repo2 = Files.createTempDirectory("graft-await-repo2")
-      val ex = intercept[java.io.IOException] {
-        Sink.snapshot(spark, s"gated:$src", repo2.toString, "1")
+        } else held.find(p.toString.contains).foreach { n =>
+          opened.add(n)
+          inside.incrementAndGet()
+          try { entered.countDown(); failed.await() }
+          finally { inside.decrementAndGet(); () }
+          throw new java.io.IOException(s"$n failed after fail.bin")
+        }
       }
+      val ex = intercept[java.io.IOException](call)
+      thrown = true
       assert(ex.getMessage == "injected copy failure")
-      held.foreach(n => assert(
-        filesUnder(repo2.resolve(s"blobs/$n").toFile)
-          .count(!_.getName.startsWith(".")) == 1,
-        s"snapshot threw before the copy of $n was placed"))
-      gate(new CountDownLatch(1))
+      assert(inside.get == 0,
+        s"${inside.get} started copies were still running when the call threw")
+      val queuedOpened = held.filter(n => opened.contains(n) && !started(n))
+      assert(queuedOpened.isEmpty,
+        s"queued copies ran after the failure: $queuedOpened")
+      assert(opensAfter.get == 0, "a copy opened a file after the call threw")
+      assert(ex.getSuppressed.length == started.size)
+    }
+    try {
+      val repo2 = Files.createTempDirectory("graft-await-repo2")
+      skipsQueued(Sink.snapshot(spark, s"gated:$src", repo2.toString, "1"))
       val dest = Files.createTempDirectory("graft-await-dest")
-      val ex2 = intercept[java.io.IOException] {
-        Sink.restore(spark, s"gated:$repo", "1", dest.toString)
-      }
-      assert(ex2.getMessage == "injected copy failure")
-      held.foreach(n => assert(
-        new String(Files.readAllBytes(dest.resolve(n)), "UTF-8") == n,
-        s"restore threw before the copy of $n was complete"))
+      skipsQueued(Sink.restore(spark, s"gated:$repo", "1", dest.toString))
     } finally GatedFs.onOpen = _ => ()
   }
 
@@ -601,6 +618,22 @@ class SinkSpec extends SparkSpec {
     assert(!new java.io.File(dir + ".compact-tmp").exists())
   }
 
+  test("compaction whose rename fails names the tmp directory holding the rows") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.gated.impl", classOf[GatedFs].getName)
+    val dir = Files.createTempDirectory("graft-compact-rename").resolve("t").toString
+    spark.range(100).repartition(8).write.parquet(dir)
+    GatedFs.onRename = (from, _) => !from.getName.endsWith(".compact-tmp")
+    try {
+      val ex = intercept[java.io.IOException] {
+        Sink.compact(spark, s"gated:$dir", targetRows = 50)
+      }
+      assert(ex.getMessage.contains(s"gated:$dir.compact-tmp"), ex.getMessage)
+      assert(!new java.io.File(dir).exists())
+      assert(spark.read.parquet(dir + ".compact-tmp").count() == 100)
+    } finally GatedFs.onRename = (_, _) => true
+  }
+
   test("rollover: thresholds split generations; a final-batch roll leaves an empty write index") {
     import spark.implicits._
     def batch(ids: Range) = ids.map(_.toLong).toDF("id")
@@ -685,7 +718,8 @@ class SinkSpec extends SparkSpec {
 
 /** Local files under the `gated:` scheme with a hook on every open, so a
   * spec can fail one copy of the snapshot/restore fan-out and hold the
-  * others on a latch. */
+  * others on a latch, and a hook on every rename, which fails the
+  * rename when it returns false. */
 class GatedFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("gated:///")
   override def getScheme: String = "gated"
@@ -693,8 +727,11 @@ class GatedFs extends RawLocalFileSystem {
     GatedFs.onOpen(f)
     super.open(f, bufferSize)
   }
+  override def rename(src: Path, dst: Path): Boolean =
+    GatedFs.onRename(src, dst) && super.rename(src, dst)
 }
 
 object GatedFs {
   @volatile var onOpen: Path => Unit = _ => ()
+  @volatile var onRename: (Path, Path) => Boolean = (_, _) => true
 }

@@ -28,6 +28,12 @@ annotations between them. Scaladoc attaches only the second block to
 the next definition, so the first documents nothing (or, worse, its
 text reads as the doc of the wrong def). Any orphan makes the script
 exit 1.
+
+It also lists each thread pool built under `src/main` outside
+`operators/Par.scala` (`Executors.new…`, `ThreadPoolExecutor`,
+`ForkJoinPool` in code, not in comments or strings): `Par` is the one
+fan-out, with the one failure, interrupt and drain contract. Any such
+pool makes the script exit 1.
 """
 import os
 import re
@@ -137,6 +143,9 @@ def strip(src, strings=True):
     return "".join(out)
 
 
+POOL = re.compile(r"\bExecutors\s*\.\s*new\w*|\bThreadPoolExecutor\b|\bForkJoinPool\b")
+POOL_HOME = os.path.join(MAIN, "scala", "graft", "operators", "Par.scala")
+
 ANNOTATION = re.compile(r"@[\w.]+(\([^()]*\))?")
 
 
@@ -209,7 +218,7 @@ def member_defs(code):
 
 def main():
     counts, tests, declared = {}, Counter(), Counter()
-    orphans = []
+    orphans, pools = [], []
     public = {}
     for top in (MAIN, BENCH, TEST):
         for path in scala_files(top):
@@ -221,6 +230,11 @@ def main():
             counts[path] = c
             if top == MAIN:
                 orphans.extend((path, ln) for ln in orphaned_docs(src))
+                if path != POOL_HOME:
+                    code = strip(src)
+                    pools.extend((path, code.count("\n", 0, m.start()) + 1,
+                                  re.sub(r"\s", "", m.group()))
+                                 for m in POOL.finditer(code))
                 for name, pub in member_defs(strip(src)):
                     declared[name] += 1
                     if pub and name != "main":
@@ -245,10 +259,13 @@ def main():
         print(f"STALE allow-list entry, no longer reported: {name}")
     for path, ln in orphans:
         print(f"{path}:{ln}: orphaned scaladoc, followed by another doc block")
+    for path, ln, what in pools:
+        print(f"{path}:{ln}: thread pool ({what}) outside {POOL_HOME}")
     print(f"{len(found)} defs with no non-test caller, {bad} not allowed, "
           f"{len(stale)} stale allow-list entries, "
-          f"{len(orphans)} orphaned scaladocs")
-    return 1 if bad or stale or orphans else 0
+          f"{len(orphans)} orphaned scaladocs, "
+          f"{len(pools)} thread pools outside Par")
+    return 1 if bad or stale or orphans or pools else 0
 
 
 if __name__ == "__main__":
