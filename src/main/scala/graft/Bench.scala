@@ -40,14 +40,18 @@ object Bench {
     val f = java.io.File.createTempFile("graft-io-probe", ".bin")
     val buf = new Array[Byte](1 << 20) // zeros; parquet-free raw write
     val t0 = System.nanoTime()
-    val out = new java.io.FileOutputStream(f)
-    try {
-      var i = 0
-      while (i < 128) { out.write(buf); i += 1 }
-      out.getFD.sync() // the fdatasync: committed bytes, not page cache
-    } finally out.close()
-    val mbS = 128.0 / ((System.nanoTime() - t0) / 1e9)
-    f.delete()
+    // deleted however the probe ends: a failed write or fdatasync (a
+    // full or degraded disk, the box this probe is for) must not leave
+    // 128 MB behind in the temp directory
+    val mbS = try {
+      val out = new java.io.FileOutputStream(f)
+      try {
+        var i = 0
+        while (i < 128) { out.write(buf); i += 1 }
+        out.getFD.sync() // the fdatasync: committed bytes, not page cache
+      } finally out.close()
+      128.0 / ((System.nanoTime() - t0) / 1e9)
+    } finally f.delete()
     // sentinels are GUARDED: the suite proper records per-query
     // failures in `failed[]`, and a broken sentinel must degrade to a
     // recorded -1 there too — not abort the whole bench before any

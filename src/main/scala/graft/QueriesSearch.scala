@@ -262,9 +262,8 @@ private[graft] object QueriesSearch {
       val stats = ix.corpus(s).crossJoin(
         ix.termDf(s).filter(col("term") === "customer")
           .agg(coalesce(sum(col("df")), lit(0L)).cast("double").as("df")))
-      val idf = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-      val tfNorm = (col("tf") * lit(2.2)) /
-        (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("len") / col("avgdl")))
+      val (idf, tfNorm) = Search.bm25Parts(col("tf"), col("df"),
+        col("len"), col("n"), col("avgdl"))
       pre.filter(col("tf") > 0 || col("source") === "src3")
         .crossJoin(broadcast(stats))
         .select(col("doc_id"),

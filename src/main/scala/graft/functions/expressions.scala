@@ -394,7 +394,8 @@ object expressions {
     * interpretation and no string-compare distinct: per-token FNV-1a
     * 64-bit hashes combined over a sliding window, deduped in a hash
     * set. Shorter-than-n token lists collapse to one whole-text shingle
-    * (same shape as the string version). */
+    * (same shape as the string version). [[shingle_hashes]] builds it
+    * at [[graft.operators.Dedup.ShingleWidth]]. */
   case class ShingleHashes(child: Expression, n: Int)
       extends UnaryExpression with Serializable {
     override def dataType: DataType =
@@ -411,8 +412,9 @@ object expressions {
     override def prettyName: String = "shingle_hashes"
   }
 
-  def shingle_hashes(toks: Column, n: Int = 3): Column =
-    GraftShim.toColumn(ShingleHashes(GraftShim.toExpression(toks), n))
+  def shingle_hashes(toks: Column): Column =
+    GraftShim.toColumn(ShingleHashes(GraftShim.toExpression(toks),
+      graft.operators.Dedup.ShingleWidth))
 
   private val stringArrayType =
     org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)

@@ -25,21 +25,30 @@ import graft.functions.Analyzers
   */
 object Dedup {
 
-  /** LSH banding defaults shared by every MinHash surface (signature
-    * width and band count; rows per band = NumHashes / Bands). d17's
-    * lockstep gate derives its buckets-per-representative multiplier
-    * from [[Bands]] — tune the S-curve HERE, never by editing a
-    * call-site literal. */
+  /** The one operating point of every shingle and MinHash surface:
+    * word `ShingleWidth`-gram shingles, a `NumHashes`-wide signature
+    * cut into `Bands` bands of NumHashes / Bands rows. None of them is
+    * a per-call parameter: a screen that banded differently from the
+    * standing index would hash into buckets the index never wrote and
+    * call every near-duplicate new, and d17's lockstep gate derives its
+    * buckets-per-representative multiplier from [[Bands]]. Tune the
+    * S-curve and the shingle width HERE, never at a call site. */
+  val ShingleWidth = 3
   val NumHashes = 64
   val Bands = 16
+
+  // a remainder would silently TRUNCATE the signature (64 hashes / 12
+  // bands → rows = 5 bands only 60 of them, an undeclared S-curve)
+  require(NumHashes % Bands == 0,
+    "bands×rows = NumHashes is the S-curve contract")
 
   /** Canonical text normalization used by every dedup variant:
     * lowercase, collapse whitespace, trim. */
   def normalize(c: Column): Column =
     trim(regexp_replace(lower(c), "\\s+", " "))
 
-  /** Word n-gram shingles over a TOKEN ARRAY column, as distinct
-    * strings — the unit of Jaccard similarity.
+  /** Word [[ShingleWidth]]-gram shingles over a TOKEN ARRAY column, as
+    * distinct strings — the unit of Jaccard similarity.
     *
     * IMPORTANT: `toks` must be a materialized attribute (a real column
     * of the input relation), not an inline tokenize(...) expression —
@@ -48,8 +57,9 @@ object Dedup {
     * ~19 s for 5 k docs at sf0.1). Select the tokens in one projection
     * and shingle them in the next: that boundary is what keeps the
     * tokenization to once per row. */
-  def shingleSet(toks: Column, n: Int = 3): Column = {
+  def shingleSet(toks: Column): Column = {
     val k = size(toks)
+    val n = ShingleWidth
     array_distinct(
       when(k >= n,
         transform(sequence(lit(1), greatest(k - (n - 1), lit(1))),
@@ -62,25 +72,23 @@ object Dedup {
     * pair-finding operators run on (set cardinalities and therefore
     * Jaccard values match the string version w.h.p.); the string
     * variant remains for digest-style fingerprints. */
-  def withHashedShingleSet(docs: DataFrame, textCol: String = "text",
-                           idCol: String = "doc_id", n: Int = 3): DataFrame =
-    docs.select(col(idCol).as("id"),
-        Analyzers.tokenize(normalize(col(textCol))).as("toks"))
+  def withHashedShingleSet(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").as("id"),
+        Analyzers.tokenize(normalize(col("text"))).as("toks"))
       .select(col("id"),
-        graft.functions.expressions.shingle_hashes(col("toks"), n)
+        graft.functions.expressions.shingle_hashes(col("toks"))
           .as("shingles"))
 
   /** D1 exact dedup: group identical normalized texts, keep the lowest
     * doc_id as the canonical representative. */
-  def exact(docs: DataFrame, textCol: String = "text",
-            idCol: String = "doc_id"): DataFrame =
+  def exact(docs: DataFrame): DataFrame =
     docs
-      .groupBy(md5(normalize(col(textCol))).as("fingerprint"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
+      .groupBy(md5(normalize(col("text"))).as("fingerprint"))
+      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_dups"))
 
   /** MinHash signatures of an ALREADY-ANALYZED (id, shingles) frame
     * via explode + hash-aggregate: one row per (doc, shingle) posting,
-    * then `numHashes` codegen'd `min(xxhash64(sh, i))` aggregates with
+    * then [[NumHashes]] codegen'd `min(xxhash64(sh, i))` aggregates with
     * map-side partial aggregation. This is deliberately NOT a nested
     * higher-order-function expression: Catalyst's project-collapsing
     * would inline the shingle computation into every lambda element
@@ -90,48 +98,34 @@ object Dedup {
     * persisted) and never pay the tokenize+shingle analysis a second
     * time (DedupIndex computes the sets once per build/append and
     * derives BOTH the banded index and the verify side from them). */
-  private[graft] def minhashSignaturesFromSets(sets: DataFrame,
-                                               numHashes: Int): DataFrame = {
+  private[graft] def minhashSignaturesFromSets(sets: DataFrame): DataFrame = {
     // shingles arrive as 64-bit hashes (codegen'd ShingleHashes); the
     // hash family re-hashes the fixed-width long with the family index
     // (an affine a·h+b family would be cheaper still, but ANSI mode
     // makes wraparound long arithmetic throw)
     val posts = sets.select(col("id"), explode(col("shingles")).as("h"))
-    val mins = (0 until numHashes)
+    val mins = (0 until NumHashes)
       .map(i => min(xxhash64(col("h"), lit(i))).as(s"h$i"))
     posts.groupBy(col("id"))
       .agg(mins.head, mins.tail: _*)
       .select(col("id"),
-        array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig"))
+        array((0 until NumHashes).map(i => col(s"h$i")): _*).as("sig"))
   }
 
   /** (id, band, bucket): the banded-signature LSH index rows for
     * `docs` — the frame a production near-dedup service MAINTAINS as
     * its standing index (new batches append their rows after
     * screening). */
-  def bandBuckets(docs: DataFrame, textCol: String = "text",
-                  idCol: String = "doc_id", numHashes: Int = NumHashes,
-                  bands: Int = Bands): DataFrame =
-    bandBucketsFromSets(withHashedShingleSet(docs, textCol, idCol),
-      numHashes, bands)
+  def bandBuckets(docs: DataFrame): DataFrame =
+    bandBucketsFromSets(withHashedShingleSet(docs))
 
   /** [[bandBuckets]] over an already-analyzed (id, shingles) frame —
     * see [[minhashSignaturesFromSets]] for when to use it. */
-  private[graft] def bandBucketsFromSets(sets: DataFrame,
-                                         numHashes: Int = NumHashes,
-                                         bands: Int = Bands): DataFrame = {
-    // integer division would silently TRUNCATE the signature (e.g.
-    // 64 hashes / 12 bands → rows = 5 uses only 60 of the 64 computed
-    // min-hashes, and the real S-curve is 1-(1-s^5)^12, not the
-    // bands×rows = numHashes contract above) — refuse loudly instead
-    // of running at an undeclared operating point (round-13 review)
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must be divisible by bands ($bands) — " +
-        "bands×rows = numHashes is the S-curve contract")
-    val rows = numHashes / bands
-    val sigs = minhashSignaturesFromSets(sets, numHashes)
+  private[graft] def bandBucketsFromSets(sets: DataFrame): DataFrame = {
+    val rows = NumHashes / Bands
+    val sigs = minhashSignaturesFromSets(sets)
     sigs.select(col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
+      posexplode(transform(sequence(lit(0), lit(Bands - 1)),
         b => xxhash64(concat_ws(",",
           transform(slice(col("sig"), b * rows + 1, lit(rows)),
             v => v.cast("string"))), b))).as(Seq("band", "bucket")))
@@ -141,15 +135,14 @@ object Dedup {
     * (band index, band hash), verify candidates with exact Jaccard on
     * the shingle sets. Returns pairs (id_a < id_b) with their Jaccard.
     *
-    * bands×rows = numHashes; collision prob for similarity s is
-    * 1-(1-s^rows)^bands (the standard S-curve). Defaults target
-    * s ≳ 0.5. The banded self-join shuffles both sides identically, so
-    * Spark's ReuseExchange evaluates the signature plan once.
+    * bands×rows = NumHashes; collision prob for similarity s is
+    * 1-(1-s^rows)^bands (the standard S-curve). [[NumHashes]] and
+    * [[Bands]] target s ≳ 0.5. The banded self-join shuffles both
+    * sides identically, so Spark's ReuseExchange evaluates the
+    * signature plan once.
     */
-  def minhashPairs(docs: DataFrame, textCol: String = "text",
-                   idCol: String = "doc_id", numHashes: Int = NumHashes,
-                   bands: Int = Bands, threshold: Double = 0.5): DataFrame = {
-    val buckets = bandBuckets(docs, textCol, idCol, numHashes, bands)
+  def minhashPairs(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
+    val buckets = bandBuckets(docs)
     val a = buckets.as("a")
     val b = buckets.as("b")
     // merge-hinted for the same reason as [[simhashPairs]]'s self-join:
@@ -163,7 +156,7 @@ object Dedup {
         col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    val sets = withHashedShingleSet(docs, textCol, idCol)
+    val sets = withHashedShingleSet(docs)
     cand
       .join(sets.select(col("id").as("id_a"), col("shingles").as("sh_a")), "id_a")
       .join(sets.select(col("id").as("id_b"), col("shingles").as("sh_b")), "id_b")
@@ -180,10 +173,9 @@ object Dedup {
     * "what a training pipeline actually ships" operator). `pairs` is
     * any (id_a < id_b) pair frame (exact Jaccard, MinHash, SimHash or
     * cosine); removal is a left-anti join on the higher id. */
-  def applyDedup(docs: DataFrame, pairs: DataFrame,
-                 idCol: String = "doc_id"): DataFrame =
+  def applyDedup(docs: DataFrame, pairs: DataFrame): DataFrame =
     docs.join(pairs.select(col("id_b")),
-      docs(idCol) === col("id_b"), "left_anti")
+      docs("doc_id") === col("id_b"), "left_anti")
 
   /** D7: connected components over the duplicate-pair graph — the
     * cluster step a production dedup ships after pair detection.
@@ -204,17 +196,17 @@ object Dedup {
     * constant-size instead of doubling per iteration. The driver loop
     * is over ROUNDS (a handful), never over rows.
     *
-    * Returns (idCol, cluster_id) for every doc; singletons cluster to
+    * Returns (doc_id, cluster_id) for every doc; singletons cluster to
     * themselves. Both endpoints of every pair must be ids in `docs`:
     * an id found only in `pairs` gets no label, so labels never
     * propagate through it and the clusters it would join stay apart.
     * This is not checked at run time. */
   def dupClusters(docs: DataFrame, pairs: DataFrame,
-                  idCol: String = "doc_id", maxRounds: Int = 20): DataFrame = {
+                  maxRounds: Int = 20): DataFrame = {
     val edges = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
       .union(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
       .localCheckpoint()
-    var labels = docs.select(col(idCol).as("id"), col(idCol).as("label"))
+    var labels = docs.select(col("doc_id").as("id"), col("doc_id").as("label"))
       .localCheckpoint()
     var round = 0
     var converged = false
@@ -247,16 +239,15 @@ object Dedup {
     require(converged,
       s"dupClusters did not converge in $maxRounds rounds — a component's " +
         s"diameter exceeds the bound; raise maxRounds")
-    labels.select(col("id").as(idCol), col("label").as("cluster_id"))
+    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
   /** D8: apply cluster dedup — keep the minimum-id member of each
     * component (the canonical representative), drop the rest. */
-  def applyClusterDedup(docs: DataFrame, clusters: DataFrame,
-                        idCol: String = "doc_id"): DataFrame =
+  def applyClusterDedup(docs: DataFrame, clusters: DataFrame): DataFrame =
     docs.join(
-      clusters.filter(col(idCol) === col("cluster_id")).select(col(idCol)),
-      Seq(idCol), "left_semi")
+      clusters.filter(col("doc_id") === col("cluster_id")).select(col("doc_id")),
+      Seq("doc_id"), "left_semi")
 
   /** D15: cluster dedup with KEEP-BEST selection — production
     * curation keeps the highest-QUALITY member of each duplicate
@@ -270,15 +261,14 @@ object Dedup {
     * the pair graph and label propagation are [[dupClusters]]'s, the
     * only corpus-scale work. */
   def applyClusterDedupBest(docs: DataFrame, clusters: DataFrame,
-                            quality: Column,
-                            idCol: String = "doc_id"): DataFrame = {
+                            quality: Column): DataFrame = {
     val keep = clusters
-      .join(docs.select(col(idCol), quality.as("_q")), idCol)
+      .join(docs.select(col("doc_id"), quality.as("_q")), "doc_id")
       .groupBy(col("cluster_id"))
-      .agg(expr(s"max_by($idCol, named_struct('q', _q, 'i', -$idCol))")
-        .as(idCol))
-      .select(col(idCol))
-    docs.join(keep, Seq(idCol), "left_semi")
+      .agg(expr("max_by(doc_id, named_struct('q', _q, 'i', -doc_id))")
+        .as("doc_id"))
+      .select(col("doc_id"))
+    docs.join(keep, Seq("doc_id"), "left_semi")
   }
 
   /** D10: incremental dedup — screen an ARRIVING batch against the
@@ -290,14 +280,12 @@ object Dedup {
     * One equi-join on the fingerprint — the daily-ingest cost is
     * O(batch), never O(corpus²); Spark broadcasts whichever side is
     * small enough. */
-  def incrementalExact(newDocs: DataFrame, index: DataFrame,
-                       textCol: String = "text",
-                       idCol: String = "doc_id"): DataFrame =
+  def incrementalExact(newDocs: DataFrame, index: DataFrame): DataFrame =
     newDocs
-      .select(col(idCol), md5(normalize(col(textCol))).as("fp"))
+      .select(col("doc_id"), md5(normalize(col("text"))).as("fp"))
       .join(index.select(col("fingerprint"), col("keep_id")),
         col("fp") === col("fingerprint"), "left")
-      .select(col(idCol), col("keep_id").as("dup_of"),
+      .select(col("doc_id"), col("keep_id").as("dup_of"),
         col("keep_id").isNull.as("is_new"))
 
   /** D12: incremental NEAR-dedup — the LSH analog of
@@ -317,13 +305,9 @@ object Dedup {
     * frames). */
   def incrementalMinhash(newDocs: DataFrame, standingIndex: DataFrame,
                          standingSets: DataFrame,
-                         textCol: String = "text",
-                         idCol: String = "doc_id", numHashes: Int = NumHashes,
-                         bands: Int = Bands,
                          threshold: Double = 0.5): DataFrame =
-    incrementalMinhashFromSets(
-      withHashedShingleSet(newDocs, textCol, idCol), standingIndex,
-      standingSets, idCol, numHashes, bands, threshold)
+    incrementalMinhashFromSets(withHashedShingleSet(newDocs),
+      standingIndex, standingSets, threshold)
 
   /** [[incrementalMinhash]] over the batch's already-analyzed
     * (id, shingles) frame: the batch side feeds BOTH the banded
@@ -333,12 +317,10 @@ object Dedup {
   private[graft] def incrementalMinhashFromSets(newSets: DataFrame,
                          standingIndex: DataFrame,
                          standingSets: DataFrame,
-                         idCol: String = "doc_id", numHashes: Int = NumHashes,
-                         bands: Int = Bands,
                          threshold: Double = 0.5): DataFrame = {
     val standIdx = standingIndex
       .select(col("id").as("old_id"), col("band"), col("bucket"))
-    val batchIdx = bandBucketsFromSets(newSets, numHashes, bands)
+    val batchIdx = bandBucketsFromSets(newSets)
       .select(col("id").as("new_id"), col("band"), col("bucket"))
     val cand = batchIdx.join(standIdx, Seq("band", "bucket"))
       .select(col("new_id"), col("old_id"))
@@ -354,9 +336,9 @@ object Dedup {
         size(array_union(col("sh_n"), col("sh_o"))).cast("double"))
       .filter(col("jaccard") >= threshold)
       .groupBy(col("new_id")).agg(min(col("old_id")).as("dup_of"))
-    newSets.select(col("id").as(idCol))
-      .join(dups, col(idCol) === col("new_id"), "left")
-      .select(col(idCol), col("dup_of"), col("dup_of").isNull.as("is_new"))
+    newSets.select(col("id").as("doc_id"))
+      .join(dups, col("doc_id") === col("new_id"), "left")
+      .select(col("doc_id"), col("dup_of"), col("dup_of").isNull.as("is_new"))
   }
 
   /** D9: benchmark decontamination — per training doc, the number of
@@ -379,17 +361,16 @@ object Dedup {
     * ProjectCollapse inlines it (measured 9 s vs 1 s at sf0.1), and
     * longs broadcast smaller than strings. */
   def contamination(train: DataFrame, evalSet: DataFrame,
-                    minShared: Int = 5, textCol: String = "text",
-                    idCol: String = "doc_id"): DataFrame = {
-    val trainSh = withHashedShingleSet(train, textCol, idCol)
+                    minShared: Int = 5): DataFrame = {
+    val trainSh = withHashedShingleSet(train)
       .select(col("id"), explode(col("shingles")).as("sh"))
-    val evalSh = withHashedShingleSet(evalSet, textCol, idCol)
+    val evalSh = withHashedShingleSet(evalSet)
       .select(explode(col("shingles")).as("sh")).distinct()
     val shared = trainSh.join(broadcast(evalSh), "sh")
       .groupBy(col("id")).agg(count(lit(1)).as("n_shared"))
-    train.select(col(idCol))
-      .join(shared, train(idCol) === shared("id"), "left")
-      .select(col(idCol),
+    train.select(col("doc_id"))
+      .join(shared, train("doc_id") === shared("id"), "left")
+      .select(col("doc_id"),
         coalesce(col("n_shared"), lit(0L)).as("n_shared"))
       .withColumn("contaminated", col("n_shared") >= minShared)
   }
@@ -408,13 +389,11 @@ object Dedup {
     * joins back to the per-doc eval grams. No corpus-sized shuffle
     * anywhere. */
   def contaminationFraction(train: DataFrame, evalSet: DataFrame,
-                            thresholdBp: Int = 5000,
-                            textCol: String = "text",
-                            idCol: String = "doc_id"): DataFrame = {
-    val evalSh = withHashedShingleSet(evalSet, textCol, idCol)
+                            thresholdBp: Int = 5000): DataFrame = {
+    val evalSh = withHashedShingleSet(evalSet)
       .select(col("id"), explode(col("shingles")).as("sh"))
     val evalGrams = evalSh.select(col("sh")).distinct()
-    val hitGrams = withHashedShingleSet(train, textCol, idCol)
+    val hitGrams = withHashedShingleSet(train)
       .select(explode(col("shingles")).as("sh"))
       .join(broadcast(evalGrams), "sh")
       .select(col("sh")).distinct()
@@ -423,10 +402,10 @@ object Dedup {
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_grams"),
         sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .select(col("id").as(idCol), col("n_grams"), col("n_hit"),
+      .select(col("id").as("doc_id"), col("n_grams"), col("n_hit"),
         expr("n_hit * 10000 div greatest(n_grams, 1L)").as("overlap_bp"))
       .withColumn("contaminated", col("overlap_bp") >= thresholdBp)
-      .orderBy(col(idCol))
+      .orderBy(col("doc_id"))
   }
 
   /** 60-bit SimHash per doc via explode + hash-aggregate (same codegen
@@ -441,11 +420,10 @@ object Dedup {
     * — votes, packing, banding, Hamming verify — oracle-checkable
     * rather than rows-only. */
   val SimBits = 60
-  def simhashSignatures(docs: DataFrame, textCol: String,
-                        idCol: String): DataFrame = {
+  def simhashSignatures(docs: DataFrame): DataFrame = {
     import graft.functions.expressions.poly_hash
-    val toks = docs.select(col(idCol).as("id"),
-        explode(Analyzers.tokenize(normalize(col(textCol)))).as("t"))
+    val toks = docs.select(col("doc_id").as("id"),
+        explode(Analyzers.tokenize(normalize(col("text")))).as("t"))
       .withColumn("h1", poly_hash(col("t"), 1000003L))
       .withColumn("h2", poly_hash(col("t"), 1000033L))
     val votes = (0 until SimBits).map { j =>
@@ -463,9 +441,8 @@ object Dedup {
   /** D3 SimHash near-dup pairs: 4×15-bit bands (any pair within Hamming
     * distance 3 shares at least one exact band), verify with
     * bit_count(xor) ≤ maxHamming. */
-  def simhashPairs(docs: DataFrame, textCol: String = "text",
-                   idCol: String = "doc_id", maxHamming: Int = 3): DataFrame = {
-    val sigs = simhashSignatures(docs, textCol, idCol)
+  def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
+    val sigs = simhashSignatures(docs)
     val banded = sigs.select(col("id"), col("sim"),
       posexplode(transform(sequence(lit(0), lit(3)),
         b => graft.functions.expressions
@@ -513,10 +490,9 @@ object Dedup {
     * posting array in one buffer before the filter discards it.
     * Returns one row per candidate pair (id_a < id_b):
     * (id_a, id_b, size_a, size_b, inter). */
-  private def pairIntersections(docs: DataFrame, textCol: String,
-                                idCol: String, n: Int,
+  private def pairIntersections(docs: DataFrame,
                                 maxShingleFreq: Int): DataFrame = {
-    val sets = withHashedShingleSet(docs, textCol, idCol, n)
+    val sets = withHashedShingleSet(docs)
       .withColumn("setsize", size(col("shingles")))
     val posts = sets
       .select(col("id"), col("setsize"), explode(col("shingles")).as("sh"))
@@ -553,11 +529,9 @@ object Dedup {
     * bounded by shingle frequency, and skew-resistant by dropping
     * ultra-common shingles), count shared per pair, Jaccard from set
     * sizes. SQL-expressible ⇒ serves as its own DuckDB oracle. */
-  def jaccardPairs(docs: DataFrame, textCol: String = "text",
-                   idCol: String = "doc_id", n: Int = 3,
-                   threshold: Double = 0.5,
+  def jaccardPairs(docs: DataFrame, threshold: Double = 0.5,
                    maxShingleFreq: Int = 1000): DataFrame =
-    pairIntersections(docs, textCol, idCol, n, maxShingleFreq)
+    pairIntersections(docs, maxShingleFreq)
       .withColumn("jaccard", col("inter").cast("double") /
         (col("size_a") + col("size_b") - col("inter")).cast("double"))
       .filter(col("jaccard") >= threshold)
@@ -574,16 +548,15 @@ object Dedup {
     * frame — one anti-join-shaped membership flag via a left join,
     * then one tiny aggregate. */
   def splitLeakageFix(docs: DataFrame, valPct: Int = 10,
-                      threshold: Double = 0.5,
-                      idCol: String = "doc_id"): DataFrame = {
-    val pairs = splitLeakage(docs, valPct, threshold, idCol)
+                      threshold: Double = 0.5): DataFrame = {
+    val pairs = splitLeakage(docs, valPct, threshold)
     val leakedVal = pairs
       .select(when(col("split_a") === "val", col("id_a"))
         .otherwise(col("id_b")).as("id"))
       .distinct()
       .withColumn("moved", lit(true))
-    TextStats.hashSplit(docs, valPct, idCol)
-      .select(col(idCol).as("id"), col("split"))
+    TextStats.hashSplit(docs, valPct)
+      .select(col("doc_id").as("id"), col("split"))
       .join(leakedVal, Seq("id"), "left")
       .select(
         when(coalesce(col("moved"), lit(false)), lit("train"))
@@ -602,10 +575,8 @@ object Dedup {
     * eyeballing). Built on [[dupClusters]]' exact transitive
     * clustering; two combiner-friendly aggregates past it
     * (cluster → size, size → histogram), both dictionary-small. */
-  def dupReport(docs: DataFrame, threshold: Double = 0.5,
-                idCol: String = "doc_id"): DataFrame =
-    dupClusters(docs, jaccardPairs(docs, idCol = idCol,
-        threshold = threshold), idCol)
+  def dupReport(docs: DataFrame, threshold: Double = 0.5): DataFrame =
+    dupClusters(docs, jaccardPairs(docs, threshold = threshold))
       .groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size"))
@@ -626,11 +597,10 @@ object Dedup {
     * then actionable two ways: drop it from val, or drop its train
     * twin. */
   def splitLeakage(docs: DataFrame, valPct: Int = 10,
-                   threshold: Double = 0.5,
-                   idCol: String = "doc_id"): DataFrame = {
-    val splits = TextStats.hashSplit(docs, valPct, idCol)
-      .select(col(idCol).as("id"), col("split"))
-    jaccardPairs(docs, idCol = idCol, threshold = threshold)
+                   threshold: Double = 0.5): DataFrame = {
+    val splits = TextStats.hashSplit(docs, valPct)
+      .select(col("doc_id").as("id"), col("split"))
+    jaccardPairs(docs, threshold = threshold)
       .join(splits.select(col("id").as("id_a"), col("split").as("split_a")),
         "id_a")
       .join(splits.select(col("id").as("id_b"), col("split").as("split_b")),
@@ -655,11 +625,9 @@ object Dedup {
     * points (one integer division, engine-portable), thresholded in
     * bp; no float enters the decision. Output: (contained, container,
     * containment_bp) ordered pairs with containment_bp ≥ thresholdBp. */
-  def containmentPairs(docs: DataFrame, textCol: String = "text",
-                       idCol: String = "doc_id", n: Int = 3,
-                       thresholdBp: Int = 8000,
+  def containmentPairs(docs: DataFrame, thresholdBp: Int = 8000,
                        maxShingleFreq: Int = 1000): DataFrame = {
-    val inter = pairIntersections(docs, textCol, idCol, n, maxShingleFreq)
+    val inter = pairIntersections(docs, maxShingleFreq)
     inter.select(col("id_a").as("contained"), col("id_b").as("container"),
         expr("inter * 10000 div size_a").as("containment_bp"))
       .unionByName(inter.select(col("id_b").as("contained"),
@@ -685,29 +653,27 @@ object Dedup {
     * sizes where that bites, common chunks should instead be counted
     * first and handled as stop-chunks (same remedy as d4's capped
     * posting lists). */
-  def chunkDedup(docs: DataFrame, chunkTokens: Int = 32,
-                 textCol: String = "text",
-                 idCol: String = "doc_id"): DataFrame = {
+  def chunkDedup(docs: DataFrame, chunkTokens: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = split(trim(col(textCol)), "\\s+")
+    val toks = split(trim(col("text")), "\\s+")
     val chunked = docs
-      .filter(length(trim(col(textCol))) > 0)
-      .select(col(idCol), toks.as("toks"))
+      .filter(length(trim(col("text"))) > 0)
+      .select(col("doc_id"), toks.as("toks"))
       // ceil(n/chunk) chunks: (n-1)/chunk is double division in the
       // Column DSL; the int cast truncates, which is floor for n ≥ 1
-      .select(col(idCol), posexplode(transform(
+      .select(col("doc_id"), posexplode(transform(
         sequence(lit(0),
           ((size(col("toks")) - 1) / chunkTokens).cast("int")),
         i => concat_ws(" ",
           slice(col("toks"), i * chunkTokens + 1, lit(chunkTokens))))))
-      .select(col(idCol), col("pos").cast("long").as("chunk_idx"),
+      .select(col("doc_id"), col("pos").cast("long").as("chunk_idx"),
         md5(col("col")).as("fp"))
-    val firstSeen = min(struct(col(idCol), col("chunk_idx")))
+    val firstSeen = min(struct(col("doc_id"), col("chunk_idx")))
       .over(Window.partitionBy("fp"))
     chunked
       .withColumn("is_dup",
-        struct(col(idCol), col("chunk_idx")) =!= firstSeen)
-      .select(col(idCol), col("chunk_idx"), col("fp"), col("is_dup"))
+        struct(col("doc_id"), col("chunk_idx")) =!= firstSeen)
+      .select(col("doc_id"), col("chunk_idx"), col("fp"), col("is_dup"))
   }
 
   /** D19: exact repeated-substring MASKING — the suffix-array
@@ -738,12 +704,11 @@ object Dedup {
     * Output: (doc_id, n_tokens, n_masked, n_spans, cleaned_text) for
     * every input document — n_spans counts maximal contiguous masked
     * runs, the "how many distinct boilerplate regions" statistic. */
-  def substringDedup(docs: DataFrame, n: Int = 8, minDocs: Int = 2,
-                     textCol: String = "text",
-                     idCol: String = "doc_id"): DataFrame = {
+  def substringDedup(docs: DataFrame, n: Int = 8,
+                     minDocs: Int = 2): DataFrame = {
     val toksDf = docs
-      .select(col(idCol).as("id"),
-        Analyzers.tokenize(normalize(col(textCol))).as("toks"))
+      .select(col("doc_id").as("id"),
+        Analyzers.tokenize(normalize(col("text"))).as("toks"))
     // (doc, start position, gram hash) — one row per sliding window
     val grams = toksDf
       .filter(size(col("toks")) >= n)

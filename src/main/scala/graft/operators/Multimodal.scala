@@ -727,10 +727,9 @@ object Multimodal {
 
   /** Wrap a text table as a binary media table — the ingest shape for
     * opaque content (utf-8 bytes stand in for image bytes here). */
-  def asMedia(docs: DataFrame, textCol: String = "text",
-              idCol: String = "doc_id"): DataFrame =
-    docs.select(col(idCol).as("media_id"),
-      encode(col(textCol), "utf-8").as("content"),
+  def asMedia(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").as("media_id"),
+      encode(col("text"), "utf-8").as("content"),
       lit("txt").as("format"))
       .withColumn("n_bytes", octet_length(col("content")).cast("long"))
 

@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.io.api.Binary
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Analyzers
@@ -52,8 +53,7 @@ object Search {
     *  - order by score desc, id asc, top k.
     */
   def scoredSearch(docs: DataFrame, domainName: String = "ASIA nation",
-                   k: Int = 50, weight: Double = 5.0, k1: Double = 1.2,
-                   b: Double = 0.75): DataFrame = {
+                   k: Int = 50, weight: Double = 5.0): DataFrame = {
     val pre = docs.select(col("id"), col("author"), col("items"),
       size(filter(col("annotations"),
         a => a.getField("domain").getField("name").contains(lit(domainName))))
@@ -64,7 +64,7 @@ object Search {
       avg(col("dl")).as("avgdl"),
       sum(when(col("tf") > 0, 1).otherwise(0)).cast("double").as("df"))
     val (idf, tfNorm) = bm25Parts(col("tf"), col("df"),
-      col("dl"), col("n"), col("avgdl"), k1, b)
+      col("dl"), col("n"), col("avgdl"))
     pre
       .filter(col("author.acctbal") > 100.0 && col("author.id") > 10 &&
         exists(col("items"), i => i.getField("returnflag") === "R"))
@@ -93,8 +93,7 @@ object Search {
     * SearchSpec proves result equality against the docs-based path. */
   def scoredSearchRaw(spark: SparkSession, dir: String,
                       domainName: String = "ASIA nation", k: Int = 50,
-                      weight: Double = 5.0, k1: Double = 1.2,
-                      b: Double = 0.75): DataFrame = {
+                      weight: Double = 5.0): DataFrame = {
     val li = Tables.lineitem(spark, dir)
     val part = Tables.part(spark, dir)
     val supp = Tables.supplier(spark, dir)
@@ -124,7 +123,7 @@ object Search {
       avg(col("dl")).as("avgdl"),
       sum(when(col("tf") > 0, 1).otherwise(0)).cast("double").as("df"))
     val (idf, tfNorm) = bm25Parts(col("tf"), col("df"),
-      col("dl"), col("n"), col("avgdl"), k1, b)
+      col("dl"), col("n"), col("avgdl"))
     d.filter(col("acctbal") > 100.0 && col("author_id") > 10)
       .join(li.filter(col("l_returnflag") === "R").select(col("l_orderkey")),
         col("id") === col("l_orderkey"), "left_semi")
@@ -140,27 +139,25 @@ object Search {
     * `match` clause implies (SURVEY.md §2.7 F2): per-document tf and
     * length against the corpus statistics (N, df, avgdl), every
     * matching document ranked by score. */
-  def bm25(spark: SparkSession, dir: String, term: String,
-           k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25Of(scanned(spark, dir, Seq(term)), k1, b)
+  def bm25(spark: SparkSession, dir: String, term: String): DataFrame =
+    bm25Of(scanned(spark, dir, Seq(term)))
 
   /** [[bm25]] from the artifact. */
-  def bm25Indexed(spark: SparkSession, ix: TextIndex.Loaded, term: String,
-                  k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25Of(indexed(spark, ix, Seq(term)), k1, b)
+  def bm25Indexed(spark: SparkSession, ix: TextIndex.Loaded,
+                  term: String): DataFrame =
+    bm25Of(indexed(spark, ix, Seq(term)))
 
   /** Multi-term ranked retrieval: score = Σ over query terms of BM25 —
     * the ES `match` query with OR semantics over an analyzed query
     * string; top-k two-phase. */
   def searchBm25(spark: SparkSession, dir: String, terms: Seq[String],
-                 k: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    searchBm25Of(scanned(spark, dir, terms), k, k1, b)
+                 k: Int = 20): DataFrame =
+    searchBm25Of(scanned(spark, dir, terms), k)
 
   /** [[searchBm25]] from the artifact. */
   def searchBm25Indexed(spark: SparkSession, ix: TextIndex.Loaded,
-                        terms: Seq[String], k: Int = 20, k1: Double = 1.2,
-                        b: Double = 0.75): DataFrame =
-    searchBm25Of(indexed(spark, ix, terms), k, k1, b)
+                        terms: Seq[String], k: Int = 20): DataFrame =
+    searchBm25Of(indexed(spark, ix, terms), k)
 
   /** F2: TF-IDF relevance for one query term — tf from the doc's own
     * tokens over its length, a smoothed idf from the corpus df
@@ -174,6 +171,10 @@ object Search {
     tfidfOf(indexed(spark, ix, Seq(term)))
 
   // ---- BM25 over an access path ------------------------------------
+  //
+  // Every score uses the index's similarity, k1 = 1.2 and b = 0.75
+  // ([[K1]], [[B]]): ES's default BM25, set per index and never per
+  // request, so no request shape takes them as parameters.
   //
   // Each BM25 request shape (bm25Of … scoredWithBucket) is written once,
   // over a TfSource, the way ES scores a `match` alike over whatever
@@ -250,9 +251,9 @@ object Search {
       "doc_id")
 
   /** [[bm25]]'s shape: the one term's BM25 per matching document. */
-  private def bm25Of(src: TfSource, k1: Double, b: Double): DataFrame =
+  private def bm25Of(src: TfSource): DataFrame =
     src.frame.filter(src.matched)
-      .select(col("doc_id"), round(bm25Sum(src.stats, k1, b), 6).as("bm25"))
+      .select(col("doc_id"), round(bm25Sum(src.stats), 6).as("bm25"))
       .orderBy(col("bm25").desc, col("doc_id").asc)
 
   /** [[tfidf]]'s shape. */
@@ -264,23 +265,22 @@ object Search {
       .orderBy(col("tfidf").desc, col("doc_id").asc)
 
   /** [[searchBm25]]'s shape. */
-  private def searchBm25Of(src: TfSource, k: Int, k1: Double,
-                           b: Double): DataFrame =
+  private def searchBm25Of(src: TfSource, k: Int): DataFrame =
     src.frame.filter(src.matched)
-      .select(col("doc_id"), round(bm25Sum(src.stats, k1, b), 6).as("score"))
+      .select(col("doc_id"), round(bm25Sum(src.stats), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)
 
   /** [[minShouldMatch]]'s shape: a scan frame holds every document, so
     * `minMatch = 0` keeps the zero-match ones at score 0. */
-  private def minShouldMatchOf(src: TfSource, minMatch: Int, k: Int,
-                               k1: Double, b: Double): DataFrame = {
+  private def minShouldMatchOf(src: TfSource, minMatch: Int,
+                               k: Int): DataFrame = {
     val nMatched = src.stats.df.indices
       .map(i => when(col(s"tf$i") > 0, 1).otherwise(0)).reduce(_ + _)
     src.frame.withColumn("n_matched", nMatched)
       .filter(col("n_matched") >= minMatch)
       .select(col("doc_id"), col("n_matched").cast("long").as("n_matched"),
-        round(bm25Sum(src.stats, k1, b), 6).as("score"))
+        round(bm25Sum(src.stats), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
   }
@@ -289,10 +289,9 @@ object Search {
     * `window` primary hits (a scan frame already carries it). */
   private def rescoreOf(src: TfSource, fetch: DataFrame => DataFrame,
                         phrase: String, window: Int, k: Int,
-                        phraseWeight: Double, k1: Double,
-                        b: Double): DataFrame =
+                        phraseWeight: Double): DataFrame =
     fetch(src.frame.filter(src.matched)
-        .withColumn("primary_score", round(bm25Sum(src.stats, k1, b), 6))
+        .withColumn("primary_score", round(bm25Sum(src.stats), 6))
         // two-phase top-`window` (TakeOrderedAndProject), never a global
         // sort: each shuffle partition surrenders at most `window` rows
         .orderBy(col("primary_score").desc, col("doc_id"))
@@ -315,7 +314,7 @@ object Search {
                                fetch: DataFrame => DataFrame): DataFrame =
     fetch(src.frame.filter(src.matched))
       .select(col("doc_id"), col("source"),
-        round(bm25Sum(src.stats, k1 = 1.2, b = 0.75), 6).as("score"))
+        round(bm25Sum(src.stats), 6).as("score"))
 
   /** (n, avgdl, df per query term) from the artifact, read ONCE on the
     * driver when the request's frame is built: the 1-row corpus table
@@ -350,19 +349,26 @@ object Search {
       terms.map(t => bound_double(df.getOrElse(t, 0L).toDouble)))
   }
 
+  /** BM25's term-frequency saturation k1 and length normalization b:
+    * the index's similarity, ES's defaults, which ES sets per index and
+    * no search request can change. */
+  private val K1 = 1.2
+  private val B = 0.75
+
   /** The BM25 formula's (idf, length-normalized tf) PAIR — the one
     * encoding of the arithmetic (the round-13 review counted ten
     * inlined copies; a scoring tweak applied to some and not others
     * would silently break the spec-locked scan-vs-index score
-    * equality). Callers multiply `idf * tfNorm` themselves — the
+    * equality), scored with the index's similarity k1 = 1.2,
+    * b = 0.75 ([[K1]], [[B]]): ES's default, set per index, never per
+    * request. Callers multiply `idf * tfNorm` themselves — the
     * pair keeps the float grouping (a·(b/c), never (a·b)/c) and the
     * explain-style paths' access to the components. */
-  private[operators] def bm25Parts(tf: Column, df: Column, len: Column,
-                                   n: Column, avgdl: Column,
-                                   k1: Double, b: Double): (Column, Column) =
+  private[graft] def bm25Parts(tf: Column, df: Column, len: Column,
+                               n: Column, avgdl: Column): (Column, Column) =
     (log((n - df + 0.5) / (df + 0.5) + 1.0),
-      (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0) - lit(b) + lit(b) * len / avgdl)))
+      (tf * lit(K1 + 1.0)) /
+        (tf + lit(K1) * (lit(1.0) - lit(B) + lit(B) * len / avgdl)))
 
   /** BM25's corpus statistics as scoring inputs: n, avgdl and one df
     * per query term — column references into a scan path's broadcast
@@ -372,10 +378,10 @@ object Search {
                                      df: Seq[Column])
 
   /** Σ over query terms of BM25, reading tf$i and len per document. */
-  private def bm25Sum(stats: Bm25Stats, k1: Double, b: Double): Column =
+  private def bm25Sum(stats: Bm25Stats): Column =
     stats.df.zipWithIndex.map { case (df, i) =>
       val (idf, tfn) = bm25Parts(col(s"tf$i"), df, col("len"),
-        stats.n, stats.avgdl, k1, b)
+        stats.n, stats.avgdl)
       when(col(s"tf$i") > 0, idf * tfn).otherwise(lit(0.0))
     }.reduce(_ + _)
 
@@ -393,20 +399,27 @@ object Search {
     * window, so it plans as `WindowGroupLimit` like x16. All score
     * arithmetic starts from exact integer counts; both engines derive
     * identical doubles. */
-  def significantTerms(docs: DataFrame, catCol: String, k: Int = 3,
-                       textCol: String = "text",
-                       idCol: String = "doc_id"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val tok = docs.select(col(catCol).as("cat"), col(idCol).as("id"),
-        explode(Analyzers.tokenize(lower(col(textCol)))).as("token"))
+  def significantTerms(docs: DataFrame, catCol: String,
+                       k: Int = 3): DataFrame = {
+    val tok = docs.select(col(catCol).as("cat"), col("doc_id").as("id"),
+        explode(Analyzers.tokenize(lower(col("text")))).as("token"))
       .distinct()
     val fg = tok.groupBy("cat", "token").agg(count(lit(1)).as("fg_df"))
-    val bg = fg.groupBy("token").agg(sum("fg_df").as("bg_df"))
-    // one corpus scan serves both the per-category sizes and (driver-
-    // side, from the materialized handful of rows) the grand total — a
-    // separate docs.count() would be a third full scan
-    val catSizes = docs.groupBy(col(catCol).as("cat"))
-      .agg(count(lit(1)).as("n_cat")).localCheckpoint()
+    significantTermsOf(fg, fg.groupBy("token").agg(sum("fg_df").as("bg_df")),
+      docs.groupBy(col(catCol).as("cat")), k)
+  }
+
+  /** The JLH score and per-category rank-≤-k cut of both
+    * significant-terms paths, over the (cat, token, fg_df) foreground,
+    * the (token, bg_df) background and the documents grouped by
+    * category. One corpus scan serves both the per-category sizes and
+    * (driver-side, from the materialized handful of rows) the grand
+    * total — a separate docs.count() would be a third full scan. */
+  private def significantTermsOf(fg: DataFrame, bg: DataFrame,
+                                 byCat: RelationalGroupedDataset,
+                                 k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val catSizes = byCat.agg(count(lit(1)).as("n_cat")).localCheckpoint()
     val totRow = catSizes.agg(sum("n_cat")).head()
     // sum over ZERO rows is null — an empty corpus must yield an
     // empty result frame, not a driver NPE (round-13 review)
@@ -501,14 +514,13 @@ object Search {
     * Same shape as [[searchBm25]] — the clause-count filter is one more
     * codegen'd predicate, not a pass. */
   def minShouldMatch(spark: SparkSession, dir: String, terms: Seq[String],
-                     minMatch: Int, k: Int = 20, k1: Double = 1.2,
-                     b: Double = 0.75): DataFrame =
-    minShouldMatchOf(scanned(spark, dir, terms), minMatch, k, k1, b)
+                     minMatch: Int, k: Int = 20): DataFrame =
+    minShouldMatchOf(scanned(spark, dir, terms), minMatch, k)
 
   /** [[minShouldMatch]] from the artifact. */
   def minShouldMatchIndexed(spark: SparkSession, ix: TextIndex.Loaded,
-                            terms: Seq[String], minMatch: Int, k: Int = 20,
-                            k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                            terms: Seq[String], minMatch: Int,
+                            k: Int = 20): DataFrame = {
     // the indexed path derives its doc set from postings, so it can
     // only ever see documents matching ≥1 term; minMatch = 0 (every
     // clause optional — zero-match docs pad the tail at score 0) is
@@ -518,7 +530,7 @@ object Search {
       "minShouldMatchIndexed requires minMatch >= 1 — an inverted " +
         "index cannot enumerate zero-match documents; use the " +
         "scan-based minShouldMatch for minimum_should_match = 0")
-    minShouldMatchOf(indexed(spark, ix, terms), minMatch, k, k1, b)
+    minShouldMatchOf(indexed(spark, ix, terms), minMatch, k)
   }
 
   /** ES `rescore`: a cheap primary query ranks the corpus, then ONLY
@@ -530,10 +542,9 @@ object Search {
     * uses the rounded score (engine-portable rank boundary). */
   def rescore(spark: SparkSession, dir: String, terms: Seq[String],
               phrase: String, window: Int = 50, k: Int = 20,
-              phraseWeight: Double = 2.0, k1: Double = 1.2,
-              b: Double = 0.75): DataFrame =
+              phraseWeight: Double = 2.0): DataFrame =
     rescoreOf(scanned(spark, dir, terms, lower(col("text")).as("lt")),
-      identity, phrase, window, k, phraseWeight, k1, b)
+      identity, phrase, window, k, phraseWeight)
 
   /** [[rescore]] from the artifact: the primary ranking never touches
     * document text at all; raw text is fetched for ONLY the `window`
@@ -541,11 +552,10 @@ object Search {
   def rescoreIndexed(spark: SparkSession, dir: String,
                      ix: TextIndex.Loaded, terms: Seq[String],
                      phrase: String, window: Int = 50, k: Int = 20,
-                     phraseWeight: Double = 2.0, k1: Double = 1.2,
-                     b: Double = 0.75): DataFrame =
+                     phraseWeight: Double = 2.0): DataFrame =
     rescoreOf(indexed(spark, ix, terms),
       fetched(spark, dir, lower(col("text")).as("lt")),
-      phrase, window, k, phraseWeight, k1, b)
+      phrase, window, k, phraseWeight)
 
   /** ES `_terms_enum` API: lexicographic enumeration of the index
     * terms matching a prefix, with their doc counts — served entirely
@@ -617,11 +627,10 @@ object Search {
     * identically. */
   def boosting(spark: SparkSession, ix: TextIndex.Loaded,
                posTerm: String, negTerm: String,
-               negativeBoost: Double = 0.5, k: Int = 15,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+               negativeBoost: Double = 0.5, k: Int = 15): DataFrame = {
     val s = indexedStats(spark, ix, Seq(posTerm))
     val (idf, tfNorm) = bm25Parts(col("tf"), s.df.head,
-      col("len"), s.n, s.avgdl, k1, b)
+      col("len"), s.n, s.avgdl)
     val postings = live(spark, ix)
     val neg = postings.filter(col("term") === negTerm)
       .select(col("doc_id"), lit(true).as("demoted"))
@@ -684,8 +693,8 @@ object Search {
     * (each leg is already reduced to its matching docs), one final
     * round so both engines sum in the same double order. */
   def matchBoolPrefix(spark: SparkSession, ix: TextIndex.Loaded,
-                      terms: Seq[String], prefix: String, k: Int = 10,
-                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                      terms: Seq[String], prefix: String,
+                      k: Int = 10): DataFrame = {
     require(prefix.nonEmpty, "match_bool_prefix needs a non-empty prefix")
     // terms may be EMPTY — the user has typed only the first partial
     // word, the natural search-as-you-type opening state (ES accepts
@@ -699,7 +708,7 @@ object Search {
         postings.select(col("doc_id"), lit(0.0).as("fscore")).limit(0)
       else {
         val src = indexed(spark, ix, terms)
-        src.frame.select(col("doc_id"), bm25Sum(src.stats, k1, b).as("fscore"))
+        src.frame.select(col("doc_id"), bm25Sum(src.stats).as("fscore"))
       }
     // SARGable upper bound: bump the last char. A last char of
     // Char.MaxValue would wrap to an empty/inverted range, so fall
@@ -766,11 +775,10 @@ object Search {
     * factor). One pushed term read + the statistics read; the
     * explanation costs nothing beyond the query it explains. */
   def explainBm25(spark: SparkSession, ix: TextIndex.Loaded,
-                  term: String, k: Int = 10, k1: Double = 1.2,
-                  b: Double = 0.75): DataFrame = {
+                  term: String, k: Int = 10): DataFrame = {
     val s = indexedStats(spark, ix, Seq(term))
     val (idf, tfNorm) = bm25Parts(col("tf"), s.df.head,
-      col("len"), s.n, s.avgdl, k1, b)
+      col("len"), s.n, s.avgdl)
     live(spark, ix).filter(col("term") === term)
       .select(col("doc_id"), col("tf"), col("len"),
         s.df.head.cast("long").as("df"),
@@ -797,10 +805,9 @@ object Search {
     * [[msearchBm25Multi]] (one-term term lists) — one scoring
     * implementation for both msearch shapes. */
   def msearchBm25(spark: SparkSession, ix: TextIndex.Loaded,
-                  queries: Seq[(String, String)], k: Int = 5,
-                  k1: Double = 1.2, b: Double = 0.75): DataFrame =
+                  queries: Seq[(String, String)], k: Int = 5): DataFrame =
     msearchBm25Multi(spark, ix,
-      queries.map { case (q, t) => (q, Seq(t)) }, k, k1, b)
+      queries.map { case (q, t) => (q, Seq(t)) }, k)
 
   /** The real `_msearch` shape: each query is a multi-term OR
     * ([[searchBm25Indexed]] semantics — per-doc score is the sum of
@@ -817,8 +824,8 @@ object Search {
     * window the planner runs as WindowGroupLimit (map-side per-group
     * top-k before the shuffle). */
   def msearchBm25Multi(spark: SparkSession, ix: TextIndex.Loaded,
-                       queries: Seq[(String, Seq[String])], k: Int = 5,
-                       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                       queries: Seq[(String, Seq[String])],
+                       k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val allTerms = queries.flatMap(_._2).distinct
     // dictionary df as double — the same long-to-double conversion
@@ -832,7 +839,7 @@ object Search {
         .toDF("query_id", "term")
     }
     val (idf, tfNorm) = bm25Parts(col("tf"), col("df"),
-      col("len"), col("n"), col("avgdl"), k1, b)
+      col("len"), col("n"), col("avgdl"))
     live(spark, ix).filter(col("term").isin(allTerms: _*))
       .select(col("term"), col("doc_id"), col("tf"), col("len"))
       .join(broadcast(termStats), Seq("term"))
@@ -1103,31 +1110,12 @@ object Search {
     * would ride inside the postings like any indexed field). */
   def significantTermsIndexed(spark: SparkSession, ix: TextIndex.Loaded,
                               cats: DataFrame, k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val tok = live(spark, ix)
       .select(col("doc_id").as("id"), col("term").as("token"))
       .join(broadcast(cats), "id")
-    val fg = tok.groupBy("cat", "token").agg(count(lit(1)).as("fg_df"))
-    val bg = ix.termDf(spark).select(col("term").as("token"),
-      col("df").as("bg_df"))
-    val catSizes = cats.groupBy(col("cat"))
-      .agg(count(lit(1)).as("n_cat")).localCheckpoint()
-    val totRow = catSizes.agg(sum("n_cat")).head()
-    // sum over ZERO rows is null — an empty corpus must yield an
-    // empty result frame, not a driver NPE (round-13 review)
-    val nTotal =
-      (if (totRow.isNullAt(0)) 0L else totRow.getLong(0)).toDouble
-    val scored = fg.join(bg, "token")
-      .join(broadcast(catSizes), "cat")
-      .withColumn("fg_pct", col("fg_df").cast("double") / col("n_cat"))
-      .withColumn("bg_pct", col("bg_df").cast("double") / lit(nTotal))
-      .withColumn("score",
-        round((col("fg_pct") - col("bg_pct")) * col("fg_pct") / col("bg_pct"), 6))
-    scored
-      .withColumn("rk", row_number().over(Window.partitionBy("cat")
-        .orderBy(col("score").desc, col("token"))))
-      .filter(col("rk") <= k)
-      .select(col("cat"), col("token"), col("fg_df"), col("bg_df"),
-        col("score"), col("rk").cast("long").as("rk"))
+    significantTermsOf(
+      tok.groupBy("cat", "token").agg(count(lit(1)).as("fg_df")),
+      ix.termDf(spark).select(col("term").as("token"), col("df").as("bg_df")),
+      cats.groupBy(col("cat")), k)
   }
 }

@@ -59,9 +59,8 @@ object TextStats {
   /** X2 quality signals: length, token count, mean token length,
     * punctuation ratio, stopword ratio, and a composite [0,1] score —
     * the standard cheap heuristics a pretraining pipeline filters on. */
-  def quality(docs: DataFrame, textCol: String = "text",
-              idCol: String = "doc_id"): DataFrame = {
-    val text = col(textCol)
+  def quality(docs: DataFrame): DataFrame = {
+    val text = col("text")
     // one fused codegen'd token pass for (count, stop-count, Σ lengths)
     // instead of interpreted filter + aggregate walks
     val st = graft.functions.expressions.token_stats(
@@ -77,7 +76,7 @@ object TextStats {
     val stopRatio = when(nToks > 0, nStop.cast("double") / nToks).otherwise(0.0)
     // composite: long enough, not punctuation soup, has some function
     // words (the formula lives in qualityScore so filters can fuse it)
-    docs.select(col(idCol), nChars.as("n_chars"), nToks.as("n_tokens"),
+    docs.select(col("doc_id"), nChars.as("n_chars"), nToks.as("n_tokens"),
       round(meanTokLen, 6).as("mean_token_len"),
       round(punctRatio, 6).as("punct_ratio"),
       round(stopRatio, 6).as("stopword_ratio"),
@@ -87,16 +86,15 @@ object TextStats {
   /** X3 token counting: whitespace tokens and a BPE-ish segmentation
     * (letter runs | digit runs | single other non-space chars) — the
     * usual pre-tokenizer shape (GPT-2-style regex, simplified). */
-  def tokenCounts(docs: DataFrame, textCol: String = "text",
-                  idCol: String = "doc_id"): DataFrame = {
-    val text = col(textCol)
+  def tokenCounts(docs: DataFrame): DataFrame = {
+    val text = col("text")
     val ws = size(split(trim(text), "\\s+"))
     // null-safe: size(regexp_extract_all(null)) is -1 under Spark's
     // default legacy.sizeOfNull — a null-text doc must count 0 tokens,
     // not subtract one from every downstream sum (round-13 review)
     val bpe = when(text.isNull, 0).otherwise(
       size(regexp_extract_all(text, lit("\\p{L}+|\\p{N}+|[^\\p{L}\\p{N}\\s]"), lit(0))))
-    docs.select(col(idCol),
+    docs.select(col("doc_id"),
       when(coalesce(length(trim(text)), lit(0)) === 0, 0).otherwise(ws).cast("long").as("ws_tokens"),
       bpe.cast("long").as("bpe_tokens"))
   }
@@ -132,19 +130,21 @@ object TextStats {
 
   /** X9: intra-document repetition signal (the Gopher/MassiveText
     * "fraction of duplicate n-grams" quality rule): 1 − distinct/total
-    * word-3-grams. Repetitive boilerplate and degenerate generations
-    * score high and get filtered before training. Pure projection —
-    * the distinct-shingle count reuses the dedup machinery, the total
-    * is just `n_tokens − 2`. */
-  def repetition(docs: DataFrame, textCol: String = "text",
-                 idCol: String = "doc_id"): DataFrame = {
-    val toksCol = Analyzers.tokenize(Dedup.normalize(col(textCol)))
+    * word-[[Dedup.ShingleWidth]]-grams (the `_3grams` columns).
+    * Repetitive boilerplate and degenerate generations score high and
+    * get filtered before training. Pure projection — the
+    * distinct-shingle count reuses the dedup machinery, the total is
+    * just `n_tokens − (width − 1)`. */
+  def repetition(docs: DataFrame): DataFrame = {
+    val toksCol = Analyzers.tokenize(Dedup.normalize(col("text")))
+    val n = Dedup.ShingleWidth
     docs
-      .select(col(idCol), toksCol.as("toks"))
-      .select(col(idCol),
-        greatest(size(col("toks")) - 2, lit(0)).cast("long").as("total_3grams"),
-        when(size(col("toks")) >= 3,
-          size(graft.functions.expressions.shingle_hashes(col("toks"), 3)))
+      .select(col("doc_id"), toksCol.as("toks"))
+      .select(col("doc_id"),
+        greatest(size(col("toks")) - (n - 1), lit(0)).cast("long")
+          .as("total_3grams"),
+        when(size(col("toks")) >= n,
+          size(graft.functions.expressions.shingle_hashes(col("toks"))))
           .otherwise(lit(0)).cast("long").as("distinct_3grams"))
       .withColumn("dup_ratio",
         when(col("total_3grams") > 0,
@@ -165,10 +165,9 @@ object TextStats {
     * SQL), and the assignment is stable under corpus growth: a
     * document keeps its split forever, so eval sets never silently
     * leak into training after an append. Pure projection — no shuffle. */
-  def hashSplit(docs: DataFrame, valPct: Int = 10,
-                idCol: String = "doc_id"): DataFrame = {
-    val bucket = splitBucket(col(idCol))
-    docs.select(col(idCol), bucket.as("bucket"),
+  def hashSplit(docs: DataFrame, valPct: Int = 10): DataFrame = {
+    val bucket = splitBucket(col("doc_id"))
+    docs.select(col("doc_id"), bucket.as("bucket"),
       when(bucket < lit(100 - valPct), "train").otherwise("val").as("split"))
   }
 
@@ -191,29 +190,28 @@ object TextStats {
     *   4. broadcast the offsets back and add.
     * Same shape as `repartitionByRange` + per-partition offsets, kept
     * declarative. The oracle is the plain single-window SQL. */
-  def packChunks(docs: DataFrame, budget: Long, buckets: Int = 32,
-                 textCol: String = "text",
-                 idCol: String = "doc_id"): DataFrame = {
+  def packChunks(docs: DataFrame, budget: Long,
+                 buckets: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // the (id, n_tokens) projection feeds THREE consumers (bounds agg,
     // per-bucket windows, bucket totals); materialize it once so the
     // upstream corpus scan — possibly a whole filter pipeline — runs
     // once, not three times. Two longs per doc: tiny at any scale.
-    val counts = tokenCounts(docs, textCol, idCol)
-      .select(col(idCol), col("ws_tokens").as("n_tokens"))
+    val counts = tokenCounts(docs)
+      .select(col("doc_id"), col("ws_tokens").as("n_tokens"))
       .localCheckpoint()
-    val bounds = counts.agg(min(col(idCol)).as("lo"), max(col(idCol)).as("hi"))
+    val bounds = counts.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
     val bucketed = counts.crossJoin(broadcast(bounds))
       .withColumn("bucket",
         // integral `div`, not `/`: long / long is double division in
         // the Column DSL (same hazard as the Tables.events nanos fix)
         least(lit(buckets - 1),
-          expr(s"(($idCol - lo) * $buckets) div (hi - lo + 1)"))
+          expr(s"((doc_id - lo) * $buckets) div (hi - lo + 1)"))
           .cast("int"))
       .drop("lo", "hi")
     val withCum = bucketed.withColumn("cum_in_bucket",
       sum(col("n_tokens")).over(
-        Window.partitionBy("bucket").orderBy(idCol)))
+        Window.partitionBy("bucket").orderBy("doc_id")))
     val offsets = bucketed.groupBy("bucket")
       .agg(sum("n_tokens").as("tot"))
       .withColumn("offset",
@@ -222,7 +220,7 @@ object TextStats {
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col("bucket").as("off_bucket"), col("offset"))
     withCum.join(broadcast(offsets), col("bucket") === col("off_bucket"))
-      .select(col(idCol), col("n_tokens"),
+      .select(col("doc_id"), col("n_tokens"),
         (col("offset") + col("cum_in_bucket") - col("n_tokens"))
           .as("start_offset"))
       .withColumn("chunk", expr(s"start_offset div $budget"))
@@ -231,15 +229,14 @@ object TextStats {
   /** X4 document fingerprinting: full-text md5 of the normalized text
     * plus a content-defined partial fingerprint (min md5 over word
     * 3-gram shingles — stable under local edits, the winnowing idea). */
-  def fingerprints(docs: DataFrame, textCol: String = "text",
-                   idCol: String = "doc_id"): DataFrame =
-    docs.select(col(idCol).as("id"),
-        md5(Dedup.normalize(col(textCol))).as("md5_full"),
-        graft.functions.Analyzers.tokenize(Dedup.normalize(col(textCol)))
+  def fingerprints(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").as("id"),
+        md5(Dedup.normalize(col("text"))).as("md5_full"),
+        graft.functions.Analyzers.tokenize(Dedup.normalize(col("text")))
           .as("toks"))
       .select(col("id"), col("md5_full"),
         Dedup.shingleSet(col("toks")).as("shingles"))
-      .select(col("id").as(idCol), col("md5_full"),
+      .select(col("id").as("doc_id"), col("md5_full"),
         graft.functions.expressions.min_md5(col("shingles"))
           .as("min_shingle_md5"))
 
@@ -283,20 +280,20 @@ object TextStats {
     * into broadcast offsets — same machinery as [[packChunks]], keyed
     * by hash instead of id. Deterministic across cluster sizes,
     * re-runs, and engines; reshuffling is just a new seed. */
-  def shuffleBatches(docs: DataFrame, batchSize: Int, seed: Long = 42L,
-                     idCol: String = "doc_id"): DataFrame = {
+  def shuffleBatches(docs: DataFrame, batchSize: Int,
+                     seed: Long = 42L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // two consumers (per-bucket ranking, bucket-count offsets) — the
     // three-column frame materializes once so the corpus scan and the
     // md5 run once, not twice (same reason packChunks checkpoints its
     // counts frame)
-    val keyed = docs.select(col(idCol),
-        md5(concat_ws(":", lit(seed), col(idCol))).as("skey"))
+    val keyed = docs.select(col("doc_id"),
+        md5(concat_ws(":", lit(seed), col("doc_id"))).as("skey"))
       .withColumn("bucket", conv(substring(col("skey"), 1, 2), 16, 10)
         .cast("int"))
       .localCheckpoint()
     val rn = row_number().over(
-      Window.partitionBy("bucket").orderBy(col("skey"), col(idCol)))
+      Window.partitionBy("bucket").orderBy(col("skey"), col("doc_id")))
     val ranked = keyed.withColumn("rn", rn.cast("long"))
     val offsets = keyed.groupBy("bucket")
       .agg(count(lit(1)).as("cnt"))
@@ -306,7 +303,7 @@ object TextStats {
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col("bucket").as("off_bucket"), col("offset"))
     ranked.join(broadcast(offsets), col("bucket") === col("off_bucket"))
-      .select(col(idCol), col("skey"),
+      .select(col("doc_id"), col("skey"),
         (col("offset") + col("rn") - 1).as("pos"))
       .withColumn("batch_id", expr(s"pos div $batchSize"))
   }
@@ -321,15 +318,14 @@ object TextStats {
     * aggregated per doc). Docs with zero tokens produce no row, same
     * as a perplexity filter. Two shuffles: the vocabulary aggregate on
     * the token, reused by the score join; then the per-doc mean. */
-  def unigramScore(docs: DataFrame, textCol: String = "text",
-                   idCol: String = "doc_id"): DataFrame = {
-    val toks = docs.select(col(idCol),
-        explode(Analyzers.tokenize(Dedup.normalize(col(textCol))))
+  def unigramScore(docs: DataFrame): DataFrame = {
+    val toks = docs.select(col("doc_id"),
+        explode(Analyzers.tokenize(Dedup.normalize(col("text"))))
           .as("tok"))
       .localCheckpoint() // feeds the vocab agg AND the score join
     val vocab = toks.groupBy("tok").agg(count(lit(1)).as("tf"))
     toks.join(vocab, "tok")
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"), sum("tf").as("sum_tf"))
       .withColumn("mean_tf",
         round(col("sum_tf").cast("double") / col("n_tokens"), 6))
@@ -345,11 +341,10 @@ object TextStats {
     * source-keyed conditional-sum aggregate — two scans, one join
     * shuffle, one combiner-friendly agg; never a text comparison
     * (fingerprints travel, texts don't). */
-  def corpusDiff(v1: DataFrame, v2: DataFrame,
-                 idCol: String = "doc_id"): DataFrame = {
-    val a = v1.select(col(idCol).as("id"), col("source").as("src_a"),
+  def corpusDiff(v1: DataFrame, v2: DataFrame): DataFrame = {
+    val a = v1.select(col("doc_id").as("id"), col("source").as("src_a"),
       md5(col("text")).as("fp_a"))
-    val b = v2.select(col(idCol).as("id"), col("source").as("src_b"),
+    val b = v2.select(col("doc_id").as("id"), col("source").as("src_b"),
       md5(col("text")).as("fp_b"))
     a.join(b, Seq("id"), "full_outer")
       .select(coalesce(col("src_a"), col("src_b")).as("source"),
@@ -546,22 +541,20 @@ object TextStats {
     * exchange); the per-doc ratio is the only other shuffle. No
     * broadcast of the common-shingle set is assumed — at corpus scale
     * the df table is as big as the vocabulary. */
-  def boilerplate(docs: DataFrame, minDf: Int = 3,
-                  textCol: String = "text",
-                  idCol: String = "doc_id"): DataFrame = {
+  def boilerplate(docs: DataFrame, minDf: Int = 3): DataFrame = {
     // postings carry 64-bit shingle HASHES (codegen'd ShingleHashes —
     // the d2/d9 fast path): the df shuffle and the join back move
     // 8-byte keys instead of shingle strings, and the string↔hash df
     // counts agree w.h.p. (same argument as the MinHash verify step).
     // The two-long frame materializes once (it feeds both the df
     // aggregate and the join probe); tokenization runs ONE scan.
-    val posts = Dedup.withHashedShingleSet(docs, textCol, idCol)
+    val posts = Dedup.withHashedShingleSet(docs)
       .select(col("id"), explode(col("shingles")).as("sh"))
       .localCheckpoint()
     // shingles are distinct within a doc, so count(*) IS the doc freq
     val dfc = posts.groupBy("sh").agg(count(lit(1)).as("df"))
     posts.join(dfc, "sh")
-      .groupBy(col("id").as(idCol))
+      .groupBy(col("id").as("doc_id"))
       .agg(count(lit(1)).as("n_shingles"),
         sum(when(col("df") >= minDf, 1L).otherwise(0L)).as("n_common"))
       .withColumn("boilerplate_ratio",
@@ -585,15 +578,13 @@ object TextStats {
       1, 8), 16, 10).cast("long") % 100
 
   def stratifiedSample(docs: DataFrame, ratesPct: Map[String, Int],
-                       defaultPct: Int = 100,
-                       strataCol: String = "lang",
-                       idCol: String = "doc_id"): DataFrame = {
+                       defaultPct: Int = 100): DataFrame = {
     val rate = ratesPct.toSeq.sortBy(_._1).foldLeft(lit(defaultPct)) {
       case (acc, (stratum, pct)) =>
-        when(col(strataCol) === stratum, lit(pct)).otherwise(acc)
+        when(col("lang") === stratum, lit(pct)).otherwise(acc)
     }
-    docs.filter(sampleBucket(col(idCol)) < rate)
-      .select(col(idCol), col(strataCol))
+    docs.filter(sampleBucket(col("doc_id")) < rate)
+      .select(col("doc_id"), col("lang"))
   }
 
   /** X22: overlapping token-window chunking — the RAG/embedding prep
@@ -604,22 +595,21 @@ object TextStats {
     * and chunk counts are exact integer math (`div`, not fp ceil — the
     * long/long Column `/` is double division). Empty docs chunk to
     * nothing; any other doc gets at least one chunk. */
-  def textChunks(docs: DataFrame, chunkTokens: Int = 64, overlap: Int = 16,
-                 textCol: String = "text",
-                 idCol: String = "doc_id"): DataFrame = {
+  def textChunks(docs: DataFrame, chunkTokens: Int = 64,
+                 overlap: Int = 16): DataFrame = {
     require(overlap >= 0 && overlap < chunkTokens,
       "textChunks: need 0 <= overlap < chunkTokens")
     val stride = chunkTokens - overlap
     docs
-      .select(col(idCol),
-        Analyzers.tokenize(lower(col(textCol))).as("__toks"))
+      .select(col("doc_id"),
+        Analyzers.tokenize(lower(col("text"))).as("__toks"))
       .filter(size(col("__toks")) > 0)
       .withColumn("__n", size(col("__toks")).cast("long"))
       .withColumn("__nc", greatest(lit(1L),
         expr(s"(__n - $overlap + ${stride - 1}) div $stride")))
-      .select(col(idCol), col("__toks"), col("__n"),
+      .select(col("doc_id"), col("__toks"), col("__n"),
         explode(sequence(lit(0L), col("__nc") - 1)).as("chunk_idx"))
-      .select(col(idCol), col("chunk_idx"),
+      .select(col("doc_id"), col("chunk_idx"),
         concat_ws(" ", slice(col("__toks"),
           (col("chunk_idx") * stride + 1).cast("int"),
           lit(chunkTokens))).as("chunk_text"),
@@ -646,12 +636,10 @@ object TextStats {
     * TextStatsSpec; the merge semantics are golden-checked against an
     * independent reference implementation in the x19 oracle). */
   def bpeTokens(docs: DataFrame,
-                merges: Seq[(String, String)] = demoMerges,
-                textCol: String = "text",
-                idCol: String = "doc_id"): DataFrame = {
-    val pre = regexp_extract_all(lower(col(textCol)),
+                merges: Seq[(String, String)] = demoMerges): DataFrame = {
+    val pre = regexp_extract_all(lower(col("text")),
       lit("\\p{L}+|\\p{N}+|[^\\p{L}\\p{N}\\s]"), lit(0))
-    docs.select(col(idCol),
+    docs.select(col("doc_id"),
       graft.functions.expressions.bpe_tokens(pre, merges).as("tokens"))
       .withColumn("n_bpe", size(col("tokens")).cast("long"))
   }
@@ -668,10 +656,9 @@ object TextStats {
     * the handful of probe tokens (a selective filter, not a full
     * vocabulary aggregation). Deterministic for a fixed seed. */
   def heavyHitters(docs: DataFrame, probes: Seq[String],
-                   eps: Double = 0.001, textCol: String = "text",
-                   seed: Int = 42): DataFrame = {
+                   eps: Double = 0.001, seed: Int = 42): DataFrame = {
     val toks = docs.select(
-      explode(Analyzers.tokenize(lower(col(textCol)))).as("token"))
+      explode(Analyzers.tokenize(lower(col("text")))).as("token"))
     val row = toks.agg(
       expr(s"count_min_sketch(token, ${eps}d, 0.99d, $seed)").as("sk"),
       count(lit(1)).as("n")).head()
@@ -691,7 +678,7 @@ object TextStats {
   }
 
   /** X16: per-domain cap (domain balancing) — keep at most `cap`
-    * documents per `strataCol` value, the standard remedy for a handful
+    * documents per `source` value, the standard remedy for a handful
     * of over-crawled hosts dominating a web corpus (C4-style per-domain
     * page limits). Selection is deterministic: docs rank by a
     * purpose-salted content hash with the id as tie-break, so re-runs,
@@ -706,16 +693,14 @@ object TextStats {
     * sort. Plan-locked in PlanSpec. The long cast happens AFTER the
     * filter: a projection between Filter and Window would hide the
     * rank-limit pattern from the optimizer. */
-  def sourceCap(docs: DataFrame, cap: Int,
-                strataCol: String = "source",
-                idCol: String = "doc_id"): DataFrame = {
+  def sourceCap(docs: DataFrame, cap: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val hash = md5(concat_ws(":", lit("cap"), col(idCol).cast("string")))
-    docs.select(col(idCol), col(strataCol))
+    val hash = md5(concat_ws(":", lit("cap"), col("doc_id").cast("string")))
+    docs.select(col("doc_id"), col("source"))
       .withColumn("rk", row_number().over(
-        Window.partitionBy(strataCol).orderBy(hash, col(idCol))))
+        Window.partitionBy("source").orderBy(hash, col("doc_id"))))
       .filter(col("rk") <= cap)
-      .select(col(idCol), col(strataCol), col("rk").cast("long").as("rk"))
+      .select(col("doc_id"), col("source"), col("rk").cast("long").as("rk"))
   }
 
   /** X17: soft quality filter (importance resampling) — keep each
@@ -731,15 +716,14 @@ object TextStats {
     * truncates while DuckDB's rounds (the w5 hazard). Row-local
     * scan-side predicate — no shuffle; at 100 TB this fuses into the
     * reading filter pipeline like x11. */
-  def softFilter(docs: DataFrame, lo: Double = 0.4, hi: Double = 0.9,
-                 textCol: String = "text",
-                 idCol: String = "doc_id"): DataFrame = {
-    val q = qualityScore(col(textCol))
+  def softFilter(docs: DataFrame, lo: Double = 0.4,
+                 hi: Double = 0.9): DataFrame = {
+    val q = qualityScore(col("text"))
     val p = least(greatest((q - lit(lo)) / lit(hi - lo), lit(0.0)), lit(1.0))
     val u = conv(substring(md5(concat_ws(":", lit("soft"),
-      col(idCol).cast("string"))), 1, 8), 16, 10).cast("long") % 10000
+      col("doc_id").cast("string"))), 1, 8), 16, 10).cast("long") % 10000
     docs.filter(u < floor(p * 10000).cast("long"))
-      .select(col(idCol), q.as("quality"))
+      .select(col("doc_id"), q.as("quality"))
   }
 
   /** X13: data-mixture report — per-stratum document and token totals
@@ -747,17 +731,16 @@ object TextStats {
     * pretraining run's mixture weights are tuned against. One shuffle
     * (the groupBy); the grand total joins back as a broadcast 1-row
     * aggregate, never a global window. */
-  def mixtureStats(docs: DataFrame, strataCol: String = "lang",
-                   textCol: String = "text"): DataFrame = {
-    val text = col(textCol)
+  def mixtureStats(docs: DataFrame): DataFrame = {
+    val text = col("text")
     val ws = when(coalesce(length(trim(text)), lit(0)) === 0, 0)
       .otherwise(size(split(trim(text), "\\s+"))).cast("long")
-    val per = docs.select(col(strataCol), ws.as("toks"))
-      .groupBy(strataCol)
+    val per = docs.select(col("lang"), ws.as("toks"))
+      .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("toks").as("n_tokens"))
     val total = per.agg(sum("n_tokens").as("total_tokens"))
     per.crossJoin(broadcast(total))
-      .select(col(strataCol), col("n_docs"), col("n_tokens"),
+      .select(col("lang"), col("n_docs"), col("n_tokens"),
         round(col("n_tokens").cast("double") / col("total_tokens"), 6)
           .as("token_share"))
   }
@@ -788,9 +771,9 @@ object TextStats {
     * `round` column and its supply-exhausted marker row (the only row
     * with an empty `left_sym`): an exhausted supply just ends the
     * table early. */
-  def bpeTrain(spark: SparkSession, docs: DataFrame, steps: Int = 8,
-               textCol: String = "text"): DataFrame =
-    bpeTrainBatched(spark, docs, steps, batch = 1, textCol)
+  def bpeTrain(spark: SparkSession, docs: DataFrame,
+               steps: Int = 8): DataFrame =
+    bpeTrainBatched(spark, docs, steps, batch = 1)
       .filter(col("left_sym") =!= "")
       .drop("round")
 
@@ -828,11 +811,10 @@ object TextStats {
     * 'supply_exhausted', pair_count = 0). A caller sees the ceiling in
     * the table; a fully-supplied run has no marker row. */
   def bpeTrainBatched(spark: SparkSession, docs: DataFrame,
-                      steps: Int = 8, batch: Int = 16,
-                      textCol: String = "text"): DataFrame = {
+                      steps: Int = 8, batch: Int = 16): DataFrame = {
     import spark.implicits._
     var vocab = docs
-      .select(explode(Analyzers.tokenize(lower(col(textCol)))).as("w"))
+      .select(explode(Analyzers.tokenize(lower(col("text")))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .select(concat(lit(" "),
         array_join(split(col("w"), ""), " "), lit(" ")).as("rep"),
@@ -904,31 +886,30 @@ object TextStats {
     * tokenizer once per lambda element). Both aggregations shuffle on
     * doc_id only and are combiner-friendly; docs with < 2 tokens have
     * no bigram and drop out (inner join), mirroring the oracle. */
-  def gopherRules(docs: DataFrame, textCol: String = "text",
-                  idCol: String = "doc_id",
-                  minWords: Long = 20, maxTopWordBp: Long = 1500,
+  def gopherRules(docs: DataFrame, minWords: Long = 20,
+                  maxTopWordBp: Long = 1500,
                   minMeanLenX100: Long = 300,
                   maxMeanLenX100: Long = 480): DataFrame = {
-    val t = Analyzers.tokenize(lower(col(textCol)))
-    val base = docs.select(col(idCol), t.as("t"))
-    val words = base.select(col(idCol), explode(col("t")).as("w"))
-      .groupBy(col(idCol), col("w")).agg(count(lit(1)).as("c"))
-      .groupBy(col(idCol))
+    val t = Analyzers.tokenize(lower(col("text")))
+    val base = docs.select(col("doc_id"), t.as("t"))
+    val words = base.select(col("doc_id"), explode(col("t")).as("w"))
+      .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
+      .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_words"), max(col("c")).as("top_w"),
         sum(col("c") * length(col("w"))).as("sum_len"))
     // both sides sliced to n-1: zip_with pads the shorter side with
     // null, and concat_ws silently drops it — a trailing unigram would
     // masquerade as a bigram
-    val bigrams = base.select(col(idCol),
+    val bigrams = base.select(col("doc_id"),
         explode(zip_with(
           slice(col("t"), lit(1), greatest(size(col("t")) - 1, lit(0))),
           slice(col("t"), lit(2), greatest(size(col("t")) - 1, lit(0))),
           (a, b) => concat_ws(" ", a, b))).as("g"))
-      .groupBy(col(idCol), col("g")).agg(count(lit(1)).as("c"))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
+      .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_bi"), max(col("c")).as("top_bi"))
-    words.join(bigrams, idCol)
-      .select(col(idCol), col("n_words"),
+    words.join(bigrams, "doc_id")
+      .select(col("doc_id"), col("n_words"),
         expr("top_w * 10000 div n_words").as("top_word_bp"),
         expr("top_bi * 10000 div n_bi").as("top_bigram_bp"),
         expr("sum_len * 100 div n_words").as("mean_len_x100"))
@@ -946,29 +927,27 @@ object TextStats {
     * (co-partitioned, no extra exchange) → per-doc counts. Every
     * stage is a key-local aggregation — no all-pairs anywhere. Docs
     * with fewer than n tokens have no gram and drop out. */
-  def ngramNovelty(docs: DataFrame, n: Int = 5,
-                   textCol: String = "text",
-                   idCol: String = "doc_id"): DataFrame = {
+  def ngramNovelty(docs: DataFrame, n: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val t = Analyzers.tokenize(lower(col(textCol)))
-    val pos = docs.select(col(idCol), posexplode(t).as(Seq("p", "w")))
-    val wn = Window.partitionBy(col(idCol)).orderBy(col("p"))
+    val t = Analyzers.tokenize(lower(col("text")))
+    val pos = docs.select(col("doc_id"), posexplode(t).as(Seq("p", "w")))
+    val wn = Window.partitionBy(col("doc_id")).orderBy(col("p"))
     val leads = (1 until n).map(i => lead(col("w"), i).over(wn))
-    val grams = pos.select(col(idCol),
+    val grams = pos.select(col("doc_id"),
         concat_ws(" ", col("w") +: leads: _*).as("gram"),
         leads.last.isNotNull.as("full"))
       .filter(col("full"))
-      .select(col(idCol), col("gram")).distinct()
+      .select(col("doc_id"), col("gram")).distinct()
     // first-occurrence via a window min over the gram partition — ONE
     // shuffle on gram; the groupBy(gram)+join formulation would
     // re-exchange the full gram set a second time for the join
-    val firstDoc = min(col(idCol))
+    val firstDoc = min(col("doc_id"))
       .over(Window.partitionBy(col("gram")))
     grams.withColumn("fd", firstDoc)
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
-        sum(when(col("fd") === col(idCol), 1L).otherwise(0L)).as("novel"))
-      .select(col(idCol), col("n_grams"), col("novel"),
+        sum(when(col("fd") === col("doc_id"), 1L).otherwise(0L)).as("novel"))
+      .select(col("doc_id"), col("n_grams"), col("novel"),
         expr("novel * 10000 div n_grams").as("novelty_bp"))
   }
 }

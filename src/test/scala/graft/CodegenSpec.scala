@@ -64,7 +64,7 @@ class CodegenSpec extends SparkSpec {
   test("shingle_hashes compiles under codegen (no silent fallback)") {
     noFallback {
       val out = docs
-        .select(col("id"), shingle_hashes(split(col("text"), " "), 3).as("sh"))
+        .select(col("id"), shingle_hashes(split(col("text"), " ")).as("sh"))
         .select(col("id"), size(col("sh")).as("n"))
         .collect()
       assert(out.length == 3 && out.forall(_.getInt(1) > 0))

@@ -79,7 +79,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash of disjoint token sets differs, near-dups are close") {
-    val sigs = Dedup.simhashSignatures(docs, "text", "doc_id")
+    val sigs = Dedup.simhashSignatures(docs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sigs(1L) == sigs(4L)) // identical after normalization
     assert(java.lang.Long.bitCount(sigs(1L) ^ sigs(3L)) >

@@ -77,7 +77,7 @@ class PropertySpec extends SparkSpec {
       .flatMap { case (t, i) => // each text twice under different ids
         Seq((i.toLong * 2, t), (i.toLong * 2 + 1, t)) }
       .toDF("doc_id", "text")
-    val sigs = Dedup.simhashSignatures(docs, "text", "doc_id")
+    val sigs = Dedup.simhashSignatures(docs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     sigs.keys.filter(_ % 2 == 0).foreach { k =>
       if (sigs.contains(k + 1)) assert(sigs(k) == sigs(k + 1))
